@@ -20,10 +20,19 @@ sbt -batch "runMain graft.VerifyConsolidate" 2>/dev/null \
   | sed 's/^\[info\] //' | grep -E '^\{|^== ' > /tmp/spark_out.txt
 python3 scripts/diff_consolidate.py /tmp/ref_out.txt /tmp/spark_out.txt
 echo "== 3/5 full registry dump at $SF"
+rm -rf /tmp/close_verify
 sbt -batch "runMain graft.Verify $SF /tmp/close_verify" 2>&1 | tail -1
+# Verify records each query that threw in failures.json; a missing
+# file (Verify died) or a non-empty object fails the gate
+python3 -c 'import json, sys
+f = json.load(open(sys.argv[1]))
+for k, v in sorted(f.items()): print(f"FAILED {k}: {v[:200]}")
+sys.exit(1 if f else 0)' /tmp/close_verify/failures.json
 echo "== 4/5 DuckDB oracle over the full registry"
+# every line but a plain MATCH: failures (MISSING included) and the
+# summary
 python3 scripts/verify_local.py "$SF" /tmp/close_verify 2>/dev/null \
-  | grep -vE "MISSING" | tail -3
+  | grep -vE ": MATCH \("
 echo "== 5/5 bench at sf0.1 (local[32]) -> bench_detail.json"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   2>/dev/null | tail -1

@@ -1,7 +1,11 @@
 package graft.util
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's parquet test tables (TESTDATA.md).
   *
@@ -10,10 +14,66 @@ import org.apache.spark.sql.functions._
   * here they are bare parquet directories. Reads are plain
   * `spark.read.parquet` so Catalyst's parquet source handles column
   * pruning + predicate pushdown (verified via .explain PushedFilters).
+  *
+  * Schema memo: inferring a parquet schema runs a one-task footer job
+  * (about 110 ms on a 4-core host, against about 16 ms for the same
+  * read with the schema supplied), and a query pass resolves the same
+  * tables many times. So the schema inferred on the first call is kept
+  * per qualified path and later calls read with `.schema(memo)`, which
+  * starts no job and plans the identical scan (same ReadSchema,
+  * PushedFilters, PartitionFilters). The memo entry is valid while its
+  * key matches:
+  *   - the path's length and modification time, so a table rewritten
+  *     in place is re-inferred on its next call;
+  *   - the session's parquet schema-inference settings, every set
+  *     `spark.sql.parquet.*` value plus
+  *     `spark.sql.legacy.parquet.nanosAsLong`, so a session that reads
+  *     the file differently re-infers it.
+  * A mismatch re-infers and replaces the entry, so the memo holds at
+  * most one schema per path. A miss returns the frame inference already
+  * resolved, never a second resolution. A path that cannot be stat-ed
+  * (missing, a glob), or whose store reports no modification time, is
+  * not memoized and fails or reads as before.
   */
 object Tables {
+  /** What a path was last resolved against, and the outcome: the
+    * inferred schema, or `None` when inference rejected the file.
+    */
+  private final case class Memo(key: (Long, Long, Seq[(String, String)]),
+      schema: Option[StructType])
+  private val memo = new ConcurrentHashMap[String, Memo]()
+
+  /** Reads `path`, inferring its schema only when the memo cannot
+    * serve it. `None` when inference threw an error `rejects` accepts.
+    */
+  private def resolve(s: SparkSession, path: String,
+      rejects: Throwable => Boolean): Option[DataFrame] = {
+    def infer(): Option[DataFrame] =
+      try Some(s.read.parquet(path))
+      catch { case scala.util.control.NonFatal(e) if rejects(e) => None }
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    scala.util.Try(fs.getFileStatus(p)).toOption.filter(_.getModificationTime > 0) match {
+      case None => infer()
+      case Some(st) =>
+        val qualified = fs.makeQualified(p).toString
+        val key = (st.getLen, st.getModificationTime,
+          s.conf.getAll.toSeq.filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") ||
+              k == "spark.sql.legacy.parquet.nanosAsLong"
+          }.sorted)
+        Option(memo.get(qualified)) match {
+          case Some(m) if m.key == key => m.schema.map(s.read.schema(_).parquet(path))
+          case _ =>
+            val df = infer()
+            memo.put(qualified, Memo(key, df.map(_.schema)))
+            df
+        }
+    }
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    resolve(spark, s"$sfDir/$name.parquet", _ => false).get
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -27,10 +87,17 @@ object Tables {
 
   /** `events.parquet` has shipped with BOTH `timestamp[ns]` and
     * `timestamp[us]` physical types across driver data regenerations,
-    * so the loader adapts per file instead of pinning one encoding:
+    * so the loader adapts per file instead of pinning one encoding.
+    * Inference picks one of three branches, and each yields a
+    * TimestampType `ts` in the pinned column order:
     *
-    *   - micros (`timestamp[us]`): plain schema inference yields a
-    *     proper TimestampType column — pass through untouched.
+    *   - UTC-adjusted micros (`TIMESTAMP(MICROS,true)`, what Spark
+    *     writes for TimestampType): inference yields TimestampType —
+    *     pass through untouched.
+    *   - no-tz micros (`TIMESTAMP(MICROS,false)`, pyarrow's
+    *     `timestamp[us]` and Spark's TIMESTAMP_NTZ; both sf0.001 and
+    *     sf0.01 files are this): inference yields TimestampNTZType,
+    *     cast to TimestampType under the session's UTC zone.
     *   - nanos (`timestamp[ns]`): inference rejects the file outright
     *     (PARQUET_TYPE_ILLEGAL) unless the session-global legacy conf
     *     `spark.sql.legacy.parquet.nanosAsLong` is flipped. Supplying
@@ -41,20 +108,17 @@ object Tables {
     *     `/`, because double division loses precision at 1.7e18 ns
     *     and shifts timestamps by hundreds of nanoseconds.
     *
-    * The inference `try` is a one-time driver-side footer read, not a
-    * per-row cost. A silently long-typed `ts` (no logical annotation)
-    * is treated as nanos — the only long encoding this dataset has
-    * ever used. Column set pinned by TESTDATA.md; a drifted file
-    * surfaces in every events-table oracle.
+    * The branch outcome is memoized with the table schemas (see the
+    * object doc): a later call reads with the memoized schema, or goes
+    * straight to the explicit long-typed read after a rejection, and
+    * starts no inference job either way. A silently long-typed `ts`
+    * (no logical annotation) is treated as nanos — the only long
+    * encoding this dataset has ever used. Column set pinned by
+    * TESTDATA.md; a drifted file surfaces in every events-table oracle.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val path = s"$d/events.parquet"
-    val inferred =
-      try Some(s.read.parquet(path))
-      catch {
-        case scala.util.control.NonFatal(e) if isNanosRejection(e) => None
-      }
-    inferred match {
+    resolve(s, path, isNanosRejection) match {
       case Some(df)
           if df.schema("ts").dataType ==
             org.apache.spark.sql.types.TimestampType => pinColumns(df)
