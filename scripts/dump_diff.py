@@ -1,0 +1,65 @@
+#!/usr/bin/env python3
+"""Compare two graft.Verify dumps query by query.
+
+Usage: dump_diff.py BEFORE AFTER
+
+A dump holds one parquet directory per registry query (written by
+`graft.Verify <sfDir> <outDir>`). The two dumps must hold the same query
+set, and each query the same columns and the same rows in the same
+order, after verify_local.py's cell normalisation (columns sorted by
+name, NaN as null, temporals as ISO strings). Unlike verify_local.py it
+needs no oracle, so it also covers the queries without one. Prints one
+line per differing or missing query, then a summary; exits 1 if any.
+"""
+import os
+import sys
+
+import duckdb
+
+from verify_local import fetch
+
+
+def queries(dump):
+    return {n for n in os.listdir(dump) if os.path.isdir(os.path.join(dump, n))}
+
+
+def result(dump, name):
+    return fetch(duckdb.connect(),
+                 f"SELECT * FROM read_parquet('{dump}/{name}/*.parquet')")
+
+
+def diff(before, after, name):
+    """None when the query's two results are identical, else why not."""
+    try:
+        (b_cols, b_rows), (a_cols, a_rows) = result(before, name), result(after, name)
+    except Exception as e:
+        return f"UNREADABLE {str(e)[:200]}"
+    if b_cols != a_cols:
+        return f"COLUMNS before={b_cols} after={a_cols}"
+    if b_rows == a_rows:
+        return None
+    first = next((i for i, (b, a) in enumerate(zip(b_rows, a_rows)) if b != a),
+                 min(len(b_rows), len(a_rows)))
+    return f"ROWS before={len(b_rows)} after={len(a_rows)}, first difference at row {first}"
+
+
+def main():
+    before, after = sys.argv[1], sys.argv[2]
+    b, a = queries(before), queries(after)
+    n_bad = 0
+    for name in sorted(b | a):
+        if name not in a:
+            why = f"MISSING from {after}"
+        elif name not in b:
+            why = f"MISSING from {before}"
+        else:
+            why = diff(before, after, name)
+        if why:
+            print(f"{name}: {why}")
+            n_bad += 1
+    print(f"== {len(b | a) - n_bad} identical, {n_bad} differ ==")
+    sys.exit(1 if n_bad else 0)
+
+
+if __name__ == "__main__":
+    main()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Core-count scaling ladder at SYNTHETIC scale (VERDICT r18 #7 / #6:
@@ -19,7 +18,7 @@ import org.apache.spark.sql.functions._
   * measures the synthetic degeneracy, not scan scaling) and the
   * streaming family (micro-batch fixed costs are the known floor).
   *
-  * Usage: runMain graft.CoreLadder [factor] [query ...]
+  * Usage: runMain graft.Dev core-ladder [factor] [query ...]
   */
 object CoreLadder {
   private val DefaultQueries = Seq(
@@ -27,10 +26,9 @@ object CoreLadder {
     "q97_quantized_recall", "q122_bpe_encode", "q129_pq_distortion",
     "q184_opq_gain", "q237_residual_opq", "q130_pq_train")
 
-  def main(args: Array[String]): Unit = {
+  private[graft] def run(src: String, args: Seq[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(64)
-    val queries = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val queries = if (args.length > 1) args.drop(1) else DefaultQueries
     val out = s"/tmp/graft_core_ladder_x$factor"
 
     // ---- build the scaled fixture once (deterministic) ----

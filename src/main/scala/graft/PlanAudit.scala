@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
   * exceptions are listed with their justification.
   *
   * The sweep itself is a pure function so BOTH entry points share one
-  * rule set: [[main]] for ad-hoc dev runs with per-query output, and
-  * `PlanAuditSpec` (in `sbt test`) as the always-on gate — a new
-  * unkeyed BNLJ or cartesian now fails CI instead of waiting for
-  * someone to remember to run the dev main (VERDICT r7 #4).
+  * rule set: `graft.Dev audit` for ad-hoc dev runs with per-query
+  * output, and `PlanAuditSpec` (in `sbt test`) as the always-on gate —
+  * a new unkeyed BNLJ or cartesian now fails CI instead of waiting for
+  * someone to remember to run the dev mode (VERDICT r7 #4).
   */
 object PlanAudit {
   // queries where a BroadcastNestedLoopJoin is the DESIGNED plan:
@@ -197,13 +197,8 @@ object PlanAudit {
   private[graft] def failures(rs: Seq[(String, String, String)]): Seq[(String, String, String)] =
     rs.filterNot(r => r._2 == "ok" || r._2 == "bnlj-allowed")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Prints one `AUDIT` line per query and the `AUDIT_BAD` count. */
+  private[graft] def report(spark: SparkSession, sfDir: String): Unit = {
     val rs = sweep(spark, sfDir)
     rs.foreach {
       case (name, "ok", _) => println(s"AUDIT $name: ok")
@@ -211,6 +206,5 @@ object PlanAudit {
       case (name, verdict, detail) => println(s"AUDIT $name: $verdict $detail")
     }
     println(s"AUDIT_BAD=${failures(rs).size}")
-    spark.stop()
   }
 }

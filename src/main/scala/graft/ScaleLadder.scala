@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * The measurement is a pure function over one sf dir so it has two
   * entry points sharing one rule set (the PlanAudit discipline,
-  * VERDICT r8 #3): [[main]] prints the markdown rows committed as
-  * SCALE_LADDER.md across all three fixture scales; `ScaleLadderSpec`
+  * VERDICT r8 #3): [[report]] (`graft.Dev scale-ladder`) prints the
+  * markdown rows committed as SCALE_LADDER.md; `ScaleLadderSpec`
   * asserts zero over-cap keys at sf0.001 in every `sbt test` run, so
   * a fixture or banding change that opens a degenerate-bucket hole
   * fails CI instead of waiting for someone to re-run the dev main.
@@ -109,16 +109,7 @@ object ScaleLadder {
       row.getAs[Number](2).longValue(), row.getLong(3))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfs = if (args.nonEmpty) args.toSeq
-      else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+  private[graft] def report(spark: SparkSession, sfs: Seq[String]): Unit = {
     println("| sf | family | keys | max bucket | p99 bucket | over-cap (10000) |")
     println("|---|---|---|---|---|---|")
     sfs.foreach { d =>
@@ -132,6 +123,5 @@ object ScaleLadder {
       val (ck, cm, cp, co) = stats(skewedCellSizes(spark, d), cap = rehearsalCap)
       println(s"| $sf | ivf-cell-SKEWED (cap $rehearsalCap) | $ck | $cm | $cp | $co |")
     }
-    spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Consolidate, NormalizedEvent}
@@ -24,12 +23,7 @@ object VerifyConsolidate {
       ingestion_run_id = "run-0")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

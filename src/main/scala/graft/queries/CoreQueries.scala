@@ -83,7 +83,7 @@ object CoreQueries {
     * bench invokes each query several times, and q78's stream INPUT is
     * a deterministic function of the sf dir — rewriting it per run
     * benches the parquet writer, not the stream). The path is
-    * per-process, so concurrent JVMs (a TimeOne session next to a
+    * per-process, so concurrent JVMs (a `Dev time` session next to a
     * bench) never clobber or shutdown-delete each other's input, and
     * the key is registered only AFTER a successful write — a failed
     * first write is retried on the next invocation instead of
@@ -916,7 +916,7 @@ object CoreQueries {
       // checkpoint + output stay fresh per invocation so every run
       // re-processes the whole stream.
       val in = sharedInputDir(
-        s"graft_q78_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q78_in_${dirToken(d)}") { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
       val agg = graft.streaming.Streaming.dailyAggregation(
@@ -957,7 +957,7 @@ object CoreQueries {
         .filter(col("user_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
       val in = sharedInputDir(
-        s"graft_q83_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q83_in_${dirToken(d)}") { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
       val stream = graft.streaming.Streaming.eventsStream(s, in, ev.schema)
@@ -1004,7 +1004,7 @@ object CoreQueries {
           expr("timestampadd(SECOND, doc_id, timestamp'2024-01-01 00:00:00')")
             .as("ts"))
       val in = sharedInputDir(
-        s"graft_q106_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q106_in_${dirToken(d)}") { p =>
         docs.repartition(4).write.mode("overwrite").parquet(p)
       }
       val deduped = graft.streaming.Streaming.dedupStream(

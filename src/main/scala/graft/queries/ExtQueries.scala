@@ -482,9 +482,16 @@ object ExtQueries {
   private[graft] def streamBatchQuantIndex(batch: DataFrame): DataFrame =
     Similarity.quantizedIndex(batch, "vec_id", "embedding")
 
-  /** The md5 delta/base corpus split shared by the incremental paths
-    * (q91/q95/q115/q135/q137/q141/q142): first hex nibble 0–2 ⇒ delta
-    * (~19% of docs).
+  /** The md5 delta/base corpus split every incremental path shares:
+    * first hex nibble 0–2 ⇒ delta (~19% of rows). It splits documents
+    * by `doc_id` and embeddings by `vec_id` alike. Users: the v1 base
+    * artifacts (`v1*Artifact`, `baseClusterArtifacts`,
+    * `baseSpanOwners`, `v1ReleaseLedger`), `maintainedRelease` and
+    * `driftSlices`; the stream-maintenance loops
+    * (q115/q123/q135/q137/q144/q149/q160/q189/q232/q242); the release
+    * chains (q95/q141/q142/q165/q171/q193/q231/q233); and the
+    * staleness, drift and serving cards (q154/q213/q234/q246/q248/q249
+    * and their families).
     */
   private def isDeltaDoc(c: Column): Column =
     substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
@@ -1664,15 +1671,13 @@ object ExtQueries {
     */
   private def driftSlices(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
-    def isDelta(c: Column): Column =
-      substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
     val usable = Tables.embeddings(s, d).filter(
       Similarity.dotFold(col("embedding").cast("array<double>"),
         col("embedding").cast("array<double>")) > 0)
-    val base = usable.filter(!isDelta(col("vec_id")))
+    val base = usable.filter(!isDeltaDoc(col("vec_id")))
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("embedding"))
-    val delta = usable.filter(isDelta(col("vec_id")))
+    val delta = usable.filter(isDeltaDoc(col("vec_id")))
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("embedding"))
     val shifted = delta.select(col("vec_id"),
@@ -2589,16 +2594,14 @@ object ExtQueries {
     //      either way. Oracle: same SQL as q91 — the persisted path
     //      must be value-identical to the recompute path ----
     "q95_incremental_persisted" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       val baseSig = v1SigArtifact(s, d)
-      val deltaSig = Dedup.bandedSignatures(docs.filter(isDelta(col("doc_id"))),
+      val deltaSig = Dedup.bandedSignatures(docs.filter(isDeltaDoc(col("doc_id"))),
         "text", "doc_id", k = 8)
       Dedup.minhashCandidates(baseSig.unionByName(deltaSig))
         .filter(col("n_bands") >= 2)
-        .withColumn("a_delta", isDelta(col("a_id")))
-        .withColumn("b_delta", isDelta(col("b_id")))
+        .withColumn("a_delta", isDeltaDoc(col("a_id")))
+        .withColumn("b_delta", isDeltaDoc(col("b_id")))
         .filter(col("a_delta") =!= col("b_delta"))
         .select(
           when(col("a_delta"), col("a_id")).otherwise(col("b_id")).as("delta_id"),
@@ -2798,18 +2801,16 @@ object ExtQueries {
     //      divergence as q115: per base+batch bucket counting vs
     //      whole-corpus in q85 — identical below the cap.) ----
     "q123_stream_simhash" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       // persisted base SimHash signature table — at 100 TB this is the
       // last corpus build's fingerprint index
       val baseSig = v1SimhashSigArtifact(s, d)
       val baseCnt = sigCountArtifact(s,
         s"graft_q123cnt_${CoreQueries.dirToken(d)}", baseSig)
-      val delta = docs.filter(isDelta(col("doc_id")))
+      val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q123_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q123_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q123_ssimhash_")
@@ -3908,8 +3909,6 @@ object ExtQueries {
     //      below the cap, i.e. everywhere outside degenerate
     //      boilerplate buckets.) ----
     "q115_stream_neardup" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       // the same persisted base-signature table q95 reads (shared key,
       // so one materialization serves both consumers per session)
@@ -3918,10 +3917,10 @@ object ExtQueries {
       // instead of re-aggregating the signature table 4 times
       val baseCnt = sigCountArtifact(s,
         s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)
-      val delta = docs.filter(isDelta(col("doc_id")))
+      val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q115_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q115_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q115_sdedup_")
@@ -4256,18 +4255,16 @@ object ExtQueries {
     //      cap divergence as q115/q123: per base+batch cell counting
     //      vs whole-corpus — identical below the cap.) ----
     "q135_stream_semantic" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       // persisted base cell index + (cell, cn) count artifact: the
       // corpus build's embedding-index output; per-batch cell caps
       // read the counts instead of re-aggregating the index 4 times
       val baseIdx = v1CellIndexArtifact(s, d)
       val baseCnt = v1CellCountArtifact(s, d)
-      val delta = emb.filter(isDelta(col("vec_id")))
+      val delta = emb.filter(isDeltaDoc(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q135_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q135_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q135_ssem_")
@@ -4338,19 +4335,17 @@ object ExtQueries {
     //      deployment never rebuild). `src` tags which path produced
     //      each row; the oracle derives it from the md5 split rule. ----
     "q137_stream_index_ingest" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q137_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.quantizedIndex(emb.filter(!isDelta(col("vec_id"))),
+        Similarity.quantizedIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding").write.mode("overwrite").parquet(p)
       }
       val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDelta(col("vec_id")))
+      val delta = emb.filter(isDeltaDoc(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q137_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q137_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q137_sidx_")
@@ -4614,7 +4609,7 @@ object ExtQueries {
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q144_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q144_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q144_sclus_")
@@ -4793,7 +4788,7 @@ object ExtQueries {
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q149_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q149_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q149_sspan_")
@@ -4984,17 +4979,15 @@ object ExtQueries {
     //      sums are exact in doubles, so both engines agree bit-for-
     //      bit before the final round ----
     "q154_centroid_drift" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       def cellMeans(side: DataFrame): DataFrame =
         Similarity.quantizedIndex(side, "vec_id", "embedding")
           .select(col("cell"), posexplode(col("code")).as(Seq("pos", "v")))
           .groupBy(col("cell"), col("pos"))
           .agg(avg(col("v").cast("double")).as("m"), count(lit(1)).as("n"))
-      val b = cellMeans(emb.filter(!isDelta(col("vec_id"))))
+      val b = cellMeans(emb.filter(!isDeltaDoc(col("vec_id"))))
         .select(col("cell"), col("pos"), col("m").as("bm"), col("n").as("bn"))
-      val dl = cellMeans(emb.filter(isDelta(col("vec_id"))))
+      val dl = cellMeans(emb.filter(isDeltaDoc(col("vec_id"))))
         .select(col("cell"), col("pos"), col("m").as("dm"), col("n").as("dn"))
       b.join(dl, Seq("cell", "pos"), "full_outer")
         .groupBy(col("cell"))
@@ -6323,7 +6316,7 @@ object ExtQueries {
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q160_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q160_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q160_scont_")
@@ -7034,14 +7027,12 @@ object ExtQueries {
     //      bounded 50-query truth side (q25's design), cell-keyed
     //      candidate joins on both index sides ----
     "q213_index_staleness" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val truth = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
           k = 3)
         .select(col("q_id"), col("n_id"))
-      val stale = Similarity.ivfTopK(q, emb.filter(!isDelta(col("vec_id"))),
+      val stale = Similarity.ivfTopK(q, emb.filter(!isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", k = 3, nCells = 16, nProbe = 4)
         .select(col("q_id").as("s_q"), col("n_id").as("s_n"))
       val maint = Similarity.ivfTopK(q, emb, "vec_id", "embedding", k = 3,
@@ -7959,22 +7950,20 @@ object ExtQueries {
     //      invariant that lets the q229 layout serve a 100 TB corpus
     //      that never stops ingesting ----
     "q232_stream_pq_index" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val cb = codebookMap(residRows)
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
+        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
       }
       val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDelta(col("vec_id")))
+      val delta = emb.filter(isDeltaDoc(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q232_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q232_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q232_spq_")
@@ -8106,17 +8095,15 @@ object ExtQueries {
     //      + m LUT lookups per candidate); raw vectors appear solely
     //      in the fenced truth side ----
     "q234_pq_staleness" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val cb = codebookMap(residRows)
       val stale = graft.util.Persist(
-        Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
+        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", coarse, cb))
       val maintained = stale.unionByName(
-        Similarity.ivfPqResidualIndex(emb.filter(isDelta(col("vec_id"))),
+        Similarity.ivfPqResidualIndex(emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", coarse, cb))
       val exact = graft.util.Persist(
         Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
@@ -8140,8 +8127,8 @@ object ExtQueries {
       // ≤ stale_hits is a theorem, spec-pinned)
       val mh = joined(maintained).groupBy(col("q_id"))
         .agg(count(col("a_n")).as("maint_hits"),
-          count(when(isDelta(col("a_n")), lit(1))).as("maint_delta_hits"),
-          count(when(isDelta(col("n_id")), lit(1))).as("n_truth_delta"))
+          count(when(isDeltaDoc(col("a_n")), lit(1))).as("maint_delta_hits"),
+          count(when(isDeltaDoc(col("n_id")), lit(1))).as("n_truth_delta"))
       sh.join(mh, Seq("q_id"))
         .select(col("q_id"), col("n_truth_delta"), col("stale_hits"),
           col("maint_hits"), col("maint_delta_hits"),
@@ -8552,23 +8539,21 @@ object ExtQueries {
     //      encode under the frozen bundle — maintenance ≡ rebuild
     //      with the permutation carried ----
     "q242_stream_opq_index" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
       val cb = codebookMap(cbRows)
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
         Similarity.ivfPqResidualIndexPerm(
-            emb.filter(!isDelta(col("vec_id"))),
+            emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
           .write.mode("overwrite").parquet(p)
       }
       val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDelta(col("vec_id")))
+      val delta = emb.filter(isDeltaDoc(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
       val in = CoreQueries.sharedInputDir(
-        s"graft_q242_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+        s"graft_q242_in_${CoreQueries.dirToken(d)}") { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
       val dir = CoreQueries.tempQueryDir("graft_q242_sopq_")
@@ -8793,8 +8778,6 @@ object ExtQueries {
     //      full replay, and Wave29Spec pins serving-the-artifact ≡
     //      the direct corpus encode path row-for-row ----
     "q246_opq_index_serving" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val exact = graft.util.Persist(
@@ -8818,14 +8801,14 @@ object ExtQueries {
       val opqDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
         Similarity.ivfPqResidualIndexPerm(
-            emb.filter(!isDelta(col("vec_id"))),
+            emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
           .write.mode("overwrite").parquet(p)
       }
       val opqIdx = s.read.parquet(opqDir)
         .select(col("cell"), col("id"), col("code"))
         .unionByName(Similarity.ivfPqResidualIndexPerm(
-          emb.filter(isDelta(col("vec_id"))),
+          emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", coarse, cb, perm))
       // identity: the q232 released artifact + delta encode, served
       // through the identity LUT path (q234's maintained side)
@@ -8833,14 +8816,14 @@ object ExtQueries {
       val iCb = codebookMap(iRows)
       val idDir = CoreQueries.sharedInputDir(
         s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
+        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", iCoarse, iCb)
           .write.mode("overwrite").parquet(p)
       }
       val idIdx = s.read.parquet(idDir)
         .select(col("cell"), col("id"), col("code"))
         .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDelta(col("vec_id"))),
+          emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", iCoarse, iCb))
       rec("balanced", Similarity.ivfPqAdcTopKIndexPerm(q, opqIdx,
           "vec_id", "embedding", k = 3, coarse, cb, perm))
@@ -8942,8 +8925,6 @@ object ExtQueries {
     //      rerank's recovery is the honest (modest) one; the aniso
     //      rehearsal (q243) carries the engaged-regime proof ----
     "q248_serving_stack" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
@@ -8951,14 +8932,14 @@ object ExtQueries {
       val opqDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
         Similarity.ivfPqResidualIndexPerm(
-            emb.filter(!isDelta(col("vec_id"))),
+            emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
           .write.mode("overwrite").parquet(p)
       }
       val idx = s.read.parquet(opqDir)
         .select(col("cell"), col("id"), col("code"))
         .unionByName(Similarity.ivfPqResidualIndexPerm(
-          emb.filter(isDelta(col("vec_id"))),
+          emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", coarse, cb, perm))
       val exact = graft.util.Persist(
         Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
@@ -9002,8 +8983,6 @@ object ExtQueries {
     //      (same md5-'f' rule as the q244 manifest masks, so the two
     //      deletion lifecycles compose across families) ----
     "q249_pq_index_tombstones" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       def tomb(c: Column): Column =
         substring(md5(c.cast("string")), 1, 1) === "f"
       val emb = Tables.embeddings(s, d)
@@ -9011,7 +8990,7 @@ object ExtQueries {
       val cb = codebookMap(residRows)
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
+        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
       }
@@ -9019,7 +8998,7 @@ object ExtQueries {
         .select(col("cell"), col("id"), col("code"))
         .withColumn("src", lit("base"))
         .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDelta(col("vec_id"))),
+          emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", coarse, cb)
           .withColumn("src", lit("delta")))
       maintained.filter(!tomb(col("id")))

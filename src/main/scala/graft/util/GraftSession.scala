@@ -3,12 +3,13 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** The ONE engine session config every entry point inherits (VERDICT
-  * r18 #8): Bench (timing), Verify (correctness), TimeOne/ProfileOne
-  * (dev isolation) previously each repeated the config, so an
-  * engine-level setting added to the bench but missed in a harness
-  * would silently measure correctness and speed under different
-  * engines. Deployments embedding the engine get the same defaults by
-  * building on this.
+  * r18 #8): Bench (timing), Verify and VerifyConsolidate (correctness),
+  * Dev (every dev mode; `core-ladder` builds one session per core
+  * count), the test session and the etlbench harness. Harnesses that
+  * each repeated the config let an engine-level setting added to the
+  * bench but missed in a harness silently measure correctness, speed
+  * and plans under different engines. Deployments embedding the engine
+  * get the same defaults by building on this.
   *
   * Notes on the non-default values:
   *   - `hugeMethodLimit=8000`: align Spark's whole-stage-codegen size

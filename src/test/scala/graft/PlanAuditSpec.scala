@@ -145,7 +145,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("PLANS.md is fresh: exactly one entry per registered query") {
-    // PLANS.md is regenerated by hand (runMain graft.PlanReport); a
+    // PLANS.md is regenerated by hand (runMain graft.Dev plans); a
     // stale copy silently misdescribes plans. Set-compare its `## qNN`
     // headers against the registry so adding/removing a query without
     // regenerating fails CI (VERDICT r8 #4).
@@ -156,7 +156,7 @@ class PlanAuditSpec extends SparkSpec {
     val missing = registry.diff(entries)
     val stale = entries.diff(registry)
     assert(missing.isEmpty && stale.isEmpty,
-      s"PLANS.md out of date — regenerate with `sbt \"runMain graft.PlanReport\"`. " +
+      s"PLANS.md out of date — regenerate with `sbt \"runMain graft.Dev plans\"`. " +
         s"missing: $missing stale: $stale")
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * the no-degenerate-bucket invariant every capped candidate generator
   * depends on, asserted at sf0.001 in every `sbt test` run instead of
   * living only in a manually-run dev main. The committed tri-scale
-  * numbers stay in SCALE_LADDER.md (from `runMain graft.ScaleLadder`);
+  * numbers stay in SCALE_LADDER.md (from `runMain graft.Dev scale-ladder`);
   * this spec regression-proofs the invariant they document.
   */
 class ScaleLadderSpec extends SparkSpec {

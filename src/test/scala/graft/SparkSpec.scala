@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,7 +53,7 @@ trait SparkSpec extends AnyFunSuite {
     sc.setJobGroup(group, group)
     try {
       val r = body
-      TestBus.drain(sc)
+      GraftBus.drain(sc)
       (r, seen.asScala.toSeq)
     } finally {
       sc.clearJobGroup()

@@ -368,6 +368,28 @@ class StreamingSpec extends SparkSpec {
     assert(owner.values.toSet == Set(10L), owner.toString)
   }
 
+  test("stream inputs are keyed per corpus path: two paths with one String.hashCode do not alias") {
+    // "<root>/Aa" and "<root>/BB" share a String.hashCode, so an input
+    // dir keyed on that hash hands BB's run the stream Aa's run wrote
+    val root = java.nio.file.Files.createTempDirectory("graft-alias")
+    val (aa, bb) = (root.resolve("Aa"), root.resolve("BB"))
+    assert(aa.toString.hashCode == bb.toString.hashCode)
+    java.nio.file.Files.createDirectories(aa)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "events.parquet"),
+      aa.resolve("events.parquet"))
+    spark.read.parquet(s"$sf0001/events.parquet").filter(col("event_id") % 2 === 0)
+      .write.parquet(bb.resolve("events.parquet").toString)
+    val q78 = SparkEntry.queries("q78_stream_daily")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val onAa = rows(q78(spark, aa.toString))
+    val own = rows(Streaming.dailyAggregation(graft.util.Tables.events(spark, bb.toString))
+      .select(to_date(col("day_start")).as("day"), col("event_type"), col("n"),
+        col("total_value"))
+      .orderBy(col("day"), col("event_type")))
+    assert(own != onAa, "the two corpora must aggregate differently")
+    assert(rows(q78(spark, bb.toString)) == own)
+  }
+
   test("q137 incremental index (base ∪ per-batch deltas) equals a full batch rebuild") {
     // the invariant the q137 oracle gates at the fixture scales,
     // asserted here on a local frame: appending per-batch index slices
