@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.etl.{Consolidate, Normalize, Sinks, Functions => F}
+import graft.streaming.Streaming
 import graft.util.Tables
 
 /** Core relational operator queries (SURVEY.md §2), each paired with a
@@ -919,18 +921,10 @@ object CoreQueries {
         s"graft_q78_in_${dirToken(d)}") { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val agg = graft.streaming.Streaming.dailyAggregation(
-        graft.streaming.Streaming.eventsStream(s, in, ev.schema))
-      // scoped stateful-op parallelism, same rationale as q83: the
-      // aggregation state is 150 day-windows — 32 state stores of
-      // per-batch checkpoint I/O for that is pure overhead
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.Streaming
-          .snapshotSink(agg, out, ck, append = false).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val agg = Streaming.dailyAggregation(
+        Streaming.eventsStream(s, in, ev.schema))
+      Streaming.drain(agg, ck, 4, OutputMode.Complete)(
+        Streaming.writeBatch(_, _, out, append = false))
       s.read.parquet(out)
         .select(to_date(col("day_start")).as("day"), col("event_type"),
           col("n"), col("total_value"))
@@ -960,23 +954,13 @@ object CoreQueries {
         s"graft_q83_in_${dirToken(d)}") { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val stream = graft.streaming.Streaming.eventsStream(s, in, ev.schema)
-      val joined = graft.streaming.Streaming.intervalJoinStream(
+      val stream = Streaming.eventsStream(s, in, ev.schema)
+      val joined = Streaming.intervalJoinStream(
         stream.filter(col("event_type") === "signup"),
         stream.filter(col("event_type") === "purchase"),
         tolMin = 30, watermark = "3650 days")
-      // stateful-op parallelism == shuffle partitions; at 32 this join
-      // maintains 128 state-store instances whose per-batch checkpoint
-      // I/O dwarfs the data (10.5s vs ~3s at sf0.1). Scoped override —
-      // safe here, unlike a lazy scan: the stream runs to completion
-      // synchronously between set and restore
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.Streaming
-          .snapshotSink(joined, out, ck, append = true).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      Streaming.drain(joined, ck, 4)(
+        Streaming.writeBatch(_, _, out, append = true))
       s.read.parquet(out)
         .select(col("user_id"), col("signup_id"), col("purchase_id"))
         .orderBy(col("user_id"), col("signup_id"), col("purchase_id"))
@@ -1007,16 +991,11 @@ object CoreQueries {
         s"graft_q106_in_${dirToken(d)}") { p =>
         docs.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val deduped = graft.streaming.Streaming.dedupStream(
-        graft.streaming.Streaming.eventsStream(s, in, docs.schema),
+      val deduped = Streaming.dedupStream(
+        Streaming.eventsStream(s, in, docs.schema),
         "norm_key", "ts", watermark = "3650 days")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.Streaming
-          .snapshotSink(deduped, out, ck, append = true).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      Streaming.drain(deduped, ck, 4)(
+        Streaming.writeBatch(_, _, out, append = true))
       // no distinct() here: a double emission must FAIL the row-count
       // compare against the oracle's DISTINCT — that is the dedup gate
       s.read.parquet(out)

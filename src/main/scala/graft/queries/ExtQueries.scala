@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Multimodal, Sessions, Similarity, TextAnalysis => TA}
+import graft.streaming.Streaming
 import graft.util.Tables
 
 /** Extension operators (BASELINE.json mandate): dedup, similarity
@@ -2815,23 +2816,11 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q123_ssimhash_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              streamBatchSimhash(batch.toDF(), baseSig,
-                baseCounts = Some(baseCnt)), id, out,
-              append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(streamBatchSimhash(batch, baseSig,
+          baseCounts = Some(baseCnt)), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("delta_id"), col("base_id"), col("hamming"))
         .orderBy(col("delta_id"), col("base_id"))
@@ -3925,26 +3914,11 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q115_sdedup_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            // writeBatch = the spec'd idempotent per-batch-id overwrite
-            // (StreamingSpec replay test) — an at-least-once replay of
-            // a batch absorbs cleanly
-            graft.streaming.Streaming.writeBatch(
-              streamBatchCandidates(batch.toDF(), baseSig,
-                baseCounts = Some(baseCnt)), id, out,
-              append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(streamBatchCandidates(batch, baseSig,
+          baseCounts = Some(baseCnt)), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("delta_id"), col("base_id"), col("n_bands"))
         .orderBy(col("delta_id"), col("base_id"))
@@ -4269,23 +4243,11 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q135_ssem_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              streamBatchSemantic(batch.toDF(), baseIdx,
-                baseCellCounts = Some(baseCnt)), id, out,
-              append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(streamBatchSemantic(batch, baseIdx,
+          baseCellCounts = Some(baseCnt)), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("delta_id"), col("base_id"), col("sim"), col("cell"))
         .orderBy(col("delta_id"), col("base_id"))
@@ -4350,21 +4312,10 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q137_sidx_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              streamBatchQuantIndex(batch.toDF()), id, out, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(streamBatchQuantIndex(batch), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("cell"), col("id"), col("code"), col("scale"), col("cnorm"))
         .withColumn("src", lit("delta"))
@@ -4614,35 +4565,24 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q144_sclus_")
       val sigRoot = s"$dir/sig"; val labRoot = s"$dir/lab"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val batchDF = batch.toDF()
-            graft.streaming.Streaming.writeBatch(
-              Dedup.bandedSignatures(batchDF, "text", "doc_id", k = 8),
-              id, sigRoot, append = true)
-            val bSig = s.read.parquet(s"$sigRoot/batch_id=$id")
-            val priorSig =
-              if (id == 0L) baseSig
-              else baseSig.unionByName(s.read.parquet(sigRoot)
-                .filter(col("batch_id") < id).drop("batch_id"))
-            val prevLab =
-              if (id == 0L) baseLab
-              else s.read.parquet(s"$labRoot/batch_id=${id - 1}")
-            graft.streaming.Streaming.writeBatch(
-              streamBatchClusterMerge(bSig, priorSig, prevLab,
-                batchDF.select(col("doc_id"))),
-              id, labRoot, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(
+          Dedup.bandedSignatures(batch, "text", "doc_id", k = 8),
+          id, sigRoot, append = true)
+        val bSig = s.read.parquet(s"$sigRoot/batch_id=$id")
+        val priorSig =
+          if (id == 0L) baseSig
+          else baseSig.unionByName(s.read.parquet(sigRoot)
+            .filter(col("batch_id") < id).drop("batch_id"))
+        val prevLab =
+          if (id == 0L) baseLab
+          else s.read.parquet(s"$labRoot/batch_id=${id - 1}")
+        Streaming.writeBatch(
+          streamBatchClusterMerge(bSig, priorSig, prevLab,
+            batch.select(col("doc_id"))),
+          id, labRoot, append = true)
+      }
       val versions = s.read.parquet(labRoot)
       versions
         .join(broadcast(versions.agg(max(col("batch_id")).as("m"))),
@@ -4793,25 +4733,15 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q149_sspan_")
       val ownRoot = s"$dir/own"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val prev =
-              if (id == 0L) None
-              else Some(s.read.parquet(s"$ownRoot/batch_id=${id - 1}"))
-            graft.streaming.Streaming.writeBatch(
-              streamBatchSpanOwners(batch.toDF(), baseOwn, prev),
-              id, ownRoot, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        val prev =
+          if (id == 0L) None
+          else Some(s.read.parquet(s"$ownRoot/batch_id=${id - 1}"))
+        Streaming.writeBatch(
+          streamBatchSpanOwners(batch, baseOwn, prev),
+          id, ownRoot, append = true)
+      }
       val versions = s.read.parquet(ownRoot)
       val owners = versions
         .join(broadcast(versions.agg(max(col("batch_id")).as("m"))),
@@ -5634,44 +5564,33 @@ object ExtQueries {
           rd("cellidx"), rd("cellcnt"), rd("spanown"), rd("spancnt"),
           rd("drops"), rd("pairs"), rd("ledger"))
       }
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val batchDF = batch.toDF()
-            graft.streaming.Streaming.writeBatch(
-              batchDF.select(col("doc_id")), id, docsRoot, append = true)
-            val ingested = s.read.parquet(docsRoot)
-            val priorDocsB = baseDocs.unionByName(docs.join(
-              ingested.filter(col("batch_id") < id).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"))
-            val corpusB = baseDocs.unionByName(docs.join(
-              ingested.filter(col("batch_id") <= id).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"))
-            val prior = if (id == 0L) v1Artifacts(s, d)
-              else readBundle(s"$bndRoot/batch_id=${id - 1}")
-            var cached = List.empty[DataFrame]
-            val next = ledgerMaintainStep(prior, batchDF,
-              emb.join(batchDF.select(col("doc_id").as("vec_id")),
-                Seq("vec_id"), "left_semi"),
-              corpus = corpusB, priorDocs = priorDocsB,
-              onPersist = f => cached ::= f)
-            // eleven independent per-batch artifact writes — submit
-            // concurrently (guide §2.6; VERDICT r18 #1, round 19)
-            graft.util.ParallelWrite.run(
-              names.zip(frames(next)).map { case (n, df) => () =>
-                df.write.mode("overwrite")
-                  .parquet(s"$bndRoot/batch_id=$id/$n") })
-            cached.foreach(_.unpersist())
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(batch.select(col("doc_id")), id, docsRoot,
+          append = true)
+        val ingested = s.read.parquet(docsRoot)
+        val priorDocsB = baseDocs.unionByName(docs.join(
+          ingested.filter(col("batch_id") < id).select(col("doc_id")),
+          Seq("doc_id"), "left_semi"))
+        val corpusB = baseDocs.unionByName(docs.join(
+          ingested.filter(col("batch_id") <= id).select(col("doc_id")),
+          Seq("doc_id"), "left_semi"))
+        val prior = if (id == 0L) v1Artifacts(s, d)
+          else readBundle(s"$bndRoot/batch_id=${id - 1}")
+        var cached = List.empty[DataFrame]
+        val next = ledgerMaintainStep(prior, batch,
+          emb.join(batch.select(col("doc_id").as("vec_id")),
+            Seq("vec_id"), "left_semi"),
+          corpus = corpusB, priorDocs = priorDocsB,
+          onPersist = f => cached ::= f)
+        // eleven independent per-batch artifact writes — submit
+        // concurrently (guide §2.6; VERDICT r18 #1, round 19)
+        graft.util.ParallelWrite.run(
+          names.zip(frames(next)).map { case (n, df) => () =>
+            df.write.mode("overwrite")
+              .parquet(s"$bndRoot/batch_id=$id/$n") })
+        cached.foreach(_.unpersist())
+      }
       // An empty delta slice produces zero batches: listFiles() on a
       // never-created root returns null and .max on an empty array
       // throws — fail with the actual configuration mistake instead.
@@ -6135,21 +6054,10 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q189_hist_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              histBinCounts(batch.toDF(), bounds), id, out, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 2) { (batch, id) =>
+        Streaming.writeBatch(histBinCounts(batch, bounds), id, out, append = true)
+      }
       val merged = s.read.parquet(out)
         .select(col("source"), col("lo"), col("hi"), col("bin"), col("cnt"))
         .unionByName(s.read.parquet(baseSketchDir))
@@ -6189,25 +6097,14 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q190_hh_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val bs = batch.sparkSession
-            import bs.implicits._
-            val m = gramStream(batch.toDF())
-              .select(col("gh")).as[String].select(mg.toColumn).collect()(0)
-            graft.streaming.Streaming.writeBatch(
-              m.toSeq.toDF("gh", "est"), id, out, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 2) { (batch, id) =>
+        val bs = batch.sparkSession
+        import bs.implicits._
+        val m = gramStream(batch)
+          .select(col("gh")).as[String].select(mg.toColumn).collect()(0)
+        Streaming.writeBatch(m.toSeq.toDF("gh", "est"), id, out, append = true)
+      }
       // mergeable-summaries merge of the persisted sketches (each a
       // ≤k-row artifact; the driver-side fold is the bounded collect)
       val sketches: Seq[Map[String, Long]] =
@@ -6321,29 +6218,19 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q160_scont_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            // capture the batch's cached candidate frame and drop it
-            // once the append action completes (ADVICE r10: without
-            // this, one cached frame per micro-batch accumulates
-            // across batches and repeated bench runs in one session)
-            var cached: Option[DataFrame] = None
-            try graft.streaming.Streaming.writeBatch(
-              streamBatchContainment(batch.toDF(), baseSig, baseDocs,
-                baseCounts = Some(baseCnt),
-                onPersist = f => cached = Some(f)), id, out, append = true)
-            finally cached.foreach(_.unpersist())
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        // capture the batch's cached candidate frame and drop it
+        // once the append action completes (ADVICE r10: without
+        // this, one cached frame per micro-batch accumulates
+        // across batches and repeated bench runs in one session)
+        var cached: Option[DataFrame] = None
+        try Streaming.writeBatch(
+          streamBatchContainment(batch, baseSig, baseDocs,
+            baseCounts = Some(baseCnt),
+            onPersist = f => cached = Some(f)), id, out, append = true)
+        finally cached.foreach(_.unpersist())
+      }
       s.read.parquet(out)
         .select(col("delta_id"), col("base_id"), col("n_common"),
           col("jaccard"), col("cont_delta"), col("cont_base"))
@@ -7093,38 +6980,27 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q214_smix_")
       val wRoot = s"$dir/w"; val mRoot = s"$dir/m"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, docs.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val means = qualityOf(batch.toDF()).groupBy(col("source"))
-              .agg(round(avg(col("quality_score")), 6).as("m"))
-            graft.streaming.Streaming.writeBatch(means, id, mRoot,
-              append = true)
-            val prior = if (id == 0L)
-                s.read.parquet(priorDir)
-                  .select(col("source"), col("n_docs"), col("w"))
-              else s.read.parquet(s"$wRoot/batch_id=${id - 1}")
-            val mx = means.agg(max(col("m")).as("x"))
-            val stepped = prior.join(means, Seq("source"), "left")
-              .crossJoin(broadcast(mx))
-              .withColumn("e",
-                coalesce(round(col("x") - col("m"), 6), lit(0.0)))
-              .withColumn("g", col("w") * exp(col("e")))
-            val z = stepped.agg(sum(col("g")).as("z"))
-            stepped.crossJoin(broadcast(z))
-              .select(col("source"), col("n_docs"),
-                (col("g") / col("z")).as("w"))
-              .write.mode("overwrite").parquet(s"$wRoot/batch_id=$id")
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, docs.schema)
+      Streaming.drain(stream, ck, 2) { (batch, id) =>
+        val means = qualityOf(batch).groupBy(col("source"))
+          .agg(round(avg(col("quality_score")), 6).as("m"))
+        Streaming.writeBatch(means, id, mRoot, append = true)
+        val prior = if (id == 0L)
+            s.read.parquet(priorDir)
+              .select(col("source"), col("n_docs"), col("w"))
+          else s.read.parquet(s"$wRoot/batch_id=${id - 1}")
+        val mx = means.agg(max(col("m")).as("x"))
+        val stepped = prior.join(means, Seq("source"), "left")
+          .crossJoin(broadcast(mx))
+          .withColumn("e",
+            coalesce(round(col("x") - col("m"), 6), lit(0.0)))
+          .withColumn("g", col("w") * exp(col("e")))
+        val z = stepped.agg(sum(col("g")).as("z"))
+        stepped.crossJoin(broadcast(z))
+          .select(col("source"), col("n_docs"),
+            (col("g") / col("z")).as("w"))
+          .write.mode("overwrite").parquet(s"$wRoot/batch_id=$id")
+      }
       val w0 = s.read.parquet(priorDir)
         .select(col("source"), col("n_docs"), col("w").as("wv0"))
       val ms = s.read.parquet(mRoot).groupBy(col("source"))
@@ -7517,32 +7393,22 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q224_squota_")
       val skRoot = s"$dir/sk"; val cntRoot = s"$dir/cnt"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, docs.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val b = batch.toDF()
-              .select(col("doc_id"), col("lang"), col("source"),
-                size(TA.wsTokens(col("text"))).cast("long").as("n_tokens"))
-            val w = Window.partitionBy(col("lang"), col("source"))
-              .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-            graft.streaming.Streaming.writeBatch(
-              b.withColumn("rn", row_number().over(w))
-                .filter(col("rn") <= 8)
-                .select(col("doc_id"), col("lang"), col("source"),
-                  col("n_tokens")), id, skRoot, append = true)
-            graft.streaming.Streaming.writeBatch(
-              b.groupBy(col("lang"), col("source"))
-                .agg(count(lit(1)).as("n")), id, cntRoot, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, docs.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        val b = batch
+          .select(col("doc_id"), col("lang"), col("source"),
+            size(TA.wsTokens(col("text"))).cast("long").as("n_tokens"))
+        val w = Window.partitionBy(col("lang"), col("source"))
+          .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+        Streaming.writeBatch(
+          b.withColumn("rn", row_number().over(w))
+            .filter(col("rn") <= 8)
+            .select(col("doc_id"), col("lang"), col("source"),
+              col("n_tokens")), id, skRoot, append = true)
+        Streaming.writeBatch(
+          b.groupBy(col("lang"), col("source"))
+            .agg(count(lit(1)).as("n")), id, cntRoot, append = true)
+      }
       val w2 = Window.partitionBy(col("lang"), col("source"))
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       val taken = s.read.parquet(skRoot)
@@ -7599,33 +7465,23 @@ object ExtQueries {
       val mRoot = s"$dir/m"; val ck = s"$dir/ck"
       val inSchema = docs.select(col("doc_id"), col("source"), col("text"))
         .schema
-      val stream = graft.streaming.Streaming.eventsStream(s, in, inSchema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val prior =
-              if (id == 0L) base.select(col("source"), col("seq_id"))
-              else base.select(col("source"), col("seq_id"))
-                .unionByName(s.read.parquet(mRoot)
-                  .filter(col("batch_id") < id)
-                  .select(col("source"), col("seq_id")))
-            val seq0 = prior.groupBy(col("source"))
-              .agg((max(col("seq_id")) + 1).as("s0"))
-            graft.streaming.Streaming.writeBatch(
-              ffdPack(tok(batch.toDF()))
-                .join(seq0, Seq("source"), "left")
-                .withColumn("seq_id",
-                  col("seq_id") + coalesce(col("s0"), lit(0L)))
-                .drop("s0"), id, mRoot, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, inSchema)
+      Streaming.drain(stream, ck, 2) { (batch, id) =>
+        val prior =
+          if (id == 0L) base.select(col("source"), col("seq_id"))
+          else base.select(col("source"), col("seq_id"))
+            .unionByName(s.read.parquet(mRoot)
+              .filter(col("batch_id") < id)
+              .select(col("source"), col("seq_id")))
+        val seq0 = prior.groupBy(col("source"))
+          .agg((max(col("seq_id")) + 1).as("s0"))
+        Streaming.writeBatch(
+          ffdPack(tok(batch))
+            .join(seq0, Seq("source"), "left")
+            .withColumn("seq_id",
+              col("seq_id") + coalesce(col("s0"), lit(0L)))
+            .drop("s0"), id, mRoot, append = true)
+      }
       base.withColumn("origin", lit("base"))
         .unionByName(s.read.parquet(mRoot)
           .withColumn("origin", when(col("batch_id") === 0, lit("ingest1"))
@@ -7698,39 +7554,28 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q227_sdecon_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, train.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            val b = batch.toDF()
-            val perDoc = b.select(col("doc_id"),
-                explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
-              .join(broadcast(held), Seq("gh"))
-              .groupBy(col("doc_id"))
-              .agg(count(lit(1)).as("shared_grams"))
-            // the card's key is named rule_batch INSIDE the store: the
-            // K2 sink partitions by the TRIGGER id as batch_id=<id>,
-            // and a data column of the same name would be clobbered by
-            // partition discovery on read-back
-            graft.streaming.Streaming.writeBatch(
-              b.select(col("doc_id"),
-                  pmod(conv(substring(md5(col("doc_id").cast("string")),
-                    2, 1), 16, 10).cast("long"), lit(4L)).as("rule_batch"))
-                .join(perDoc, Seq("doc_id"), "left")
-                .groupBy(col("rule_batch"))
-                .agg(count(lit(1)).as("n_docs"),
-                  count(col("shared_grams")).as("n_flagged"),
-                  coalesce(sum(col("shared_grams")), lit(0L))
-                    .as("n_shared_grams")), id, out, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, train.schema)
+      Streaming.drain(stream, ck, 4) { (b, id) =>
+        val perDoc = b.select(col("doc_id"),
+            explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
+          .join(broadcast(held), Seq("gh"))
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("shared_grams"))
+        // the card's key is named rule_batch INSIDE the store: the
+        // K2 sink partitions by the TRIGGER id as batch_id=<id>,
+        // and a data column of the same name would be clobbered by
+        // partition discovery on read-back
+        Streaming.writeBatch(
+          b.select(col("doc_id"),
+              pmod(conv(substring(md5(col("doc_id").cast("string")),
+                2, 1), 16, 10).cast("long"), lit(4L)).as("rule_batch"))
+            .join(perDoc, Seq("doc_id"), "left")
+            .groupBy(col("rule_batch"))
+            .agg(count(lit(1)).as("n_docs"),
+              count(col("shared_grams")).as("n_flagged"),
+              coalesce(sum(col("shared_grams")), lit(0L))
+                .as("n_shared_grams")), id, out, append = true)
+      }
       // writeBatch partitions by the TRIGGER id; the card's key is the
       // RULE batch (the first column) — re-aggregate the additive
       // counts across triggers
@@ -7968,22 +7813,12 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q232_spq_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              Similarity.ivfPqResidualIndex(batch.toDF(), "vec_id",
-                "embedding", coarse, cb), id, out, append = true)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(
+          Similarity.ivfPqResidualIndex(batch, "vec_id",
+            "embedding", coarse, cb), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("cell"), col("id"), col("code"))
         .withColumn("src", lit("delta"))
@@ -8558,22 +8393,12 @@ object ExtQueries {
       }
       val dir = CoreQueries.tempQueryDir("graft_q242_sopq_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val qy = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ck)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             id: Long) =>
-            graft.streaming.Streaming.writeBatch(
-              Similarity.ivfPqResidualIndexPerm(batch.toDF(), "vec_id",
-                "embedding", coarse, cb, perm), id, out, append = true)
-          }.start()
-        try qy.processAllAvailable() finally qy.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = Streaming.eventsStream(s, in, delta.schema)
+      Streaming.drain(stream, ck, 4) { (batch, id) =>
+        Streaming.writeBatch(
+          Similarity.ivfPqResidualIndexPerm(batch, "vec_id",
+            "embedding", coarse, cb, perm), id, out, append = true)
+      }
       s.read.parquet(out)
         .select(col("cell"), col("id"), col("code"))
         .withColumn("src", lit("delta"))

@@ -139,8 +139,51 @@ object Streaming {
       .select(col("user_id"), col("signup_id"), col("purchase_id"))
   }
 
-  /** K1/K2 as streaming sinks: per-microbatch overwrite (snapshot) or
-    * append (historization) via foreachBatch.
+  /** Runs `stream` to completion through `onBatch` (`foreachBatch` in
+    * `mode`, checkpointed at `ck`), then stops the query, thrown or
+    * not. An exception from `onBatch` reaches the caller in the cause
+    * chain of a `StreamingQueryException`. Every streaming query in
+    * the registry runs through here.
+    *
+    * Stateful-op parallelism is `spark.sql.shuffle.partitions`, read
+    * when the query starts, so the run sets it to `partitions` and
+    * restores the prior value when the run ends, thrown or not. The
+    * bench's session default (one per core, 32 on the bench host)
+    * costs far more than the data: q83's interval join at 32 keeps
+    * 128 state-store instances whose per-batch checkpoint I/O took
+    * 10.5 s vs ~3 s at 4 (sf0.1), and q78's aggregation state is 150
+    * day-windows. The batch bodies' own joins and aggregations run
+    * under the same value; q189, q190, q214 and q225 (2 or 3
+    * micro-batches) pass 2, the rest 4.
+    *
+    * The override is on the caller's session on purpose. A stream
+    * started on `spark.newSession()` or a cloned session reports no
+    * progress events to a `StreamingQueryListener` on the caller's
+    * `spark.streams` (a 3-batch spark-shell check on `local[2]`:
+    * 0 of 3 events, vs 3 of 3 on the caller's session), and
+    * `newSession()` also drops runtime SQL settings such as AQE.
+    * Per-micro-batch progress is read from that listener, so the
+    * drain stays where it can be seen; the override holds only while
+    * the stream runs, synchronously, on the calling thread.
+    */
+  def drain(stream: DataFrame, ck: String, partitions: Int,
+      mode: OutputMode = OutputMode.Append)(
+      onBatch: (DataFrame, Long) => Unit): Unit = {
+    val conf = stream.sparkSession.conf
+    val prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    try {
+      val q = stream.writeStream.outputMode(mode)
+        .option("checkpointLocation", ck)
+        .foreachBatch(onBatch)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** K1/K2 as a streaming sink body: per-microbatch overwrite
+    * (snapshot, `append = false`) or append (historization), for
+    * `drain(...)(writeBatch(_, _, path, append))`.
     *
     * foreachBatch is AT-LEAST-ONCE: a retried microbatch re-runs the
     * writer after a crash between the parquet commit and the
@@ -149,19 +192,7 @@ object Streaming {
     * rewrites the same directory instead of duplicating rows, and
     * readers prune on the partition column like any historized table.
     */
-  def snapshotSink(df: DataFrame, path: String, checkpoint: String,
-      append: Boolean): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode(if (append) OutputMode.Append else OutputMode.Complete)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatch(batch, id, path, append)
-      }
-
-  /** The foreachBatch body, separated so its idempotency is testable
-    * without simulating a mid-commit crash.
-    */
-  private[graft] def writeBatch(batch: Dataset[org.apache.spark.sql.Row],
+  private[graft] def writeBatch(batch: DataFrame,
       id: Long, path: String, append: Boolean): Unit =
     if (append)
       batch.write.mode("overwrite").parquet(s"$path/batch_id=$id")

@@ -412,4 +412,65 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
     assert(rows(incremental) == rows(rebuild))
   }
+
+  /** sf0.001 events split into 4 files: `eventsStream` reads one file
+    * per micro-batch, so a drain of it runs 4 batches.
+    */
+  private def fourFileStream(): (org.apache.spark.sql.DataFrame, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drain").toString
+    val in = s"$dir/in"
+    graft.util.Tables.events(spark, sf0001).select(col("event_id"), col("ts"))
+      .repartition(4).write.mode("overwrite").parquet(in)
+    (Streaming.eventsStream(spark, in, spark.read.parquet(in).schema), dir)
+  }
+
+  test("drain scopes shuffle partitions to the run and stops its query, thrown or not") {
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(prior != "3")
+    val (stream, dir) = fourFileStream()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    Streaming.drain(stream, s"$dir/ck1", 3) { (batch, id) =>
+      seen += id -> batch.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    }
+    assert(seen.toSeq == (0L to 3L).map(_ -> "3"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == prior)
+    assert(spark.streams.active.isEmpty)
+
+    val thrown = intercept[Exception] {
+      Streaming.drain(stream, s"$dir/ck2", 3) { (_, id) =>
+        if (id == 1L) throw new IllegalStateException("drain body failed at batch 1")
+      }
+    }
+    val causes = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => Option(c.getMessage)
+      .exists(_.contains("drain body failed at batch 1"))), thrown.toString)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == prior)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a drain stays on the caller's session: its listener sees one progress event per batch") {
+    // a stream started on spark.newSession() or a cloned session reports
+    // no progress to this listener; the drain's per-stream override is
+    // kept on the caller's session so per-batch progress stays visible
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val (stream, dir) = fourFileStream()
+    val progressed = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.sources.exists(_.description.contains(dir)))
+          progressed.add(e.progress.batchId)
+    }
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
+    spark.streams.addListener(listener)
+    try {
+      Streaming.drain(stream, s"$dir/ck", 4)((_, id) => batches += id)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    assert(batches.toSeq == (0L to 3L))
+    assert(progressed.toArray.toSeq.map(_.asInstanceOf[java.lang.Long].longValue)
+      == batches.toSeq)
+  }
 }
