@@ -80,7 +80,7 @@ object ScaleLadder {
     * stays the backstop). Oracle-gated end to end by q175.
     */
   private[graft] def skewedSizes(spark: SparkSession, d: String): DataFrame =
-    graft.queries.ExtQueries.skewedSig(spark, d)
+    graft.queries.DedupQueries.skewedSig(spark, d)
       .select(concat_ws("|", col("band"), col("minhash")).as("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
 
@@ -90,7 +90,7 @@ object ScaleLadder {
     */
   private[graft] def skewedCellSizes(spark: SparkSession, d: String): DataFrame =
     graft.ext.Similarity.hotCells(
-        graft.queries.ExtQueries.skewedEmb(spark, d), "vec_id", "embedding",
+        graft.queries.Fragments.skewedEmb(spark, d), "vec_id", "embedding",
         nCells = 16, cellCap = 0)
       .select(col("cell").cast("string").as("k"), col("cell_size").as("n"))
 

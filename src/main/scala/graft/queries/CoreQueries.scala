@@ -19,7 +19,7 @@ import graft.util.Tables
   * (exact, associative — immune to partial-aggregation order) and is
   * cast back to DOUBLE so schemas agree.
   */
-object CoreQueries {
+object CoreQueries extends QueryFamily {
   private val D = DecimalType(18, 2)
   private def dec(c: Column): Column = c.cast(D)
   /** Exact money sum: decimal arithmetic inside, double outside. */

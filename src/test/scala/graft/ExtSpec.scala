@@ -291,7 +291,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("q132: cluster-representative split co-assigns every candidate pair") {
-    val rows = graft.queries.ExtQueries.queries("q132_leakage_safe_split")(
+    val rows = SparkEntry.queries("q132_leakage_safe_split")(
       spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // zero cross-split pairs under the cluster rule — by construction,
@@ -305,7 +305,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("q133: at most 5 docs per source, skey non-increasing within a source") {
-    val rows = graft.queries.ExtQueries.queries("q133_source_weighted_sample")(
+    val rows = SparkEntry.queries("q133_source_weighted_sample")(
       spark, sf0001).collect()
     val bySrc = rows.groupBy(_.getString(0))
     assert(bySrc.nonEmpty)
@@ -334,9 +334,9 @@ class ExtSpec extends SparkSpec {
   }
 
   test("trained PQ codebook does not lose ADC recall vs the static one") {
-    val q128 = graft.queries.ExtQueries.queries("q128_pq_recall")(spark, sf0001)
+    val q128 = SparkEntry.queries("q128_pq_recall")(spark, sf0001)
       .agg(sum(col("n_hits"))).collect()(0).getLong(0)
-    val q136 = graft.queries.ExtQueries.queries("q136_pq_trained_recall")(
+    val q136 = SparkEntry.queries("q136_pq_trained_recall")(
       spark, sf0001).agg(sum(col("n_hits"))).collect()(0).getLong(0)
     // measured at sf0.001: 12 static vs 21 trained hits of 150 — one
     // Lloyd step nearly doubles recall; assert the non-strict direction
@@ -466,7 +466,7 @@ class ExtSpec extends SparkSpec {
 
   test("q91 incremental dedup: cross-side pairs only, subset of the full candidate set") {
     import org.apache.spark.sql.functions.md5
-    val out = graft.queries.ExtQueries.queries("q91_incremental_dedup")(spark, sf0001)
+    val out = SparkEntry.queries("q91_incremental_dedup")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.nonEmpty)
     def side(id: Long): String = {
@@ -478,7 +478,7 @@ class ExtSpec extends SparkSpec {
       assert(side(d) == "delta" && side(b) == "base", s"($d,$b)")
     }
     // every incremental pair is also a pair of the full q22 candidate run
-    val full = graft.queries.ExtQueries.queries("q22_minhash_candidates")(spark, sf0001)
+    val full = SparkEntry.queries("q22_minhash_candidates")(spark, sf0001)
       .collect().map(r => Set(r.getLong(0), r.getLong(1))).toSet
     assert(out.forall(p => full.contains(Set(p._1, p._2))))
   }
@@ -496,7 +496,7 @@ class ExtSpec extends SparkSpec {
       val kept = spans.filter(sp => seen.add(sp))
       (id, spans.size.toLong, kept.size.toLong, kept.mkString(" "))
     }.toSeq
-    val got = graft.queries.ExtQueries.queries("q92_span_dedup")(spark, sf0001)
+    val got = SparkEntry.queries("q92_span_dedup")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     assert(got == expected)
     // the corpus-wide invariant: every distinct span survives exactly once
@@ -513,13 +513,13 @@ class ExtSpec extends SparkSpec {
     // (word freq) x (pairs per distinct word) — same total by design
     val expected = freq.toSeq.sortBy { case (p, f) => (-f, p) }.take(20)
       .zipWithIndex.map { case ((p, f), i) => (i + 1L, p, f) }
-    val got = graft.queries.ExtQueries.queries("q93_bpe_merge")(spark, sf0001)
+    val got = SparkEntry.queries("q93_bpe_merge")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(got == expected)
   }
 
   test("q88 OOV rate: counts consistent, rate exact, tail terms actually OOV") {
-    val out = graft.queries.ExtQueries.queries("q88_oov_rate")(spark, sf0001)
+    val out = SparkEntry.queries("q88_oov_rate")(spark, sf0001)
       .collect()
     assert(out.nonEmpty)
     for (r <- out) {
@@ -533,7 +533,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("domain mixing: quota-ed sources downsampled, unquoted kept whole") {
-    val bySrc = graft.queries.ExtQueries.queries("q73_domain_mix")(spark, sf0001)
+    val bySrc = SparkEntry.queries("q73_domain_mix")(spark, sf0001)
       .groupBy("source").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // sf0.001 has 25 docs per source; src0/src1/src2 carry 25/50/75%
@@ -628,7 +628,7 @@ class ExtSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("delta_id"), col("base_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = graft.queries.ExtQueries
+    val q = graft.queries.Fragments
     val capped = rows(q.streamSigCandidates(batch, base, 1, 3))
     assert(capped == Set((102L, 3L)))
     assert(rows(q.streamSigCandidates(batch, base, 1, 3, Some(cnt))) == capped)

@@ -100,18 +100,18 @@ class PlanAuditSpec extends SparkSpec {
     val baseSig = graft.ext.Dedup.bandedSignatures(
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id", k = 8)
     assertKeyed("streamBatchCandidates",
-      graft.queries.ExtQueries.streamBatchCandidates(
+      graft.queries.Fragments.streamBatchCandidates(
         docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
         baseSig))
     assertKeyed("streamBatchSimhash",
-      graft.queries.ExtQueries.streamBatchSimhash(
+      graft.queries.Fragments.streamBatchSimhash(
         docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
-        graft.queries.ExtQueries.simhashBaseSig(
+        graft.queries.Fragments.simhashBaseSig(
           docs.filter(col("doc_id") % 2 === 0))))
     // q160's interior plan: candidates keyed on (band, minhash), gram
     // rescore keyed on delta_id/base_id — no unkeyed join anywhere
     assertKeyed("streamBatchContainment",
-      graft.queries.ExtQueries.streamBatchContainment(
+      graft.queries.Fragments.streamBatchContainment(
         docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
         baseSig, docs.filter(col("doc_id") % 2 === 0)))
     assertKeyed("normalizedRunE1",
@@ -120,7 +120,7 @@ class PlanAuditSpec extends SparkSpec {
     // 16-row centroid BNLJ (q86's allowlisted fan-out) — assert no
     // cartesian and that the pair join itself is keyed
     val embAll = graft.util.Tables.embeddings(spark, sf0001)
-    val semPlan = graft.queries.ExtQueries.streamBatchSemantic(
+    val semPlan = graft.queries.AnnQueries.streamBatchSemantic(
       embAll.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding")),
       graft.ext.Similarity.cellIndex(
@@ -134,7 +134,7 @@ class PlanAuditSpec extends SparkSpec {
     // q137's interior batch plan is pure per-batch work: the designed
     // 16-row centroid BNLJ and NOTHING else — no base-side join of any
     // kind (the whole point of incremental index maintenance)
-    val idxPlan = graft.queries.ExtQueries.streamBatchQuantIndex(
+    val idxPlan = graft.queries.AnnQueries.streamBatchQuantIndex(
       embAll.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding")))
       .queryExecution.executedPlan.toString

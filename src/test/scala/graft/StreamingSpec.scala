@@ -240,7 +240,7 @@ class StreamingSpec extends SparkSpec {
     // batch doc 20 duplicates base doc 10's text => must pair with it
     val batch = Seq((20L, "the quick brown fox jumps over the lazy dog tonight"))
       .toDF("doc_id", "text")
-    val cand = graft.queries.ExtQueries.streamBatchCandidates(batch, baseSig)
+    val cand = graft.queries.Fragments.streamBatchCandidates(batch, baseSig)
     Streaming.writeBatch(cand, 0L, path, append = true)
     Streaming.writeBatch(cand, 0L, path, append = true) // replay
     val back = spark.read.parquet(path)
@@ -259,11 +259,11 @@ class StreamingSpec extends SparkSpec {
     val base = Seq((10L, "the quick brown fox jumps over the lazy dog tonight"),
       (11L, "completely unrelated text about spark physical planning"))
       .toDF("doc_id", "text")
-    val baseSig = graft.queries.ExtQueries.simhashBaseSig(base)
+    val baseSig = graft.queries.Fragments.simhashBaseSig(base)
     // batch doc 20 duplicates base doc 10's text => hamming 0 pair
     val batch = Seq((20L, "the quick brown fox jumps over the lazy dog tonight"))
       .toDF("doc_id", "text")
-    val cand = graft.queries.ExtQueries.streamBatchSimhash(batch, baseSig)
+    val cand = graft.queries.Fragments.streamBatchSimhash(batch, baseSig)
     Streaming.writeBatch(cand, 0L, path, append = true)
     Streaming.writeBatch(cand, 0L, path, append = true) // replay
     val back = spark.read.parquet(path)
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
     // batch vec 20 is a near-copy of base vec 10 => same cell, sim ~ 1
     val batch = Seq((20L, Array(0.999f, 0.01f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val cand = graft.queries.ExtQueries.streamBatchSemantic(batch, baseIdx)
+    val cand = graft.queries.AnnQueries.streamBatchSemantic(batch, baseIdx)
     Streaming.writeBatch(cand, 0L, path, append = true)
     Streaming.writeBatch(cand, 0L, path, append = true) // replay
     val back = spark.read.parquet(path)
@@ -309,7 +309,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq((20L, Array(0.5f, 0.0f, 0.0f, 0.0f)),
       (21L, Array(0.0f, 0.25f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val idx = graft.queries.ExtQueries.streamBatchQuantIndex(batch)
+    val idx = graft.queries.AnnQueries.streamBatchQuantIndex(batch)
     Streaming.writeBatch(idx, 0L, path, append = true)
     Streaming.writeBatch(idx, 0L, path, append = true) // replay
     val back = spark.read.parquet(path)
@@ -334,7 +334,7 @@ class StreamingSpec extends SparkSpec {
     val priorSig = graft.ext.Dedup.bandedSignatures(
       Seq((1L, "wholly unrelated text one two three")).toDF("doc_id", "text"),
       "text", "doc_id", k = 8)
-    val merged = graft.queries.ExtQueries.streamBatchClusterMerge(
+    val merged = graft.queries.DedupQueries.streamBatchClusterMerge(
       batchSig, priorSig, prevLab, batch.select(col("doc_id")))
     Streaming.writeBatch(merged, 1L, path, append = true)
     Streaming.writeBatch(merged, 1L, path, append = true) // replay
@@ -355,7 +355,7 @@ class StreamingSpec extends SparkSpec {
     val baseOwn = Seq("ffff").toDF("k").limit(0) // empty owner set
     val b1 = Seq((20L, text)).toDF("doc_id", "text")
     val b2 = Seq((10L, text)).toDF("doc_id", "text") // same span, smaller id, LATER batch
-    val q = graft.queries.ExtQueries
+    val q = graft.queries.DedupQueries
     val v0 = q.streamBatchSpanOwners(b1, baseOwn, None)
     Streaming.writeBatch(v0, 0L, path, append = true)
     val v1 = q.streamBatchSpanOwners(b2, baseOwn,
@@ -403,8 +403,8 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq((11L, Array(0.0f, 0.0f, 0.0f, -0.7f))).toDF("vec_id", "embedding")
     val incremental = graft.ext.Similarity
       .quantizedIndex(base, "vec_id", "embedding")
-      .unionByName(graft.queries.ExtQueries.streamBatchQuantIndex(b1))
-      .unionByName(graft.queries.ExtQueries.streamBatchQuantIndex(b2))
+      .unionByName(graft.queries.AnnQueries.streamBatchQuantIndex(b1))
+      .unionByName(graft.queries.AnnQueries.streamBatchQuantIndex(b2))
     val rebuild = graft.ext.Similarity.quantizedIndex(
       base.unionByName(b1).unionByName(b2), "vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =

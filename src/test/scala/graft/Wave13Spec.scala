@@ -64,7 +64,7 @@ class Wave13Spec extends SparkSpec {
     // the bucket-arithmetic pair counts must equal what the REAL
     // capped generator (windowed cap + collect_list machinery) emits:
     // sum of n_bands over its pairs == total within-bucket pairs
-    val sig = graft.queries.ExtQueries.skewedSig(spark, sf0001)
+    val sig = graft.queries.DedupQueries.skewedSig(spark, sf0001)
     def generatorPairs(cap: Int): Long =
       graft.ext.Dedup.minhashCandidates(sig, maxBucket = cap)
         .agg(sum(col("n_bands"))).head().getLong(0)
@@ -95,7 +95,7 @@ class Wave13Spec extends SparkSpec {
     assert(rows.map(_.getLong(3)).sum < rows.map(_.getLong(4)).sum,
       "cap dropped no candidate pairs")
     // the production audit twin flags exactly the same (cell, size)
-    val emb = graft.queries.ExtQueries.skewedEmb(spark, sf0001)
+    val emb = graft.queries.Fragments.skewedEmb(spark, sf0001)
     val audited = Similarity.hotCells(emb, "vec_id", "embedding",
         nCells = 16, cellCap = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -215,7 +215,7 @@ class Wave13Spec extends SparkSpec {
 
   test("pqTrainIterationPerm under the identity layout == pqTrainIteration") {
     import graft.ext.Similarity
-    val aniso = graft.queries.ExtQueries.anisoEmb(spark, sf0001)
+    val aniso = graft.queries.AnnQueries.anisoEmb(spark, sf0001)
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2))
     val viaPerm = Similarity.pqTrainIterationPerm(aniso, "vec_id", "vec",

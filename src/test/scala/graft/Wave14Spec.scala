@@ -37,7 +37,7 @@ class Wave14Spec extends SparkSpec {
     val rows = SparkEntry.queries("q186_heavy_hitters")(spark, sf0001).collect()
     assert(rows.nonEmpty, "no heavy hitters found — the rehearsal is vacuous")
     // the exact set, computed directly (no sketch)
-    val grams = graft.queries.ExtQueries.stampedDocs(spark, sf0001)
+    val grams = graft.queries.DedupQueries.stampedDocs(spark, sf0001)
       .select(graft.ext.TextAnalysis.normWords(col("text")).as("w"))
       .filter(size(col("w")) >= 8)
       .select(explode(transform(sequence(lit(1), size(col("w")) - 7),
@@ -53,7 +53,7 @@ class Wave14Spec extends SparkSpec {
       s"count mismatch for ${r.getString(0)}"))
     // every heavy hitter is one of the stamped boilerplate's grams —
     // the organic background (max ~0.015%) can never clear 1%
-    val bpWords = graft.queries.ExtQueries.boilerplateText
+    val bpWords = graft.queries.DedupQueries.boilerplateText
       .split("\\s+").toSeq
     val bpGrams = bpWords.sliding(8).map { w =>
       java.security.MessageDigest.getInstance("MD5")

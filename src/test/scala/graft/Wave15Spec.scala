@@ -25,8 +25,8 @@ class Wave15Spec extends SparkSpec {
         .isin("0", "1", "2") === false)
       .groupBy(col("source"))
       .agg(min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-    val rebuilt = graft.queries.ExtQueries.histReport(docs,
-        graft.queries.ExtQueries.histBinCounts(docs, bounds))
+    val rebuilt = graft.queries.TextQueries.histReport(docs,
+        graft.queries.TextQueries.histBinCounts(docs, bounds))
       .collect().map(_.toSeq).toSeq
     assert(streamed == rebuilt,
       "streamed sketch report differs from the batch rebuild")

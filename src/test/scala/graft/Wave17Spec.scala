@@ -24,7 +24,7 @@ class Wave17Spec extends SparkSpec {
       (4L, "srcA", 100L), (5L, "srcA", 90L), (6L, "srcA", 30L),
       (7L, "srcB", 512L), (8L, "srcB", 10L))
       .toDF("doc_id", "source", "n_tokens")
-    val got = graft.queries.ExtQueries.ffdPack(docs)
+    val got = graft.queries.MixtureQueries.ffdPack(docs)
       .collect()
       .map(r => r.getLong(0) ->
         (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
@@ -61,7 +61,7 @@ class Wave17Spec extends SparkSpec {
     // a doc appears exactly once — the packer never splits
     assert(rows.map(_._1).distinct.length == rows.length)
     // conservation: kept + dropped == n_tokens, kept == min(n, budget)
-    val budget = graft.queries.ExtQueries.packBudget
+    val budget = graft.queries.MixtureQueries.packBudget
     rows.foreach { case (id, _, n, _, _, kept, dropped) =>
       assert(kept + dropped == n, s"doc $id conservation")
       assert(kept == math.min(n, budget), s"doc $id truncation rule")
@@ -182,7 +182,7 @@ class Wave17Spec extends SparkSpec {
     }
     // the per-cell flag counts must total the capped run's output
     val direct = graft.ext.Similarity.semanticContamination(
-      graft.queries.ExtQueries.skewedEmb(spark, sf0001), "vec_id", "embedding",
+      graft.queries.Fragments.skewedEmb(spark, sf0001), "vec_id", "embedding",
       idc => substring(md5(idc.cast("string")), 1, 1) === "0",
       tau = 0.4, cellCap = 100).count()
     assert(rows.map(_._6).sum == direct, "flag totals diverge from the " +

@@ -37,7 +37,7 @@ class Wave29Spec extends SparkSpec {
           else BigInt(0)
         below + tie
       }.sum
-    val got = graft.queries.ExtQueries.weightedInterleaveRank(manifest, spans)
+    val got = graft.queries.MixtureQueries.weightedInterleaveRank(manifest, spans)
       .select(col("source"), col("src_pos"), col("dn"), col("phase_pos"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -229,7 +229,7 @@ class Wave29Spec extends SparkSpec {
     val emb = graft.util.Tables.embeddings(s, sf0001)
     val q = emb.filter(col("vec_id") < 50)
     val (coarse, perm, cbRows) =
-      graft.queries.ExtQueries.ivfPqOpqTrained(s, sf0001)
+      graft.queries.AnnQueries.ivfPqOpqTrained(s, sf0001)
     val cb = cbRows.groupBy(_._1)
       .map { case (sub, xs) => sub -> xs.sortBy(_._2).map(_._3) }
     val idx = Similarity.ivfPqResidualIndexPerm(emb, "vec_id", "embedding",

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.queries.ExtQueries
+import graft.queries.MixtureQueries
 
 /** Round-19 OPTIMIZATION pin: the fused single-pass
-  * [[ExtQueries.chainedMixtureOrder]] (one ffdPack under the
+  * [[MixtureQueries.chainedMixtureOrder]] (one ffdPack under the
   * origin-composite key + closed-form seq/position cursors + ONE
   * weightedInterleaveRank) must be row-for-row identical to the
   * per-step chained fold it replaces (q241's released→appended pair,
@@ -65,7 +65,7 @@ class Wave32Spec extends SparkSpec {
       val phOff = spans.groupBy(col("phase")).agg(sum(col("n")).as("np"))
         .withColumn("poff", coalesce(sum(col("np")).over(wPh), lit(0L)))
         .select(col("phase"), col("poff"))
-      ExtQueries.weightedInterleaveRank(
+      MixtureQueries.weightedInterleaveRank(
           rows.join(broadcast(spans.withColumnRenamed("n", "dn")),
             Seq("phase", "source")),
           spans)
@@ -75,7 +75,7 @@ class Wave32Spec extends SparkSpec {
     var seqCursor: DataFrame = null // (source composite, seq0)
     var out: DataFrame = null
     steps.foreach { case (name, pred) =>
-      val pk0 = ExtQueries.ffdPack(ph.filter(pred))
+      val pk0 = MixtureQueries.ffdPack(ph.filter(pred))
       val pk =
         if (seqCursor == null) pk0
         else pk0.join(broadcast(seqCursor), Seq("source"), "left")
@@ -162,7 +162,7 @@ class Wave32Spec extends SparkSpec {
       "chain (q250 shape), middle-gap + late sources, phase ≥ 10") {
     val (ph, fill) = fixture
     val old = collectAll(oldChained(ph, fill, steps3))
-    val neu = collectAll(ExtQueries.chainedMixtureOrder(ph, fill, steps3))
+    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps3))
     assert(neu.size == old.size)
     old.zip(neu).zipWithIndex.foreach { case ((o, n), i) =>
       assert(n == o, s"row $i differs: old=$o new=$n")
@@ -176,7 +176,7 @@ class Wave32Spec extends SparkSpec {
       ("released", pmod(col("doc_id"), lit(3)) =!= 2),
       ("appended", pmod(col("doc_id"), lit(3)) === 2))
     val old = collectAll(oldChained(ph, fill, steps2))
-    val neu = collectAll(ExtQueries.chainedMixtureOrder(ph, fill, steps2))
+    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps2))
     assert(neu.size == old.size)
     old.zip(neu).zipWithIndex.foreach { case ((o, n), i) =>
       assert(n == o, s"row $i differs: old=$o new=$n")
@@ -188,7 +188,7 @@ class Wave32Spec extends SparkSpec {
     val (ph, fill) = fixture
     val steps4 = steps3 :+ (("phantom", lit(false)))
     val old = collectAll(oldChained(ph, fill, steps4))
-    val neu = collectAll(ExtQueries.chainedMixtureOrder(ph, fill, steps4))
+    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps4))
     assert(neu.size == old.size && neu.nonEmpty)
     old.zip(neu).foreach { case (o, n) => assert(n == o) }
   }
