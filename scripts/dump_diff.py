@@ -9,8 +9,17 @@ set, and each query the same columns and the same rows in the same
 order, after verify_local.py's cell normalisation (columns sorted by
 name, NaN as null, temporals as ISO strings). Unlike verify_local.py it
 needs no oracle, so it also covers the queries without one. Prints one
-line per differing or missing query, then a summary; exits 1 if any.
+line per differing or missing query, then a summary.
+
+It also compares the two dumps' oracle_sql.json: it prints each oracle
+key found in only one dump, and each query whose oracle text changed
+once runs of whitespace are collapsed (a changed text is listed, not
+failed: the results above show whether the query still agrees).
+
+Exits 1 if any query result differs or is missing, or if the oracle key
+sets differ.
 """
+import json
 import os
 import sys
 
@@ -43,6 +52,32 @@ def diff(before, after, name):
     return f"ROWS before={len(b_rows)} after={len(a_rows)}, first difference at row {first}"
 
 
+def oracles(dump):
+    with open(os.path.join(dump, "oracle_sql.json"), encoding="utf-8") as f:
+        return json.load(f)
+
+
+def diff_oracles(before, after):
+    """Prints the oracle key-set and text differences; returns the number
+    of keys found in only one dump."""
+    try:
+        b, a = oracles(before), oracles(after)
+    except (OSError, ValueError) as e:
+        print(f"oracle_sql.json: UNREADABLE {e}")
+        return 1
+    only = [(n, after) for n in sorted(b.keys() - a.keys())] + \
+           [(n, before) for n in sorted(a.keys() - b.keys())]
+    for name, dump in only:
+        print(f"oracle {name}: MISSING from {dump}")
+    squash = lambda sql: " ".join(sql.split())
+    changed = sorted(n for n in b.keys() & a.keys() if squash(b[n]) != squash(a[n]))
+    for name in changed:
+        print(f"oracle {name}: TEXT CHANGED")
+    print(f"== oracles: {len(b.keys() & a.keys())} in both, {len(only)} in one only, "
+          f"{len(changed)} changed ==")
+    return len(only)
+
+
 def main():
     before, after = sys.argv[1], sys.argv[2]
     b, a = queries(before), queries(after)
@@ -58,6 +93,7 @@ def main():
             print(f"{name}: {why}")
             n_bad += 1
     print(f"== {len(b | a) - n_bad} identical, {n_bad} differ ==")
+    n_bad += diff_oracles(before, after)
     sys.exit(1 if n_bad else 0)
 
 

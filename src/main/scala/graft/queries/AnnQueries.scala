@@ -51,12 +51,8 @@ object AnnQueries extends QueryFamily {
   private[graft] def pqRefinedCodebook(s: SparkSession,
       d: String): Seq[(Int, Int, Seq[Double])] =
     pqRefinedCache.computeIfAbsent(d, { _ =>
-      Similarity.pqTrainIteration(Tables.embeddings(s, d), "vec_id", "embedding")
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      collectCodebook(Similarity.pqTrainIteration(Tables.embeddings(s, d),
+        "vec_id", "embedding"))
     })
 
   /** The IVF-PQ residual TRAINING pair, collected and memoized per
@@ -85,24 +81,33 @@ object AnnQueries extends QueryFamily {
         Similarity.dotFold(col("embedding").cast("array<double>"),
           col("embedding").cast("array<double>")) > 0)
       val emb = if (baseOnly)
-        emb0.filter(!substring(md5(col("vec_id").cast("string")), 1, 1)
-          .isin("0", "1", "2"))
+        emb0.filter(!isDeltaDoc(col("vec_id")))
       else emb0
-      val coarse = Similarity.kmeansIteration(emb, "vec_id", "embedding")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
-      val resid = Similarity
-        .pqTrainIteration(residualFrameOf(emb, coarse), "vec_id", "resid")
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      val coarse = collectCentroids(Similarity.kmeansIteration(emb, "vec_id", "embedding"))
+      val resid = collectCodebook(Similarity
+        .pqTrainIteration(residualFrameOf(emb, coarse), "vec_id", "resid"))
       (coarse, resid)
     })
+
+  /** A k-means step's (cell, pos, value) rows, collected as one
+    * pos-ordered centroid per cell, sorted by cell.
+    */
+  private def collectCentroids(step: DataFrame): Seq[(Int, Seq[Double])] =
+    step.collect()
+      .groupBy(_.getLong(0).toInt)
+      .map { case (cell, rows) =>
+        (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
+      .toSeq.sortBy(_._1)
+
+  /** A PQ trainer's (sub, c, pos, value) rows, collected as one
+    * pos-ordered centroid per (sub, c), sorted by (sub, c).
+    */
+  private def collectCodebook(trained: DataFrame): Seq[(Int, Int, Seq[Double])] =
+    trained.collect()
+      .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
+      .map { case ((sub, c), rows) =>
+        (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
+      .toSeq.sortBy(x => (x._1, x._2))
 
   /** Collected codebook rows → the ordered-centroid-list map the
     * [[Similarity.pqAdcTopKWith]]-family consumers index by position.
@@ -187,12 +192,8 @@ object AnnQueries extends QueryFamily {
   private[graft] def opqRefined(s: SparkSession, d: String, layout: String,
       perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
     opqRefinedCache.computeIfAbsent((d, layout), { _ =>
-      Similarity.pqTrainIterationPerm(anisoEmb(s, d), "vec_id", "vec", perm)
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      collectCodebook(Similarity.pqTrainIterationPerm(anisoEmb(s, d),
+        "vec_id", "vec", perm))
     })
 
   /** The RESIDUAL-rung OPQ training bundle (VERDICT r16 #3), memoized
@@ -213,12 +214,7 @@ object AnnQueries extends QueryFamily {
       d: String): (Seq[(Int, Seq[Double])], Seq[Int]) =
     anisoResidCache.computeIfAbsent(d, { _ =>
       val emb = anisoEmb(s, d)
-      val coarse = Similarity.kmeansIteration(emb, "vec_id", "vec")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
+      val coarse = collectCentroids(Similarity.kmeansIteration(emb, "vec_id", "vec"))
       val rf = residualFrameOf(emb, coarse, vecCol = "vec")
       val aggs = (0 until 64).map(i =>
         round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
@@ -239,14 +235,9 @@ object AnnQueries extends QueryFamily {
       layout: String, perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
     anisoResidCbCache.computeIfAbsent((d, layout), { _ =>
       val (coarse, _) = anisoResidualBase(s, d)
-      Similarity.pqTrainIterationPerm(
+      collectCodebook(Similarity.pqTrainIterationPerm(
           residualFrameOf(anisoEmb(s, d), coarse, vecCol = "vec"),
-          "vec_id", "resid", perm)
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+          "vec_id", "resid", perm))
     })
 
   /** The q238 slices, shared with q240: the usable-vector population,
@@ -290,24 +281,14 @@ object AnnQueries extends QueryFamily {
     driftTrainCache.computeIfAbsent(d, { _ =>
       val (base, _, shifted) = driftSlices(s, d)
       val mixed = base.unionByName(shifted)
-      val coarse = Similarity.kmeansIteration(mixed, "vec_id", "embedding")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
+      val coarse = collectCentroids(Similarity.kmeansIteration(mixed, "vec_id", "embedding"))
       val rf = graft.util.Persist(residualFrameOf(mixed, coarse))
       val aggs = (0 until 64).map(i =>
         round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
       val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
       val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
-      def cbOf(p: Seq[Int]) = Similarity
-        .pqTrainIterationPerm(rf, "vec_id", "resid", p)
-        .collect()
-        .groupBy(x => (x.getLong(0).toInt, x.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      def cbOf(p: Seq[Int]) = collectCodebook(Similarity
+        .pqTrainIterationPerm(rf, "vec_id", "resid", p))
       val out = (coarse, perm, cbOf(0 until 64), cbOf(perm))
       rf.unpersist()
       out
@@ -338,19 +319,14 @@ object AnnQueries extends QueryFamily {
       val baseEmb = Tables.embeddings(s, d)
         .filter(Similarity.dotFold(col("embedding").cast("array<double>"),
           col("embedding").cast("array<double>")) > 0)
-        .filter(!substring(md5(col("vec_id").cast("string")), 1, 1)
-          .isin("0", "1", "2"))
+        .filter(!isDeltaDoc(col("vec_id")))
       val rf = graft.util.Persist(residualFrameOf(baseEmb, coarse))
       val aggs = (0 until 64).map(i =>
         round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
       val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
       val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
-      val cb = Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", perm)
-        .collect()
-        .groupBy(x => (x.getLong(0).toInt, x.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      val cb = collectCodebook(
+        Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", perm))
       rf.unpersist()
       (coarse, perm, cb)
     })
@@ -1382,7 +1358,7 @@ object AnnQueries extends QueryFamily {
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
         Similarity.ivfPqResidualIndex(
-            emb.filter(!firstHex(col("vec_id")).isin("0", "1", "2")),
+            emb.filter(!isDeltaDoc(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
       }
@@ -2025,25 +2001,10 @@ object AnnQueries extends QueryFamily {
     * differ only in how the final SELECT labels `src`.
     */
   private lazy val pqIndexEncodeCtes: String = s"""
-         cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $pqInitCtes,
+         $baseEmbCtes,
          ${ivfPqTrainSqlFor("b", "eb")},
-         ea AS (SELECT n_id, n_vec, cell, cvec FROM (
-           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
-               c.cell) AS rn
-           FROM e, bcent c) t WHERE rn = 1),
-         erv AS (SELECT n_id, cell,
-             list_transform(generate_series(1, 64),
-               i -> n_vec[i] - cvec[i]) AS rvecd
-           FROM ea),
+         $residualCtes,
          ecd AS (SELECT n_id, sub, c FROM (
            SELECT r.n_id, b.sub, b.c,
              ROW_NUMBER() OVER (PARTITION BY r.n_id, b.sub
@@ -2097,6 +2058,22 @@ object AnnQueries extends QueryFamily {
              round(${(0 until 8).map(i => s"MAX(mse) FILTER (sub = $i)")
                .mkString(" + ")}, 6) AS frozen_mse
            FROM ${px}me)"""
+
+  /** Each `e` vector's nearest trained coarse centroid from `bcent`
+    * (`ea`) and its residual from that centroid (`erv.rvecd`): the
+    * [[residualFrameOf]] rule in DuckDB.
+    */
+  private lazy val residualCtes: String =
+    """ea AS (SELECT n_id, n_vec, cell, cvec FROM (
+           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
+             ROW_NUMBER() OVER (PARTITION BY e.vec_id
+               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
+               c.cell) AS rn
+           FROM e, bcent c) t WHERE rn = 1),
+         erv AS (SELECT n_id, cell,
+             list_transform(generate_series(1, 64),
+               i -> n_vec[i] - cvec[i]) AS rvecd
+           FROM ea)"""
 
   /** Left-associative 8-term ADC sum pivot, shared by every ADC oracle
     * (pins the Spark side's left-to-right subspace fold).
@@ -2181,6 +2158,55 @@ object AnnQueries extends QueryFamily {
        AND list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0"""
       .replaceAll("\n\\s*", " ")
 
+  /** The static coarse centroids (`cent0`), PQ init codebook (`pqc`)
+    * and subvector positions (`poss`) every trained-codebook oracle
+    * ([[ivfPqTrainSqlFor]]) starts from.
+    */
+  private lazy val pqInitCtes: String =
+    s"""cent0(cell, cvec) AS (VALUES $ivfCentroids),
+         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
+         poss AS (SELECT unnest(generate_series(0, 7)) AS pos)"""
+
+  /** The frozen residual-OPQ bundle ([[ivfPqOpqTrained]]) in DuckDB,
+    * over the base-trained residuals `brv`: the snake layout dealt from
+    * their per-dimension variances (`qbmap`) and the one-Lloyd codebook
+    * trained under it (`qrc`). Requires `sdims`, `pqc` and `poss`.
+    */
+  private lazy val opqFrozenCtes: String =
+    """qvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
+           FROM brv CROSS JOIN sdims GROUP BY dim),
+         qrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
+             AS r FROM qvr),
+         qbmap AS (SELECT dim,
+             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
+               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
+             CAST(r // 8 AS BIGINT) AS pos FROM qrk),
+         qsv AS (SELECT r.n_id AS vec_id, m.sub,
+             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
+           FROM brv r CROSS JOIN qbmap m
+           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
+           GROUP BY r.n_id, m.sub),
+         qk0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
+             list_inner_product(p.pvec, p.pvec)
+               - 2 * list_inner_product(s.sv, p.pvec) AS key
+           FROM qsv s JOIN pqc p ON p.sub = s.sub),
+         qcd AS (SELECT vec_id, sub, sv, c FROM (
+             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
+               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
+             FROM qk0) t WHERE rn = 1),
+         qref AS (SELECT cd.sub, cd.c, poss.pos,
+             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
+           FROM qcd cd CROSS JOIN poss GROUP BY 1, 2, 3),
+         qrc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
+           FROM qref GROUP BY 1, 2)"""
+
+  /** The usable vectors (`e`) and their md5 base slice (`eb`). */
+  private lazy val baseEmbCtes: String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
+           WHERE $usableVec),
+         eb AS (SELECT * FROM e
+           WHERE ${duckBase("vec_id")})"""
+
   /** q154 oracle helper: one side's quantize → code-space cell
     * assignment → per-(cell, pos) member-mean chain (the q146/q94 CTE
     * chain with a side predicate, carrying dcode through to the mean).
@@ -2252,6 +2278,25 @@ object AnnQueries extends QueryFamily {
              ROW_NUMBER() OVER (PARTITION BY q_id
                ORDER BY round(sim, 6) DESC, n_id) AS rank
            FROM pr)"""
+
+  /** The exact top-3 truth the ANN recall cards score against: `${px}es`
+    * ranks every (`${px}qq` query, `$src` vector) pair, self excluded,
+    * by round(score, 6) desc then id, where score is the inner product
+    * or, with `cosine`, the cosine; `${px}ex(q_id, n_id)` keeps the top 3.
+    */
+  private def exactTop3Sql(src: String, px: String = "", id: String = "vec_id",
+      vec: String = "vec", cosine: Boolean = false): String = {
+    val ip = s"list_inner_product(q.q_vec, cc.$vec)"
+    val score = if (!cosine) ip else s"""$ip /
+                 (sqrt(list_inner_product(q.q_vec, q.q_vec)) *
+                  sqrt(list_inner_product(cc.$vec, cc.$vec)))"""
+    s"""${px}es AS (SELECT q.q_id, cc.$id AS n_id,
+             ROW_NUMBER() OVER (PARTITION BY q.q_id
+               ORDER BY round($score, 6) DESC,
+               cc.$id) AS rank
+           FROM ${px}qq q, $src cc WHERE q.q_id <> cc.$id),
+         ${px}ex AS (SELECT q_id, n_id FROM ${px}es WHERE rank <= 3)"""
+  }
 
   val oracleSql: Map[String, String] = Map(
     "q103_random_projection" -> s"""
@@ -2432,15 +2477,7 @@ object AnnQueries extends QueryFamily {
            SELECT q_id, q_vec, cell, ROW_NUMBER() OVER (PARTITION BY q_id
              ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC, cell) AS rn
            FROM qq, cent) t WHERE rn <= 16),
-         es AS (SELECT q.q_id, cc.n_id,
-             list_inner_product(q.q_vec, cc.n_vec) /
-               (sqrt(list_inner_product(q.q_vec, q.q_vec)) *
-                sqrt(list_inner_product(cc.n_vec, cc.n_vec))) AS sim
-           FROM qq q, c cc WHERE q.q_id <> cc.n_id),
-         ex AS (SELECT q_id, n_id FROM (
-           SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
-             ORDER BY round(sim, 6) DESC, n_id) AS rank FROM es) t
-           WHERE rank <= 3),
+         ${exactTop3Sql("c", id = "n_id", vec = "n_vec", cosine = true)},
          sv AS (SELECT qa.crank, qa.q_id, ca.n_id,
              list_inner_product(qa.q_vec, ca.n_vec) /
                (sqrt(list_inner_product(qa.q_vec, qa.q_vec)) *
@@ -2467,12 +2504,7 @@ object AnnQueries extends QueryFamily {
     "q128_pq_recall" -> s"""
          WITH $pqAdcCtes,
          ap AS (SELECT q_id, n_id FROM adcr WHERE rank <= 3),
-         es AS (SELECT q.q_id, cc.n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.n_vec), 6) DESC,
-               cc.n_id) AS rank
-           FROM qq q, c cc WHERE q.q_id <> cc.n_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3)
+         ${exactTop3Sql("c", id = "n_id", vec = "n_vec")}
          SELECT ex.q_id, CAST(COUNT(ap.n_id) AS BIGINT) AS n_hits,
            round(COUNT(ap.n_id) / 3.0, 6) AS recall_at_3
          FROM ex LEFT JOIN ap ON ex.q_id = ap.q_id AND ex.n_id = ap.n_id
@@ -2536,15 +2568,7 @@ object AnnQueries extends QueryFamily {
          WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
            WHERE $usableVec),
          qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 50),
-         es AS (SELECT q.q_id, b.vec_id AS n_id,
-             list_inner_product(q.q_vec, b.vec) /
-               (sqrt(list_inner_product(q.q_vec, q.q_vec)) *
-                sqrt(list_inner_product(b.vec, b.vec))) AS sim
-           FROM qq q, e b WHERE q.q_id <> b.vec_id),
-         ex AS (SELECT q_id, n_id FROM (
-           SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
-             ORDER BY round(sim, 6) DESC, n_id) AS rank FROM es) t
-           WHERE rank <= 3),
+         ${exactTop3Sql("e", cosine = true)},
          dims(td) AS (VALUES (8), (16), (32), (64)),
          pv AS (SELECT dims.td, e.vec_id,
              list_slice(e.vec, 1, dims.td) AS pvec,
@@ -2577,9 +2601,9 @@ object AnnQueries extends QueryFamily {
              ORDER BY round(list_inner_product(vec, cvec), 6) DESC, cell) AS rn
            FROM e, cent) t WHERE rn = 1),
          dl AS (SELECT * FROM asg
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN ('0', '1', '2')),
+           WHERE ${duckDelta("vec_id")}),
          bs AS (SELECT * FROM asg
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')),
+           WHERE ${duckBase("vec_id")}),
          prs AS (SELECT d.vec_id AS delta_id, b.vec_id AS base_id,
              list_inner_product(d.vec, b.vec) /
                (sqrt(list_inner_product(d.vec, d.vec)) *
@@ -2626,12 +2650,7 @@ object AnnQueries extends QueryFamily {
            SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
              ORDER BY round(adc, 6) DESC, n_id) AS rank FROM adc) t
            WHERE rank <= 3),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3)
+         ${exactTop3Sql("e")}
          SELECT ex.q_id, CAST(COUNT(ap.n_id) AS BIGINT) AS n_hits,
            round(COUNT(ap.n_id) / 3.0, 6) AS recall_at_3
          FROM ex LEFT JOIN ap ON ex.q_id = ap.q_id AND ex.n_id = ap.n_id
@@ -2664,7 +2683,7 @@ object AnnQueries extends QueryFamily {
            array_to_string(list_transform(code,
              v -> CAST(v AS VARCHAR)), ',') AS code,
            round(scale, 6) AS scale, round(cnorm, 6) AS cnorm,
-           CASE WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN ('0', '1', '2')
+           CASE WHEN ${duckDelta("vec_id")}
                 THEN 'delta' ELSE 'base' END AS src
          FROM ca ORDER BY vec_id""",
     "q146_index_cell_stats" -> s"""
@@ -2698,9 +2717,9 @@ object AnnQueries extends QueryFamily {
     "q154_centroid_drift" -> s"""
          WITH cent(cell, cvec) AS (VALUES $ivfCentroids),
          ${quantCellMeanCtes("b",
-           "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("vec_id"))},
          ${quantCellMeanCtes("d",
-           "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN ('0', '1', '2')")},
+           duckDelta("vec_id"))},
          j AS (SELECT COALESCE(bm.cell, dm.cell) AS cell,
              bm.m AS bmv, bm.n AS bn, dm.m AS dmv, dm.n AS dn
            FROM bm FULL OUTER JOIN dm
@@ -2795,12 +2814,7 @@ object AnnQueries extends QueryFamily {
            FROM oqq, cent) t WHERE rn <= 4),
          oprs AS (SELECT oqa.q_id, oca.n_id FROM oqa JOIN oca USING (cell)
            WHERE oqa.q_id <> oca.n_id),
-         oes AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM oqq q, au cc WHERE q.q_id <> cc.vec_id),
-         oex AS (SELECT q_id, n_id FROM oes WHERE rank <= 3),
+         ${exactTop3Sql("au", px = "o")},
          ${Seq(("ai", "aimap"), ("ab", "abmap")).map { case (px, mp) => s"""
          ${opqTrainSqlFor(px, mp)},
          ${px}code AS (SELECT vec_id, sub, c FROM (
@@ -2851,8 +2865,7 @@ object AnnQueries extends QueryFamily {
            FROM iqq q, iau c WHERE q.q_id <> c.vec_id) t WHERE rank <= 3),
          ica AS (SELECT n_id, n_vec, cell, is_delta FROM (
            SELECT a.vec_id AS n_id, a.vec AS n_vec, cell,
-             substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') AS is_delta,
+             ${duckDelta("a.vec_id")} AS is_delta,
              ROW_NUMBER() OVER (PARTITION BY a.vec_id
                ORDER BY round(list_inner_product(a.vec, cvec), 6) DESC, cell)
                AS rn
@@ -3033,12 +3046,7 @@ object AnnQueries extends QueryFamily {
              ORDER BY round(adc, 6) DESC, n_id) AS rank
            FROM (SELECT q_id, n_id, MAX(cd) + ($pqTermPivot) AS adc
              FROM rterms GROUP BY q_id, n_id) a) t WHERE rank <= 3),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("e")},
          ncd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM prs),
          fs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
              CAST(COUNT(f.n_id) AS BIGINT) AS n_found
@@ -3067,8 +3075,7 @@ object AnnQueries extends QueryFamily {
     "q232_stream_pq_index" -> s"""
          WITH $pqIndexEncodeCtes
          SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS src
+           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
          FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
          ORDER BY vec_id""",
     // the q232 frozen-artifact replay (base training + whole-corpus
@@ -3076,25 +3083,10 @@ object AnnQueries extends QueryFamily {
     // the base-only rows (stale), once against everything
     // (maintained) — against the full-corpus exact-IP truth
     "q234_pq_staleness" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         WITH $pqInitCtes,
+         $baseEmbCtes,
          ${ivfPqTrainSqlFor("b", "eb")},
-         ea AS (SELECT n_id, n_vec, cell, cvec FROM (
-           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
-               c.cell) AS rn
-           FROM e, bcent c) t WHERE rn = 1),
-         erv AS (SELECT n_id, cell,
-             list_transform(generate_series(1, 64),
-               i -> n_vec[i] - cvec[i]) AS rvecd
-           FROM ea),
+         $residualCtes,
          ecd AS (SELECT n_id, sub, c FROM (
            SELECT r.n_id, b.sub, b.c,
              ROW_NUMBER() OVER (PARTITION BY r.n_id, b.sub
@@ -3129,24 +3121,16 @@ object AnnQueries extends QueryFamily {
          sap AS (SELECT q_id, n_id FROM (
            SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
              ORDER BY round(adc, 6) DESC, n_id) AS rank FROM adc
-           WHERE substr(md5(CAST(n_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')) t WHERE rank <= 3),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+           WHERE ${duckBase("n_id")}) t WHERE rank <= 3),
+         ${exactTop3Sql("e")},
          sh AS (SELECT ex.q_id, CAST(COUNT(s.n_id) AS BIGINT) AS stale_hits
            FROM ex LEFT JOIN sap s ON ex.q_id = s.q_id AND ex.n_id = s.n_id
            GROUP BY ex.q_id),
          mh AS (SELECT ex.q_id, CAST(COUNT(m.n_id) AS BIGINT) AS maint_hits,
              CAST(COUNT(m.n_id) FILTER (
-               substr(md5(CAST(m.n_id AS VARCHAR)), 1, 1)
-                 IN ('0', '1', '2')) AS BIGINT) AS maint_delta_hits,
+               ${duckDelta("m.n_id")}) AS BIGINT) AS maint_delta_hits,
              CAST(COUNT(*) FILTER (
-               substr(md5(CAST(ex.n_id AS VARCHAR)), 1, 1)
-                 IN ('0', '1', '2')) AS BIGINT) AS n_truth_delta
+               ${duckDelta("ex.n_id")}) AS BIGINT) AS n_truth_delta
            FROM ex LEFT JOIN map m ON ex.q_id = m.q_id AND ex.n_id = m.n_id
            GROUP BY ex.q_id)
          SELECT sh.q_id, n_truth_delta, stale_hits, maint_hits,
@@ -3162,9 +3146,7 @@ object AnnQueries extends QueryFamily {
     // level is a crank filter + its own rank window; cost = the crank
     // histogram summed per level
     "q235_ivfpq_operating_point" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
            WHERE $usableVec),
          ${ivfPqTrainSqlFor("v", "e")},
@@ -3202,12 +3184,7 @@ object AnnQueries extends QueryFamily {
                ORDER BY round(a.adc, 6) DESC, a.n_id) AS rank
            FROM probes JOIN adc a ON a.crank <= probes.p),
          ap AS (SELECT p, q_id, n_id FROM rp WHERE rank <= 3),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("e")},
          cost AS (SELECT probes.p,
              CAST(COUNT(pr.n_id) AS BIGINT) AS n_candidates
            FROM probes LEFT JOIN prs pr ON pr.crank <= probes.p
@@ -3229,9 +3206,7 @@ object AnnQueries extends QueryFamily {
     // trained-cell routing and exact-IP truth
     "q237_residual_opq" -> s"""
          WITH $anisoCtes,
-         cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         $pqInitCtes,
          aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
          ${ivfPqTrainSqlFor("w7", "au")},
          rvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
@@ -3254,12 +3229,7 @@ object AnnQueries extends QueryFamily {
            FROM qq, w7cent) t WHERE rn <= 4),
          prs AS (SELECT qa.q_id, qa.cd, ca.n_id
            FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, au cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("au")},
          ${residOpqSqlFor("ri", "rimap")},
          ${residOpqSqlFor("rb", "rbmap")}
          SELECT 'balanced' AS layout, n_truth, n_found,
@@ -3278,18 +3248,11 @@ object AnnQueries extends QueryFamily {
     // the frozenMseSqlFor block per slice: base / md5-delta /
     // encoder-drifted delta (dims 0-7 x4), ratio'd against base
     "q238_pq_retrain" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $baseEmbCtes,
          ed AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2')),
+           WHERE ${duckDelta("vec_id")}),
          esh AS (SELECT vec_id,
              list(vec[dim + 1] * CASE WHEN dim < 8 THEN 4.0 ELSE 1.0 END
                ORDER BY dim) AS vec
@@ -3337,18 +3300,11 @@ object AnnQueries extends QueryFamily {
     // (identity + residual-variance OPQ), all scoring the shifted
     // slice, ratio'd against the base-frozen reference
     "q240_pq_retrain_ladder" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $baseEmbCtes,
          ed AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2')),
+           WHERE ${duckDelta("vec_id")}),
          esh AS (SELECT vec_id,
              list(vec[dim + 1] * CASE WHEN dim < 8 THEN 4.0 ELSE 1.0 END
                ORDER BY dim) AS vec
@@ -3424,52 +3380,12 @@ object AnnQueries extends QueryFamily {
     // perm on the base residuals, then a whole-corpus perm-gathered
     // encode — maintenance == rebuild with the permutation carried
     "q242_stream_opq_index" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $baseEmbCtes,
          ${ivfPqTrainSqlFor("b", "eb")},
-         qvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM brv CROSS JOIN sdims GROUP BY dim),
-         qrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM qvr),
-         qbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM qrk),
-         qsv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM brv r CROSS JOIN qbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         qk0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM qsv s JOIN pqc p ON p.sub = s.sub),
-         qcd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM qk0) t WHERE rn = 1),
-         qref AS (SELECT cd.sub, cd.c, poss.pos,
-             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
-           FROM qcd cd CROSS JOIN poss GROUP BY 1, 2, 3),
-         qrc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM qref GROUP BY 1, 2),
-         ea AS (SELECT n_id, n_vec, cell, cvec FROM (
-           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
-               c.cell) AS rn
-           FROM e, bcent c) t WHERE rn = 1),
-         erv AS (SELECT n_id, cell,
-             list_transform(generate_series(1, 64),
-               i -> n_vec[i] - cvec[i]) AS rvecd
-           FROM ea),
+         $opqFrozenCtes,
+         $residualCtes,
          esv AS (SELECT r.n_id, m.sub,
              list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
            FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
@@ -3487,8 +3403,7 @@ object AnnQueries extends QueryFamily {
            FROM ecd JOIN epos ON epos.sub = ecd.sub AND epos.c = ecd.c
            GROUP BY n_id)
          SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS src
+           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
          FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
          ORDER BY vec_id""",
     // the q237 identity-leg scaffold (aniso corpus, trained coarse
@@ -3497,9 +3412,7 @@ object AnnQueries extends QueryFamily {
     // inner-product re-rank over the shortlist's raw vectors
     "q243_adc_rerank" -> s"""
          WITH $anisoCtes,
-         cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         $pqInitCtes,
          aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
          ${ivfPqTrainSqlFor("w7", "au")},
          rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
@@ -3514,12 +3427,7 @@ object AnnQueries extends QueryFamily {
            FROM qq, w7cent) t WHERE rn <= 4),
          prs AS (SELECT qa.q_id, qa.cd, ca.n_id
            FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, au cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("au")},
          ${residOpqSqlFor("ri", "rimap")},
          rsh AS (SELECT q_id, n_id FROM rirkd WHERE rank <= 10),
          rrx AS (SELECT s.q_id, s.n_id,
@@ -3550,9 +3458,7 @@ object AnnQueries extends QueryFamily {
     // filter + its own re-rank window + recall/cost aggregates
     "q245_rerank_operating_point" -> s"""
          WITH $anisoCtes,
-         cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         $pqInitCtes,
          aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
          ${ivfPqTrainSqlFor("w7", "au")},
          rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
@@ -3567,12 +3473,7 @@ object AnnQueries extends QueryFamily {
            FROM qq, w7cent) t WHERE rn <= 4),
          prs AS (SELECT qa.q_id, qa.cd, ca.n_id
            FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, au cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("au")},
          ${residOpqSqlFor("ri", "rimap")},
          rex AS (SELECT s.q_id, s.n_id, s.rank AS arank,
              round(list_inner_product(q.q_vec, c.vec), 6) AS ip
@@ -3603,54 +3504,14 @@ object AnnQueries extends QueryFamily {
     // LUT-style ADC over the SAME frozen-cell candidates against the
     // fenced full-corpus exact-IP truth
     "q246_opq_index_serving" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $baseEmbCtes,
          ${ivfPqTrainSqlFor("b", "eb")},
-         qvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM brv CROSS JOIN sdims GROUP BY dim),
-         qrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM qvr),
-         qbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM qrk),
+         $opqFrozenCtes,
          imap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
              CAST(dim % 8 AS BIGINT) AS pos FROM sdims),
-         qsv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM brv r CROSS JOIN qbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         qk0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM qsv s JOIN pqc p ON p.sub = s.sub),
-         qcd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM qk0) t WHERE rn = 1),
-         qref AS (SELECT cd.sub, cd.c, poss.pos,
-             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
-           FROM qcd cd CROSS JOIN poss GROUP BY 1, 2, 3),
-         qrc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM qref GROUP BY 1, 2),
-         ea AS (SELECT n_id, n_vec, cell, cvec FROM (
-           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
-               c.cell) AS rn
-           FROM e, bcent c) t WHERE rn = 1),
-         erv AS (SELECT n_id, cell,
-             list_transform(generate_series(1, 64),
-               i -> n_vec[i] - cvec[i]) AS rvecd
-           FROM ea),
+         $residualCtes,
          besv AS (SELECT r.n_id, m.sub,
              list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
            FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
@@ -3680,12 +3541,7 @@ object AnnQueries extends QueryFamily {
          prs AS (SELECT qac.q_id, qac.cd, ea.n_id
            FROM qac JOIN ea ON ea.cell = qac.cell
            WHERE qac.q_id <> ea.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("e")},
          bqsv AS (SELECT q.q_id, m.sub,
              list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
            FROM qq q CROSS JOIN qbmap m GROUP BY q.q_id, m.sub),
@@ -3737,52 +3593,12 @@ object AnnQueries extends QueryFamily {
     // k'=10 shortlist, then the exact inner-product re-rank over the
     // raw-vector store (one id-keyed gather of the shortlist)
     "q248_serving_stack" -> s"""
-         WITH cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         WITH $pqInitCtes,
          sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-           WHERE $usableVec),
-         eb AS (SELECT * FROM e
-           WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+         $baseEmbCtes,
          ${ivfPqTrainSqlFor("b", "eb")},
-         qvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM brv CROSS JOIN sdims GROUP BY dim),
-         qrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM qvr),
-         qbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM qrk),
-         qsv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM brv r CROSS JOIN qbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         qk0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM qsv s JOIN pqc p ON p.sub = s.sub),
-         qcd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM qk0) t WHERE rn = 1),
-         qref AS (SELECT cd.sub, cd.c, poss.pos,
-             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
-           FROM qcd cd CROSS JOIN poss GROUP BY 1, 2, 3),
-         qrc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM qref GROUP BY 1, 2),
-         ea AS (SELECT n_id, n_vec, cell, cvec FROM (
-           SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cell, c.cvec,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_inner_product(e.vec, c.cvec), 6) DESC,
-               c.cell) AS rn
-           FROM e, bcent c) t WHERE rn = 1),
-         erv AS (SELECT n_id, cell,
-             list_transform(generate_series(1, 64),
-               i -> n_vec[i] - cvec[i]) AS rvecd
-           FROM ea),
+         $opqFrozenCtes,
+         $residualCtes,
          besv AS (SELECT r.n_id, m.sub,
              list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
            FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
@@ -3803,12 +3619,7 @@ object AnnQueries extends QueryFamily {
          prs AS (SELECT qac.q_id, qac.cd, ea.n_id
            FROM qac JOIN ea ON ea.cell = qac.cell
            WHERE qac.q_id <> ea.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, e cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("e")},
          bqsv AS (SELECT q.q_id, m.sub,
              list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
            FROM qq q CROSS JOIN qbmap m GROUP BY q.q_id, m.sub),
@@ -3857,8 +3668,7 @@ object AnnQueries extends QueryFamily {
     "q249_pq_index_tombstones" -> s"""
          WITH $pqIndexEncodeCtes
          SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS src
+           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
          FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
          WHERE substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1) <> 'f'
          ORDER BY vec_id""",
@@ -3868,9 +3678,7 @@ object AnnQueries extends QueryFamily {
     // a (crank, rank) filter + its own exact re-rank + recall/cost
     "q251_ann_operating_grid" -> s"""
          WITH $anisoCtes,
-         cent0(cell, cvec) AS (VALUES $ivfCentroids),
-         pqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         poss AS (SELECT unnest(generate_series(0, 7)) AS pos),
+         $pqInitCtes,
          aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
          ${ivfPqTrainSqlFor("w7", "au")},
          rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
@@ -3889,12 +3697,7 @@ object AnnQueries extends QueryFamily {
          prsw AS (SELECT qa16.q_id, qa16.cd, qa16.crank, ca.n_id
            FROM qa16 JOIN w7ca ca USING (cell)
            WHERE qa16.q_id <> ca.n_id),
-         es AS (SELECT q.q_id, cc.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, cc.vec), 6) DESC,
-               cc.vec_id) AS rank
-           FROM qq q, au cc WHERE q.q_id <> cc.vec_id),
-         ex AS (SELECT q_id, n_id FROM es WHERE rank <= 3),
+         ${exactTop3Sql("au")},
          ${residOpqSqlFor("ri", "rimap")},
          swtm AS (SELECT pr.q_id, pr.n_id, pr.cd, pr.crank, k.sub,
              list_inner_product(qs.sv, r.rvec) AS term

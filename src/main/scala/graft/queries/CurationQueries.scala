@@ -1623,21 +1623,16 @@ object CurationQueries extends QueryFamily {
              ${duckToks("lower(text)")} AS ltoks FROM documents
            WHERE $docPred),
          ${px}qm AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-             round(CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE), 6) AS mwl,
-             round(CAST(len(list_filter(ltoks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(ltoks) AS DOUBLE), 6) AS sr,
+             round(${duckMeanWordLen("toks")}, 6) AS mwl,
+             round(${duckStopRatio("ltoks")}, 6) AS sr,
              round(1.0 - CAST(len(list_distinct(ltoks)) AS DOUBLE)
                / CAST(len(ltoks) AS DOUBLE), 6) AS df
            FROM ${px}qt),
          ${px}dw AS (SELECT doc_id, $duckNormWords AS words FROM documents
            WHERE $docPred),
-         ${px}dgp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM ${px}dw WHERE len(words) >= 8),
+         ${px}dgp AS (${gramPosSql(px + "dw")}),
          ${px}dg AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM ${px}dgp),
          ${px}dheld AS (SELECT DISTINCT gh FROM ${px}dg
            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
@@ -1665,19 +1660,25 @@ object CurationQueries extends QueryFamily {
                ELSE 'kept' END AS drop_reason
            FROM documents d JOIN ${px}qm ON ${px}qm.doc_id = d.doc_id)"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q101_contamination_frac" -> s"""
-         WITH w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         gp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM w WHERE len(words) >= 8),
+  /** The held-out/train 8-gram split the exact decontamination oracles
+    * share ([[splitGrams]] in DuckDB): each doc's distinct gram hashes
+    * (`g`), the held-out docs' hashes (`held`, md5 head '0') and the
+    * other docs' grams (`train`).
+    */
+  private lazy val heldTrainGrams: String =
+    s"""w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
+         gp AS (${gramPosSql("w")}),
          g AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM gp),
          held AS (SELECT DISTINCT gh FROM g
            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
          train AS (SELECT doc_id, gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')
+           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')"""
+
+  val oracleSql: Map[String, String] = Map(
+    "q101_contamination_frac" -> s"""
+         WITH $heldTrainGrams
          SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
            CAST(SUM(CASE WHEN h.gh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_contaminated,
@@ -1686,55 +1687,26 @@ object CurationQueries extends QueryFamily {
          FROM train t LEFT JOIN held h USING (gh)
          GROUP BY t.doc_id ORDER BY t.doc_id""",
     "q59_decontaminate" -> s"""
-         WITH w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         gp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM w WHERE len(words) >= 8),
-         g AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
-           FROM gp),
-         held AS (SELECT DISTINCT gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
-         train AS (SELECT doc_id, gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')
+         WITH $heldTrainGrams
          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
          FROM train JOIN held USING (gh)
          GROUP BY doc_id ORDER BY doc_id""",
     "q84_decontaminate_bloom" -> s"""
-         WITH w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         gp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM w WHERE len(words) >= 8),
-         g AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
-           FROM gp),
-         held AS (SELECT DISTINCT gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
-         train AS (SELECT doc_id, gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')
+         WITH $heldTrainGrams
          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
          FROM train JOIN held USING (gh)
          GROUP BY doc_id ORDER BY doc_id""",
     "q64_curation_pipeline" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          noncanon AS (SELECT id AS doc_id FROM
            (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id) cc
            WHERE id <> comp),
          nw AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         ngp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM nw WHERE len(words) >= 8),
+         ngp AS (${gramPosSql("nw")}),
          ng AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM ngp),
          held AS (SELECT DISTINCT gh FROM ng
            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
@@ -1787,7 +1759,7 @@ object CurationQueries extends QueryFamily {
     "q155_release_diff" -> s"""
          WITH $bpeEncodeCtes,
          ${releaseCardCtes("b",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("doc_id"))},
          ${releaseCardCtes("n", "TRUE")}
          SELECT metric, round(b.value, 6) AS base_value,
            round(n.value, 6) AS new_value,
@@ -1831,8 +1803,8 @@ object CurationQueries extends QueryFamily {
     "q173_maintained_diff" -> s"""
          WITH $bpeEncodeCtes,
          ${ledgerCtesFor("va",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')",
-           "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("doc_id"),
+           duckBase("vec_id"))},
          ${ledgerCtesFor("", "TRUE", "TRUE")},
          ${releaseCardCtes("b",
            "doc_id IN (SELECT doc_id FROM valed WHERE drop_reason = 'kept')")},
@@ -1857,15 +1829,12 @@ object CurationQueries extends QueryFamily {
              substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS hb
            FROM documents),
          dheld AS (SELECT DISTINCT
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
-           FROM (SELECT words, unnest(generate_series(1, len(words) - 7)) AS i
-             FROM dw0 WHERE hb = '0' AND len(words) >= 8)),
+             $duckGramHash AS gh
+           FROM (${gramPosSql("dw0")} AND hb = '0')),
          dtr AS (SELECT doc_id, words FROM dw0 WHERE hb <> '0'),
          dlw AS (SELECT doc_id, i AS s
-           FROM (SELECT doc_id, words,
-               unnest(generate_series(1, len(words) - 7)) AS i
-             FROM dtr WHERE len(words) >= 8) t
-           WHERE substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16)
+           FROM (${gramPosSql("dtr")}) t
+           WHERE $duckGramHash
              IN (SELECT gh FROM dheld)),
          drm AS (SELECT DISTINCT doc_id, pos FROM
            (SELECT doc_id, unnest(generate_series(s, s + 7)) AS pos
@@ -1894,10 +1863,7 @@ object CurationQueries extends QueryFamily {
     // the md5-head held split + q24's exact 3-gram-Jaccard confirm
     "q181_fuzzy_decon" -> (s"""
          WITH $bandedSigSql,
-         fcand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+         fcand AS (${lshPairsSql()}),
          fo AS (SELECT
              CASE WHEN substr(md5(a_id::VARCHAR), 1, 1) = '0'
                THEN b_id ELSE a_id END AS doc_id,
@@ -1945,11 +1911,9 @@ object CurationQueries extends QueryFamily {
          dct AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS n_tokens
            FROM dcw WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0'),
          dctot AS (SELECT SUM(n_tokens) AS t FROM dct),
-         dcgp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM dcw WHERE len(words) >= 8),
+         dcgp AS (${gramPosSql("dcw")}),
          dcg AS (SELECT doc_id, i,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM dcgp),
          dcheld AS (SELECT DISTINCT gh FROM dcg
            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
@@ -1967,10 +1931,7 @@ object CurationQueries extends QueryFamily {
          dcfg AS (SELECT doc_id, list(DISTINCT substr(pre, i, 3)) AS grams
            FROM dcfgp GROUP BY 1),""" + s"""
          $bandedSigSql,
-         dcfc AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+         dcfc AS (${lshPairsSql()}),
          dcfo AS (SELECT
              CASE WHEN substr(md5(CAST(a_id AS VARCHAR)), 1, 1) = '0'
                THEN b_id ELSE a_id END AS doc_id,
@@ -2047,8 +2008,8 @@ object CurationQueries extends QueryFamily {
     // pins the monotonicity claim (removed_docs = 0)
     "q170_dropset_diff" -> s"""
          WITH ${dedupDropsCtesFor("ya",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')",
-           "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("doc_id"),
+           duckBase("vec_id"))},
          ${dedupDropsCtesFor("yb", "TRUE", "TRUE")},
          s1 AS (SELECT det, CAST(COUNT(*) AS BIGINT) AS v1_docs
            FROM yadrops GROUP BY 1),
@@ -2074,8 +2035,8 @@ object CurationQueries extends QueryFamily {
     // the common docs; the transition matrix is the release-QA table
     "q167_ledger_diff" -> s"""
          WITH ${ledgerCtesFor("va",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')",
-           "substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("doc_id"),
+           duckBase("vec_id"))},
          ${ledgerCtesFor("vb", "TRUE", "TRUE")}
          SELECT a.drop_reason AS reason_v1, b.drop_reason AS reason_v2,
            CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -2089,8 +2050,7 @@ object CurationQueries extends QueryFamily {
          vraw AS (SELECT doc_id, band, sigkey FROM lng0
            WHERE sigkey IS NOT NULL),
          v1 AS (SELECT * FROM vraw
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+           WHERE ${duckBase("doc_id")}),
          s1 AS (SELECT band, CAST(COUNT(*) AS BIGINT) AS v1_rows,
              CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS v1_docs
            FROM v1 GROUP BY 1),
@@ -2178,17 +2138,7 @@ object CurationQueries extends QueryFamily {
     * batch card exactly.
     */
   private lazy val contaminationVelocitySql: String = s"""
-         WITH w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         gp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM w WHERE len(words) >= 8),
-         g AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
-           FROM gp),
-         held AS (SELECT DISTINCT gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
-         train AS (SELECT doc_id, gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0'),
+         WITH $heldTrainGrams,
          pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
            FROM train JOIN held USING (gh) GROUP BY doc_id),
          bt AS (SELECT doc_id,

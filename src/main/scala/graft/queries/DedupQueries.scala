@@ -304,8 +304,7 @@ object DedupQueries extends QueryFamily {
     "q91_incremental_dedup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .withColumn("side",
-          when(substring(md5(col("doc_id").cast("string")), 1, 1)
-            .isin("0", "1", "2"), lit("delta")).otherwise(lit("base")))
+          when(isDeltaDoc(col("doc_id")), lit("delta")).otherwise(lit("base")))
       val sig = corpusSignatures(s, d)
       val sides = docs.select(col("doc_id"), col("side"))
       Dedup.minhashCandidates(sig)
@@ -1489,10 +1488,7 @@ object DedupQueries extends QueryFamily {
                  FROM ${px}lng0 WHERE sigkey IS NOT NULL GROUP BY 1, 2) s
            ON l.band = s.band AND l.sigkey = s.sigkey
            WHERE l.sigkey IS NOT NULL AND s.bs <= 10000),
-         ${px}cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM ${px}lng a JOIN ${px}lng b ON a.band = b.band
-             AND a.sigkey = b.sigkey AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+         ${px}cand AS (${lshPairsSql(px = px)}),
          ${px}prec AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
              CAST(COALESCE(SUM(CASE WHEN jac >= 0.5 THEN 1 ELSE 0 END), 0)
                AS BIGINT) AS n_verified
@@ -1526,11 +1522,9 @@ object DedupQueries extends QueryFamily {
            FROM documents),
          hhw AS (SELECT doc_id,
              ${duckNormWords} AS words FROM hhd),
-         hhp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM hhw WHERE len(words) >= 8),
+         hhp AS (${gramPosSql("hhw")}),
          hhg AS (SELECT
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM hhp),
          hht AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM hhg),
          hhc AS (SELECT gh, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1553,12 +1547,9 @@ object DedupQueries extends QueryFamily {
     */
   private lazy val incrementalDedupSql: String = s"""
          WITH $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_bands
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         cand AS (${lshPairsSql(2, ", COUNT(*) AS n_bands")}),
          sd AS (SELECT doc_id,
-             CASE WHEN substr(md5(doc_id::VARCHAR), 1, 1) IN ('0', '1', '2')
+             CASE WHEN ${duckDelta("doc_id")}
                THEN 'delta' ELSE 'base' END AS side FROM documents)
          SELECT CASE WHEN sa.side = 'delta' THEN c.a_id ELSE c.b_id END AS delta_id,
            CASE WHEN sa.side = 'delta' THEN c.b_id ELSE c.a_id END AS base_id,
@@ -1576,13 +1567,9 @@ object DedupQueries extends QueryFamily {
   private lazy val incrementalContainmentSql: String = s"""
          WITH $bandedSigSql,
          sd AS (SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS side
+             CASE WHEN ${duckDelta("doc_id")} THEN 'delta' ELSE 'base' END AS side
            FROM documents),
-         cand0 AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         cand0 AS (${lshPairsSql(2)}),
          cand AS (SELECT
              CASE WHEN sa.side = 'delta' THEN a_id ELSE b_id END AS delta_id,
              CASE WHEN sa.side = 'delta' THEN b_id ELSE a_id END AS base_id
@@ -1636,10 +1623,7 @@ object DedupQueries extends QueryFamily {
          FROM documents GROUP BY 1 ORDER BY content_hash""",
     "q22_minhash_candidates" -> s"""
          WITH $bandedSigSql
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_bands
-         FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-           AND a.doc_id < b.doc_id
-         GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY a_id, b_id""",
+         ${lshPairsSql(2, ", COUNT(*) AS n_bands")} ORDER BY a_id, b_id""",
     "q23_simhash" -> s"""
          WITH t AS (SELECT doc_id, ${duckToks("text")} AS toks FROM documents)
          SELECT doc_id, CAST($simhashTerms AS BIGINT) AS simhash
@@ -1654,7 +1638,7 @@ object DedupQueries extends QueryFamily {
     "q123_stream_simhash" -> s"""
          WITH ${simhashCandCtes("")},
          sd AS (SELECT doc_id,
-             CASE WHEN substr(md5(doc_id::VARCHAR), 1, 1) IN ('0', '1', '2')
+             CASE WHEN ${duckDelta("doc_id")}
                THEN 'delta' ELSE 'base' END AS side FROM documents)
          SELECT CASE WHEN sa.side = 'delta' THEN c.a_id ELSE c.b_id END AS delta_id,
            CASE WHEN sa.side = 'delta' THEN c.b_id ELSE c.a_id END AS base_id,
@@ -1695,11 +1679,7 @@ object DedupQueries extends QueryFamily {
          FROM n LEFT JOIN r USING (doc_id) ORDER BY n.doc_id""",
     "q102_lsh_precision" -> (s"""
          WITH $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             CAST(COUNT(*) AS BIGINT) AS n_bands
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),""" + """
+         cand AS (${lshPairsSql(cols = ", CAST(COUNT(*) AS BIGINT) AS n_bands")}),""" + """
          gpos AS (SELECT doc_id, substr(text, 1, 120) AS pre,
            unnest(generate_series(1, greatest(len(substr(text, 1, 120)) - 2, 1))) AS i
            FROM documents),
@@ -1717,19 +1697,12 @@ object DedupQueries extends QueryFamily {
     "q89_semantic_clusters" -> s"""
          WITH RECURSIVE $semanticPairCtes,
          sel AS (SELECT kept_id, dropped_id FROM ev WHERE rn = 1),
-         edges AS (SELECT kept_id AS s, dropped_id AS t FROM sel
-           UNION SELECT dropped_id AS s, kept_id AS t FROM sel),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s)
+         ${reachSql("sel", "kept_id", "dropped_id")}
          SELECT id AS vec_id, MIN(comp) AS cluster_id
          FROM reach GROUP BY id ORDER BY vec_id""",
     "q24_ngram_dedup" -> (s"""
          WITH $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),""" + """
+         cand AS (${lshPairsSql()}),""" + """
          gpos AS (SELECT doc_id, substr(text, 1, 120) AS pre,
            unnest(generate_series(1, greatest(len(substr(text, 1, 120)) - 2, 1))) AS i
            FROM documents),
@@ -1743,15 +1716,8 @@ object DedupQueries extends QueryFamily {
          WHERE jac >= 0.5 ORDER BY a_id, b_id"""),
     "q45_dedup_clusters" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s)
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")}
          SELECT id AS doc_id, MIN(comp) AS cluster_id
          FROM reach GROUP BY id ORDER BY doc_id""",
     "q107_snapshot_diff" ->
@@ -1770,15 +1736,8 @@ object DedupQueries extends QueryFamily {
          ORDER BY doc_id""",
     "q109_cluster_survivor" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          cl AS (SELECT id AS doc_id, MIN(comp) AS cluster_id FROM reach GROUP BY id),
          j AS (SELECT cl.cluster_id, cl.doc_id, d.n_chars
            FROM cl JOIN documents d USING (doc_id)),
@@ -1853,10 +1812,7 @@ object DedupQueries extends QueryFamily {
          ORDER BY tspine.det""",
     "q114_lsh_recall" -> (s"""
          WITH $bandedSigSql,
-         cpair AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         cpair AS (${lshPairsSql(2)}),
          cdir AS (SELECT a_id AS q_id, b_id AS n_id FROM cpair
            UNION ALL SELECT b_id AS q_id, a_id AS n_id FROM cpair),""" + """
          gpos AS (SELECT doc_id, substr(text, 1, 120) AS pre,
@@ -1914,19 +1870,11 @@ object DedupQueries extends QueryFamily {
     // (q45's recursive oracle, extended to label every doc)
     "q141_incremental_clusters" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          comp AS (SELECT id AS doc_id, MIN(comp) AS comp FROM reach GROUP BY id)
          SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id,
-           CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)
-                  IN ('0', '1', '2')
+           CASE WHEN ${duckDelta("d.doc_id")}
                 THEN 'delta' ELSE 'base' END AS src
          FROM documents d LEFT JOIN comp c USING (doc_id)
          ORDER BY d.doc_id""",
@@ -1934,19 +1882,11 @@ object DedupQueries extends QueryFamily {
     // whole-corpus rebuild (merge associativity across runs)
     "q142_cluster_ingest_chain" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          comp AS (SELECT id AS doc_id, MIN(comp) AS comp FROM reach GROUP BY id)
          SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id,
-           CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)
-                  IN ('0', '1', '2')
+           CASE WHEN ${duckDelta("d.doc_id")}
                 THEN CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 2, 1)
                        IN ('0', '1', '2', '3', '4', '5', '6', '7')
                      THEN 'delta1' ELSE 'delta2' END
@@ -1955,15 +1895,8 @@ object DedupQueries extends QueryFamily {
          ORDER BY d.doc_id""",
     "q143_cluster_purity" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          comp AS (SELECT id AS doc_id, MIN(comp) AS comp FROM reach GROUP BY id),
          lab AS (SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cl,
              substr(md5(regexp_replace(d.text, '( dup)+$$', '')), 1, 16) AS gk
@@ -1984,19 +1917,11 @@ object DedupQueries extends QueryFamily {
     // now through 4 sequential stateful micro-batches)
     "q144_stream_clusters" -> s"""
          WITH RECURSIVE $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          comp AS (SELECT id AS doc_id, MIN(comp) AS comp FROM reach GROUP BY id)
          SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id,
-           CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)
-                  IN ('0', '1', '2')
+           CASE WHEN ${duckDelta("d.doc_id")}
                 THEN 'delta' ELSE 'base' END AS src
          FROM documents d LEFT JOIN comp c USING (doc_id)
          ORDER BY d.doc_id""",
@@ -2007,10 +1932,7 @@ object DedupQueries extends QueryFamily {
     "q149_stream_spans" -> incrementalSpanSql,
     "q156_containment_dedup" -> s"""
          WITH $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         cand AS (${lshPairsSql(2)}),
          gr AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ng FROM sh GROUP BY 1),
          ix AS (SELECT c.a_id, c.b_id, CAST(COUNT(*) AS BIGINT) AS n_common
            FROM cand c JOIN sh x ON x.doc_id = c.a_id
@@ -2137,10 +2059,7 @@ object DedupQueries extends QueryFamily {
     // DISTINCT (source, hash) projection
     "q203_source_overlap" -> s"""
          WITH $bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         cand AS (${lshPairsSql(2)}),
          nd AS (SELECT least(x.source, y.source) AS source_a,
              greatest(x.source, y.source) AS source_b,
              CAST(COUNT(*) AS BIGINT) AS n_neardup_pairs
@@ -2228,8 +2147,7 @@ object DedupQueries extends QueryFamily {
   private lazy val incrementalSpanSql: String = s"""
          WITH tk AS (SELECT doc_id, ${duckToks("text")} AS toks FROM documents),
          sd AS (SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS side
+             CASE WHEN ${duckDelta("doc_id")} THEN 'delta' ELSE 'base' END AS side
            FROM documents),
          pn AS (SELECT doc_id, toks,
              CAST(ceil(len(toks) / 8.0) AS BIGINT) AS n_spans FROM tk),

@@ -322,6 +322,15 @@ object Fragments {
   private[queries] def isDeltaDoc(c: Column): Column =
     substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
 
+  /** DuckDB mirror of [[isDeltaDoc]] over the id column `id`. */
+  private[queries] def duckDelta(id: String): String = duckSplit(id, "IN")
+
+  /** The complement of [[duckDelta]]: the md5 base slice. */
+  private[queries] def duckBase(id: String): String = duckSplit(id, "NOT IN")
+
+  private def duckSplit(id: String, op: String): String =
+    s"substr(md5(CAST($id AS VARCHAR)), 1, 1) $op ('0', '1', '2')"
+
   /** Sub-split of the delta slice into two consecutive ingests (q142):
     * second md5 nibble 0–7 ⇒ first ingest.
     */
@@ -659,6 +668,48 @@ object Fragments {
        trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\s+'),
        x -> x <> '')""".replaceAll("\n\\s*", " ")
 
+  /** Every word-8-gram window of the `$src` CTE's `words` list, as
+    * (doc_id, words, i) rows; docs under 8 words have none.
+    */
+  private[queries] def gramPosSql(src: String): String =
+    s"""SELECT doc_id, words,
+             unnest(generate_series(1, len(words) - 7)) AS i
+           FROM $src WHERE len(words) >= 8"""
+
+  /** DuckDB mirror of [[TA.wordGramHashes]] (n = 8, 16 hex chars): the
+    * hash of the window of `words` starting at `i`.
+    */
+  private[queries] val duckGramHash =
+    "substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16)"
+
+  /** DuckDB mirror of [[TA.stopwordRatioFromTokens]] over the `toks` list. */
+  private[queries] def duckStopRatio(toks: String): String =
+    s"""CAST(len(list_filter($toks, x ->
+                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
+               / CAST(len($toks) AS DOUBLE)"""
+
+  /** DuckDB mirror of [[TA.meanWordLenFromTokens]] over the `toks` list. */
+  private[queries] def duckMeanWordLen(toks: String): String =
+    s"""CAST(list_sum(list_transform($toks, x -> len(x))) AS DOUBLE)
+               / CAST(len($toks) AS DOUBLE)"""
+
+  /** DuckDB mirror of [[TA.punctRatio]] over the `text` column. */
+  private[queries] val duckPunctRatio =
+    """CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
+               / CAST(len(text) AS DOUBLE)"""
+
+  /** The frozen-logistic quality features ([[qualityOf]]'s inputs) over
+    * a `t(doc_id, <cols>, text, toks)` CTE, as
+    * `f(doc_id, <cols>, n_words, mwl, punct, stop)`.
+    */
+  private[queries] def duckQualityFeatures(cols: String = ""): String =
+    s"""f AS (SELECT doc_id$cols,
+             CAST(len(toks) AS DOUBLE) AS n_words,
+             ${duckMeanWordLen("toks")} AS mwl,
+             $duckPunctRatio AS punct,
+             ${duckStopRatio("toks")} AS stop
+           FROM t)"""
+
   /** Prefixed/filtered variant of the banded-signature chain so a
     * release-slice instance (q167's v1) can coexist with the full-
     * corpus instance in one WITH list. `px` prefixes every CTE name;
@@ -700,6 +751,32 @@ object Fragments {
     * that).
     */
   private[queries] val bandedSigSql: String = bandedSigSqlFor("", "TRUE")
+
+  /** The LSH band self-join over the `${px}lng` band keys: one row per
+    * candidate pair (a_id < b_id) sharing at least `minBands` bands,
+    * with `cols` appended to the select list.
+    */
+  private[queries] def lshPairsSql(minBands: Int = 1, cols: String = "",
+      px: String = ""): String = {
+    val having = if (minBands > 1) s" HAVING COUNT(*) >= $minBands" else ""
+    s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id$cols
+           FROM ${px}lng a JOIN ${px}lng b ON a.band = b.band AND a.sigkey = b.sigkey
+             AND a.doc_id < b.doc_id
+           GROUP BY 1, 2$having"""
+  }
+
+  /** Connected components by recursive reachability (the query opens
+    * WITH RECURSIVE): `edges` holds the `$pairs` CTE's (`a`, `b`) pairs
+    * in both directions, and `reach(id, comp)` each node with every
+    * node it reaches. MIN(comp) per id is the component's min label.
+    */
+  private[queries] def reachSql(pairs: String, a: String = "a_id",
+      b: String = "b_id"): String =
+    s"""edges AS (SELECT $a AS s, $b AS t FROM $pairs
+           UNION SELECT $b AS s, $a AS t FROM $pairs),
+         reach AS (SELECT s AS id, s AS comp FROM edges
+           UNION SELECT e.t AS id, r.comp AS comp
+           FROM reach r JOIN edges e ON r.id = e.s)"""
 
   /** IVF centroid VALUES rows for the q44 oracle — the exact constants
     * the Spark side folds into its plan (test embeddings are 64-dim).
@@ -831,10 +908,7 @@ object Fragments {
     */
   private[queries] def dedupDropsCtesFor(px: String, docPred: String,
       embPred: String): String = s"""${bandedSigSqlFor(px, docPred)},
-         ${px}mhp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM ${px}lng a JOIN ${px}lng b ON a.band = b.band
-             AND a.sigkey = b.sigkey AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+         ${px}mhp AS (${lshPairsSql(2, px = px)}),
          ${simhashCandCtesFor(px + "x", docPred)},
          ${px}pn AS (SELECT doc_id, toks,
              CAST(ceil(len(toks) / 8.0) AS BIGINT) AS n_spans FROM ${px}xt),
@@ -870,16 +944,7 @@ object Fragments {
   private[queries] lazy val duckQualityCtes: String = s"""
          t AS (SELECT doc_id, source, text, ${duckToks("text")} AS toks
            FROM documents),
-         f AS (SELECT doc_id, source,
-             CAST(len(toks) AS DOUBLE) AS n_words,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop
-           FROM t),
+         ${duckQualityFeatures(", source")},
          z AS (SELECT doc_id, source, 0.5 + 4.0 * stop - 6.0 * punct
              - 0.4 * abs(mwl - 5.0) + 0.15 * ln(1.0 + n_words) AS zz FROM f),
          sc AS (SELECT doc_id, source,

@@ -2499,7 +2499,7 @@ object MixtureQueries extends QueryFamily {
       // greatest/full-join cursor fold by [[chainedMixtureOrder]]'s
       // argument (Wave32Spec pins it against the inlined old fold)
       chainedMixtureOrder(ph, fill, Seq(
-        ("released", !hex1(col("doc_id")).isin("0", "1", "2")),
+        ("released", !isDeltaDoc(col("doc_id"))),
         ("append1", hex1(col("doc_id")) === "0"),
         ("append2", hex1(col("doc_id")).isin("1", "2"))))
     }))
@@ -2581,6 +2581,15 @@ object MixtureQueries extends QueryFamily {
        + (strpos('0123456789abcdef', substr($hx, 4, 1)) - 1)) % $m"""
       .replaceAll("\n\\s*", " ")
 
+  /** Per-document token counts: the `cols` columns, then `n_tokens`
+    * counted over `toks`, a DuckDB list expression on `text`.
+    */
+  private def nTokensSql(cols: String,
+      toks: String = duckNormWords): String =
+    s"""SELECT $cols,
+             CAST(len($toks) AS BIGINT) AS n_tokens
+           FROM documents"""
+
   /** The FFD packing fold as a recursive oracle CTE chain ending in
     * `${px}fold` — one recursion step per (source, rank) placing the
     * rank-r doc by first-fit over the carried open-bin remainder LIST
@@ -2591,9 +2600,7 @@ object MixtureQueries extends QueryFamily {
     * every iteration.
     */
   private def ffdFoldSqlFor(px: String,
-      tokensSql: String = s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents"""): String = s"""
+      tokensSql: String = nTokensSql("doc_id, source")): String = s"""
          ${px}d AS MATERIALIZED ($tokensSql),
          ${px}f AS MATERIALIZED (SELECT doc_id, source, n_tokens,
              LEAST(n_tokens, $packBudget) AS t,
@@ -2645,15 +2652,8 @@ object MixtureQueries extends QueryFamily {
     * `WITH RECURSIVE`.
     */
   private lazy val splitCtes: String = s"""$bandedSigSql,
-         cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           FROM lng a JOIN lng b ON a.band = b.band AND a.sigkey = b.sigkey
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         edges AS (SELECT a_id AS s, b_id AS t FROM cand
-           UNION SELECT b_id AS s, a_id AS t FROM cand),
-         reach AS (SELECT s AS id, s AS comp FROM edges
-           UNION SELECT e.t AS id, r.comp AS comp
-           FROM reach r JOIN edges e ON r.id = e.s),
+         cand AS (${lshPairsSql(2)}),
+         ${reachSql("cand")},
          comp AS (SELECT id AS doc_id, MIN(comp) AS comp FROM reach GROUP BY id),
          rep AS (SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS rep
            FROM documents d LEFT JOIN comp c USING (doc_id)),
@@ -2719,9 +2719,7 @@ object MixtureQueries extends QueryFamily {
            FROM documents) t
          WHERE rn <= 20 ORDER BY lang, rn""",
     "q61_pack_sequences" -> s"""
-         WITH t AS (SELECT source, doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         WITH t AS (${nTokensSql("source, doc_id", duckToks("text"))}),
          c AS (SELECT source, doc_id, n_tokens,
              COALESCE(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
@@ -2731,16 +2729,7 @@ object MixtureQueries extends QueryFamily {
          FROM c GROUP BY 1, 2 ORDER BY source, seq_id""",
     "q119_quality_resample" -> s"""
          WITH t AS (SELECT doc_id, text, ${duckToks("text")} AS toks FROM documents),
-         f AS (SELECT doc_id,
-             CAST(len(toks) AS DOUBLE) AS n_words,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop
-           FROM t),
+         ${duckQualityFeatures()},
          sc AS (SELECT doc_id,
              round(1.0 / (1.0 + exp(-(0.5 + 4.0 * stop - 6.0 * punct
                - 0.4 * abs(mwl - 5.0) + 0.15 * ln(1.0 + n_words)))), 6)
@@ -2752,16 +2741,7 @@ object MixtureQueries extends QueryFamily {
          WHERE u < quality_score ORDER BY doc_id""",
     "q120_weighted_sample" -> s"""
          WITH t AS (SELECT doc_id, text, ${duckToks("text")} AS toks FROM documents),
-         f AS (SELECT doc_id,
-             CAST(len(toks) AS DOUBLE) AS n_words,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop
-           FROM t),
+         ${duckQualityFeatures()},
          sc AS (SELECT doc_id,
              round(1.0 / (1.0 + exp(-(0.5 + 4.0 * stop - 6.0 * punct
                - 0.4 * abs(mwl - 5.0) + 0.15 * ln(1.0 + n_words)))), 6)
@@ -2797,16 +2777,7 @@ object MixtureQueries extends QueryFamily {
     "q133_source_weighted_sample" -> s"""
          WITH t AS (SELECT doc_id, source, text, ${duckToks("text")} AS toks
            FROM documents),
-         f AS (SELECT doc_id, source,
-             CAST(len(toks) AS DOUBLE) AS n_words,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop
-           FROM t),
+         ${duckQualityFeatures(", source")},
          sc AS (SELECT doc_id, source,
              round(1.0 / (1.0 + exp(-(0.5 + 4.0 * stop - 6.0 * punct
                - 0.4 * abs(mwl - 5.0) + 0.15 * ln(1.0 + n_words)))), 6)
@@ -2859,8 +2830,7 @@ object MixtureQueries extends QueryFamily {
          FROM ps CROSS JOIN ns ORDER BY source""",
     "q147_source_mix_drift" -> s"""
          WITH sd AS (SELECT doc_id, source,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS side
+             CASE WHEN ${duckDelta("doc_id")} THEN 'delta' ELSE 'base' END AS side
            FROM documents),
          b AS (SELECT source, COUNT(*) AS cnt FROM sd WHERE side = 'base'
            GROUP BY 1),
@@ -2944,9 +2914,7 @@ object MixtureQueries extends QueryFamily {
     // concat-chunk packing: one running-total window per source shard,
     // all sequence arithmetic in integer space
     "q192_concat_chunk" -> s"""
-         WITH ccd AS (SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents),
+         WITH ccd AS (${nTokensSql("doc_id, source")}),
          ccf AS (SELECT doc_id, source, n_tokens FROM ccd
            WHERE n_tokens > 0),
          cco AS (SELECT doc_id, source, n_tokens,
@@ -2969,8 +2937,7 @@ object MixtureQueries extends QueryFamily {
              unnest(generate_series(1, len(words) - 1)) AS i
            FROM giw WHERE len(words) >= 2),
          gio AS (SELECT doc_id, source,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0','1','2') AS is_delta,
+             ${duckDelta("doc_id")} AS is_delta,
              ${duckBucketMod("md5(words[i] || ' ' || words[i+1])", 128)} AS b
            FROM gip),
          gst AS (SELECT b,
@@ -2999,9 +2966,7 @@ object MixtureQueries extends QueryFamily {
     // packing purity: doc -> sequence-range fan-out, per-(source, seq)
     // doc counts, pure/mixed split + boundary-spanning doc count
     "q194_pack_purity" -> s"""
-         WITH ppd AS (SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents),
+         WITH ppd AS (${nTokensSql("doc_id, source")}),
          ppf AS (SELECT doc_id, source, n_tokens FROM ppd
            WHERE n_tokens > 0),
          ppo AS (SELECT doc_id, source, n_tokens,
@@ -3080,8 +3045,7 @@ object MixtureQueries extends QueryFamily {
              unnest(generate_series(1, len(words) - 1)) AS i
            FROM drw WHERE len(words) >= 2),
          dro AS (SELECT doc_id, source,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0','1','2') AS is_delta,
+             ${duckDelta("doc_id")} AS is_delta,
              ${duckBucketMod("md5(words[i] || ' ' || words[i+1])", 128)} AS b
            FROM drp),
          drt AS (SELECT b,
@@ -3215,9 +3179,7 @@ object MixtureQueries extends QueryFamily {
     // scan and the 3-row schedule card
     "q209_curriculum_phases" -> s"""
          WITH $duckQualityCtes,
-         cnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         cnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          cth AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2 FROM sc),
          cph AS (SELECT sc.doc_id, quality_score, n_tokens,
@@ -3281,9 +3243,7 @@ object MixtureQueries extends QueryFamily {
     // (phase : source) shard key, aggregated to the phase-budget card
     "q215_curriculum_packing" -> s"""
          WITH RECURSIVE $duckQualityCtes,
-         kcnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         kcnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          kth AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2 FROM sc),
          kph AS (SELECT sc.doc_id,
@@ -3308,11 +3268,8 @@ object MixtureQueries extends QueryFamily {
     // the per-source delta-ingest counts
     "q217_repack_churn" -> s"""
          WITH RECURSIVE
-         ${ffdFoldSqlFor("rb", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')""")},
+         ${ffdFoldSqlFor("rb", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckBase("doc_id")}""")},
          ${ffdFoldSqlFor("rf")},
          rbj AS (SELECT doc_id, source, seq_id AS b_seq, off AS b_off
            FROM rbfold WHERE doc_id IS NOT NULL),
@@ -3320,8 +3277,7 @@ object MixtureQueries extends QueryFamily {
            FROM rffold WHERE doc_id IS NOT NULL),
          rdd AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_delta_docs
            FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2')
+           WHERE ${duckDelta("doc_id")}
              AND len($duckNormWords) > 0
            GROUP BY 1),
          rag AS (SELECT b.source, CAST(COUNT(*) AS BIGINT) AS n_base_docs,
@@ -3339,16 +3295,10 @@ object MixtureQueries extends QueryFamily {
     // per-source maximum — the released packing is immutable
     "q218_incremental_packing" -> s"""
          WITH RECURSIVE
-         ${ffdFoldSqlFor("ib", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')""")},
-         ${ffdFoldSqlFor("idl", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2')""")},
+         ${ffdFoldSqlFor("ib", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckBase("doc_id")}""")},
+         ${ffdFoldSqlFor("idl", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckDelta("doc_id")}""")},
          ibs AS (SELECT source, MAX(seq_id) + 1 AS seq0 FROM ibfold
            WHERE doc_id IS NOT NULL GROUP BY 1)
          SELECT doc_id, source, n_tokens, seq_id, off AS offset_in_seq,
@@ -3373,8 +3323,7 @@ object MixtureQueries extends QueryFamily {
     "q222_frozen_curriculum" -> s"""
          WITH $duckQualityCtes,
          zsd AS (SELECT doc_id, quality_score,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') AS is_delta
+             ${duckDelta("doc_id")} AS is_delta
            FROM sc),
          ztb AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS b1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS b2
@@ -3412,16 +3361,10 @@ object MixtureQueries extends QueryFamily {
     // rule, released/new legs full-joined
     "q223_shard_maintenance" -> s"""
          WITH RECURSIVE
-         ${ffdFoldSqlFor("mb", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')""")},
-         ${ffdFoldSqlFor("md", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2')""")},
+         ${ffdFoldSqlFor("mb", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckBase("doc_id")}""")},
+         ${ffdFoldSqlFor("md", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckDelta("doc_id")}""")},
          ms1 AS (SELECT source, MAX(seq_id) + 1 AS s0 FROM mbfold
            WHERE doc_id IS NOT NULL GROUP BY 1),
          mdo AS (SELECT d.source, d.seq_id + COALESCE(b.s0, 0) AS seq_id,
@@ -3458,9 +3401,7 @@ object MixtureQueries extends QueryFamily {
     // q208 shard rule, the (phase x shard) grid
     "q226_release_assembly" -> s"""
          WITH RECURSIVE $duckQualityCtes,
-         acnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         acnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          ath AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2 FROM sc),
          aph AS (SELECT sc.doc_id,
@@ -3568,7 +3509,7 @@ object MixtureQueries extends QueryFamily {
     // a lang-keyed left join
     "q231_release_waterfill" -> s"""
          WITH ${waterFillSqlFor("wa",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')")},
+           duckBase("doc_id"))},
          ${waterFillSqlFor("wb", "TRUE")}
          SELECT 'v1' AS release, lang, n_tokens, w_a07, final_alloc,
            final_epochs, capped, 0.0 AS prev_alloc,
@@ -3588,16 +3529,10 @@ object MixtureQueries extends QueryFamily {
     // released source/shard/total counts
     "q233_order_append" -> s"""
          WITH RECURSIVE
-         ${ffdFoldSqlFor("oba", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')""")},
-         ${ffdFoldSqlFor("oda", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             IN ('0', '1', '2')""")},
+         ${ffdFoldSqlFor("oba", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckBase("doc_id")}""")},
+         ${ffdFoldSqlFor("oda", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckDelta("doc_id")}""")},
          obs AS (SELECT source, seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(t) AS BIGINT) AS kept_tokens
            FROM obafold WHERE doc_id IS NOT NULL GROUP BY 1, 2),
@@ -3662,9 +3597,7 @@ object MixtureQueries extends QueryFamily {
          WITH RECURSIVE $duckQualityCtes,
          ${waterFillSqlFor("mw", "TRUE", keyCol = "source",
            budgetX = "2.0")},
-         mcnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         mcnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          mth AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2 FROM sc),
          mph AS (SELECT sc.doc_id,
@@ -3731,29 +3664,24 @@ object MixtureQueries extends QueryFamily {
          WITH RECURSIVE $duckQualityCtes,
          ath AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2
-           FROM sc WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+           FROM sc WHERE ${duckBase("doc_id")}),
          ${waterFillSqlFor("aw",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')",
+           duckBase("doc_id"),
            keyCol = "source", budgetX = "2.0")},
-         acnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         acnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          aph AS (SELECT sc.doc_id,
              CAST(CASE WHEN quality_score <= t1 THEN 1
                   WHEN quality_score <= t2 THEN 2 ELSE 3 END AS BIGINT)
                AS phase, source, n_tokens
            FROM sc JOIN acnt USING (doc_id), ath),
          ${ffdFoldSqlFor("ar",
-           """SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
+           s"""SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
                 AS source, n_tokens FROM aph
-              WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                NOT IN ('0', '1', '2')""")},
+              WHERE ${duckBase("doc_id")}""")},
          ${ffdFoldSqlFor("ad",
-           """SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
+           s"""SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
                 AS source, n_tokens FROM aph
-              WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                IN ('0', '1', '2')""")},
+              WHERE ${duckDelta("doc_id")}""")},
          ar0 AS (SELECT source, seq_id, CAST(SUM(t) AS BIGINT)
              AS kept_tokens
            FROM arfold WHERE doc_id IS NOT NULL GROUP BY 1, 2),
@@ -3841,9 +3769,7 @@ object MixtureQueries extends QueryFamily {
          WITH RECURSIVE $duckQualityCtes,
          ${waterFillSqlFor("mw", "TRUE", keyCol = "source",
            budgetX = "2.0")},
-         mcnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         mcnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          mth AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2 FROM sc),
          mph AS (SELECT sc.doc_id,
@@ -3899,24 +3825,20 @@ object MixtureQueries extends QueryFamily {
          WITH RECURSIVE $duckQualityCtes,
          ath AS (SELECT round(quantile_cont(quality_score, 1.0/3), 6) AS t1,
              round(quantile_cont(quality_score, 2.0/3), 6) AS t2
-           FROM sc WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')),
+           FROM sc WHERE ${duckBase("doc_id")}),
          ${waterFillSqlFor("aw",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1', '2')",
+           duckBase("doc_id"),
            keyCol = "source", budgetX = "2.0")},
-         acnt AS (SELECT doc_id,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         acnt AS (${nTokensSql("doc_id", duckToks("text"))}),
          aph AS (SELECT sc.doc_id,
              CAST(CASE WHEN quality_score <= t1 THEN 1
                   WHEN quality_score <= t2 THEN 2 ELSE 3 END AS BIGINT)
                AS phase, source, n_tokens
            FROM sc JOIN acnt USING (doc_id), ath),
          ${ffdFoldSqlFor("cr",
-           """SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
+           s"""SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
                 AS source, n_tokens FROM aph
-              WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                NOT IN ('0', '1', '2')""")},
+              WHERE ${duckBase("doc_id")}""")},
          ${ffdFoldSqlFor("c1",
            """SELECT doc_id, CAST(phase AS VARCHAR) || ':' || source
                 AS source, n_tokens FROM aph
@@ -4095,9 +4017,7 @@ object MixtureQueries extends QueryFamily {
     * card exactly under any batch membership.
     */
   private lazy val quotaSampleSql: String = s"""
-         WITH qdt AS (SELECT doc_id, lang, source,
-             CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
-           FROM documents),
+         WITH qdt AS (${nTokensSql("doc_id, lang, source", duckToks("text"))}),
          qrk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY lang, source
              ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
            FROM qdt)
@@ -4119,23 +4039,14 @@ object MixtureQueries extends QueryFamily {
     */
   private lazy val packingChainSql: String = s"""
          WITH RECURSIVE
-         ${ffdFoldSqlFor("pb", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0', '1', '2')""")},
-         ${ffdFoldSqlFor("pi", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2')
+         ${ffdFoldSqlFor("pb", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckBase("doc_id")}""")},
+         ${ffdFoldSqlFor("pi", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckDelta("doc_id")}
              AND substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)
                IN ('0', '1', '2', '3', '4', '5', '6', '7')""")},
-         ${ffdFoldSqlFor("pj", s"""SELECT doc_id, source,
-             CAST(len($duckNormWords) AS BIGINT) AS n_tokens
-           FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2')
+         ${ffdFoldSqlFor("pj", s"""${nTokensSql("doc_id, source")}
+           WHERE ${duckDelta("doc_id")}
              AND substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)
                NOT IN ('0', '1', '2', '3', '4', '5', '6', '7')""")},
          cs1 AS (SELECT source, MAX(seq_id) + 1 AS s0 FROM pbfold

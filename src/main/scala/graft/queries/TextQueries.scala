@@ -1283,11 +1283,8 @@ object TextQueries extends QueryFamily {
          WITH t AS (SELECT doc_id, text, ${duckToks("text")} AS toks,
              ${duckToks("lower(text)")} AS ltoks FROM documents),
          m AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-             round(CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE), 6) AS mean_word_len,
-             round(CAST(len(list_filter(ltoks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(ltoks) AS DOUBLE), 6) AS stopword_ratio,
+             round(${duckMeanWordLen("toks")}, 6) AS mean_word_len,
+             round(${duckStopRatio("ltoks")}, 6) AS stopword_ratio,
              round(1.0 - CAST(len(list_distinct(ltoks)) AS DOUBLE)
                / CAST(len(ltoks) AS DOUBLE), 6) AS dup_frac
            FROM t)
@@ -1364,11 +1361,8 @@ object TextQueries extends QueryFamily {
          SELECT doc_id, CAST(nw AS BIGINT) AS n_words,
            round(CAST(list_sum(list_transform(toks, t -> len(t))) AS DOUBLE)
              / CAST(nw AS DOUBLE), 6) AS mean_word_len,
-           round(CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-             / CAST(len(text) AS DOUBLE), 6) AS punct_ratio,
-           round(CAST(len(list_filter(toks, x ->
-               list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-             / CAST(len(toks) AS DOUBLE), 6) AS stopword_ratio
+           round($duckPunctRatio, 6) AS punct_ratio,
+           round(${duckStopRatio("toks")}, 6) AS stopword_ratio
          FROM t ORDER BY doc_id""",
     "q28_token_count" -> s"""
          SELECT doc_id, CAST(len(${duckToks("text")}) AS BIGINT) AS n_ws_tokens,
@@ -1446,11 +1440,9 @@ object TextQueries extends QueryFamily {
          FROM r WHERE vocab_id <= 1000 ORDER BY vocab_id""",
     "q62_dup_text_frac" -> s"""
          WITH w AS (SELECT doc_id, $duckNormWords AS words FROM documents),
-         gp AS (SELECT doc_id, words,
-             unnest(generate_series(1, len(words) - 7)) AS i
-           FROM w WHERE len(words) >= 8),
+         gp AS (${gramPosSql("w")}),
          g AS (SELECT DISTINCT doc_id,
-             substr(md5(array_to_string(words[i:i+7], ' ')), 1, 16) AS gh
+             $duckGramHash AS gh
            FROM gp),
          dupg AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
          tot AS (SELECT doc_id, COUNT(*) AS n_grams FROM g GROUP BY doc_id),
@@ -1522,13 +1514,9 @@ object TextQueries extends QueryFamily {
          f AS (SELECT doc_id,
              CAST(len(toks) AS DOUBLE) AS n_words,
              CAST(len(toks) AS BIGINT) AS n_words_l,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop,
+             ${duckMeanWordLen("toks")} AS mwl,
+             $duckPunctRatio AS punct,
+             ${duckStopRatio("toks")} AS stop,
              round(1.0 - CAST(len(list_distinct(ltoks)) AS DOUBLE)
                / CAST(len(ltoks) AS DOUBLE), 6) AS dup_frac
            FROM t),
@@ -1556,8 +1544,7 @@ object TextQueries extends QueryFamily {
          WITH t AS (SELECT doc_id, unnest(${duckToks("text")}) AS term
            FROM documents),
          sd AS (SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS side
+             CASE WHEN ${duckDelta("doc_id")} THEN 'delta' ELSE 'base' END AS side
            FROM documents),
          f AS (SELECT term, COUNT(*) AS freq FROM t JOIN sd USING (doc_id)
            WHERE sd.side = 'base' GROUP BY 1),
@@ -1575,13 +1562,9 @@ object TextQueries extends QueryFamily {
          f AS (SELECT doc_id,
              CAST(len(toks) AS DOUBLE) AS n_words,
              CAST(len(toks) AS BIGINT) AS n_words_l,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS mwl,
-             CAST(len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-               / CAST(len(text) AS DOUBLE) AS punct,
-             CAST(len(list_filter(toks, x ->
-                 list_contains(['the','and','of','a','to','in','is','it'], x))) AS DOUBLE)
-               / CAST(len(toks) AS DOUBLE) AS stop,
+             ${duckMeanWordLen("toks")} AS mwl,
+             $duckPunctRatio AS punct,
+             ${duckStopRatio("toks")} AS stop,
              round(1.0 - CAST(len(list_distinct(ltoks)) AS DOUBLE)
                / CAST(len(ltoks) AS DOUBLE), 6) AS dup_frac
            FROM t),
@@ -1649,7 +1632,7 @@ object TextQueries extends QueryFamily {
     // same CTE builder as q187, boundary slice = base docs
     "q189_stream_histogram" -> s"""
          WITH ${histSqlCtes("sh",
-           "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0','1','2')")}
+           duckBase("doc_id"))}
          SELECT x.source, x.n_docs, x.p50_exact, h.p50_hist,
            floor(abs(x.p50_exact - h.p50_hist) * 1000000) / 1000000
              AS p50_err,
@@ -1659,15 +1642,13 @@ object TextQueries extends QueryFamily {
          FROM shx x JOIN shi h USING (source) ORDER BY x.source""",
     // PSI drift: 16-bin base-boundary histograms on both slices,
     // add-1-smoothed shares, sum of (pd - pb) * ln(pd / pb)
-    "q191_psi_drift" -> """
+    "q191_psi_drift" -> s"""
          WITH pbd AS (SELECT source, MIN(n_chars) AS lo, MAX(n_chars) AS hi
            FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-             NOT IN ('0','1','2')
+           WHERE ${duckBase("doc_id")}
            GROUP BY source),
          pbin AS (SELECT d.source,
-             CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)
-               IN ('0','1','2') THEN 'delta' ELSE 'base' END AS side,
+             CASE WHEN ${duckDelta("d.doc_id")} THEN 'delta' ELSE 'base' END AS side,
              CASE WHEN e.hi = e.lo THEN 0
                ELSE greatest(
                  least(((d.n_chars - e.lo) * 16) // (e.hi - e.lo), 15), 0)
@@ -1745,8 +1726,7 @@ object TextQueries extends QueryFamily {
     "q220_fertility_trigger" -> s"""
          WITH $bpeEncodeCtes,
          fsd AS (SELECT source, n_words, COALESCE(n_tokens, 0) AS n_tokens,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-               IN ('0', '1', '2') THEN 'delta' ELSE 'base' END AS side
+             CASE WHEN ${duckDelta("doc_id")} THEN 'delta' ELSE 'base' END AS side
            FROM enc),
          fpv AS (SELECT source,
              SUM(CASE WHEN side = 'base' THEN n_words END) AS bw,

@@ -37,9 +37,6 @@ class EventsLoaderSpec extends SparkSpec {
       assert(rows(df) == expected, s"$dir $call")
     }
 
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("sf0.001 file: no-tz micros infers as NTZ and loads as UTC instants") {
     val raw = spark.read.parquet(s"$sf0001/events.parquet")
     assert(raw.schema("ts").dataType == TimestampNTZType)
@@ -56,7 +53,7 @@ class EventsLoaderSpec extends SparkSpec {
   test("Spark-written TIMESTAMP_NTZ and TIMESTAMP files load identically") {
     Seq("timestamp_ntz" -> TimestampNTZType, "timestamp" -> TimestampType)
       .foreach { case (sqlType, inferred) =>
-        val dir = tempDir(s"graft-events-$sqlType")
+        val dir = tempDir(s"graft-events-$sqlType").toString
         Tables.events(spark, sf0001).withColumn("ts", col("ts").cast(sqlType))
           .write.mode("overwrite").parquet(s"$dir/events.parquet")
         assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
@@ -66,7 +63,7 @@ class EventsLoaderSpec extends SparkSpec {
   }
 
   test("INT64 TIMESTAMP(NANOS) file: inference rejects it, the loader reads it") {
-    val dir = tempDir("graft-events-nanos")
+    val dir = tempDir("graft-events-nanos").toString
     val file = s"$dir/events.parquet"
     val schema = Types.buildMessage()
       .optional(INT64).named("event_id")

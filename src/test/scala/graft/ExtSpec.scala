@@ -678,7 +678,7 @@ class ExtSpec extends SparkSpec {
     // spark.graft.checkpointDir switches the loop's lineage truncation
     // from executor-local to reliable checkpoints; results must be
     // identical and checkpoint data must land in the configured dir
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck_").toFile
+    val ckDir = tempDir("graft_ck_").toFile
     spark.conf.set(graft.util.Checkpoints.ConfKey, ckDir.getAbsolutePath)
     try {
       val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (21L, 20L)).toDF("a_id", "b_id")
@@ -689,13 +689,7 @@ class ExtSpec extends SparkSpec {
       def files(f: java.io.File): Seq[java.io.File] =
         Option(f.listFiles).toSeq.flatten.flatMap(c => c +: files(c))
       assert(files(ckDir).exists(_.isFile), "no reliable checkpoint written")
-    } finally {
-      spark.conf.unset(graft.util.Checkpoints.ConfKey)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(ckDir)
-    }
+    } finally spark.conf.unset(graft.util.Checkpoints.ConfKey)
   }
 
   test("Bloom sketch: no false negatives; confirm join restores exactness") {

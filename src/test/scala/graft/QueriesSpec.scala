@@ -18,6 +18,16 @@ class QueriesSpec extends SparkSpec {
   test("oracle keys ⊆ query keys") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
+    // per family: its oracles are for its own queries, and no name is
+    // registered twice (`++` would let a later family shadow it)
+    for (f <- SparkEntry.families) {
+      val orphans = f.oracleSql.keySet -- f.queries.keySet
+      assert(orphans.isEmpty, s"${f.getClass.getSimpleName}: oracles without queries: $orphans")
+    }
+    val names = SparkEntry.families.flatMap(_.queries.keys)
+    val twice = names.diff(names.distinct).toSet
+    assert(twice.isEmpty, s"registered by more than one family: $twice")
+    assert(names.size == SparkEntry.queries.size)
   }
 
   test("entry() smoke returns rows") {

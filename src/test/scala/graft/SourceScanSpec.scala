@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins, by reading `src/main/scala` (no Spark), where a streaming run
-  * and a session-config change may be written: one streaming-drain
-  * helper, one session config.
+  * and a session-config change may be written (one streaming-drain
+  * helper, one session config), and that each shared query rule is
+  * written once per engine.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -61,6 +62,13 @@ class SourceScanSpec extends AnyFunSuite {
   private def filesWith(token: String): Set[String] =
     sources.collect { case (f, src) if src.contains(token) => f }.toSet
 
+  /** Occurrences of `token` in all of `src/main/scala`. */
+  private def count(token: String): Int =
+    sources.values.map { src =>
+      Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1))
+        .takeWhile(_ >= 0).size
+    }.sum
+
   test("comments are blanked, string and char literals are kept") {
     val src = "a // writeStream\n/* x /* writeStream */ y */ b \"// kept\" '\"' c"
     assert(code(src) == "a \n  b \"// kept\" '\"' c")
@@ -75,5 +83,12 @@ class SourceScanSpec extends AnyFunSuite {
   test("only the session config and the streaming drain name shuffle partitions") {
     assert(filesWith("\"spark.sql.shuffle.partitions\"") ==
       Set("graft/streaming/Streaming.scala", "graft/util/GraftSession.scala"))
+  }
+
+  test("the md5 delta split and the LSH band self-join are each written once per engine") {
+    assert(count("isin(\"0\", \"1\", \"2\")") == 1) // Spark: isDeltaDoc
+    assert(count("('0', '1', '2')") == 1) // DuckDB: duckDelta, duckBase
+    assert(count("('0','1','2')") == 0)
+    assert(count("lng a JOIN") == 1) // DuckDB: lshPairsSql
   }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, lazy), built
@@ -59,6 +60,27 @@ trait SparkSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  private val tempDirs = new ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new directory under java.io.tmpdir, deleted with everything in
+    * it when the running test ends, pass or fail.
+    */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def withFixture(test: NoArgTest): Outcome = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    try super.withFixture(test)
+    finally Iterator.continually(tempDirs.poll()).takeWhile(_ != null)
+      .foreach(d => rm(d.toFile))
   }
 
   protected val fullSmoke: Boolean = sys.env.contains("GRAFT_FULL_SMOKE")

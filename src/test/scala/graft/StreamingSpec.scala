@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
   test("daily windowed aggregation over events stream matches batch") {
     val schema = graft.util.Tables.events(spark, sf0001).schema
     // stream the (nanos-normalized) events through a temp parquet copy
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream").toString
     graft.util.Tables.events(spark, sf0001).write.mode("overwrite").parquet(tmp)
 
     val stream = Streaming.eventsStream(spark, tmp,
@@ -36,7 +36,7 @@ class StreamingSpec extends SparkSpec {
     // quality scoring / token counting / gram hashing are stateless
     // projections, so the SAME Column expressions drive readStream —
     // the streaming story for the training-data operators is free.
-    val docsDir = java.nio.file.Files.createTempDirectory("graft-docstream").toString
+    val docsDir = tempDir("graft-docstream").toString
     val docs = graft.util.Tables.documents(spark, sf0001).limit(50)
     docs.write.mode("overwrite").parquet(docsDir)
     val stream = spark.readStream
@@ -64,7 +64,7 @@ class StreamingSpec extends SparkSpec {
     // exactly-once across restarts is the property the daily-cron
     // reference gets by rewriting the whole sheet; the engine gets it
     // from the checkpoint + file-sink commit log.
-    val base = java.nio.file.Files.createTempDirectory("graft-chk")
+    val base = tempDir("graft-chk")
     val (src, out, chk) = (s"$base/src", s"$base/out", s"$base/chk")
     val docs = graft.util.Tables.documents(spark, sf0001).limit(50)
     docs.filter(col("doc_id") < 25).write.mode("append").parquet(src)
@@ -209,8 +209,7 @@ class StreamingSpec extends SparkSpec {
     // foreachBatch is at-least-once: a crash between the parquet commit
     // and the checkpoint commit replays the batch. The per-batch
     // overwrite directory must absorb the replay without duplicates.
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_replay_").toFile
     val path = dir.getAbsolutePath
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     Streaming.writeBatch(batch, 7L, path, append = true)
@@ -230,8 +229,7 @@ class StreamingSpec extends SparkSpec {
     // signatures x persisted base signature table) written through the
     // idempotent per-batch-id sink: replaying the same micro-batch
     // must leave the read-back history unchanged
-    val dir = java.nio.file.Files.createTempDirectory("graft_q115_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q115_replay_").toFile
     val path = dir.getAbsolutePath
     val base = Seq((10L, "the quick brown fox jumps over the lazy dog tonight"),
       (11L, "completely unrelated text about spark physical planning"))
@@ -253,8 +251,7 @@ class StreamingSpec extends SparkSpec {
     // the SimHash twin of the q115 replay test: per-batch candidates
     // (batch band signatures x persisted base signature table, exact
     // hamming rescore) through the same idempotent per-batch-id sink
-    val dir = java.nio.file.Files.createTempDirectory("graft_q123_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q123_replay_").toFile
     val path = dir.getAbsolutePath
     val base = Seq((10L, "the quick brown fox jumps over the lazy dog tonight"),
       (11L, "completely unrelated text about spark physical planning"))
@@ -276,8 +273,7 @@ class StreamingSpec extends SparkSpec {
     // the embedding family's twin of the q115/q123 replay tests: batch
     // cell index x persisted base cell index, cosine >= tau, through
     // the same idempotent per-batch-id sink
-    val dir = java.nio.file.Files.createTempDirectory("graft_q135_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q135_replay_").toFile
     val path = dir.getAbsolutePath
     val base = Seq((10L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (11L, Array(0.0f, 0.0f, 1.0f, 0.0f)))
@@ -303,8 +299,7 @@ class StreamingSpec extends SparkSpec {
     // per-batch quantized-index rows through the idempotent
     // per-batch-id sink — replaying a micro-batch must not duplicate
     // index entries
-    val dir = java.nio.file.Files.createTempDirectory("graft_q137_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q137_replay_").toFile
     val path = dir.getAbsolutePath
     val batch = Seq((20L, Array(0.5f, 0.0f, 0.0f, 0.0f)),
       (21L, Array(0.0f, 0.25f, 0.0f, 0.0f)))
@@ -324,8 +319,7 @@ class StreamingSpec extends SparkSpec {
     // the stateful twin of the q115/q123/q135/q137 replay tests: a
     // replayed batch recomputes the SAME label version from the same
     // (prior-version) inputs through the per-batch-id sink
-    val dir = java.nio.file.Files.createTempDirectory("graft_q144_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q144_replay_").toFile
     val path = dir.getAbsolutePath
     val prevLab = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "lab")
     val batch = Seq((30L, "alpha beta gamma delta epsilon zeta eta theta"))
@@ -348,8 +342,7 @@ class StreamingSpec extends SparkSpec {
     // two batches containing claimants of the SAME span key in
     // opposite arrival orders must converge to the same (min) owner,
     // and replaying a merge recomputes the same version
-    val dir = java.nio.file.Files.createTempDirectory("graft_q149_replay_").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_q149_replay_").toFile
     val path = dir.getAbsolutePath
     val text = "one two three four five six seven eight"
     val baseOwn = Seq("ffff").toDF("k").limit(0) // empty owner set
@@ -371,7 +364,7 @@ class StreamingSpec extends SparkSpec {
   test("stream inputs are keyed per corpus path: two paths with one String.hashCode do not alias") {
     // "<root>/Aa" and "<root>/BB" share a String.hashCode, so an input
     // dir keyed on that hash hands BB's run the stream Aa's run wrote
-    val root = java.nio.file.Files.createTempDirectory("graft-alias")
+    val root = tempDir("graft-alias")
     val (aa, bb) = (root.resolve("Aa"), root.resolve("BB"))
     assert(aa.toString.hashCode == bb.toString.hashCode)
     java.nio.file.Files.createDirectories(aa)
@@ -417,7 +410,7 @@ class StreamingSpec extends SparkSpec {
     * per micro-batch, so a drain of it runs 4 batches.
     */
   private def fourFileStream(): (org.apache.spark.sql.DataFrame, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-drain").toString
+    val dir = tempDir("graft-drain").toString
     val in = s"$dir/in"
     graft.util.Tables.events(spark, sf0001).select(col("event_id"), col("ts"))
       .repartition(4).write.mode("overwrite").parquet(in)
