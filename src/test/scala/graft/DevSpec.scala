@@ -30,7 +30,7 @@ class DevSpec extends SparkSpec {
   }
 
   test("plan and exec-plan write one plan file per query") {
-    val dir = Files.createTempDirectory("graft-dev-plans")
+    val dir = tempDir("graft-dev-plans")
     val formatted = out("plan", dir.toString, "t", query)
     val file = dir.resolve("q01_t.txt")
     assert(formatted.contains(s"PLAN $query -> $file (exchanges="), formatted)

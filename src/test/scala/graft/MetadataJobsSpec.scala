@@ -44,7 +44,7 @@ class MetadataJobsSpec extends SparkSpec {
   }
 
   test("a table rewritten in place is re-inferred on its next call") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val dir = tempDir("graft-memo").toString
     val path = s"$dir/t.parquet"
     spark.range(5).toDF("a").write.mode("overwrite").parquet(path)
     assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
@@ -57,7 +57,7 @@ class MetadataJobsSpec extends SparkSpec {
   }
 
   test("a missing table fails as an unmemoized read does") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo-miss").toString
+    val dir = tempDir("graft-memo-miss").toString
     val plain = intercept[Exception](spark.read.parquet(s"$dir/none.parquet"))
     val viaTables = intercept[Exception](Tables.table(spark, dir, "none"))
     assert(viaTables.getClass == plain.getClass)
@@ -65,7 +65,7 @@ class MetadataJobsSpec extends SparkSpec {
   }
 
   test("a 40-directory partitionBy CSV read-back starts no listing job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-listing").toString
+    val dir = tempDir("graft-listing").toString
     spark.range(400).select(col("id"), (col("id") % 40).as("p"))
       .write.mode("overwrite").option("header", "true").partitionBy("p").csv(dir)
     val (back, jobs) = jobsDuring(spark.read.option("header", "true").csv(dir))

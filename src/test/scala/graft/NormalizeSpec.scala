@@ -73,7 +73,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("sinks: overwrite skip-when-empty, append partitioning, csv render") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sinks").toString
+    val tmp = tempDir("graft-sinks").toString
     val df = Seq(("a", java.sql.Timestamp.valueOf("2026-09-10 20:00:00"), "run-1"))
       .toDF("name", "ts", "ingestion_run_id")
     assert(!Sinks.overwriteSnapshot(df.filter(lit(false)), s"$tmp/snap"))
@@ -88,7 +88,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("sinks: debug artifacts drop counts, plan, and a bounded sample") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-debug").toString
+    val tmp = tempDir("graft-debug").toString
     val df = Seq(("E1", 10L), ("E2", 20L), ("E3", 30L)).toDF("name", "sold")
     Sinks.debugArtifacts(df, s"$tmp/dbg", "name", n = 2)
     val counts = java.nio.file.Files.readString(
@@ -102,7 +102,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("sinks: ORC round-trip preserves schema and values") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val tmp = tempDir("graft-orc").toString
     val df = Seq(
       ("Électro Fête", java.sql.Timestamp.valueOf("2026-09-10 20:00:00"), 42L, 12.5),
       ("Plain", java.sql.Timestamp.valueOf("2026-09-11 21:00:00"), 7L, 0.0))

@@ -40,7 +40,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("E1 pipeline: sources → consolidate → three sinks") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val tmp = tempDir("graft-pipe").toString
     val ev = graft.util.Tables.events(spark, sf0001)
     def nulls(n: String) = lit(null).cast("string").as(n)
     def mk(t: String, prefix: String) = ev.filter(col("event_type") === t).select(
@@ -68,7 +68,7 @@ class PipelineSpec extends SparkSpec {
 
   test("run() isolates a source that throws at construction time") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pipe-iso").toString
+    val tmp = tempDir("graft-pipe-iso").toString
     val sg = Seq(
       graft.etl.NormalizedEvent("sg", "sg-1", "A100 Live",
         event_datetime_local =
