@@ -89,27 +89,17 @@ object Similarity {
 
   /** Fused query-side ADC LUT (m × nCents dots) — one node replacing
     * the m × nCents composed `dot_fold(slice/gather, literal)` forest.
-    * `dims(sub)` lists the dimension indices subspace `sub` reads
-    * (contiguous for the static layout, the OPQ perm otherwise).
+    * Subspace `sub` reads the dimensions [[subVec]] reads under `perm`:
+    * contiguous with slice's null-on-short semantics for `None`, the
+    * perm's with element_at's ANSI throw-on-short semantics otherwise.
     */
-  private def pqLutOf(v: Column, cents: Seq[Seq[Seq[Double]]],
-      dims: Seq[Seq[Int]], ansiGather: Boolean): Column =
+  private def pqLutOf(v: Column, codebook: Map[Int, Seq[Seq[Double]]],
+      m: Int, subDim: Int, perm: Option[Seq[Int]]): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.etl.expressions.PqLut(
-        org.apache.spark.sql.GraftBridge.expression(v), cents, dims,
-        ansiGather))
-
-  /** The contiguous per-subspace dimension layout (slice order,
-    * slice's null-on-short semantics).
-    */
-  private def contiguousDims(m: Int, subDim: Int): Seq[Seq[Int]] =
-    (0 until m).map(sub => (sub * subDim) until ((sub + 1) * subDim))
-
-  /** The OPQ-perm per-subspace dimension layout ([[permSub]] order,
-    * element_at's ANSI throw-on-short semantics).
-    */
-  private def permDims(perm: Seq[Int], m: Int, subDim: Int): Seq[Seq[Int]] =
-    (0 until m).map(sub => perm.slice(sub * subDim, (sub + 1) * subDim))
+        org.apache.spark.sql.GraftBridge.expression(v),
+        (0 until m).map(codebook), (0 until m).map(subDims(perm, _, subDim)),
+        perm.isDefined))
 
   /** Index-conditional scale, compiled — value-identical to
     * `transform(v, (x, i) => x * when(i < n, factor).otherwise(1.0))`
@@ -326,24 +316,6 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(x.cast("array<long>")),
         org.apache.spark.sql.GraftBridge.expression(y.cast("array<long>"))))
 
-  /** IVF ANN over int8-quantized codes — the consumer of
-    * [[int8Scale]]/[[quantizeInt8]] (q81's storage shrink becomes a
-    * search path). Both sides are quantized; candidate scoring is a
-    * pure INTEGER dot product over the codes (the SIMD-int8 kernel a
-    * 100 TB deployment runs against 4x-smaller shards), normalized by
-    * the per-side integer code norms — code-space cosine is scale-free
-    * because the positive per-vector scales cancel. The reconstructed
-    * fp dot product (`dot_rec` = ip * a_scale/127 * b_scale/127) is
-    * also emitted to exercise the stored-scale rescale path.
-    *
-    * Cell assignment runs in code space too (argmax rounded
-    * code·centroid, cell-asc tie-break): at scale the index holds ONLY
-    * codes + scales — fp32 vectors are gone after quantization — and
-    * within one vector the positive scale cannot change its argmax
-    * cell. Same bounded-broadcast NLJ + keyed cell equi-join shape as
-    * [[ivfTopK]]; recall loss vs fp32 is measured by the recall query
-    * (q97), exactly as q76 gates the LSH path.
-    */
   /** The (cell, id, code, scale, cnorm) frame a quantized-IVF ANN
     * deployment persists as its INDEX — int8 encode + code-space
     * argmax cell assignment, exactly [[quantizedIvfTopK]]'s corpus
@@ -389,6 +361,24 @@ object Similarity {
       .select(col("cell"), col("id"), col("code"), col("scale"), col("cnorm"))
   }
 
+  /** IVF ANN over int8-quantized codes — the consumer of
+    * [[int8Scale]]/[[quantizeInt8]] (q81's storage shrink becomes a
+    * search path). Both sides are quantized; candidate scoring is a
+    * pure INTEGER dot product over the codes (the SIMD-int8 kernel a
+    * 100 TB deployment runs against 4x-smaller shards), normalized by
+    * the per-side integer code norms — code-space cosine is scale-free
+    * because the positive per-vector scales cancel. The reconstructed
+    * fp dot product (`dot_rec` = ip * a_scale/127 * b_scale/127) is
+    * also emitted to exercise the stored-scale rescale path.
+    *
+    * Cell assignment runs in code space too (argmax rounded
+    * code·centroid, cell-asc tie-break): at scale the index holds ONLY
+    * codes + scales — fp32 vectors are gone after quantization — and
+    * within one vector the positive scale cannot change its argmax
+    * cell. Same bounded-broadcast NLJ + keyed cell equi-join shape as
+    * [[ivfTopK]]; recall loss vs fp32 is measured by the recall query
+    * (q97), exactly as q76 gates the LSH path.
+    */
   def quantizedIvfTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
@@ -464,18 +454,6 @@ object Similarity {
       .agg(round(avg(col("v")), 6).as("c_val"), count(lit(1)).as("n_members"))
   }
 
-  /** IVF-flat ANN: every corpus vector is assigned to its best coarse
-    * centroid (argmax dot product, 16 deterministic md5-derived cells);
-    * a query probes its `nProbe` best cells and re-ranks candidates by
-    * exact cosine. The probe is an equi-join on the cell id — shuffle
-    * keyed by cell, candidate set ≈ nProbe/nCells of the corpus — the
-    * classic inverted-file trade of recall for a bounded scan, and the
-    * alternative scale path to [[lshTopK]] (IVF probes the *nearest*
-    * regions; LSH probes the *same-signature* region only).
-    *
-    * Ranks order by round(dot/sim, 6) with id tie-breaks so results are
-    * reproducible across engines (same discipline as [[bruteForceTopK]]).
-    */
   /** Literal coarse-centroid sequence (cell asc) — the driver-side
     * source of the static IVF cells, feeding the scan-stage assignment
     * below (round 18: the former bounded-broadcast centroid frame is
@@ -571,6 +549,18 @@ object Similarity {
         dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
   }
 
+  /** IVF-flat ANN: every corpus vector is assigned to its best coarse
+    * centroid (argmax dot product, 16 deterministic md5-derived cells);
+    * a query probes its `nProbe` best cells and re-ranks candidates by
+    * exact cosine. The probe is an equi-join on the cell id — shuffle
+    * keyed by cell, candidate set ≈ nProbe/nCells of the corpus — the
+    * classic inverted-file trade of recall for a bounded scan, and the
+    * alternative scale path to [[lshTopK]] (IVF probes the *nearest*
+    * regions; LSH probes the *same-signature* region only).
+    *
+    * Ranks order by round(dot/sim, 6) with id tie-breaks so results are
+    * reproducible across engines (same discipline as [[bruteForceTopK]]).
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
@@ -619,6 +609,63 @@ object Similarity {
         col("n_label"), round(col("sim"), 6).as("sim"))
   }
 
+  /** `corpus` as (id, vec, cell): every non-empty vector in its best
+    * static cell — the assignment the semantic pair operators and their
+    * cell audits share.
+    */
+  private def staticCells(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int): DataFrame = {
+    val dim = probeDim(corpus, vecCol)
+    val cents = centroidSeq(nCells, dim)
+    assignCells(
+      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
+      "id", "vec", cents, 1)
+  }
+
+  /** The frame both sides of a semantic pair join read: (cell, id, vec,
+    * nrm) over [[staticCells]], over-cap cells dropped (`cellCap <= 0`
+    * keeps all), zero-norm vectors dropped, persisted once.
+    */
+  private def pairFrame(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, cellCap: Int): DataFrame = {
+    val assigned = staticCells(corpus, idCol, vecCol, nCells)
+    val capped =
+      if (cellCap > 0) {
+        // same discipline as Dedup.minhashCandidates: enforce the cap
+        // via a windowed count on the SAME key the pair join shuffles
+        // on (shares the exchange; WindowExec spills, so the degenerate
+        // cell streams through instead of OOMing a reducer)
+        val wC = Window.partitionBy(col("cell"))
+        assigned.withColumn("cs", count(lit(1)).over(wC))
+          .filter(col("cs") <= cellCap)
+          .drop("cs")
+      } else assigned
+    // both pair sides replay the scan->assign->cap pipeline; persist it
+    // once (level is the util.Persist deploy-time switch). Zero-norm
+    // vectors are dropped AFTER the cap count (cosine is undefined on
+    // them; 0/0 = NaN, and Spark sorts NaN above every number, so a
+    // NaN pair would both pass `sim >= tau` and displace the real
+    // best witness in the rn=1 window).
+    graft.util.Persist(capped.withColumn("nrm", norm(col("vec")))
+      .filter(col("nrm") > 0))
+  }
+
+  /** Every within-cell pair (a_id < b_id) of [[pairFrame]] with its
+    * cosine `sim` — the pair work semantic dedup and its τ curve share.
+    */
+  private def cellPairs(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, cellCap: Int): DataFrame = {
+    val c = pairFrame(corpus, idCol, vecCol, nCells, cellCap)
+    val a = c.select(col("cell"), col("id").as("a_id"),
+      col("vec").as("a_vec"), col("nrm").as("a_nrm"))
+    val b = c.select(col("cell"), col("id").as("b_id"),
+      col("vec").as("b_vec"), col("nrm").as("b_nrm"))
+    a.join(b, Seq("cell"))
+      .filter(col("a_id") < col("b_id"))
+      .withColumn("sim",
+        dot(col("a_vec"), col("b_vec")) / (col("a_nrm") * col("b_nrm")))
+  }
+
   /** Semantic (embedding-space) dedup: assign every vector to its best
     * coarse IVF cell, then mark as dropped any id whose cell contains a
     * LOWER id with cosine >= `tau` — the pairwise search is confined to
@@ -646,40 +693,9 @@ object Similarity {
     */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
       tau: Double, nCells: Int = 16, cellCap: Int = 10000): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
-      "id", "vec", cents, 1)
-    val capped =
-      if (cellCap > 0) {
-        // same discipline as Dedup.minhashCandidates: enforce the cap
-        // via a windowed count on the SAME key the pair join shuffles
-        // on (shares the exchange; WindowExec spills, so the degenerate
-        // cell streams through instead of OOMing a reducer)
-        val wC = Window.partitionBy(col("cell"))
-        assigned.withColumn("cs", count(lit(1)).over(wC))
-          .filter(col("cs") <= cellCap)
-          .drop("cs")
-      } else assigned
-    // both pair sides replay the scan->assign->cap pipeline; persist it
-    // once (level is the util.Persist deploy-time switch). Zero-norm
-    // vectors are dropped AFTER the cap count (cosine is undefined on
-    // them; 0/0 = NaN, and Spark sorts NaN above every number, so a
-    // NaN pair would both pass `sim >= tau` and displace the real
-    // best witness in the rn=1 window).
-    val c = graft.util.Persist(capped.withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0))
-    val a = c.select(col("cell"), col("id").as("a_id"),
-      col("vec").as("a_vec"), col("nrm").as("a_nrm"))
-    val b = c.select(col("cell"), col("id").as("b_id"),
-      col("vec").as("b_vec"), col("nrm").as("b_nrm"))
     val w = Window.partitionBy(col("dropped_id"))
       .orderBy(round(col("sim"), 6).desc, col("kept_id").asc)
-    a.join(b, Seq("cell"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("sim",
-        dot(col("a_vec"), col("b_vec")) / (col("a_nrm") * col("b_nrm")))
+    cellPairs(corpus, idCol, vecCol, nCells, cellCap)
       // threshold on the ROUNDED sim — the same 6-decimal resolution
       // the window orders by, the output emits, and semanticMaxSim
       // aggregates, so "dropped at tau" ⟺ "max_sim >= tau" holds
@@ -704,28 +720,7 @@ object Similarity {
     */
   def semanticMaxSim(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, cellCap: Int = 10000): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
-      "id", "vec", cents, 1)
-    val capped =
-      if (cellCap > 0) {
-        val wC = Window.partitionBy(col("cell"))
-        assigned.withColumn("cs", count(lit(1)).over(wC))
-          .filter(col("cs") <= cellCap)
-          .drop("cs")
-      } else assigned
-    val c = graft.util.Persist(capped.withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0))
-    val a = c.select(col("cell"), col("id").as("a_id"),
-      col("vec").as("a_vec"), col("nrm").as("a_nrm"))
-    val b = c.select(col("cell"), col("id").as("b_id"),
-      col("vec").as("b_vec"), col("nrm").as("b_nrm"))
-    a.join(b, Seq("cell"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("sim",
-        dot(col("a_vec"), col("b_vec")) / (col("a_nrm") * col("b_nrm")))
+    cellPairs(corpus, idCol, vecCol, nCells, cellCap)
       .groupBy(col("b_id").as("dropped_id"))
       .agg(max(round(col("sim"), 6)).as("max_sim"))
   }
@@ -740,15 +735,11 @@ object Similarity {
     * cannot diverge.
     */
   def cellIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    assignCells(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec")), "id", "vec", cents, 1)
+      nCells: Int = 16): DataFrame =
+    staticCells(corpus, idCol, vecCol, nCells)
       .withColumn("nrm", norm(col("vec")))
       .filter(col("nrm") > 0)
       .select(col("cell"), col("id"), col("vec"), col("nrm"))
-  }
 
   /** Cross-side semantic candidates for the incremental/streaming
     * loop: a batch [[cellIndex]] equi-joined against the persisted
@@ -796,16 +787,11 @@ object Similarity {
     * the cap would drop, with sizes (one keyed shuffle, no pair work).
     */
   def hotCells(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16, cellCap: Int = 10000): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
-      "id", "vec", cents, 1)
+      nCells: Int = 16, cellCap: Int = 10000): DataFrame =
+    staticCells(corpus, idCol, vecCol, nCells)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("cell_size"))
       .filter(col("cell_size") > cellCap)
-  }
 
   /** The [[semanticContamination]] pre-flight gate (ADVICE r13), per
     * IVF cell: total population (the cap's own base — post-assignment,
@@ -818,17 +804,12 @@ object Similarity {
     * as [[hotCells]]; one keyed aggregate, no pair work.
     */
   def cellSafetyStats(corpus: DataFrame, idCol: String, vecCol: String,
-      heldSide: Column => Column, nCells: Int = 16): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
-      "id", "vec", cents, 1)
+      heldSide: Column => Column, nCells: Int = 16): DataFrame =
+    staticCells(corpus, idCol, vecCol, nCells)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("cell_size"),
         sum(when(heldSide(col("id")), 1L).otherwise(0L)).as("n_held"),
         sum(when(!heldSide(col("id")), 1L).otherwise(0L)).as("n_train"))
-  }
 
   // ================= Product quantization (IVF-PQ) =================
 
@@ -837,6 +818,38 @@ object Similarity {
     * constants, like [[centroidVal]]).
     */
   def pqVal(sub: Int, c: Int, i: Int): Double = hashVal(s"pqcent-$sub-$c-$i")
+
+  /** The static sub-codebooks: element `sub` is subspace `sub`'s
+    * centroids in id order, each `subDim` [[pqVal]] components. The
+    * ids equal the positions, so an argmin position IS the code.
+    */
+  private def staticCodebook(m: Int, subDim: Int,
+      nCents: Int): Seq[Seq[Seq[Double]]] =
+    (0 until m).map(sub => (0 until nCents).map(c =>
+      (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
+
+  /** Subvector of `v` for subspace `sub` under a dimension layout.
+    * `None` is the contiguous layout: one `slice` codegen call, null
+    * when `v` is short. `Some(perm)` gathers the [[subDims]] in
+    * position order with `element_at`, which throws (ANSI) when `v` is
+    * short.
+    * The identity perm reads the slice's values, so the two layouts are
+    * value-interchangeable on full-length vectors; a caller passing
+    * `0 until dim` still gets the gather, its plan and its error.
+    */
+  private def subVec(v: Column, perm: Option[Seq[Int]], sub: Int,
+      subDim: Int): Column =
+    if (perm.isEmpty) slice(v, sub * subDim + 1, subDim)
+    else array(subDims(perm, sub, subDim).map(d => element_at(v, d + 1)): _*)
+
+  /** The dimensions subspace `sub` reads: the contiguous stretch
+    * `sub*subDim` until `(sub+1)*subDim`, or that stretch of `perm`.
+    */
+  private def subDims(perm: Option[Seq[Int]], sub: Int,
+      subDim: Int): Seq[Int] = {
+    val (from, until) = (sub * subDim, (sub + 1) * subDim)
+    perm.fold[Seq[Int]](from until until)(_.slice(from, until))
+  }
 
   /** PQ encode (Jégou et al., "Product Quantization for Nearest
     * Neighbor Search", TPAMI 2011): split an `m*subDim`-dim vector into
@@ -856,15 +869,58 @@ object Similarity {
     * constant-folds them at plan time — per-row work is m*nCents
     * subDim-length dots, the same order as IVF cell assignment.
     */
-  def pqCodes(vec: Column, m: Int = 8, subDim: Int = 8, nCents: Int = 16): Column = {
-    val v = vec.cast("array<double>")
+  def pqCodes(vec: Column, m: Int = 8, subDim: Int = 8, nCents: Int = 16): Column =
     // fused argmin kernel (round 19): the static codebook's cell ids
     // equal their positions, so PqArgmin's position IS the code
+    pqCodesWith((0 until m).zip(staticCodebook(m, subDim, nCents)).toMap,
+      m, subDim, None)(vec.cast("array<double>"))
+
+  /** The PQ argmin encode under an explicit codebook and layout: per
+    * subspace, the POSITION of the nearest centroid in
+    * `codebook(sub)`'s order (rounded |c|²−2·x·c key, low-position
+    * ties) over [[subVec]] — shared by every encode path, so the q229
+    * rank path and the q232 index builder cannot desynchronize.
+    */
+  private def pqCodesWith(codebook: Map[Int, Seq[Seq[Double]]],
+      m: Int, subDim: Int, perm: Option[Seq[Int]])(vec: Column): Column =
     array((0 until m).map { sub =>
-      val sv = slice(v, sub * subDim + 1, subDim)
-      pqArgminOf(sv, (0 until nCents).map(c =>
-        (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
+      pqArgminOf(subVec(vec, perm, sub, subDim), codebook(sub))
     }: _*)
+
+  /** The query side of every ADC path: the assigned (q_id, q_vec,
+    * cell, …) frame cut to usable vectors, each with its m × nCents
+    * inner-product LUT over `codebook` under the layout `perm`.
+    */
+  private def withLut(assigned: DataFrame,
+      codebook: Map[Int, Seq[Seq[Double]]], m: Int, subDim: Int,
+      perm: Option[Seq[Int]]): DataFrame =
+    assigned.withColumn("q_norm", norm(col("q_vec")))
+      .filter(col("q_norm") > 0)
+      .withColumn("lut", pqLutOf(col("q_vec"), codebook, m, subDim, perm))
+
+  /** A candidate's ADC score: the `lut` entry its `n_code` selects in
+    * each subspace, summed as the fixed left-to-right fold the oracle
+    * replays.
+    */
+  private def adcSum(m: Int): Column =
+    (0 until m).map { sub =>
+      element_at(element_at(col("lut"), sub + 1),
+        element_at(col("n_code"), sub + 1) + 1)
+    }.reduce(_ + _)
+
+  /** Top-k of the cell-joined (query LUT, corpus code) candidates by
+    * `adc` (rounded-at-6 desc, n_id asc), self-pairs out.
+    */
+  private def adcTopK(q: DataFrame, c: DataFrame, k: Int,
+      adc: Column): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
+    q.join(c, Seq("cell"))
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("adc", adc)
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("n_id"), round(col("adc"), 6).as("adc"))
   }
 
   /** IVF-PQ ANN with asymmetric-distance (ADC) scoring — the
@@ -892,65 +948,51 @@ object Similarity {
       m: Int = 8, subDim: Int = 8, nCents: Int = 16,
       nCells: Int = 16, nProbe: Int = 4): DataFrame =
     pqAdcTopKWith(queries, corpus, idCol, vecCol, k,
-      (0 until m).map(sub =>
-        sub -> (0 until nCents).map(c =>
-          (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double])).toMap,
+      (0 until m).zip(staticCodebook(m, subDim, nCents)).toMap,
       m, subDim, nCells, nProbe)
 
-  /** [[pqAdcTopK]] generalized over the codebook — `codebook(sub)` is
-    * the ORDERED centroid list for subspace `sub` (the static
-    * deterministic table for the default path; q130's refined training
-    * artifact for the trained path, q136). The encode emits the
-    * POSITION in that order (for a possibly-sparse trained codebook the
-    * position, not the original cell id, indexes the LUT); encode and
-    * LUT iterate the same order so they cannot desynchronize.
+  /** [[pqAdcTopK]] generalized over the codebook and the dimension
+    * layout. `codebook(sub)` is the ORDERED centroid list for subspace
+    * `sub` (the static deterministic table for the default path; q130's
+    * refined training artifact for the trained path, q136). The encode
+    * emits the POSITION in that order (for a possibly-sparse trained
+    * codebook the position, not the original cell id, indexes the LUT);
+    * encode and LUT iterate the same order so they cannot
+    * desynchronize.
+    *
+    * `perm` is the layout ([[subVec]]). `Some(p)` is the OPQ deployment
+    * (q197): the corpus encode and the query-side LUT both read
+    * subspace `sub` through `p` — [[pqTrainIteration]]'s gather — so
+    * the trained-layout codebook scores exactly the subvectors it was
+    * trained on. The coarse IVF stage is layout-INDEPENDENT (cells
+    * assign on the full vector), so candidate sets are identical across
+    * layouts and a recall delta is pure quantization effect, never
+    * routing luck. The static/trained contiguous paths (q127–q136) pass
+    * `None`: `slice` is one codegen call where the gather is subDim
+    * `element_at`s, and they should not pay that on every row for a
+    * layout they never vary.
     */
   def pqAdcTopKWith(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       codebook: Map[Int, Seq[Seq[Double]]],
       m: Int = 8, subDim: Int = 8,
-      nCells: Int = 16, nProbe: Int = 4): DataFrame = {
+      nCells: Int = 16, nProbe: Int = 4,
+      perm: Option[Seq[Int]] = None): DataFrame = {
     val dim = probeDim(corpus, vecCol)
     val cents = centroidSeq(nCells, dim)
-    def codesFor(vec: Column): Column = pqCodesWith(codebook, m, subDim)(vec)
     val c = assignCells(corpus.select(col(idCol).as("n_id"),
         col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec", cents, 1)
       .withColumn("n_norm", norm(col("n_vec")))
       .filter(col("n_norm") > 0)
-      .select(col("cell"), col("n_id"), codesFor(col("n_vec")).as("n_code"))
-    val q = assignCells(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec", cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), contiguousDims(m, subDim), ansiGather = false))
+      .select(col("cell"), col("n_id"),
+        pqCodesWith(codebook, m, subDim, perm)(col("n_vec")).as("n_code"))
+    val q = withLut(assignCells(queries.select(col(idCol).as("q_id"),
+        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec", cents, nProbe),
+        codebook, m, subDim, perm)
       .select(col("cell"), col("q_id"), col("lut"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", (0 until m).map { sub =>
-        element_at(element_at(col("lut"), sub + 1),
-          element_at(col("n_code"), sub + 1) + 1)
-      }.reduce(_ + _))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("adc"), 6).as("adc"))
+    adcTopK(q, c, k, adcSum(m))
   }
 
-  /** [[pqAdcTopKWith]] under an explicit dimension layout (the OPQ
-    * deployment twin, q197): the corpus encode and the query-side LUT
-    * both read subspace `sub` through `perm` — [[pqTrainIterationPerm]]'s
-    * gather — so the trained-layout codebook scores exactly the
-    * subvectors it was trained on. The coarse IVF stage is layout-
-    * INDEPENDENT (cells assign on the full vector), so candidate sets
-    * are identical across layouts and a recall delta is pure
-    * quantization effect, never routing luck. Kept separate from the
-    * slice-based [[pqAdcTopKWith]] on purpose: `slice` is one codegen
-    * call where the permuted gather is subDim `element_at`s, and the
-    * static/trained contiguous paths (q127–q136) should not pay that
-    * on every row for a layout they never vary.
-    */
   /** The coarse-cell assignment under an EXPLICIT centroid table
     * (trained cells rather than the [[centroidVal]] statics): `keep`
     * best cells by rounded dot with low-cell tie-break, the unrounded
@@ -977,18 +1019,15 @@ object Similarity {
   def ivfCandidatePairsOn(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, coarse: Seq[(Int, Seq[Double])],
       nProbe: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse
     val c = assignCellsOn(corpus.select(col(idCol).as("n_id"),
         col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec",
-        cents, 1)
+        coarse, 1)
       .withColumn("n_norm", norm(col("n_vec")))
       .filter(col("n_norm") > 0)
       .select(col("cell"), col("n_id"))
     val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, nProbe)
+        coarse, nProbe)
       .withColumn("q_norm", norm(col("q_vec")))
       .filter(col("q_norm") > 0)
       .select(col("cell"), col("q_id"))
@@ -996,90 +1035,35 @@ object Similarity {
       .select(col("q_id"), col("n_id"))
   }
 
-  /** IVF-PQ over an EXPLICIT (trained) coarse quantizer — the layout
-    * a production vector index actually deploys (Jégou et al. TPAMI
-    * 2011 §IV, FAISS IVFPQ): with `residual = true` each corpus
-    * vector is stored as (cell, PQ code of vec − centroid(cell)) and
-    * a candidate scores as q·centroid(cell) + q·reconstruct(residual
-    * code) — the coarse term is exact, the codebook only has to span
-    * the small within-cell displacement, which is why residual
-    * encoding beats raw-vector encoding once the coarse cells are
-    * data-adapted (q229 measures exactly this against the flat leg).
-    * With `residual = false` the same routing scores raw-vector codes
-    * (the flat-PQ comparison leg): candidate sets are IDENTICAL
-    * across the two variants by construction, so a recall delta is
-    * pure quantization geometry, never routing luck (the
-    * [[pqAdcTopKWithPerm]] argument, one rung up).
-    *
-    * Cost shape matches [[pqAdcTopKWith]]: the corpus side is
-    * scan-stage encode (nCells + m·nCents small dots per row), the
-    * join is a cell-keyed equi-join, and the per-candidate score is m
-    * LUT lookups — no raw corpus vector is touched after encode. The
-    * ADC sum is the fixed left fold with the coarse term added LAST
-    * (`coarse + (t0 + … + t7)`), mirrored exactly in the oracle.
-    */
-  /** The PQ argmin encode under an explicit codebook: per subspace,
-    * the POSITION of the nearest centroid in `codebook(sub)`'s order
-    * (rounded |c|²−2·x·c key, low-position ties) — shared by the
-    * q229 rank path and the q232 index builder so encode cannot
-    * desynchronize between them.
-    */
-  private def pqCodesWith(codebook: Map[Int, Seq[Seq[Double]]],
-      m: Int, subDim: Int)(vec: Column): Column =
-    array((0 until m).map { sub =>
-      pqArgminOf(slice(vec, sub * subDim + 1, subDim), codebook(sub))
-    }: _*)
-
   /** The IVF-PQ residual index FRAME — what the deployed index
     * actually stores per vector: (cell, id, m-byte residual code).
     * Pure scan-stage per row (nCells + m·nCents small dots), so a
     * maintenance path can encode any batch with FROZEN artifacts and
     * append — the q232 streaming loop's per-batch core, and exactly
     * the corpus side [[ivfPqAdcTopKOn]] scores against.
+    *
+    * With `perm = Some(p)` it is the frozen-artifact bundle with the
+    * OPQ permutation carried through the maintenance path (VERDICT r17
+    * #3): q237/q240 prove the variance-balanced layout wins at the
+    * residual rung, so the deployed index artifact must be ENCODED
+    * under it, and every append batch must gather subspaces through the
+    * SAME frozen perm or the codes desynchronize from the codebook.
+    * Routing and cost shape do not depend on the layout; with the
+    * identity perm the frame is value-identical to `perm = None`
+    * (Wave29Spec pins that).
     */
   def ivfPqResidualIndex(corpus: DataFrame, idCol: String, vecCol: String,
       coarse: Seq[(Int, Seq[Double])],
       codebook: Map[Int, Seq[Seq[Double]]],
-      m: Int = 8, subDim: Int = 8): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse
+      m: Int = 8, subDim: Int = 8,
+      perm: Option[Seq[Int]] = None): DataFrame =
     assignCellsOn(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec")), "id", "vec", cents, 1)
+        col(vecCol).cast("array<double>").as("vec")), "id", "vec", coarse, 1)
       .withColumn("nrm", norm(col("vec")))
       .filter(col("nrm") > 0)
       .withColumn("resid", vecSub(col("vec"), col("cvec")))
       .select(col("cell"), col("id"),
-        pqCodesWith(codebook, m, subDim)(col("resid")).as("code"))
-  }
-
-  /** [[ivfPqResidualIndex]] under an explicit dimension LAYOUT — the
-    * frozen-artifact bundle with the OPQ permutation carried through
-    * the maintenance path (VERDICT r17 #3): q237/q240 prove the
-    * variance-balanced layout wins at the residual rung, so the
-    * deployed index artifact must be ENCODED under it, and every
-    * append batch must gather subspaces through the SAME frozen perm
-    * or the codes desynchronize from the codebook. Identical routing
-    * and cost shape to the identity builder (nCells + m·nCents small
-    * dots per row, scan-stage); only the subspace gather differs —
-    * with the identity perm this is value-identical to
-    * [[ivfPqResidualIndex]] (Wave29Spec pins that).
-    */
-  def ivfPqResidualIndexPerm(corpus: DataFrame, idCol: String,
-      vecCol: String, coarse: Seq[(Int, Seq[Double])],
-      codebook: Map[Int, Seq[Seq[Double]]], perm: Seq[Int],
-      m: Int = 8, subDim: Int = 8): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse
-    assignCellsOn(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec")), "id", "vec", cents, 1)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
-      .withColumn("resid", vecSub(col("vec"), col("cvec")))
-      .select(col("cell"), col("id"),
-        pqCodesWithPerm(codebook, perm, m, subDim)(col("resid")).as("code"))
-  }
+        pqCodesWith(codebook, m, subDim, perm)(col("resid")).as("code"))
 
   /** ADC top-k against a PRE-BUILT residual index frame (cell, id,
     * code) — the query path a deployment actually runs: the index
@@ -1090,82 +1074,26 @@ object Similarity {
     * m LUT lookups. q234 uses this to price index STALENESS: the
     * same query set against the base-only rows vs the maintained
     * base ∪ delta rows.
+    *
+    * `perm` must be the layout the index rows were encoded under (the
+    * q242 maintained OPQ artifact passes its frozen perm): the query
+    * LUT gathers its subvectors through the SAME perm or every lookup
+    * reads the wrong subspace. Wave29Spec pins serving-the-artifact ≡
+    * the direct corpus encode path row-for-row.
     */
   def ivfPqAdcTopKIndex(queries: DataFrame, index: DataFrame,
       idCol: String, vecCol: String, k: Int,
       coarse: Seq[(Int, Seq[Double])],
       codebook: Map[Int, Seq[Seq[Double]]],
-      m: Int = 8, subDim: Int = 8, nProbe: Int = 4): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val cents = coarse
+      m: Int = 8, subDim: Int = 8, nProbe: Int = 4,
+      perm: Option[Seq[Int]] = None): DataFrame = {
     val c = index.select(col("cell"), col("id").as("n_id"),
       col("code").as("n_code"))
-    val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
+    val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), contiguousDims(m, subDim), ansiGather = false))
+        coarse, nProbe), codebook, m, subDim, perm)
       .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    val lutSum = (0 until m).map { sub =>
-      element_at(element_at(col("lut"), sub + 1),
-        element_at(col("n_code"), sub + 1) + 1)
-    }.reduce(_ + _)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", col("coarse") + lutSum)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("adc"), 6).as("adc"))
-  }
-
-  /** [[ivfPqAdcTopKIndex]] under an explicit dimension LAYOUT — the
-    * serving half of the frozen-OPQ bundle: the index rows carry
-    * codes encoded through the frozen perm
-    * ([[ivfPqResidualIndexPerm]] / the q242 maintained artifact), so
-    * the query-side LUT must GATHER its subvectors through the SAME
-    * perm or every lookup reads the wrong subspace. Identical cost
-    * shape to the identity serving path (cell-keyed equi-join, m LUT
-    * lookups per candidate, raw corpus vectors never touched);
-    * Wave29Spec pins serving-the-artifact ≡ the direct corpus encode
-    * path row-for-row.
-    */
-  def ivfPqAdcTopKIndexPerm(queries: DataFrame, index: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      coarse: Seq[(Int, Seq[Double])],
-      codebook: Map[Int, Seq[Seq[Double]]], perm: Seq[Int],
-      m: Int = 8, subDim: Int = 8, nProbe: Int = 4): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val cents = coarse
-    val c = index.select(col("cell"), col("id").as("n_id"),
-      col("code").as("n_code"))
-    val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), permDims(perm, m, subDim), ansiGather = true))
-      .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    val lutSum = (0 until m).map { sub =>
-      element_at(element_at(col("lut"), sub + 1),
-        element_at(col("n_code"), sub + 1) + 1)
-    }.reduce(_ + _)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", col("coarse") + lutSum)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("adc"), 6).as("adc"))
+    adcTopK(q, c, k, col("coarse") + adcSum(m))
   }
 
   /** The probe-budget sweep over a pre-built residual index: ADC
@@ -1181,27 +1109,16 @@ object Similarity {
       codebook: Map[Int, Seq[Seq[Double]]],
       probes: Seq[Int],
       m: Int = 8, subDim: Int = 8): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val cents = coarse
     val c = index.select(col("cell"), col("id").as("n_id"),
       col("code").as("n_code"))
-    val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
+    val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, probes.max)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), contiguousDims(m, subDim), ansiGather = false))
+        coarse, probes.max), codebook, m, subDim, None)
       .select(col("cell"), col("q_id"), col("lut"),
         col("cdot").as("coarse"), col("rn").as("crank"))
-    val lutSum = (0 until m).map { sub =>
-      element_at(element_at(col("lut"), sub + 1),
-        element_at(col("n_code"), sub + 1) + 1)
-    }.reduce(_ + _)
     val scored = graft.util.Persist(q.join(c, Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", col("coarse") + lutSum)
+      .withColumn("adc", col("coarse") + adcSum(m))
       .select(col("q_id"), col("n_id"), col("crank"),
         round(col("adc"), 6).as("adc")))
     val w = Window.partitionBy(col("q_id"))
@@ -1224,11 +1141,9 @@ object Similarity {
       idCol: String, vecCol: String,
       coarse: Seq[(Int, Seq[Double])], probes: Seq[Int]): DataFrame = {
     val spark = index.sparkSession
-    import spark.implicits._
-    val cents = coarse
     val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, probes.max)
+        coarse, probes.max)
       .withColumn("q_norm", norm(col("q_vec")))
       .filter(col("q_norm") > 0)
       .select(col("cell"), col("q_id"), col("rn").as("crank"))
@@ -1244,67 +1159,6 @@ object Similarity {
       .agg(coalesce(sum(col("cn")), lit(0L)).as("n_candidates"))
   }
 
-  /** [[pqCodesWith]] under an explicit dimension layout: subspace
-    * `sub` gathers dims `perm(sub*subDim..)` ([[permSub]]) instead of
-    * the contiguous slice — same rounded-argmin/low-position ties, so
-    * the identity layout is value-identical to [[pqCodesWith]].
-    */
-  private def pqCodesWithPerm(codebook: Map[Int, Seq[Seq[Double]]],
-      perm: Seq[Int], m: Int, subDim: Int)(vec: Column): Column =
-    array((0 until m).map { sub =>
-      pqArgminOf(permSub(vec, perm, sub, subDim), codebook(sub))
-    }: _*)
-
-  /** [[ivfPqAdcTopKOn]]'s RESIDUAL leg under an explicit dimension
-    * layout — the OPQ-lite permutation ([[balancedLayout]], q184)
-    * threaded through the IVF-PQ residual encode and its ADC query
-    * path (VERDICT r16 #3). Routing, residual computation, and the
-    * left-fold ADC (`coarse + (t0 + … + t7)`) are [[ivfPqAdcTopKOn]]
-    * verbatim; only the subspace GATHER differs, so a recall delta
-    * between two layouts is pure quantization geometry (the q197
-    * argument at the residual rung). Candidates are identical across
-    * layouts by construction — same trained coarse cells.
-    */
-  def ivfPqAdcTopKOnPerm(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      coarse: Seq[(Int, Seq[Double])],
-      codebook: Map[Int, Seq[Seq[Double]]],
-      perm: Seq[Int],
-      m: Int = 8, subDim: Int = 8, nProbe: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse
-    val c = assignCellsOn(corpus.select(col(idCol).as("n_id"),
-        col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec",
-        cents, 1)
-      .withColumn("n_norm", norm(col("n_vec")))
-      .filter(col("n_norm") > 0)
-      .withColumn("enc", vecSub(col("n_vec"), col("cvec")))
-      .select(col("cell"), col("n_id"),
-        pqCodesWithPerm(codebook, perm, m, subDim)(col("enc")).as("n_code"))
-    val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), permDims(perm, m, subDim), ansiGather = true))
-      .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    val lutSum = (0 until m).map { sub =>
-      element_at(element_at(col("lut"), sub + 1),
-        element_at(col("n_code"), sub + 1) + 1)
-    }.reduce(_ + _)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", col("coarse") + lutSum)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("adc"), 6).as("adc"))
-  }
-
   /** ADC+R — the standard two-stage refinement (VERDICT r17 #4,
     * Jégou et al.'s "IVFADC+R" shape): an ADC SHORTLIST of kShort > k
     * candidates from the compressed codes, then an EXACT inner
@@ -1316,8 +1170,8 @@ object Similarity {
     * fan-out, and the exact dots number |Q| × kShort. IVF
     * (`ivfTopK`) and LSH re-rank exactly already; this closes the
     * same rung for the IVF-PQ path. Layout-aware: the shortlist runs
-    * under the frozen OPQ perm ([[ivfPqAdcTopKOnPerm]]); the exact
-    * rerank reads raw vectors, so no gather is involved.
+    * the residual [[ivfPqAdcTopKOn]] under the frozen OPQ perm; the
+    * exact rerank reads raw vectors, so no gather is involved.
     */
   def ivfPqAdcRerankTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, kShort: Int,
@@ -1325,8 +1179,9 @@ object Similarity {
       codebook: Map[Int, Seq[Seq[Double]]], perm: Seq[Int],
       m: Int = 8, subDim: Int = 8, nProbe: Int = 4): DataFrame = {
     require(kShort >= k, s"shortlist $kShort must cover the final k=$k")
-    val shortlist = ivfPqAdcTopKOnPerm(queries, corpus, idCol, vecCol,
-        kShort, coarse, codebook, perm, m, subDim, nProbe)
+    val shortlist = ivfPqAdcTopKOn(queries, corpus, idCol, vecCol,
+        kShort, coarse, codebook, residual = true, m, subDim, nProbe,
+        perm = Some(perm))
       .select(col("q_id"), col("n_id"))
     exactRerank(shortlist, queries, corpus, idCol, vecCol, k)
   }
@@ -1360,81 +1215,56 @@ object Similarity {
         round(col("ip"), 6).as("score"))
   }
 
+  /** IVF-PQ over an EXPLICIT (trained) coarse quantizer — the layout
+    * a production vector index actually deploys (Jégou et al. TPAMI
+    * 2011 §IV, FAISS IVFPQ): with `residual = true` each corpus
+    * vector is stored as (cell, PQ code of vec − centroid(cell)) and
+    * a candidate scores as q·centroid(cell) + q·reconstruct(residual
+    * code) — the coarse term is exact, the codebook only has to span
+    * the small within-cell displacement, which is why residual
+    * encoding beats raw-vector encoding once the coarse cells are
+    * data-adapted (q229 measures exactly this against the flat leg).
+    * With `residual = false` the same routing scores raw-vector codes
+    * (the flat-PQ comparison leg): candidate sets are IDENTICAL
+    * across the two variants by construction, so a recall delta is
+    * pure quantization geometry, never routing luck ([[pqAdcTopKWith]]'s
+    * layout argument, one rung up).
+    *
+    * `perm` threads the OPQ-lite permutation ([[balancedLayout]], q184)
+    * through the residual encode and its ADC query path (VERDICT r16
+    * #3, q237): routing, residual computation and the left-fold ADC
+    * do not depend on it, only the subspace GATHER does, so a recall
+    * delta between two layouts is pure quantization geometry too.
+    *
+    * Cost shape matches [[pqAdcTopKWith]]: the corpus side is
+    * scan-stage encode (nCells + m·nCents small dots per row), the
+    * join is a cell-keyed equi-join, and the per-candidate score is m
+    * LUT lookups — no raw corpus vector is touched after encode. The
+    * ADC sum is the fixed left fold with the coarse term added LAST
+    * (`coarse + (t0 + … + t7)`), mirrored exactly in the oracle.
+    */
   def ivfPqAdcTopKOn(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       coarse: Seq[(Int, Seq[Double])],
       codebook: Map[Int, Seq[Seq[Double]]],
       residual: Boolean,
-      m: Int = 8, subDim: Int = 8, nProbe: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse
-    def codesFor(vec: Column): Column = pqCodesWith(codebook, m, subDim)(vec)
+      m: Int = 8, subDim: Int = 8, nProbe: Int = 4,
+      perm: Option[Seq[Int]] = None): DataFrame = {
     val c = assignCellsOn(corpus.select(col(idCol).as("n_id"),
         col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec",
-        cents, 1)
+        coarse, 1)
       .withColumn("n_norm", norm(col("n_vec")))
       .filter(col("n_norm") > 0)
       .withColumn("enc", if (residual)
           vecSub(col("n_vec"), col("cvec"))
         else col("n_vec"))
-      .select(col("cell"), col("n_id"), codesFor(col("enc")).as("n_code"))
-    val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
+      .select(col("cell"), col("n_id"),
+        pqCodesWith(codebook, m, subDim, perm)(col("enc")).as("n_code"))
+    val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
-        cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), contiguousDims(m, subDim), ansiGather = false))
+        coarse, nProbe), codebook, m, subDim, perm)
       .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    val lutSum = (0 until m).map { sub =>
-      element_at(element_at(col("lut"), sub + 1),
-        element_at(col("n_code"), sub + 1) + 1)
-    }.reduce(_ + _)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc",
-        if (residual) col("coarse") + lutSum else lutSum)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("adc"), 6).as("adc"))
-  }
-
-  def pqAdcTopKWithPerm(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      codebook: Map[Int, Seq[Seq[Double]]], perm: Seq[Int],
-      m: Int = 8, subDim: Int = 8,
-      nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    def codesFor(vec: Column): Column =
-      pqCodesWithPerm(codebook, perm, m, subDim)(vec)
-    val c = assignCells(corpus.select(col(idCol).as("n_id"),
-        col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec", cents, 1)
-      .withColumn("n_norm", norm(col("n_vec")))
-      .filter(col("n_norm") > 0)
-      .select(col("cell"), col("n_id"), codesFor(col("n_vec")).as("n_code"))
-    val q = assignCells(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec", cents, nProbe)
-      .withColumn("q_norm", norm(col("q_vec")))
-      .filter(col("q_norm") > 0)
-      .withColumn("lut", pqLutOf(col("q_vec"),
-        (0 until m).map(codebook), permDims(perm, m, subDim), ansiGather = true))
-      .select(col("cell"), col("q_id"), col("lut"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("adc"), 6).desc, col("n_id").asc)
-    q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", (0 until m).map { sub =>
-        element_at(element_at(col("lut"), sub + 1),
-          element_at(col("n_code"), sub + 1) + 1)
-      }.reduce(_ + _))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("adc"), 6).as("adc"))
+    adcTopK(q, c, k, if (residual) col("coarse") + adcSum(m) else adcSum(m))
   }
 
   /** Exact brute-force INNER-PRODUCT top-k — the truth side for the
@@ -1463,6 +1293,24 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("n_id"), round(col("ip"), 6).as("ip"))
   }
 
+  /** (id, vec, nrm) over the usable vectors of `corpus` (non-null,
+    * non-empty, norm > 0) — the population every PQ training and
+    * distortion report reads.
+    */
+  private def usableVecs(corpus: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
+      .filter(col("vec").isNotNull && size(col("vec")) > 0)
+      .withColumn("nrm", norm(col("vec")))
+      .filter(col("nrm") > 0)
+
+  /** A collected (sub, c, centroid) training artifact as each
+    * subspace's centroids in c order — the cells PRESENT in the
+    * artifact only (empty cells trained nothing).
+    */
+  private def bySub(refined: Seq[(Int, Int, Seq[Double])]): Map[Int, Seq[Seq[Double]]] =
+    refined.groupBy(_._1).map { case (s, xs) => s -> xs.sortBy(_._2).map(_._3) }
+
   /** PQ reconstruction distortion: per subspace, the mean squared L2
     * error between each usable vector's subvector and its assigned
     * centroid — the quantization-quality report read before committing
@@ -1473,20 +1321,14 @@ object Similarity {
     */
   def pqDistortion(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, subDim: Int = 8, nCents: Int = 16): DataFrame = {
-    val v = col("vec")
-    val withD = corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
+    val statics = staticCodebook(m, subDim, nCents)
+    usableVecs(corpus, idCol, vecCol)
       .select(col("id"), posexplode(array((0 until m).map { sub =>
         // fused |sv|² + key-at-argmin kernel (round 19): one node per
         // subspace instead of the 2·nCents-fold keys/cands forest
-        pqMinErrOf(slice(v, sub * subDim + 1, subDim),
-          (0 until nCents).map(c =>
-            (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
+        pqMinErrOf(subVec(col("vec"), None, sub, subDim), statics(sub))
       }: _*)).as(Seq("sub", "sqerr")))
-    withD.groupBy(col("sub").cast("long").as("sub"))
+      .groupBy(col("sub").cast("long").as("sub"))
       .agg(count(lit(1)).as("n_vecs"), round(avg(col("sqerr")), 6).as("mse"))
   }
 
@@ -1534,19 +1376,21 @@ object Similarity {
     * shuffle is keyed by (sub, c, pos) — ≤ m*nCents*subDim groups with
     * map-side partial aggregation, so the update is corpus-size-
     * independent after the scan.
+    *
+    * `perm` is the dimension layout ([[subVec]]): with `Some(p)`
+    * subspace `sub` reads dims `p(sub*subDim..)` instead of a
+    * contiguous slice (the OPQ-lite trainer). The static init codebook
+    * is the same under every layout — it lives in code space, not dim
+    * space.
     */
   def pqTrainIteration(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int = 8, subDim: Int = 8, nCents: Int = 16): DataFrame = {
-    val v = col("vec")
-    corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
+      m: Int = 8, subDim: Int = 8, nCents: Int = 16,
+      perm: Option[Seq[Int]] = None): DataFrame = {
+    val statics = staticCodebook(m, subDim, nCents)
+    usableVecs(corpus, idCol, vecCol)
       .select(col("id"), posexplode(array((0 until m).map { sub =>
-        val sv = slice(v, sub * subDim + 1, subDim)
-        struct(pqArgminOf(sv, (0 until nCents).map(c =>
-            (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
-          .as("c"), sv.as("sv"))
+        val sv = subVec(col("vec"), perm, sub, subDim)
+        struct(pqArgminOf(sv, statics(sub)).as("c"), sv.as("sv"))
       }: _*)).as(Seq("sub", "sc")))
       .select(col("sub"), col("sc.c").as("c"),
         posexplode(col("sc.sv")).as(Seq("pos", "vv")))
@@ -1569,30 +1413,19 @@ object Similarity {
   def pqRefineGain(corpus: DataFrame, idCol: String, vecCol: String,
       refined: Seq[(Int, Int, Seq[Double])],
       m: Int = 8, subDim: Int = 8, nCents: Int = 16): DataFrame = {
-    val bySub: Map[Int, Seq[(Int, Seq[Double])]] =
-      refined.groupBy(_._1).map { case (s, xs) =>
-        s -> xs.map(x => (x._2, x._3)).sortBy(_._1)
-      }
-    val v = col("vec")
+    val trained = bySub(refined)
+    val statics = staticCodebook(m, subDim, nCents)
     // fused |sv|² + key-at-argmin kernel (round 19) — the argmin runs
-    // over positions in `cents` order, the same (rounded d, position)
+    // over positions in centroid order, the same (rounded d, position)
     // comparator the composed (d, i, c) struct min reduced to
-    def minKeyAndErr(sv: Column, cents: Seq[(Int, Seq[Double])]): Column =
-      pqMinErrOf(sv, cents.map(_._2))
-    val withD = corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
+    usableVecs(corpus, idCol, vecCol)
       .select(col("id"), posexplode(array((0 until m).map { sub =>
-        val sv = slice(v, sub * subDim + 1, subDim)
-        val statics = (0 until nCents).map(c =>
-          (c, (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
+        val sv = subVec(col("vec"), None, sub, subDim)
         struct(
-          minKeyAndErr(sv, statics).as("e0"),
-          minKeyAndErr(sv, bySub.getOrElse(sub, statics)).as("e1"))
+          pqMinErrOf(sv, statics(sub)).as("e0"),
+          pqMinErrOf(sv, trained.getOrElse(sub, statics(sub))).as("e1"))
       }: _*)).as(Seq("sub", "es")))
-    withD.groupBy(col("sub").cast("long").as("sub"))
+      .groupBy(col("sub").cast("long").as("sub"))
       .agg(count(lit(1)).as("n_vecs"),
         round(avg(col("es.e0")), 6).as("mse_static"),
         round(avg(col("es.e1")), 6).as("mse_refined"))
@@ -1641,49 +1474,9 @@ object Similarity {
     perm.toSeq
   }
 
-  /** Subvector of `v` for subspace `sub` under layout `perm` —
-    * element_at gathers in position order. The identity layout
-    * compiles to the same values as the `slice` the static-layout
-    * paths use (gather of consecutive indices), so the two forms are
-    * value-interchangeable.
-    */
-  private def permSub(v: Column, perm: Seq[Int], sub: Int,
-      subDim: Int): Column =
-    array(perm.slice(sub * subDim, (sub + 1) * subDim)
-      .map(d => element_at(v, d + 1)): _*)
-
-  /** [[pqTrainIteration]] under an explicit dimension layout: one
-    * Lloyd refinement of the per-subspace codebooks where subspace
-    * `sub` reads dims `perm(sub*subDim..)` instead of a contiguous
-    * slice. Same static init codebook (it lives in code space, not
-    * dim space), same rounded-argmin/low-c tie discipline, same
-    * long-form (sub, c, pos, c_val, n_members) output; the only
-    * shuffle is the ≤ m*nCents*subDim-group aggregate.
-    */
-  def pqTrainIterationPerm(corpus: DataFrame, idCol: String,
-      vecCol: String, perm: Seq[Int], m: Int = 8, subDim: Int = 8,
-      nCents: Int = 16): DataFrame = {
-    val v = col("vec")
-    corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
-      .select(col("id"), posexplode(array((0 until m).map { sub =>
-        val sv = permSub(v, perm, sub, subDim)
-        struct(pqArgminOf(sv, (0 until nCents).map(c =>
-            (0 until subDim).map(i => pqVal(sub, c, i)): Seq[Double]))
-          .as("c"), sv.as("sv"))
-      }: _*)).as(Seq("sub", "sc")))
-      .select(col("sub"), col("sc.c").as("c"),
-        posexplode(col("sc.sv")).as(Seq("pos", "vv")))
-      .groupBy(col("sub").cast("long").as("sub"), col("c").cast("long").as("c"),
-        col("pos").cast("long").as("pos"))
-      .agg(round(avg(col("vv")), 6).as("c_val"), count(lit(1)).as("n_members"))
-  }
-
   /** Per-subspace corpus MSE under a TRAINED codebook and an explicit
     * dimension layout — the measurement half of the OPQ-lite loop:
-    * train each layout with [[pqTrainIterationPerm]], inline the
+    * train each layout with [[pqTrainIteration]], inline the
     * collected (bounded) artifact here, compare layouts row-for-row.
     * Encode argmins over the cells PRESENT in the artifact with the
     * rounded-key/low-index tie discipline; the reported error is the
@@ -1694,21 +1487,11 @@ object Similarity {
   def pqPermMse(corpus: DataFrame, idCol: String, vecCol: String,
       perm: Seq[Int], refined: Seq[(Int, Int, Seq[Double])],
       m: Int = 8, subDim: Int = 8): DataFrame = {
-    val bySub: Map[Int, Seq[(Int, Seq[Double])]] =
-      refined.groupBy(_._1).map { case (s, xs) =>
-        s -> xs.map(x => (x._2, x._3)).sortBy(_._1)
-      }
-    val v = col("vec")
-    // fused kernel — see [[pqRefineGain]]'s minKeyAndErr note
-    def minErr(sv: Column, cents: Seq[(Int, Seq[Double])]): Column =
-      pqMinErrOf(sv, cents.map(_._2))
-    corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0)
+    val trained = bySub(refined)
+    // fused kernel — see [[pqRefineGain]]'s note
+    usableVecs(corpus, idCol, vecCol)
       .select(col("id"), posexplode(array((0 until m).map { sub =>
-        minErr(permSub(v, perm, sub, subDim), bySub(sub))
+        pqMinErrOf(subVec(col("vec"), Some(perm), sub, subDim), trained(sub))
       }: _*)).as(Seq("sub", "err")))
       .groupBy(col("sub").cast("long").as("sub"))
       .agg(count(lit(1)).as("n_vecs"), round(avg(col("err")), 6).as("mse"))
@@ -1739,20 +1522,7 @@ object Similarity {
   def semanticContamination(corpus: DataFrame, idCol: String,
       vecCol: String, heldSide: Column => Column, tau: Double,
       nCells: Int = 16, cellCap: Int = 10000): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
-    val cents = centroidSeq(nCells, dim)
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")),
-      "id", "vec", cents, 1)
-    val capped =
-      if (cellCap > 0) {
-        val wC = Window.partitionBy(col("cell"))
-        assigned.withColumn("cs", count(lit(1)).over(wC))
-          .filter(col("cs") <= cellCap)
-          .drop("cs")
-      } else assigned
-    val c = graft.util.Persist(capped.withColumn("nrm", norm(col("vec")))
-      .filter(col("nrm") > 0))
+    val c = pairFrame(corpus, idCol, vecCol, nCells, cellCap)
     val t = c.filter(!heldSide(col("id")))
       .select(col("cell"), col("id").as("vec_id"),
         col("vec").as("t_vec"), col("nrm").as("t_nrm"))

@@ -192,8 +192,8 @@ object AnnQueries extends QueryFamily {
   private[graft] def opqRefined(s: SparkSession, d: String, layout: String,
       perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
     opqRefinedCache.computeIfAbsent((d, layout), { _ =>
-      collectCodebook(Similarity.pqTrainIterationPerm(anisoEmb(s, d),
-        "vec_id", "vec", perm))
+      collectCodebook(Similarity.pqTrainIteration(anisoEmb(s, d),
+        "vec_id", "vec", perm = Some(perm)))
     })
 
   /** The RESIDUAL-rung OPQ training bundle (VERDICT r16 #3), memoized
@@ -235,9 +235,9 @@ object AnnQueries extends QueryFamily {
       layout: String, perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
     anisoResidCbCache.computeIfAbsent((d, layout), { _ =>
       val (coarse, _) = anisoResidualBase(s, d)
-      collectCodebook(Similarity.pqTrainIterationPerm(
+      collectCodebook(Similarity.pqTrainIteration(
           residualFrameOf(anisoEmb(s, d), coarse, vecCol = "vec"),
-          "vec_id", "resid", perm))
+          "vec_id", "resid", perm = Some(perm)))
     })
 
   /** The q238 slices, shared with q240: the usable-vector population,
@@ -288,7 +288,7 @@ object AnnQueries extends QueryFamily {
       val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
       val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
       def cbOf(p: Seq[Int]) = collectCodebook(Similarity
-        .pqTrainIterationPerm(rf, "vec_id", "resid", p))
+        .pqTrainIteration(rf, "vec_id", "resid", perm = Some(p)))
       val out = (coarse, perm, cbOf(0 until 64), cbOf(perm))
       rf.unpersist()
       out
@@ -326,7 +326,7 @@ object AnnQueries extends QueryFamily {
       val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
       val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
       val cb = collectCodebook(
-        Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", perm))
+        Similarity.pqTrainIteration(rf, "vec_id", "resid", perm = Some(perm)))
       rf.unpersist()
       (coarse, perm, cb)
     })
@@ -884,8 +884,8 @@ object AnnQueries extends QueryFamily {
       def side(name: String, perm: Seq[Int]) = {
         val cb = opqRefined(s, d, name, perm).groupBy(_._1)
           .map { case (sub, xs) => sub -> xs.sortBy(_._2).map(_._3) }
-        val approx = Similarity.pqAdcTopKWithPerm(q, aniso, "vec_id", "vec",
-            k = 3, cb, perm)
+        val approx = Similarity.pqAdcTopKWith(q, aniso, "vec_id", "vec",
+            k = 3, cb, perm = Some(perm))
           .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
         exact.join(approx,
             col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
@@ -1242,7 +1242,7 @@ object AnnQueries extends QueryFamily {
     //      index still encodes under the identity layout. This card
     //      threads the [[Similarity.balancedLayout]] permutation
     //      through the residual encode + ADC query path
-    //      (ivfPqAdcTopKOnPerm) and gates residual-OPQ against
+    //      (ivfPqAdcTopKOn with a perm) and gates residual-OPQ against
     //      residual-identity on the anisotropic rehearsal fixture —
     //      with the layout dealt from the RESIDUAL frame's variances
     //      (what the codebook actually spans), not the raw corpus's.
@@ -1267,8 +1267,8 @@ object AnnQueries extends QueryFamily {
       def leg(name: String, perm: Seq[Int]) = {
         val rows = anisoResidualCb(s, d, name, perm)
         val cb = codebookMap(rows)
-        val ap = Similarity.ivfPqAdcTopKOnPerm(q, aniso, "vec_id", "vec",
-            k = 3, coarse, cb, perm)
+        val ap = Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
+            k = 3, coarse, cb, residual = true, perm = Some(perm))
           .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
         val rec = exact.join(ap,
             col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
@@ -1445,9 +1445,9 @@ object AnnQueries extends QueryFamily {
       val cb = codebookMap(cbRows)
       val idxDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndexPerm(
+        Similarity.ivfPqResidualIndex(
             emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm)
+            "vec_id", "embedding", coarse, cb, perm = Some(perm))
           .write.mode("overwrite").parquet(p)
       }
       val baseIdx = s.read.parquet(idxDir)
@@ -1462,8 +1462,8 @@ object AnnQueries extends QueryFamily {
       val stream = Streaming.eventsStream(s, in, delta.schema)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(
-          Similarity.ivfPqResidualIndexPerm(batch, "vec_id",
-            "embedding", coarse, cb, perm), id, out, append = true)
+          Similarity.ivfPqResidualIndex(batch, "vec_id",
+            "embedding", coarse, cb, perm = Some(perm)), id, out, append = true)
       }
       s.read.parquet(out)
         .select(col("cell"), col("id"), col("code"))
@@ -1511,8 +1511,8 @@ object AnnQueries extends QueryFamily {
               .otherwise(round(col("n_found").cast("double") /
                 col("n_truth"), 6)).as("recall_at_3"))
       }
-      val adc = Similarity.ivfPqAdcTopKOnPerm(q, aniso, "vec_id", "vec",
-        k = 3, coarse, cb, identity)
+      val adc = Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
+        k = 3, coarse, cb, residual = true, perm = Some(identity))
       val rr = Similarity.ivfPqAdcRerankTopK(q, aniso, "vec_id", "vec",
         k = 3, kShort = 10, coarse, cb, identity)
       leg("adc", 3L, adc).unionByName(leg("adc_rerank", 10L, rr))
@@ -1540,8 +1540,8 @@ object AnnQueries extends QueryFamily {
       val cb = codebookMap(anisoResidualCb(s, d, "identity", identity))
       val levels = Seq(3, 5, 10, 20)
       val short = graft.util.Persist(
-        Similarity.ivfPqAdcTopKOnPerm(q, aniso, "vec_id", "vec",
-          k = levels.max, coarse, cb, identity)
+        Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
+          k = levels.max, coarse, cb, residual = true, perm = Some(identity))
           .select(col("q_id"), col("rank"), col("n_id")))
       val qv = q.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))
       // one gather of the max shortlist's raw vectors + exact dots;
@@ -1582,7 +1582,7 @@ object AnnQueries extends QueryFamily {
     // ---- SERVING the frozen-OPQ maintained index (closes the q242
     //      loop): q242 maintains the artifact under the frozen perm
     //      bundle but nothing READ it yet — this card runs the
-    //      deployed query path (ivfPqAdcTopKIndexPerm: query LUT
+    //      deployed query path (ivfPqAdcTopKIndex with the perm: query LUT
     //      gathered through the SAME frozen perm, coarse dot + m
     //      lookups per candidate, raw vectors only in the fenced
     //      truth side) over the q242-shape maintained rows
@@ -1619,16 +1619,16 @@ object AnnQueries extends QueryFamily {
       val cb = codebookMap(cbRows)
       val opqDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndexPerm(
+        Similarity.ivfPqResidualIndex(
             emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm)
+            "vec_id", "embedding", coarse, cb, perm = Some(perm))
           .write.mode("overwrite").parquet(p)
       }
       val opqIdx = s.read.parquet(opqDir)
         .select(col("cell"), col("id"), col("code"))
-        .unionByName(Similarity.ivfPqResidualIndexPerm(
+        .unionByName(Similarity.ivfPqResidualIndex(
           emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb, perm))
+          "vec_id", "embedding", coarse, cb, perm = Some(perm)))
       // identity: the q232 released artifact + delta encode, served
       // through the identity LUT path (q234's maintained side)
       val (iCoarse, iRows) = ivfPqTrained(s, d, baseOnly = true)
@@ -1644,8 +1644,8 @@ object AnnQueries extends QueryFamily {
         .unionByName(Similarity.ivfPqResidualIndex(
           emb.filter(isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", iCoarse, iCb))
-      rec("balanced", Similarity.ivfPqAdcTopKIndexPerm(q, opqIdx,
-          "vec_id", "embedding", k = 3, coarse, cb, perm))
+      rec("balanced", Similarity.ivfPqAdcTopKIndex(q, opqIdx,
+          "vec_id", "embedding", k = 3, coarse, cb, perm = Some(perm)))
         .unionByName(rec("identity", Similarity.ivfPqAdcTopKIndex(q, idIdx,
           "vec_id", "embedding", k = 3, iCoarse, iCb)))
         .orderBy(col("layout"))
@@ -1672,16 +1672,16 @@ object AnnQueries extends QueryFamily {
       val cb = codebookMap(cbRows)
       val opqDir = CoreQueries.sharedInputDir(
         s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndexPerm(
+        Similarity.ivfPqResidualIndex(
             emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm)
+            "vec_id", "embedding", coarse, cb, perm = Some(perm))
           .write.mode("overwrite").parquet(p)
       }
       val idx = s.read.parquet(opqDir)
         .select(col("cell"), col("id"), col("code"))
-        .unionByName(Similarity.ivfPqResidualIndexPerm(
+        .unionByName(Similarity.ivfPqResidualIndex(
           emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb, perm))
+          "vec_id", "embedding", coarse, cb, perm = Some(perm)))
       val exact = graft.util.Persist(
         Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
           .select(col("q_id"), col("n_id")))
@@ -1697,10 +1697,10 @@ object AnnQueries extends QueryFamily {
               .otherwise(round(col("n_found").cast("double") /
                 col("n_truth"), 6)).as("recall_at_3"))
       }
-      val adc = Similarity.ivfPqAdcTopKIndexPerm(q, idx,
-        "vec_id", "embedding", k = 3, coarse, cb, perm)
-      val short = Similarity.ivfPqAdcTopKIndexPerm(q, idx,
-        "vec_id", "embedding", k = 10, coarse, cb, perm)
+      val adc = Similarity.ivfPqAdcTopKIndex(q, idx,
+        "vec_id", "embedding", k = 3, coarse, cb, perm = Some(perm))
+      val short = Similarity.ivfPqAdcTopKIndex(q, idx,
+        "vec_id", "embedding", k = 10, coarse, cb, perm = Some(perm))
       val rr = Similarity.exactRerank(short, q, emb,
         "vec_id", "embedding", k = 3)
       rec("adc_index", 3L, adc)
@@ -1922,7 +1922,7 @@ object AnnQueries extends QueryFamily {
 
   /** Per-layout RESIDUAL-rung OPQ oracle block (q237): gather the
     * `w7rv` residuals under layout map `mp` (norm > 0, mirroring
-    * pqTrainIterationPerm/pqPermMse's usable contract), one-Lloyd
+    * pqTrainIteration/pqPermMse's usable contract), one-Lloyd
     * refine from the static `pqc` init into `${px}rc(sub, c, rvec)`,
     * encode every residual against it (`${px}code`), gather the query
     * vectors under the same map (`${px}qsv`), and emit the ADC top-3

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins, by reading `src/main/scala` (no Spark), where a streaming run
   * and a session-config change may be written (one streaming-drain
-  * helper, one session config), and that each shared query rule is
-  * written once per engine.
+  * helper, one session config), that each shared query rule is
+  * written once per engine, and that the PQ operators keep one code
+  * path.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -90,5 +91,13 @@ class SourceScanSpec extends AnyFunSuite {
     assert(count("('0', '1', '2')") == 1) // DuckDB: duckDelta, duckBase
     assert(count("('0','1','2')") == 0)
     assert(count("lng a JOIN") == 1) // DuckDB: lshPairsSql
+  }
+
+  test("PQ operators: no *Perm layout twins, one ADC LUT sum, one query LUT") {
+    val twins = "def \\w+Perm\\(".r
+      .findAllIn(sources("graft/ext/Similarity.scala")).toSeq
+    assert(twins.isEmpty) // a `perm: Option[Seq[Int]]` parameter instead
+    assert(count("element_at(element_at(col(\"lut\")") == 1) // adcSum
+    assert(count("pqLutOf(col(\"q_vec\")") == 1) // withLut
   }
 }

@@ -213,13 +213,13 @@ class Wave13Spec extends SparkSpec {
       s"identity sub-0 mse not the maximum (sub $s)"))
   }
 
-  test("pqTrainIterationPerm under the identity layout == pqTrainIteration") {
+  test("pqTrainIteration: perm = Some(identity) == perm = None") {
     import graft.ext.Similarity
     val aniso = graft.queries.AnnQueries.anisoEmb(spark, sf0001)
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2))
-    val viaPerm = Similarity.pqTrainIterationPerm(aniso, "vec_id", "vec",
-        0 until 64).collect()
+    val viaPerm = Similarity.pqTrainIteration(aniso, "vec_id", "vec",
+        perm = Some(0 until 64)).collect()
       .map(r => key(r) -> (r.getDouble(3), r.getLong(4))).toMap
     val viaSlice = Similarity.pqTrainIteration(aniso, "vec_id", "vec")
       .collect().map(r => key(r) -> (r.getDouble(3), r.getLong(4))).toMap

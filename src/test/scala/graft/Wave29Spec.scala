@@ -137,9 +137,9 @@ class Wave29Spec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val a = rowsOf(Similarity.ivfPqResidualIndex(
-      emb, "vec_id", "embedding", coarse, cb))
-    val b = rowsOf(Similarity.ivfPqResidualIndexPerm(
-      emb, "vec_id", "embedding", coarse, cb, 0 until 64))
+      emb, "vec_id", "embedding", coarse, cb, perm = None))
+    val b = rowsOf(Similarity.ivfPqResidualIndex(
+      emb, "vec_id", "embedding", coarse, cb, perm = Some(0 until 64)))
     assert(a.nonEmpty && a == b,
       "identity-perm builder must be value-identical to the identity one")
     // the gated row: base/delta labels tile the md5 rule; every code
@@ -232,15 +232,16 @@ class Wave29Spec extends SparkSpec {
       graft.queries.AnnQueries.ivfPqOpqTrained(s, sf0001)
     val cb = cbRows.groupBy(_._1)
       .map { case (sub, xs) => sub -> xs.sortBy(_._2).map(_._3) }
-    val idx = Similarity.ivfPqResidualIndexPerm(emb, "vec_id", "embedding",
-      coarse, cb, perm)
+    val idx = Similarity.ivfPqResidualIndex(emb, "vec_id", "embedding",
+      coarse, cb, perm = Some(perm))
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
-    val served = rowsOf(Similarity.ivfPqAdcTopKIndexPerm(q, idx,
-      "vec_id", "embedding", k = 3, coarse, cb, perm))
-    val direct = rowsOf(Similarity.ivfPqAdcTopKOnPerm(q, emb,
-      "vec_id", "embedding", k = 3, coarse, cb, perm))
+    val served = rowsOf(Similarity.ivfPqAdcTopKIndex(q, idx,
+      "vec_id", "embedding", k = 3, coarse, cb, perm = Some(perm)))
+    val direct = rowsOf(Similarity.ivfPqAdcTopKOn(q, emb,
+      "vec_id", "embedding", k = 3, coarse, cb, residual = true,
+      perm = Some(perm)))
     assert(served.nonEmpty && served == direct,
       "serving the built artifact must equal the direct encode path")
     // the gated card: two layouts, same truth, valid arithmetic
