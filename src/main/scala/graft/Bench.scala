@@ -118,7 +118,10 @@ object Bench {
       val (times, probes) = measure(name, fn)
       (name, times, probes)
     }
-    def medOf(ts: Seq[Double]): Double = ts((ts.length - 1) / 2)
+    // lower median of sorted samples: for even run counts report the
+    // faster middle sample (times(n/2) would be the max of 2 runs — an
+    // upward bias)
+    def med(ts: Seq[Double]): Double = ts((ts.length - 1) / 2)
     // SELF-HEALING pass (VERDICT r16 #5): rows whose own micro-probe
     // exceeded 2x the session probe median were hit by a host-steal
     // burst — their medians measure the burst, not the query. Re-run
@@ -131,10 +134,10 @@ object Bench {
     // of its chosen pass, so the summary's burst count reflects the
     // rows that stayed contaminated across BOTH windows.
     val nominal0 = {
-      val ms = firstPass.map(r => medOf(r._3)).sorted
-      if (ms.isEmpty) 0.0 else ms((ms.length - 1) / 2)
+      val ms = firstPass.map(r => med(r._3)).sorted
+      if (ms.isEmpty) 0.0 else med(ms)
     }
-    val flagged = firstPass.filter(r => medOf(r._3) > 2 * nominal0)
+    val flagged = firstPass.filter(r => med(r._3) > 2 * nominal0)
       .map(_._1).toSet
     val calRetry = if (flagged.nonEmpty) calibrate() else -1.0
     val byName = bench.toMap
@@ -148,15 +151,12 @@ object Bench {
       if (!flagged(name)) (name, times, probes)
       else {
         val (t2, p2) = measure(name, byName(name))
-        healLog += ((name, medOf(times), medOf(t2)))
-        if (medOf(t2) < medOf(times)) (name, t2, p2)
+        healLog += ((name, med(times), med(t2)))
+        if (med(t2) < med(times)) (name, t2, p2)
         else (name, times, probes)
       }
     }
     val retried = flagged.size
-    // lower median: for even run counts report the faster middle
-    // sample (times(n/2) would be the max of 2 runs — an upward bias)
-    def med(ts: Seq[Double]): Double = ts((ts.length - 1) / 2)
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def fmt2(v: Double): String = BigDecimal(v)
@@ -205,16 +205,9 @@ object Bench {
       .mkString("{", ",", "}")
     // per-query exception record (VERDICT r18 #5) — empty on a healthy
     // run; a populated entry marks that row's timing as a crash, not a
-    // speedup. JSON-escape the quotes/backslashes an error message can
-    // carry.
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
+    // speedup.
     val detailErrors = errors
-      .map { case (k, m) => "\"" + short(k) + "\":\"" + esc(m) + "\"" }
+      .map { case (k, m) => "\"" + short(k) + "\":" + Verify.jsonString(m) }
       .mkString("{", ",", "}")
     val detailJson =
       s"""{"total":${fmt(total3)},"runs":$runs,"cal":[${fmt(calPre)},""" +
@@ -243,8 +236,7 @@ object Bench {
     // burst contaminated. A reader of BENCH_rN.json alone can now
     // tell "slow row" from "stolen row" without the detail record.
     val probeMeds = results.map { case (_, _, ps) => med(ps) }
-    val probeMed =
-      if (probeMeds.isEmpty) 0.0 else probeMeds.sorted.apply((probeMeds.length - 1) / 2)
+    val probeMed = if (probeMeds.isEmpty) 0.0 else med(probeMeds.sorted)
     val burst = probeMeds.count(_ > 2 * probeMed)
     val sfName = new java.io.File(sfDir).getName
     println(s"""{"metric":"total","value":${fmt2(total3)},"unit":"sec","n":${results.size},"cal":[${fmt(calPre)},${fmt(calPost)}],"load":[${fmt1(loadPre)},${fmt1(loadPost)}],"burst":$burst,"retried":$retried,"probe_med":${fmt(probeMed)},"top":$top5,"sf":"$sfName"}""")

@@ -14,7 +14,7 @@ object VerifyConsolidate {
   private def ev(provider: String, eid: String, name: String,
       dt: Option[LocalDateTime], artist: Option[String] = None,
       venue: Option[String] = None, city: Option[String] = None,
-      tickets: Option[Long] = None): NormalizedEvent =
+      tickets: Option[Long]): NormalizedEvent =
     NormalizedEvent(
       provider = provider, event_id_provider = eid, event_name = name,
       city = city, event_datetime_local = dt,

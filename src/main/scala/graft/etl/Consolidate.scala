@@ -163,9 +163,8 @@ object Consolidate {
       .orderBy(col("event_datetime_local"), lower(col("event_name")))
   }
 
-  /** Observability for the (day, token) prefilter join — the
-    * consolidation analog of [[graft.ext.Dedup.hotBuckets]] (SURVEY
-    * §7.4: "salted token join if a token is ultra-frequent"). Per key
+  /** Observability for the (day, token) prefilter join (SURVEY §7.4:
+    * "salted token join if a token is ultra-frequent"). Per key
     * present on BOTH sides: each side's row count and their product —
     * the pairs the token join materializes for that key. A ubiquitous
     * token that survives the stopword filter at corpus scale surfaces

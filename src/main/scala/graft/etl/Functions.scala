@@ -26,9 +26,6 @@ object Functions {
   // ---- F14: Ratcliff–Obershelp ratio (matching.py:29-30) ----
   def seqRatio(a: Column, b: Column): Column = lift(SequenceRatio(expr(a), expr(b)))
 
-  /** `_sim`: ratio over `_norm_name`-normalized inputs (matching.py:29-30). */
-  def simName(a: Column, b: Column): Column = seqRatio(normName(a), normName(b))
-
   // ---- F2: basic normalization (consolidate_events.py:21-26) ----
   // null/"" → ""; strip accents, lower, collapse whitespace, trim.
   def normBasic(c: Column): Column =

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import Functions._
@@ -96,25 +96,4 @@ object Normalize {
     raw.withColumn("card_sha", sha1(substring(col(textCol), 1, 512)))
       .dropDuplicates("card_sha")
       .drop("card_sha")
-
-  /** FL5: trailing-window predicate (`dice.py:85-87`), parameterized
-    * "now" for determinism.
-    */
-  def lookbackFilter(df: DataFrame, tsCol: String, now: Column, days: Int = 90): DataFrame =
-    df.filter(col(tsCol) >= now - expr(s"INTERVAL $days DAYS"))
-
-  /** P4: header-union projection (`core/gsheet.py:19-24,74-92`) — fixed
-    * prefix columns first, then the sorted union of extras; missing →
-    * "". A fixed column absent from EVERY input still appears as an
-    * empty-string column (the reference always writes the full fixed
-    * header), rather than failing analysis.
-    */
-  def headerUnion(dfs: Seq[DataFrame], fixed: Seq[String]): DataFrame = {
-    val unioned = dfs.reduce(_.unionByName(_, allowMissingColumns = true))
-    val present = unioned.columns.toSet
-    val extras = unioned.columns.filterNot(fixed.contains).sorted
-    unioned.select((fixed ++ extras).map(c =>
-      (if (present(c)) coalesce(col(c).cast("string"), lit(""))
-       else lit("")).as(c)): _*)
-  }
 }

@@ -29,16 +29,3 @@ case class NormalizedEvent(
     ingestion_run_id: String = "run-0",
     artist_name: Option[String] = None,
     venue_name: Option[String] = None)
-
-/** Consolidated row of the alternative (similarity-join) pipeline,
-  * mirroring `concerts_etl/core/matching.py:34-42`.
-  */
-case class ConsolidatedRow(
-    canonical_event_key: String,
-    event_name: String,
-    event_datetime_local: Option[LocalDateTime],
-    timezone: String = "Europe/Paris",
-    tickets_sold_total_shotgun: Option[Long] = None,
-    tickets_sold_total_dice: Option[Long] = None,
-    scrape_ts_utc: Timestamp = Timestamp.valueOf("2025-01-01 00:00:00"),
-    ingestion_run_id: String = "run-0")

@@ -86,16 +86,4 @@ object Sinks {
         .json(s"$dir/sample_json")
     } catch { case scala.util.control.NonFatal(_) => () }
   }
-
-  /** K1 variant in any columnar format Spark bundles (parquet/orc) —
-    * the engine is format-agnostic at the writer layer; ORC matters
-    * when the downstream warehouse is ORC-native (Hive-era lakes).
-    */
-  def overwriteSnapshotAs(df: DataFrame, path: String, format: String): Boolean = {
-    if (df.isEmpty) false
-    else {
-      df.write.mode(SaveMode.Overwrite).format(format).save(path)
-      true
-    }
-  }
 }

@@ -1,15 +1,13 @@
 package graft.etl.expressions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL-surface registration for the engine's custom expressions
   * (SURVEY.md §2.11): makes `strip_accents`, `parse_fr_datetime` and
-  * `seq_ratio` callable from `spark.sql(...)`, either per-session via
-  * [[Registry.register]] or cluster-wide via
-  * `spark.sql.extensions=graft.etl.expressions.GraftExtensions`.
+  * `seq_ratio` callable from `spark.sql(...)` per session via
+  * [[Registry.register]].
   */
 object Registry {
   /** Shingle/band sizes are plan-time parameters, not per-row data. */
@@ -47,24 +45,5 @@ object Registry {
     if (!spark.experimental.extraOptimizations.contains(SimilarityPrefilter))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ SimilarityPrefilter
-  }
-
-  private[expressions] def injections
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    fns.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[Registry.type].getName, name), builder)
-    }
-}
-
-/** Session-extension hook: `.withExtensions(new GraftExtensions)` or the
-  * `spark.sql.extensions` conf.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    Registry.injections.foreach { case (id, info, builder) =>
-      ext.injectFunction((id, info, builder))
-    }
-    ext.injectOptimizerRule(_ => SimilarityPrefilter)
   }
 }

@@ -13,8 +13,13 @@ import org.apache.spark.sql.types.DoubleType
   * cheap check short-circuits the O(|a|·|b|) dynamic program for the
   * (overwhelmingly common at scale) pairs whose lengths already rule
   * them out — the classic cheap-necessary-condition prefilter of
-  * similarity joins, here as a `Rule[LogicalPlan]` so EVERY query using
-  * seq_ratio benefits without rewriting.
+  * similarity joins, here as a `Rule[LogicalPlan]`.
+  *
+  * Only [[Registry.register]] installs it, so it runs only in sessions
+  * that call `register`: the etlbench kernel session, PipelineSpec and
+  * OptimizerSpec. No registry query's session calls `register`; J2's
+  * similarity join ([[graft.etl.Consolidate.mergeSimilarity]]) writes the
+  * same length bound inline.
   *
   * Sound: the added conjunct is implied by the original predicate, so
   * the filter result is unchanged (verified in OptimizerSpec).

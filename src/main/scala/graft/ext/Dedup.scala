@@ -46,20 +46,6 @@ object Dedup {
       graft.etl.expressions.MinhashBands(
         org.apache.spark.sql.GraftBridge.expression(c), k))
 
-  private val hexDigits = "0123456789abcdef".map(_.toString)
-
-  /** Long form (one row per non-empty (doc, band)), kept for API parity
-    * with engines that materialize signature tables.
-    */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-      k: Int = 8): DataFrame =
-    df.select(col(idCol).as("doc_id"), minhashBands(col(textCol), k).as("mh"))
-      .select(col("doc_id"), posexplode(col("mh")).as(Seq("bandIdx", "minhash")))
-      .filter(col("minhash").isNotNull)
-      .select(col("doc_id"),
-        element_at(array(hexDigits.map(lit): _*), col("bandIdx") + 1).as("band"),
-        col("minhash"))
-
   /** r=2 banded signatures: 8 LSH bands, each keyed by the pair of
     * per-nibble minima (j, j+8). A band collision then requires BOTH
     * minima equal — collision probability s² per band instead of s,
@@ -98,27 +84,20 @@ object Dedup {
     * the 16 nibble minima regrouped into 16/r bands of r, band j
     * reading minima (j, j + 16/r, j + 2·16/r, …) — the (b, r) knob of
     * the LSH S-curve (P[candidate] = 1 − (1 − s^r)^b; Leskovec et al.,
-    * "Mining of Massive Datasets" ch. 3). r = 2 with its (j, j+8)
-    * pairing is exactly [[bandedSignatures]]'s production scheme;
-    * r = 1 is the raw 16-band high-recall end; r = 4 the high-
-    * precision end. A band key exists only when ALL r minima are
-    * present (the [[bandedSignatures]] null guard at every r).
-    */
-  def bandedSignaturesR(df: DataFrame, textCol: String, idCol: String,
-      r: Int, k: Int = 8): DataFrame =
-    bandedSignaturesFromMinima(df.select(col(idCol).as("doc_id"),
-      minhashBands(col(textCol), k).as("mh")), r)
-
-  /** [[bandedSignaturesR]]'s banding step alone, over an ALREADY
-    * MATERIALIZED minima frame `(doc_id, mh: array<string>[16])` —
-    * the key regrouping is pure array arithmetic, so callers that
-    * need several bandings of the same corpus (the q201 sweep, the
-    * production r=2 signature table) persist the minima ONCE and
-    * derive every banding from it instead of re-running the full-text
-    * shingle+minhash scan per banding (measured: the scan is ~3x the
-    * whole sweep's remaining work). r = 2 reproduces
-    * [[bandedSignatures]] exactly (same (j, j+8) pairing, same
-    * all-present null guard, same band indices).
+    * "Mining of Massive Datasets" ch. 3). r = 2 reproduces
+    * [[bandedSignatures]]'s production scheme exactly (same (j, j+8)
+    * pairing, same band indices); r = 1 is the raw 16-band high-recall
+    * end; r = 4 the high-precision end. A band key exists only when ALL
+    * r minima are present (the [[bandedSignatures]] null guard at
+    * every r).
+    *
+    * It reads an ALREADY MATERIALIZED minima frame
+    * `(doc_id, mh: array<string>[16])` — the key regrouping is pure
+    * array arithmetic, so callers that need several bandings of the
+    * same corpus (the q201 sweep, the production r=2 signature table)
+    * persist the minima ONCE and derive every banding from it instead
+    * of re-running the full-text shingle+minhash scan per banding
+    * (measured: the scan is ~3x the whole sweep's remaining work).
     */
   def bandedSignaturesFromMinima(minima: DataFrame, r: Int): DataFrame = {
     require(Set(1, 2, 4).contains(r), s"unsupported rows-per-band $r")
@@ -134,8 +113,8 @@ object Dedup {
 
   /** Candidate near-dup pairs: bucket-group on (band, minhash) and
     * emit ordered pairs within each bucket — never a cross product.
-    * `n_bands` = how many bands collide (16 with raw
-    * [[minhashSignatures]], 8 with [[bandedSignatures]]).
+    * `n_bands` = how many bands collide (up to 8 with
+    * [[bandedSignatures]]).
     *
     * Bucket-grouping (one shuffle of the signature frame) replaces the
     * former self-join, which evaluated the signature pipeline TWICE —
@@ -155,8 +134,7 @@ object Dedup {
     * `n_bands >= 2` consumer threshold. The query-registry oracles
     * mirror the cap exactly (an anti-join against over-cap buckets),
     * so capped and uncapped regimes both stay under the hash gate.
-    * Audit what the cap discarded with [[hotBuckets]] before
-    * tightening it; `maxBucket <= 0` disables the cap.
+    * `maxBucket <= 0` disables the cap.
     */
   def minhashCandidates(sig: DataFrame, maxBucket: Int = 10000): DataFrame = {
     // Enforce the cap BEFORE collect_list: filtering size(ids) after
@@ -186,16 +164,6 @@ object Dedup {
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_bands"))
   }
-
-  /** Observability twin of the [[minhashCandidates]] cap: the buckets
-    * the cap would drop, with their sizes — run this (cheap: one
-    * shuffle, no pair explosion) to log the drop count before/while
-    * capping at corpus scale.
-    */
-  def hotBuckets(sig: DataFrame, maxBucket: Int = 10000): DataFrame =
-    sig.groupBy(col("band"), col("minhash"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucket)
 
   /** 16-bit SimHash over a token array.
     *

@@ -39,39 +39,6 @@ object Multimodal {
     transform(sequence(lit(0L), nFrames - 1), i => i * stride)
   }
 
-  /** Decoded-metadata row produced by the partition-pooled decode. */
-  case class DecodedMeta(doc_id: Long, n_bytes: Long, width: Long,
-      height: Long, n_frames: Long)
-
-  /** STUB codec with the lifecycle of a real one: constructed once per
-    * partition (codecs are expensive — native contexts, model weights),
-    * then fed rows. `decode` is the only thing to swap for a real
-    * image/audio library; it must stay deterministic per byte content.
-    */
-  final class StubCodec {
-    def decode(id: Long, bytes: Array[Byte]): DecodedMeta = {
-      val n = bytes.length.toLong
-      DecodedMeta(id, n, 32 + n % 224, 32 + (n * 7) % 224, 1 + n % 16)
-    }
-  }
-
-  /** Partition-pooled decode via mapPartitions — the Scala analog of
-    * PySpark's `mapInPandas` batch UDF: ONE codec per partition, rows
-    * streamed through it lazily (no per-row codec setup, no partition
-    * materialization). Input: (idCol long, payload binary).
-    */
-  def decodeWithPool(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val codec = new StubCodec() // pooled: one per partition
-        it.map { case (id, bytes) => codec.decode(id, bytes) }
-      }
-      .toDF()
-  }
-
   /** Full stub pipeline over a text-bearing frame: binary payload +
     * decoded metadata + frame offsets.
     */

@@ -868,18 +868,12 @@ object Similarity {
     * centroid self-dots are folded over literal arrays, so Catalyst
     * constant-folds them at plan time — per-row work is m*nCents
     * subDim-length dots, the same order as IVF cell assignment.
-    */
-  def pqCodes(vec: Column, m: Int = 8, subDim: Int = 8, nCents: Int = 16): Column =
-    // fused argmin kernel (round 19): the static codebook's cell ids
-    // equal their positions, so PqArgmin's position IS the code
-    pqCodesWith((0 until m).zip(staticCodebook(m, subDim, nCents)).toMap,
-      m, subDim, None)(vec.cast("array<double>"))
-
-  /** The PQ argmin encode under an explicit codebook and layout: per
-    * subspace, the POSITION of the nearest centroid in
-    * `codebook(sub)`'s order (rounded |c|²−2·x·c key, low-position
-    * ties) over [[subVec]] — shared by every encode path, so the q229
-    * rank path and the q232 index builder cannot desynchronize.
+    *
+    * The code is, per subspace, the POSITION of the nearest centroid in
+    * `codebook(sub)`'s order over [[subVec]] under the layout `perm`
+    * (for the static codebook the cell ids equal their positions). One
+    * encode is shared by every path, so the q229 rank path and the q232
+    * index builder cannot desynchronize.
     */
   private def pqCodesWith(codebook: Map[Int, Seq[Seq[Double]]],
       m: Int, subDim: Int, perm: Option[Seq[Int]])(vec: Column): Column =
@@ -1368,7 +1362,7 @@ object Similarity {
   /** One Lloyd refinement of the PQ sub-codebooks — PQ *training* (the
     * per-subspace k-means step of Jégou et al.; [[kmeansIteration]]'s
     * discipline at the PQ rung): every usable vector's subvectors are
-    * assigned their argmin static centroid ([[pqCodes]]' key), and each
+    * assigned their argmin static centroid ([[pqCodesWith]]' key), and each
     * (subspace, code) cell's element-wise member mean is the refined
     * centroid. Long-form output — one row per (sub, c, pos) with the
     * mean and member count — because list columns defeat cross-engine

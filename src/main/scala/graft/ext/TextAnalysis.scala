@@ -18,13 +18,6 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(c: Column): Column = size(wsTokens(c)).cast("long")
 
-  /** BPE-ish subword estimate: ~1 token per 4 chars, at least the
-    * whitespace count (the heuristic OpenAI/Anthropic docs quote for
-    * English text).
-    */
-  def subwordEstimate(c: Column): Column =
-    greatest(ceil(length(c) / 4).cast("long"), tokenCount(c))
-
   private val markers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "is", "with"),
     "fr" -> Seq("le", "la", "les", "et", "des"),
@@ -55,18 +48,13 @@ object TextAnalysis {
     }
   }
 
-  /** Quality metrics: length, word count, mean word length, punctuation
-    * ratio, stopword ratio, and a composite [0,1] score. Ratios are
-    * exact rational arithmetic over counts → deterministic across
-    * engines.
+  /** Quality metrics: mean word length, punctuation ratio and stopword
+    * ratio. Ratios are exact rational arithmetic over counts →
+    * deterministic across engines. The `*FromTokens` forms take a
+    * pre-projected token column, so several metrics in one select
+    * tokenize once (lambdas are exempt from CSE).
     *
-    * The `*FromTokens` forms take a pre-projected token column — using
-    * the text-taking conveniences for several metrics in one select
-    * re-tokenizes per metric (lambdas are exempt from CSE).
-    */
-  def nWords(c: Column): Column = tokenCount(c)
-  def meanWordLen(c: Column): Column = meanWordLenFromTokens(c, wsTokens(c))
-  /** Mean token length = sum of token lengths / token count. The
+    * Mean token length = sum of token lengths / token count. The
     * former `(len(text) - (n-1)) / n` shortcut assumed exactly one
     * separator char between tokens and none at the ends — repeated or
     * leading/trailing whitespace inflated the mean on exactly the
@@ -81,7 +69,6 @@ object TextAnalysis {
     (length(c) - length(regexp_replace(c, "[.,!?;:]", ""))).cast("double") /
       length(c).cast("double")
   private val qualityStops = Seq("the", "and", "of", "a", "to", "in", "is", "it")
-  def stopwordRatio(c: Column): Column = stopwordRatioFromTokens(wsTokens(lower(c)))
   def stopwordRatioFromTokens(toks: Column): Column =
     size(filter(toks, t => t.isInCollection(qualityStops))).cast("double") /
       size(toks).cast("double")

@@ -442,8 +442,7 @@ object CoreQueries extends QueryFamily {
     }),
 
     // ---- J1 hot-key audit: the (day, token) join keys whose pair
-    //      fan-out crosses a threshold — the consolidation analog of
-    //      the dedup hotBuckets audit (SURVEY §7.4). minPairs=2 at
+    //      fan-out crosses a threshold (SURVEY §7.4). minPairs=2 at
     //      test scale so the gate sees real rows; at corpus scale the
     //      default flags only reducer-stalling keys ----
     "q80_hot_token_audit" -> ((s, d) => {

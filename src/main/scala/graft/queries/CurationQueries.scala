@@ -256,7 +256,7 @@ object CurationQueries extends QueryFamily {
     */
   private def ledgerMaintainStep(prior: RelArtifacts, delta: DataFrame,
       deltaEmb: DataFrame, corpus: DataFrame, priorDocs: DataFrame,
-      onPersist: DataFrame => Unit = _ => (),
+      onPersist: DataFrame => Unit,
       bloomDecon: Boolean = false): RelArtifacts = {
     def priorDet(det: String) =
       prior.drops.filter(col("det") === det).select(col("doc_id"))

@@ -1259,8 +1259,9 @@ object DedupQueries extends QueryFamily {
     //      set (q102 precision, q114 recall, q118 tau, q121 nProbe,
     //      q126 merges, q116 threshold): the (b, r) S-curve itself.
     //      One row per rows-per-band r ∈ {1, 2, 4} over the SAME 16
-    //      nibble minima ([[Dedup.bandedSignaturesR]]): candidate pair
-    //      count, precision against the 3-gram-Jaccard ≥ 0.5 verify
+    //      nibble minima ([[Dedup.bandedSignaturesFromMinima]]):
+    //      candidate pair count, precision against the 3-gram-Jaccard
+    //      ≥ 0.5 verify
     //      (q102's rule), and recall against the fenced sampled exact
     //      truth (q114's design, ONE truth side shared by all three
     //      rows). Candidate sets are nested by construction
@@ -1467,7 +1468,7 @@ object DedupQueries extends QueryFamily {
 
   /** One rows-per-band leg of the q201 banding-sweep oracle: band keys
     * over the shared `swpiv` nibble-minima pivot (NULL propagates
-    * through `||`, mirroring [[graft.ext.Dedup.bandedSignaturesR]]'s
+    * through `||`, mirroring [[graft.ext.Dedup.bandedSignaturesFromMinima]]'s
     * all-present guard), the capped bucket join, distinct candidate
     * pairs, and the q102-precision / q114-recall aggregates against
     * the shared `swg`/`swtruth` sides.

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 /** Structured-streaming surface (SURVEY.md §2.10).
@@ -10,9 +10,8 @@ import org.apache.spark.sql.types.StructType
   * The reference's incrementality is cron re-run + append-only sink
   * (`daily.yml:4-6`, `storage/google_sheets.py:21`); its 90-day
   * lookback re-scan is a poor-man's watermark. Re-expressed natively:
-  * daily tumbling-window aggregation with a real watermark, and
-  * stateful sessionization via flatMapGroupsWithState. Sink modes K1/K2
-  * map to foreachBatch overwrite/append.
+  * daily tumbling-window aggregation with a real watermark. Sink modes
+  * K1/K2 map to foreachBatch overwrite/append.
   */
 object Streaming {
 
@@ -42,64 +41,6 @@ object Streaming {
       // DEPENDS on it — pin it so a default change can't reorder
       .option("latestFirst", "false")
       .parquet(dir)
-
-  case class SessionInput(user_id: Long, event_id: Long, tsMicros: Long)
-  case class SessionState(start: Long, last: Long, n: Int)
-  case class SessionOut(user_id: Long, n_events: Int, startMicros: Long, endMicros: Long)
-
-  /** Stateful gap sessionization (§2.10 extension): emits a session when
-    * its gap times out. Batch twin: graft.ext.Sessions.
-    *
-    * A user's trailing (idle) session is flushed via
-    * ProcessingTimeTimeout: after `gapSec` of wall-clock with no new
-    * events for the key, the buffered session is emitted and the state
-    * cleared — without this, open sessions would sit in the state store
-    * forever waiting for a later event that may never come. (Event-time
-    * timeout would need a watermarked timestamp column; the processing
-    * -time gap mirrors the reference's cron cadence, where "idle" is
-    * measured in wall-clock runs.)
-    */
-  def sessionizeStream(ds: Dataset[SessionInput], gapSec: Long)(
-      implicit enc1: org.apache.spark.sql.Encoder[SessionOut],
-      enc2: org.apache.spark.sql.Encoder[SessionState]): Dataset[SessionOut] = {
-    val gapMicros = gapSec * 1000000L
-    ds.groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (user: Long, rows: Iterator[SessionInput], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // Idle gap elapsed with no new events: flush the open session.
-            val st = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, st.n, st.start, st.last))
-          } else {
-            // Within a microbatch, events arrive unordered — sort by ts.
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.event_id))
-            var out = List.empty[SessionOut]
-            var st = state.getOption.orNull
-            sorted.foreach { r =>
-              if (st == null) st = SessionState(r.tsMicros, r.tsMicros, 1)
-              else if (r.tsMicros - st.last > gapMicros) {
-                out = SessionOut(user, st.n, st.start, st.last) :: out
-                st = SessionState(r.tsMicros, r.tsMicros, 1)
-              } else {
-                // A LATE event from a prior microbatch can precede the
-                // buffered session (batch-local sorting cannot see it):
-                // clamp the bounds instead of moving `last` backwards,
-                // which emitted end < start and split the session on
-                // the next in-order event.
-                st = SessionState(math.min(st.start, r.tsMicros),
-                  math.max(st.last, r.tsMicros), st.n + 1)
-              }
-            }
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutDuration(gapSec * 1000L)
-            }
-            out.reverse.iterator
-          }
-      }
-  }
 
   /** Streaming exact dedup — the incremental twin of the batch
     * content-hash dedup (q21): drops rows whose md5(content) was seen

@@ -80,19 +80,4 @@ object Skew {
         explode(when(col("__hot"), sequence(lit(0), lit(salts - 1)))
           .otherwise(array(lit(0)))))
       .drop("__hot")
-
-  /** Salted aggregation: two-phase group-by for hot grouping keys —
-    * partial aggregate on (key, salt), then final aggregate on key.
-    * Expressed for the count/sum family where two-phase composition is
-    * exact. (Spark's own partial aggregation covers most cases; this is
-    * for layering ABOVE repartitioning when a single group's partials
-    * still skew one reducer.)
-    */
-  def saltedCount(df: DataFrame, keys: Seq[String], salts: Int): DataFrame = {
-    val cols = keys.map(col)
-    df.withColumn("__salt",
-        pmod(monotonically_increasing_id(), lit(salts.toLong)).cast("int"))
-      .groupBy(cols :+ col("__salt"): _*).agg(count(lit(1)).as("__partial"))
-      .groupBy(cols: _*).agg(sum(col("__partial")).as("n"))
-  }
 }

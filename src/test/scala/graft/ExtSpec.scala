@@ -52,8 +52,13 @@ class ExtSpec extends SparkSpec {
       (2L, "ab"), // shorter than k → single whole-string shingle
       (3L, "Électro Fête à Paris — accented non-ASCII content")
     ).toDF("doc_id", "text")
-    val viaExpr = Dedup.minhashSignatures(docs, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    // band i of the expression's 16 minima is the md5 first nibble i
+    val viaExpr = docs
+      .select(col("doc_id"),
+        posexplode(Dedup.minhashBands(col("text"), 8)).as(Seq("band", "minhash")))
+      .filter(col("minhash").isNotNull)
+      .collect().map(r => (r.getLong(0), Integer.toHexString(r.getInt(1)),
+        r.getString(2))).toSet
     val composed = docs
       .select(col("doc_id"), explode(Dedup.charShingles(col("text"), 8)).as("shingle"))
       .withColumn("digest", md5(col("shingle")))
@@ -71,8 +76,9 @@ class ExtSpec extends SparkSpec {
       (2L, "completely different content about spark query engines and shuffles"),
       (3L, "another unrelated string with nothing shared at all zzz qqq www")
     ).toDF("doc_id", "text")
-    val cand = Dedup.minhashCandidates(
-      Dedup.minhashSignatures(docs, "text", "doc_id"))
+    // r=1: the raw 16 nibble minima, one band each
+    val cand = Dedup.minhashCandidates(Dedup.bandedSignaturesFromMinima(
+      docs.select(col("doc_id"), Dedup.minhashBands(col("text"), 8).as("mh")), 1))
       .filter(col("n_bands") >= 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand == Set((0L, 1L)))
@@ -84,10 +90,10 @@ class ExtSpec extends SparkSpec {
     assert(banded == Set((0L, 1L)))
   }
 
-  test("minhash candidates hot-bucket cap drops oversized buckets; hotBuckets reports them") {
+  test("minhash candidates hot-bucket cap drops oversized buckets") {
     // hand-built signature frame: one hot bucket of 4 ids, one normal
     // bucket of 2 — with maxBucket=3 the 6 hot-bucket pairs vanish and
-    // the normal pair survives; hotBuckets names exactly the hot cell
+    // the normal pair survives
     val sig = Seq(
       (0L, "0", "aaaa"), (1L, "0", "aaaa"), (2L, "0", "aaaa"), (3L, "0", "aaaa"),
       (10L, "1", "bbbb"), (11L, "1", "bbbb")
@@ -99,9 +105,6 @@ class ExtSpec extends SparkSpec {
     val capped = Dedup.minhashCandidates(sig, maxBucket = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((10L, 11L)))
-    val hot = Dedup.hotBuckets(sig, maxBucket = 3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(hot == Set(("0", "aaaa", 4L)))
   }
 
   test("simhash: identical token sets agree, hamming-near for near-dups") {
@@ -197,15 +200,19 @@ class ExtSpec extends SparkSpec {
     assert(qa.count(brute.contains) >= qa.length / 2)
   }
 
-  test("pqCodes: duplicates share codes; codes stay in codebook range") {
+  test("PQ encode: duplicates share codes; codes stay in codebook range") {
     val vecs = Seq(
       (0L, Array(0.5f, 0.1f, -0.2f, 0.3f, 0.0f, 0.4f, -0.1f, 0.2f)),
       (1L, Array(0.5f, 0.1f, -0.2f, 0.3f, 0.0f, 0.4f, -0.1f, 0.2f)), // exact dup
       (2L, Array(-0.4f, 0.2f, 0.1f, -0.3f, 0.2f, -0.1f, 0.3f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val coded = vecs.select(col("vec_id"),
-        Similarity.pqCodes(col("embedding"), m = 2, subDim = 4, nCents = 8).as("code"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
+    // the static codebook; one coarse cell at the origin, so each
+    // residual is its vector
+    val codebook = (0 until 2).map(sub => sub -> (0 until 8).map(c =>
+      (0 until 4).map(i => Similarity.pqVal(sub, c, i)): Seq[Double])).toMap
+    val coded = Similarity.ivfPqResidualIndex(vecs, "vec_id", "embedding",
+        Seq(0 -> Seq.fill(8)(0.0)), codebook, m = 2, subDim = 4)
+      .collect().map(r => r.getLong(1) -> r.getSeq[Int](2).toSeq).toMap
     assert(coded(0L) == coded(1L))
     assert(coded.values.forall(_.length == 2))
     assert(coded.values.forall(_.forall(c => c >= 0 && c < 8)))
@@ -465,7 +472,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("q91 incremental dedup: cross-side pairs only, subset of the full candidate set") {
-    import org.apache.spark.sql.functions.md5
     val out = SparkEntry.queries("q91_incremental_dedup")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.nonEmpty)
@@ -567,9 +573,10 @@ class ExtSpec extends SparkSpec {
 
   test("quality metrics on crafted text") {
     val t = lit("Hello, world! This is a test.")
-    assert(one(TA.nWords(t)) == 6L)
+    assert(one(TA.tokenCount(t)) == 6L)
     assert(one(TA.punctRatio(t)).asInstanceOf[Double] > 0.0)
-    assert(one(TA.stopwordRatio(t)).asInstanceOf[Double] == 2.0 / 6.0) // is, a
+    assert(one(TA.stopwordRatioFromTokens(TA.wsTokens(lower(t))))
+      .asInstanceOf[Double] == 2.0 / 6.0) // is, a
   }
 
   test("rollingHash matches manual Horner computation") {
@@ -885,18 +892,6 @@ class ExtSpec extends SparkSpec {
       .withColumn("seq_id", floor(col("prev") / lit(512)).cast("long"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("seq_id")).toMap
     assert(got == Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 9L -> 0L, 10L -> 1L))
-  }
-
-  test("partition-pooled decode agrees with the expression-stub metadata") {
-    val df = Seq((1L, "héllo"), (2L, "a"), (3L, "twelve chars")).toDF("doc_id", "text")
-    val pooled = Multimodal.decodeWithPool(
-        df.select(col("doc_id"), Multimodal.toBinary(col("text")).as("payload")),
-        "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    val viaExpr = Multimodal.decodePipeline(df, "text", "doc_id")
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("width"),
-        r.getAs[Long]("height"), r.getAs[Long]("n_frames"))).toSet
-    assert(pooled == viaExpr)
   }
 
   test("semanticMaxSim is the tau-free envelope of semanticDedup") {

@@ -49,29 +49,6 @@ class NormalizeSpec extends SparkSpec {
     assert(Normalize.dedupRawCards(raw, "card_text").count() == 2)
   }
 
-  test("header-union projection: fixed prefix + sorted extras, \"\" for missing") {
-    val a = Seq(("E1", "2026-09-10", 10L, "x")).toDF(
-      "event_name", "event_datetime_local", "shotgun_tickets_sold", "zeta")
-    val b = Seq(("E2", "2026-09-11", 20L, "y")).toDF(
-      "event_name", "event_datetime_local", "dice_tickets_sold", "alpha")
-    val out = Normalize.headerUnion(Seq(a, b),
-      Seq("event_name", "event_datetime_local"))
-    assert(out.columns.toSeq == Seq("event_name", "event_datetime_local",
-      "alpha", "dice_tickets_sold", "shotgun_tickets_sold", "zeta"))
-    val r2 = out.filter(col("event_name") === "E2").collect()(0)
-    assert(r2.getAs[String]("shotgun_tickets_sold") == "")
-    assert(r2.getAs[String]("alpha") == "y")
-  }
-
-  test("headerUnion: fixed column absent from EVERY input still renders as \"\"") {
-    val a = Seq(("E1", "2026-09-10")).toDF("event_name", "event_datetime_local")
-    val out = Normalize.headerUnion(Seq(a),
-      Seq("event_name", "event_datetime_local", "artist"))
-    assert(out.columns.toSeq ==
-      Seq("event_name", "event_datetime_local", "artist"))
-    assert(out.collect()(0).getAs[String]("artist") == "")
-  }
-
   test("sinks: overwrite skip-when-empty, append partitioning, csv render") {
     val tmp = tempDir("graft-sinks").toString
     val df = Seq(("a", java.sql.Timestamp.valueOf("2026-09-10 20:00:00"), "run-1"))
@@ -99,21 +76,5 @@ class NormalizeSpec extends SparkSpec {
     assert(spark.read.json(s"$tmp/dbg/sample_json").count() == 2)
     // best-effort: a bogus sample column must not throw
     Sinks.debugArtifacts(df, s"$tmp/dbg2", "no_such_col")
-  }
-
-  test("sinks: ORC round-trip preserves schema and values") {
-    val tmp = tempDir("graft-orc").toString
-    val df = Seq(
-      ("Électro Fête", java.sql.Timestamp.valueOf("2026-09-10 20:00:00"), 42L, 12.5),
-      ("Plain", java.sql.Timestamp.valueOf("2026-09-11 21:00:00"), 7L, 0.0))
-      .toDF("name", "ts", "sold", "pct")
-    assert(Sinks.overwriteSnapshotAs(df, s"$tmp/orc", "orc"))
-    val back = spark.read.orc(s"$tmp/orc")
-    // file sources widen nullability on read — compare names and types
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.orderBy("name").collect().map(_.getString(0)).toSeq ==
-      Seq("Plain", "Électro Fête"))
-    assert(!Sinks.overwriteSnapshotAs(df.filter(lit(false)), s"$tmp/empty", "orc"))
   }
 }

@@ -6,7 +6,6 @@ import graft.etl.Pipeline
 import graft.etl.expressions.Registry
 
 class PipelineSpec extends SparkSpec {
-  import spark.implicits._
 
   test("custom expressions callable from SQL after registration") {
     Registry.register(spark)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins, by reading `src/main/scala` (no Spark), where a streaming run
   * and a session-config change may be written (one streaming-drain
   * helper, one session config), that each shared query rule is
-  * written once per engine, and that the PQ operators keep one code
-  * path.
+  * written once per engine, that the PQ operators keep one code
+  * path, and that every definition is reached from main code or the
+  * etlbench harness.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -53,12 +54,16 @@ class SourceScanSpec extends AnyFunSuite {
     out.toString
   }
 
-  private lazy val sources: Map[String, String] = {
-    val files = Files.walk(root).iterator().asScala
+  /** Every `.scala` file under `dir`, comment-blanked, keyed by its
+    * path relative to `dir`.
+    */
+  private def load(dir: Path): Map[String, String] =
+    Files.walk(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    files.map(f => root.relativize(f).toString ->
-      code(new String(Files.readAllBytes(f), "UTF-8"))).toMap
-  }
+      .map(f => dir.relativize(f).toString ->
+        code(new String(Files.readAllBytes(f), "UTF-8"))).toMap
+
+  private lazy val sources = load(root)
 
   private def filesWith(token: String): Set[String] =
     sources.collect { case (f, src) if src.contains(token) => f }.toSet
@@ -69,6 +74,57 @@ class SourceScanSpec extends AnyFunSuite {
       Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1))
         .takeWhile(_ >= 0).size
     }.sum
+
+  private val definition =
+    ("(?<!\\w)((?:(?:private|protected)(?:\\[\\w+\\])?\\s+|override\\s+|final\\s+|" +
+      "implicit\\s+|lazy\\s+|case\\s+|sealed\\s+|abstract\\s+)*)" +
+      "(def|val|var|class|object|trait)\\s+([A-Za-z_]\\w*)").r
+  private val topLevel =
+    "\\n(?:(?:case|final|sealed|abstract)\\s+)*(?:object|class|trait)\\s".r
+
+  /** The definitions in `main` whose name occurs in `main` and
+    * `harness` only at definitions of that name. Skipped: plain
+    * `private` members (the compiler's unused check covers them),
+    * `override` and `protected` members (hooks a superclass calls,
+    * such as Catalyst's `doGenCode`), class parameters, and objects
+    * that define `main`, with their `main`. Each is keyed by its file's
+    * path under `graft/`, dotted, plus `.name` unless it names the file.
+    */
+  private def unreached(main: Map[String, String],
+      harness: Map[String, String]): Set[String] = {
+    case class Def(file: String, name: String, skipped: Boolean)
+    val defs = main.toSeq.flatMap { case (file, src) =>
+      definition.findAllMatchIn(src).map { m =>
+        val (mods, kind, name) = (m.group(1), m.group(2), m.group(3))
+        val prev = src.lastIndexWhere(!_.isWhitespace, m.start - 1)
+        def objectBody = {
+          val rest = src.substring(m.end)
+          rest.take(topLevel.findFirstMatchIn(rest).fold(rest.length)(_.start))
+        }
+        Def(file, name,
+          "\\bprivate(?!\\[)".r.findFirstIn(mods).nonEmpty ||
+            mods.contains("override") || mods.contains("protected") ||
+            (Set("val", "var")(kind) && prev >= 0 && "(,".contains(src(prev))) ||
+            (kind == "def" && name == "main") ||
+            (kind == "object" && objectBody.contains("def main(")))
+      }
+    }
+    val uses = (main.values ++ harness.values)
+      .flatMap("\\w+".r.findAllIn(_)).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val sites = defs.groupMapReduce(_.name)(_ => 1)(_ + _)
+    defs.filter(d => !d.skipped && uses(d.name) <= sites(d.name)).map { d =>
+      val path = d.file.stripPrefix("graft/").stripSuffix(".scala")
+      val key = path.replace('/', '.')
+      if (path.split('/').last == d.name) key else s"$key.${d.name}"
+    }.toSet
+  }
+
+  /** The unreached definitions that stay, each with its reason. */
+  private val unreachedAllowed = Map(
+    "etl.Pipeline" -> ("the reference's cli.py DAG, pinned by PipelineSpec; " +
+      "reaching it from the registry would take a new query"),
+    "PlanAudit.eagerAtBuild" ->
+      "the eager-at-build query classification QueriesSpec and PlanAuditSpec read")
 
   test("comments are blanked, string and char literals are kept") {
     val src = "a // writeStream\n/* x /* writeStream */ y */ b \"// kept\" '\"' c"
@@ -99,5 +155,33 @@ class SourceScanSpec extends AnyFunSuite {
     assert(twins.isEmpty) // a `perm: Option[Seq[Int]]` parameter instead
     assert(count("element_at(element_at(col(\"lut\")") == 1) // adcSum
     assert(count("pqLutOf(col(\"q_vec\")") == 1) // withLut
+  }
+
+  test("unreached definitions: public and private[x] flagged, harness uses count") {
+    val main = Map(
+      "graft/a/A.scala" -> """package graft.a
+        |object A {
+        |  def unused(x: Int): Int = x
+        |  private[a] val hidden = 1
+        |  private def quiet = used
+        |  override def toString = "a"
+        |  def used = 3
+        |  def viaHarness = 4
+        |}
+        |case class B(val field: Int, other: Int)
+        |object Entry {
+        |  def main(args: Array[String]): Unit = ()
+        |}""".stripMargin)
+    val harness = Map("H.scala" -> "object H { A.viaHarness; B(1, 2) }")
+    assert(unreached(main, harness) == Set("a.A.unused", "a.A.hidden"))
+  }
+
+  test("every main definition is reached from main code or the etlbench harness") {
+    val harness = load(Paths.get("etlbench/harness/src"))
+    assert(harness.nonEmpty)
+    val flagged = unreached(sources, harness)
+    assert(flagged == unreachedAllowed.keySet,
+      s"unreached: ${(flagged -- unreachedAllowed.keySet).toSeq.sorted}; " +
+        s"allowed but now reached: ${(unreachedAllowed.keySet -- flagged).toSeq.sorted}")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Value-level pins for q226, the run-assembly capstone: the
   * (phase × shard) grid must re-aggregate to the q215 phase-budget
   * card exactly (same fold, same thresholds — composition adds a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Value-level pins for the wave-25 queries: the streaming decon
   * monitor's row-identity with the q207 batch card, and the
   * water-fill allocator's budget conservation / cap / saturation

@@ -173,7 +173,7 @@ class Wave29Spec extends SparkSpec {
     assert(rows.map(_._1).toSeq == Seq("adc", "adc_rerank"))
     def rd(v: Double) = BigDecimal(v)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    rows.foreach { case (l, ks, nt, nf, rec) =>
+    rows.foreach { case (l, _, nt, nf, rec) =>
       assert(nt == 150, s"$l: truth side should be 50 queries x top-3")
       assert(nf >= 0 && nf <= nt && rec == rd(nf.toDouble / nt),
         s"$l: recall arithmetic broken")
@@ -374,7 +374,7 @@ class Wave29Spec extends SparkSpec {
     assert(rows.map(_._1).toSeq == Seq("adc_index", "adc_index_rerank"))
     def rd(v: Double) = BigDecimal(v)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    rows.foreach { case (l, ks, nt, nf, rec) =>
+    rows.foreach { case (l, _, nt, nf, rec) =>
       assert(nt == 150 && nf >= 0 && nf <= nt && rec == rd(nf.toDouble / nt),
         s"$l: card arithmetic broken")
     }

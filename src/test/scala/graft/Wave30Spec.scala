@@ -317,7 +317,6 @@ class Wave30Spec extends SparkSpec {
 
   test("BPE segment count: length arithmetic ≡ split+filter over the " +
       "real merge chain (q126/q122/q125 kernel)") {
-    import spark.implicits._
     val S = "\u0001"; val SS = S + S
     // the exact rep-string construction + a real-ish merge chain
     val words = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")

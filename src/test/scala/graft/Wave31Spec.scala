@@ -18,8 +18,6 @@ class Wave31Spec extends SparkSpec {
     org.apache.spark.sql.GraftBridge.column(e)
   private def ex(c: Column) =
     org.apache.spark.sql.GraftBridge.expression(c)
-  private def hofDot(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
 
   /** Real sf0.001 embeddings + adversarial vectors. */
   private def fixture = {
@@ -86,7 +84,7 @@ class Wave31Spec extends SparkSpec {
   test("PqArgmin / PqMinErr kernels ≡ composed argmin/err forms — " +
       "slice subvectors, every subspace, adversarial rows") {
     val (df, _) = fixture
-    val m = 8; val subDim = 8; val nCents = 16
+    val subDim = 8; val nCents = 16
     for (sub <- Seq(0, 3, 7)) {
       val cents = (0 until nCents).map(c =>
         (0 until subDim).map(i => Similarity.pqVal(sub, c, i)): Seq[Double])
