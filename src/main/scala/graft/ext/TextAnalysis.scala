@@ -58,10 +58,9 @@ object TextAnalysis {
     * former `(len(text) - (n-1)) / n` shortcut assumed exactly one
     * separator char between tokens and none at the ends — repeated or
     * leading/trailing whitespace inflated the mean on exactly the
-    * messy text a quality metric exists for. `text` is kept in the
-    * signature for source compatibility; the metric no longer reads it.
+    * messy text a quality metric exists for.
     */
-  def meanWordLenFromTokens(text: Column, toks: Column): Column =
+  def meanWordLenFromTokens(toks: Column): Column =
     aggregate(transform(toks, t => length(t).cast("long")),
       lit(0L), (a, v) => a + v).cast("double") /
       size(toks).cast("double")

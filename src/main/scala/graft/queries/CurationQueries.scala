@@ -44,8 +44,7 @@ object CurationQueries extends QueryFamily {
         TA.wsTokens(lower(col("text"))).as("ltoks"))
       .select(col("doc_id"), col("source"), col("lang"), col("hb"),
         size(col("toks")).cast("long").as("n_words"),
-        round(TA.meanWordLenFromTokens(col("text"), col("toks")), 6)
-          .as("mwl"),
+        round(TA.meanWordLenFromTokens(col("toks")), 6).as("mwl"),
         round(TA.stopwordRatioFromTokens(col("ltoks")), 6).as("sr"),
         round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
           / size(col("ltoks")).cast("double"), 6).as("df"))
@@ -382,8 +381,7 @@ object CurationQueries extends QueryFamily {
         TA.wsTokens(lower(col("text"))).as("ltoks"))
       .select(col("doc_id"), col("source"), col("lang"),
         size(col("toks")).cast("long").as("n_words"),
-        round(TA.meanWordLenFromTokens(col("text"), col("toks")), 6)
-          .as("mwl"),
+        round(TA.meanWordLenFromTokens(col("toks")), 6).as("mwl"),
         round(TA.stopwordRatioFromTokens(col("ltoks")), 6).as("sr"),
         round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
           / size(col("ltoks")).cast("double"), 6).as("df"))

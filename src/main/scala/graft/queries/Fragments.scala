@@ -33,22 +33,37 @@ object Fragments {
     * each arriving micro-batch with the IDENTICAL frozen coefficients
     * the batch chain (q212) and the q108 gate use.
     */
-  private[queries] def qualityOf(docs: DataFrame): DataFrame = {
-    val f = docs
+  private[queries] def qualityOf(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), col("source"), col("text"),
         TA.wsTokens(col("text")).as("toks"),
         TA.wsTokens(lower(col("text"))).as("ltoks"))
       .select(col("doc_id"), col("source"),
         size(col("toks")).cast("double").as("n_words"),
-        TA.meanWordLenFromTokens(col("text"), col("toks")).as("mwl"),
+        TA.meanWordLenFromTokens(col("toks")).as("mwl"),
         TA.punctRatio(col("text")).as("punct"),
         TA.stopwordRatioFromTokens(col("ltoks")).as("stop"))
+      .select(col("doc_id"), col("source"),
+        qualityLogistic.as("quality_score"))
+
+  /** q108's frozen logistic, rounded at 6, over the `n_words`, `mwl`,
+    * `punct` and `stop` feature columns [[qualityOf]] builds (q116 and
+    * q151 build the same features beside their label battery).
+    */
+  private[queries] def qualityLogistic: Column = {
     val z = lit(0.5) + lit(4.0) * col("stop") - lit(6.0) * col("punct") -
       lit(0.4) * abs(col("mwl") - lit(5.0)) +
       lit(0.15) * log(lit(1.0) + col("n_words"))
-    f.select(col("doc_id"), col("source"),
-      round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("quality_score"))
+    round(lit(1.0) / (lit(1.0) + exp(-z)), 6)
   }
+
+  /** The deterministic per-doc uniform draw of q119, q120, q133, q161
+    * and q166: md5(doc_id)'s first 6 hex chars over 0xffffff, rounded
+    * at 6.
+    */
+  private[queries] def md5Uniform: Column =
+    round(conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
+      .cast("double") / lit(16777215.0), 6)
 
   /** The corpus vocabulary rule shared by q63 (vocab construction) and
     * q88 (OOV scoring): whitespace tokens of lowercased text, top `k`

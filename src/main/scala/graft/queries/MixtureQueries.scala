@@ -21,48 +21,53 @@ object MixtureQueries extends QueryFamily {
     * desynchronize on the weight or the draw. Pure scan-stage
     * arithmetic; `source` rides along for the grouped consumer.
     */
-  private def esKeyFrame(s: SparkSession, d: String): DataFrame = {
-    val f = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), col("text"),
-        TA.wsTokens(col("text")).as("toks"),
-        TA.wsTokens(lower(col("text"))).as("ltoks"))
-      .select(col("doc_id"), col("source"),
-        size(col("toks")).cast("double").as("n_words"),
-        TA.meanWordLenFromTokens(col("text"), col("toks")).as("mwl"),
-        TA.punctRatio(col("text")).as("punct"),
-        TA.stopwordRatioFromTokens(col("ltoks")).as("stop"))
-    val z = lit(0.5) + lit(4.0) * col("stop") - lit(6.0) * col("punct") -
-      lit(0.4) * abs(col("mwl") - lit(5.0)) +
-      lit(0.15) * log(lit(1.0) + col("n_words"))
-    f.select(col("doc_id"), col("source"),
-        round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("quality_score"),
-        greatest(round(conv(substring(md5(col("doc_id").cast("string")), 1, 6),
-          16, 10).cast("double") / lit(16777215.0), 6), lit(1e-9)).as("u"))
+  private def esKeyFrame(s: SparkSession, d: String): DataFrame =
+    docQuality(s, d)
+      .withColumn("u", greatest(md5Uniform, lit(1e-9)))
       .withColumn("skey",
         round(pow(col("u"), lit(1.0) / col("quality_score")), 6))
-  }
 
-  /** The curriculum phase frame shared by q209 (the schedule card) and
-    * q215 (phase-aware packing): per doc, the q108 frozen score, its
-    * ws-token count, and the 1/2/3 phase from EXACT score terciles
-    * (the distributed R-7 quantile shape — q153's discipline — so the
+  /** The curriculum phase frame shared by q209 (the schedule card),
+    * the phase-pure packers (q215, q226) and the mixture orders (q236,
+    * q241, q247, q250): per doc, the q108 frozen score, its ws-token
+    * count, and the 1/2/3 phase from EXACT score terciles (the
+    * distributed R-7 quantile shape — q153's discipline — so the
     * thresholds are a 2-scalar broadcast and assignment is a pure
-    * scan). One definition so the schedule and the packer cannot
-    * desynchronize on a threshold.
+    * scan). The cuts are computed on the docs matching `cutOn`: every
+    * doc, or the v1 base slice whose thresholds a release freezes
+    * (q241, q250). One definition so the schedule and the packers
+    * cannot desynchronize on a threshold.
     */
-  private def curriculumFrame(s: SparkSession, d: String): DataFrame = {
+  private def curriculumFrame(s: SparkSession, d: String,
+      cutOn: Column): DataFrame = {
     val q = docQuality(s, d)
     val toks = Tables.documents(s, d).select(col("doc_id"),
       size(TA.wsTokens(col("text"))).cast("long").as("n_tokens"))
-    val th = sourceQuantiles(q, Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
+    q.join(toks, Seq("doc_id")).crossJoin(broadcast(terciles(q.filter(cutOn))))
+      .withColumn("phase", phaseOf(col("t1"), col("t2")))
+  }
+
+  /** The two quality_score tercile cuts (t1, t2) of `q`, one row. */
+  private def terciles(q: DataFrame): DataFrame =
+    sourceQuantiles(q, Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
         keys = Seq.empty, valueCol = "quality_score")
       .select(col("t1"), col("t2"))
-    q.join(toks, Seq("doc_id")).crossJoin(broadcast(th))
-      .withColumn("phase",
-        when(col("quality_score") <= col("t1"), 1L)
-          .when(col("quality_score") <= col("t2"), 2L)
-          .otherwise(3L))
-  }
+
+  /** The curriculum phase of `quality_score` under the cuts lo < hi. */
+  private def phaseOf(lo: Column, hi: Column): Column =
+    when(col("quality_score") <= lo, 1L)
+      .when(col("quality_score") <= hi, 2L).otherwise(3L)
+
+  /** [[curriculumFrame]] as FFD pack input: the `phase:source`
+    * composite shard key, so a sequence never mixes phases.
+    */
+  private def phasedPackInput(s: SparkSession, d: String,
+      cutOn: Column): DataFrame =
+    curriculumFrame(s, d, cutOn)
+      .select(col("doc_id"),
+        concat_ws(":", col("phase"), col("source")).as("source"),
+        col("n_tokens"))
+      .filter(col("n_tokens") > 0)
 
   /** Writes `batches` into `p` as ONE parquet file each, named
     * ingest_k.parquet with strictly increasing (fixed, deterministic)
@@ -276,31 +281,140 @@ object MixtureQueries extends QueryFamily {
     docs.sparkSession.createDataFrame(packed, schema)
   }
 
-  /** Shard count of the training-order family (q230/q233) — ONE
-    * constant interpolated into both the Spark shard rule and the
-    * oracle SQL so the two sides cannot diverge (the [[packBudget]]
-    * discipline). Deploy-time override via GRAFT_ORDER_SHARDS: at
-    * 100 TB the shard count is sized so a manifest/nShards slice fits
-    * one task (tens of thousands of shards), not this fixture default.
-    * Counts beyond 16 would also widen the 1-hex-char hash prefix the
-    * rule draws from — the rule is honest only for nShards ≤ 16.
+  /** The FFD pack input of a documents-shaped frame: (doc_id, source,
+    * n_tokens = normalized word count), empty docs dropped.
     */
-  private[graft] val orderShards: Int = {
-    val raw = sys.env.get("GRAFT_ORDER_SHARDS")
-    val n = try raw.map(_.trim.toInt).getOrElse(8)
-    catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"GRAFT_ORDER_SHARDS must be an integer in [1, 16], got " +
-          s"'${raw.getOrElse("")}'")
-    }
-    // the shard rule draws from ONE hex char of the md5 prefix:
-    // n <= 0 breaks the pmod/% rule outright, and n > 16 would leave
-    // shards 16..n-1 permanently empty (16 distinct draws can never
-    // cover them) — fail loudly at load instead (ADVICE r17 #1)
-    require(n >= 1 && n <= 16,
-      s"GRAFT_ORDER_SHARDS must be in [1, 16] (the shard rule draws " +
-        s"from a 1-hex-char md5 prefix — 16 distinct values), got $n")
-    n
+  private def packInput(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+        size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
+      .filter(col("n_tokens") > 0)
+
+  /** q192's concat-and-chunk layout of a [[packInput]] frame: per
+    * source, docs concatenated in doc_id order and cut into
+    * [[packBudget]]-token sequences; per doc, its token offset `off`
+    * in the stream and the first/last sequence it spans (shared by
+    * q192, q194 and q196).
+    */
+  private def chunkSpans(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    docs.withColumn("off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("seq_first", expr(s"off div $packBudget"))
+      .withColumn("seq_last", expr(s"(off + n_tokens - 1) div $packBudget"))
+  }
+
+  /** [[ffdPack]] of `docs` into NEW sequences only: each seq_id
+    * continues past the per-source max(seq_id) + 1 of the `prior`
+    * manifest (from 0 for a source `prior` lacks) — the incremental-
+    * packing rule that keeps released sequences immutable (q218, q221,
+    * q223, q225, q233).
+    */
+  private def packAfter(prior: DataFrame, docs: DataFrame): DataFrame = {
+    val seq0 = prior.groupBy(col("source"))
+      .agg((max(col("seq_id")) + 1).as("seq0"))
+    ffdPack(docs)
+      .join(seq0, Seq("source"), "left")
+      .withColumn("seq_id", col("seq_id") + coalesce(col("seq0"), lit(0L)))
+      .drop("seq0")
+  }
+
+  /** Shard count of the loader-shard family (q208, q223, q226, q230,
+    * q233, q244) — ONE constant interpolated into both the Spark shard
+    * rule and the oracle SQL so the two sides cannot diverge (the
+    * [[packBudget]] discipline). The rule draws from one hex char of
+    * the md5 prefix, so it is honest only for counts up to 16.
+    */
+  private val orderShards = 8
+
+  /** The first md5 hex char of `key` as 0..15, mod `n`. */
+  private def md5Hex1Mod(key: Column, n: Long): Column =
+    pmod(conv(substring(md5(key.cast("string")), 1, 1), 16, 10).cast("long"),
+      lit(n))
+
+  /** The loader shard of a packed sequence: a content hash of its
+    * (source, seq_id) key, never a row number, so it is reproducible
+    * across re-runs and independent of scan order.
+    */
+  private def shardId: Column = md5Hex1Mod(
+    concat_ws(":", col("source"), col("seq_id").cast("string")), orderShards)
+
+  /** The sequence frame of the uniform training order (q230, q233,
+    * q244): a packed manifest aggregated per (source, seq_id) to
+    * n_docs, kept_tokens and the `extra` aggregates, keyed by the
+    * seeded v1 shuffle draw, the loader shard, and src_pos — the
+    * 0-based rank by (draw, seq_id) within the source.
+    */
+  private def orderSeqs(packed: DataFrame, extra: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wSrc = Window.partitionBy(col("source"))
+      .orderBy(col("draw"), col("seq_id"))
+    packed.groupBy(col("source"), col("seq_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_kept")).as("kept_tokens") +: extra: _*)
+      .withColumn("draw", substring(md5(concat_ws(":", lit("graft-order-v1"),
+        col("source"), col("seq_id").cast("string"))), 1, 8))
+      .withColumn("shard_id", shardId)
+      .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1)
+  }
+
+  /** The uniform order of an [[orderSeqs]] frame: global_pos is
+    * [[interleaveRank]] over each source's src_pos span (from 0 in a
+    * fresh release, past the released count in an appended block),
+    * shard_offset the rank by (src_pos, source) within the shard.
+    */
+  private def uniformOrder(seqs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val spans = seqs.groupBy(col("source"))
+      .agg(min(col("src_pos")).as("lo"), count(lit(1)).as("n"))
+    val wShard = Window.partitionBy(col("shard_id"))
+      .orderBy(col("src_pos"), col("source"))
+    interleaveRank(seqs, spans)
+      .withColumn("shard_offset", row_number().over(wShard).cast("long") - 1)
+  }
+
+  /** The 2.0× per-source water-fill a mixture order commits (q236,
+    * q241, q247, q250): (source, final_epochs) from the ws-token counts
+    * of `docs`.
+    */
+  private def committedFill(docs: DataFrame): DataFrame =
+    waterFillAlloc(
+        docs.select(col("source"),
+            size(TA.wsTokens(col("text"))).cast("long").as("nt"))
+          .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
+          .filter(col("n_tokens") > 0)
+          .select(col("source").as("lang"), col("n_tokens")), Seq(2.0))
+      .select(col("lang").as("source"), col("final_epochs"))
+
+  /** The committed stream's occurrence rows of a sequence frame `seqs`
+    * (`keys` ending in phase, source; plus seq_id): per (keys) group,
+    * ⌊e⌋ full epochs plus a partial pass of ⌊round(frac·n, 6)⌋
+    * sequences under the frozen `fill` epochs e, every epoch shuffled
+    * by its own seeded draw and the partial pass taking its draw
+    * prefix. Shared by the ranked order ([[chainedMixtureOrder]]) and
+    * q247's unranked cost card.
+    */
+  private def epochOccurrences(seqs: DataFrame, fill: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val k = keys.map(col)
+    val ep = seqs.groupBy(k: _*).agg(count(lit(1)).as("n_ps"))
+      .join(fill, Seq("source"))
+      .withColumn("fe", floor(col("final_epochs")))
+      .withColumn("n_part", floor(round(
+        (col("final_epochs") - floor(col("final_epochs")).cast("double"))
+          * col("n_ps").cast("double"), 6)))
+      .select(k :+ col("fe") :+ col("n_part"): _*)
+    val wEp = Window.partitionBy(k :+ col("epoch"): _*)
+      .orderBy(col("draw"), col("seq_id"))
+    seqs.join(broadcast(ep), keys)
+      .withColumn("epoch", explode(sequence(lit(0L), col("fe"))))
+      .withColumn("draw", substring(md5(concat_ws(":",
+        lit("graft-order-v2"), col("epoch").cast("string"),
+        col("phase").cast("string"), col("source"),
+        col("seq_id").cast("string"))), 1, 8))
+      .withColumn("er", row_number().over(wEp).cast("long"))
+      .filter(col("epoch") < col("fe") || col("er") <= col("n_part"))
   }
 
   /** CLOSED-FORM round-robin rank (VERDICT r16 #1): the global
@@ -420,23 +534,25 @@ object MixtureQueries extends QueryFamily {
     *
     * Row-for-row equivalence to the chained fold is pinned by
     * Wave32Spec (the old fold inlined in the spec, compared on the
-    * fixture) and the unchanged q241/q250 DuckDB oracles.
+    * fixture) and the unchanged q241/q250 DuckDB oracles. A one-step
+    * chain is q236's single ordered block: every shift is 0.
     *
     * `ph` is the phased doc frame (doc_id, source = "phase:source",
     * n_tokens > 0); `fill` the frozen water-fill epochs; `steps` the
     * chain as (origin label, membership predicate on doc_id-derived
-    * columns) in ship order — the predicates must partition `ph`.
+    * columns) in ship order — the predicates must partition `ph`
+    * (the last step's is not evaluated: it takes the remaining rows).
     */
   private[graft] def chainedMixtureOrder(ph: DataFrame, fill: DataFrame,
       steps: Seq[(String, Column)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(steps.size >= 2, "chainedMixtureOrder: need a chain")
-    // origin index = position in the chain (all cursors read low→high)
+    require(steps.nonEmpty, "chainedMixtureOrder: need at least one step")
+    // origin index = position in the chain (all cursors read low→high);
+    // the last step takes every row no earlier predicate matched
     val oCol = steps.init.zipWithIndex
-      .foldLeft(null: Column) { case (acc, ((_, pred), i)) =>
-        if (acc == null) when(pred, lit(i.toLong))
-        else acc.when(pred, lit(i.toLong))
-      }.otherwise(lit(steps.size - 1L))
+      .foldRight(lit(steps.size - 1L)) { case (((_, pred), i), acc) =>
+        when(pred, lit(i.toLong)).otherwise(acc)
+      }
     val originNames = array(steps.map(st => lit(st._1)): _*)
     // ONE pack under the origin-composite key
     val packed = ffdPack(ph.select(col("doc_id"),
@@ -458,29 +574,11 @@ object MixtureQueries extends QueryFamily {
     val seqs = seqs0.join(broadcast(off), Seq("o", "phase", "source"))
       .withColumn("seq_id", col("seq_id") + col("seq_off"))
       .drop("seq_off")
-    // q236's ordered-block body, every frame keyed by origin too
-    val np = seqs.groupBy(col("o"), col("phase"), col("source"))
-      .agg(count(lit(1)).as("n_ps"))
-    val ep = np.join(fill, Seq("source"))
-      .withColumn("fe", floor(col("final_epochs")))
-      .withColumn("n_part", floor(round(
-        (col("final_epochs") - floor(col("final_epochs")).cast("double"))
-          * col("n_ps").cast("double"), 6)))
-      .select(col("o"), col("phase"), col("source"), col("fe"),
-        col("n_part"))
-    val wEp = Window.partitionBy(col("o"), col("phase"), col("source"),
-      col("epoch")).orderBy(col("draw"), col("seq_id"))
+    // the ordered-block body, every frame keyed by origin too
     val wSrc = Window.partitionBy(col("o"), col("phase"), col("source"))
       .orderBy(col("epoch"), col("draw"), col("seq_id"))
     val rows = graft.util.Persist(
-      seqs.join(broadcast(ep), Seq("o", "phase", "source"))
-        .withColumn("epoch", explode(sequence(lit(0L), col("fe"))))
-        .withColumn("draw", substring(md5(concat_ws(":",
-          lit("graft-order-v2"), col("epoch").cast("string"),
-          col("phase").cast("string"), col("source"),
-          col("seq_id").cast("string"))), 1, 8))
-        .withColumn("er", row_number().over(wEp).cast("long"))
-        .filter(col("epoch") < col("fe") || col("er") <= col("n_part"))
+      epochOccurrences(seqs, fill, Seq("o", "phase", "source"))
         .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1)
         .select(col("o"), col("phase"), col("source"), col("seq_id"),
           col("epoch"), col("kept_tokens"), col("draw"), col("src_pos")))
@@ -660,22 +758,8 @@ object MixtureQueries extends QueryFamily {
     //      quality mix. Pure scan-stage arithmetic; zero shuffles
     //      before the output sort ----
     "q119_quality_resample" -> ((s, d) => {
-      val f = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"),
-          TA.wsTokens(col("text")).as("toks"),
-          TA.wsTokens(lower(col("text"))).as("ltoks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("double").as("n_words"),
-          TA.meanWordLenFromTokens(col("text"), col("toks")).as("mwl"),
-          TA.punctRatio(col("text")).as("punct"),
-          TA.stopwordRatioFromTokens(col("ltoks")).as("stop"))
-      val z = lit(0.5) + lit(4.0) * col("stop") - lit(6.0) * col("punct") -
-        lit(0.4) * abs(col("mwl") - lit(5.0)) +
-        lit(0.15) * log(lit(1.0) + col("n_words"))
-      f.select(col("doc_id"),
-          round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("quality_score"),
-          round(conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
-            .cast("double") / lit(16777215.0), 6).as("u"))
+      docQuality(s, d)
+        .select(col("doc_id"), col("quality_score"), md5Uniform.as("u"))
         .filter(col("u") < col("quality_score"))
         .orderBy(col("doc_id"))
     }),
@@ -905,9 +989,7 @@ object MixtureQueries extends QueryFamily {
             .as("sample_frac"),
           ceil(round(col("want") / col("n_docs"), 6)).cast("long")
             .as("epochs"))
-      val u = round(conv(substring(md5(col("doc_id").cast("string")), 1, 6),
-        16, 10).cast("double") / lit(16777215.0), 6)
-      val kept = docs.select(col("lang"), u.as("u"))
+      val kept = docs.select(col("lang"), md5Uniform.as("u"))
         .join(broadcast(plan.select(col("lang"), col("sample_frac"))),
           Seq("lang"))
         .groupBy(col("lang"))
@@ -994,18 +1076,8 @@ object MixtureQueries extends QueryFamily {
     //      out to its seq_first..seq_last range (bounded by
     //      doc_len/512 + 1), one (source, seq) aggregate ----
     "q194_pack_purity" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val manifest = docs
-        .withColumn("off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .select(col("doc_id"), col("source"),
-          expr("off div 512").as("seq_first"),
-          expr("(off + n_tokens - 1) div 512").as("seq_last"))
+      val manifest = chunkSpans(packInput(Tables.documents(s, d)))
+        .select(col("source"), col("seq_first"), col("seq_last"))
       val seqDocs = manifest
         .select(col("source"),
           explode(sequence(col("seq_first"), col("seq_last"))).as("seq"))
@@ -1038,21 +1110,12 @@ object MixtureQueries extends QueryFamily {
     //      manifest a packed-shard reader needs to locate any doc.
     //      One running-total window per source shard (q61's shape);
     //      all arithmetic in integer space ----
-    "q192_concat_chunk" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      docs.withColumn("off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+    "q192_concat_chunk" -> ((s, d) =>
+      chunkSpans(packInput(Tables.documents(s, d)))
         .select(col("doc_id"), col("source"), col("n_tokens"),
-          expr("off div 512").as("seq_first"),
-          expr("(off + n_tokens - 1) div 512").as("seq_last"),
-          pmod(col("off"), lit(512L)).as("offset_in_seq"))
-        .orderBy(col("doc_id"))
-    }),
+          col("seq_first"), col("seq_last"),
+          pmod(col("off"), lit(packBudget)).as("offset_in_seq"))
+        .orderBy(col("doc_id"))),
 
     // ---- boundary-respecting sequence packing: the packer q194's
     //      purity report motivates — greedy first-fit-decreasing over
@@ -1064,13 +1127,8 @@ object MixtureQueries extends QueryFamily {
     //      take one full sequence — the truncate-or-new-sequence
     //      rule). The oracle replays the fold verbatim as a recursive
     //      CTE over the same (capped DESC, doc_id) order ----
-    "q195_pack_ffd" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      ffdPack(docs).orderBy(col("doc_id"))
-    }),
+    "q195_pack_ffd" -> ((s, d) =>
+      ffdPack(packInput(Tables.documents(s, d))).orderBy(col("doc_id"))),
 
     // ---- the packing-layout decision table: per source, what q192's
     //      concat-and-chunk costs vs what the FFD packer costs —
@@ -1082,21 +1140,11 @@ object MixtureQueries extends QueryFamily {
     //      splits NONE — computed from both manifests, not asserted).
     //      Two bounded per-source aggregates over the two manifests ----
     "q196_pack_compare" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // two consumers (the chunking window and the FFD fold) of the
       // tokenized frame — persist so the doc scan + tokenization runs
       // once (q64's policy switch applies at corpus scale)
-      val docs = graft.util.Persist(Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0))
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cc = docs
-        .withColumn("off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .select(col("source"), col("n_tokens"),
-          expr(s"off div $packBudget").as("seq_first"),
-          expr(s"(off + n_tokens - 1) div $packBudget").as("seq_last"))
+      val docs = graft.util.Persist(packInput(Tables.documents(s, d)))
+      val cc = chunkSpans(docs)
         .groupBy(col("source"))
         .agg(sum(col("n_tokens")).as("total_tokens"),
           sum(when(col("seq_last") > col("seq_first"), 1L).otherwise(0L))
@@ -1280,17 +1328,10 @@ object MixtureQueries extends QueryFamily {
     //      groupBy on the packed manifest + one 8-row aggregate; the
     //      total is a one-row fenced scalar (q48's pattern) ----
     "q208_shard_manifest" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val seqs = ffdPack(docs)
+      val seqs = ffdPack(packInput(Tables.documents(s, d)))
         .groupBy(col("source"), col("seq_id"))
         .agg(count(lit(1)).as("nd"), sum(col("n_kept")).as("kept"))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(8L)))
+        .withColumn("shard_id", shardId)
       // two consumers (the card and its one-row total) of the 8-row
       // aggregate — persist so the packing fold runs once
       val ag = graft.util.Persist(seqs.groupBy(col("shard_id"))
@@ -1320,7 +1361,7 @@ object MixtureQueries extends QueryFamily {
     //      Wave19Spec-pinned ----
     "q209_curriculum_phases" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val ph = curriculumFrame(s, d)
+      val ph = curriculumFrame(s, d, lit(true))
       val per = ph.groupBy(col("phase"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
           round(avg(col("quality_score")), 6).as("mean_quality"))
@@ -1428,8 +1469,7 @@ object MixtureQueries extends QueryFamily {
     //      maxima and the three EG normalizers are one-row fenced
     //      scalars (q205's pattern, chained) ----
     "q212_doremi_chained" -> ((s, d) => {
-      val batchOf = pmod(conv(substring(md5(col("doc_id").cast("string")),
-        1, 1), 16, 10).cast("long"), lit(3L))
+      val batchOf = md5Hex1Mod(col("doc_id"), 3)
       // one corpus scan: the per-(source, batch) means pivot to one
       // source-cardinality frame every chained step reads
       val pv = graft.util.Persist(docQuality(s, d)
@@ -1484,8 +1524,7 @@ object MixtureQueries extends QueryFamily {
     "q214_stream_mixture" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
-      val batchOf = pmod(conv(substring(md5(col("doc_id").cast("string")),
-        1, 1), 16, 10).cast("long"), lit(3L))
+      val batchOf = md5Hex1Mod(col("doc_id"), 3)
       val priorDir = CoreQueries.sharedInputDir(
         s"graft_q214_prior_${CoreQueries.dirToken(d)}") { p =>
         val cnt = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
@@ -1551,12 +1590,7 @@ object MixtureQueries extends QueryFamily {
     //      q209's schedule. The oracle replays the fold over the
     //      composite key with the phase CTEs inlined ----
     "q215_curriculum_packing" -> ((s, d) => {
-      val cf = curriculumFrame(s, d)
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      ffdPack(cf)
+      ffdPack(phasedPackInput(s, d, lit(true)))
         .withColumn("phase", split(col("source"), ":").getItem(0)
           .cast("long"))
         .groupBy(col("phase"))
@@ -1582,17 +1616,14 @@ object MixtureQueries extends QueryFamily {
     //      (q195 per-shard incrementality) instead of re-running the
     //      global fold. Two folds + one doc_id-keyed join ----
     "q217_repack_churn" -> ((s, d) => {
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
-      val pb = ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id")))))
+      val pb = ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id")))))
         .select(col("doc_id"), col("source"), col("seq_id").as("b_seq"),
           col("offset_in_seq").as("b_off"))
-      val pf = ffdPack(tok(docs))
+      val pf = ffdPack(packInput(docs))
         .select(col("doc_id"), col("seq_id").as("f_seq"),
           col("offset_in_seq").as("f_off"))
-      val nd = tok(docs.filter(isDeltaDoc(col("doc_id"))))
+      val nd = packInput(docs.filter(isDeltaDoc(col("doc_id"))))
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta_docs"))
       pb.join(pf, Seq("doc_id"))
         .groupBy(col("source"))
@@ -1620,20 +1651,13 @@ object MixtureQueries extends QueryFamily {
     //      Wave21Spec-pinned against q195. Output is the combined
     //      manifest with provenance ----
     "q218_incremental_packing" -> ((s, d) => {
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       // two consumers (the union and the per-source seq offsets) of
       // the base fold — persist so it runs once
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
-      val seq0 = base.groupBy(col("source"))
-        .agg((max(col("seq_id")) + 1).as("seq0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
-        .join(seq0, Seq("source"), "left")
-        .withColumn("seq_id", col("seq_id") + coalesce(col("seq0"), lit(0L)))
-        .drop("seq0")
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id"))))))
+      val delta = packAfter(base,
+        packInput(docs.filter(isDeltaDoc(col("doc_id")))))
       base.withColumn("origin", lit("base"))
         .unionByName(delta.withColumn("origin", lit("delta")))
         .select(col("doc_id"), col("source"), col("n_tokens"), col("seq_id"),
@@ -1652,28 +1676,13 @@ object MixtureQueries extends QueryFamily {
     //      fold is Wave22Spec-pinned (chaining can only add open
     //      bins). Output is the three-origin manifest ----
     "q221_packing_chain" -> ((s, d) => {
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
-      val s1 = base.groupBy(col("source"))
-        .agg((max(col("seq_id")) + 1).as("s0"))
-      val d1 = graft.util.Persist(
-        ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")) &&
-            isFirstIngest(col("doc_id")))))
-          .join(s1, Seq("source"), "left")
-          .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
-          .drop("s0"))
-      val s2 = base.select(col("source"), col("seq_id"))
-        .unionByName(d1.select(col("source"), col("seq_id")))
-        .groupBy(col("source")).agg((max(col("seq_id")) + 1).as("s0"))
-      val d2 = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")) &&
-          !isFirstIngest(col("doc_id")))))
-        .join(s2, Seq("source"), "left")
-        .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
-        .drop("s0")
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id"))))))
+      val d1 = graft.util.Persist(packAfter(base, packInput(docs.filter(
+        isDeltaDoc(col("doc_id")) && isFirstIngest(col("doc_id"))))))
+      val d2 = packAfter(base.unionByName(d1), packInput(docs.filter(
+        isDeltaDoc(col("doc_id")) && !isFirstIngest(col("doc_id")))))
       base.withColumn("origin", lit("base"))
         .unionByName(d1.withColumn("origin", lit("ingest1")))
         .unionByName(d2.withColumn("origin", lit("ingest2")))
@@ -1696,16 +1705,9 @@ object MixtureQueries extends QueryFamily {
     "q222_frozen_curriculum" -> ((s, d) => {
       val q = docQuality(s, d)
         .withColumn("is_delta", isDeltaDoc(col("doc_id")))
-      val thB = sourceQuantiles(q.filter(!col("is_delta")),
-          Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
-          keys = Seq.empty, valueCol = "quality_score")
+      val thB = terciles(q.filter(!col("is_delta")))
         .select(col("t1").as("b1"), col("t2").as("b2"))
-      val thF = sourceQuantiles(q, Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
-          keys = Seq.empty, valueCol = "quality_score")
-        .select(col("t1").as("f1"), col("t2").as("f2"))
-      def phaseOf(lo: Column, hi: Column): Column =
-        when(col("quality_score") <= lo, 1L)
-          .when(col("quality_score") <= hi, 2L).otherwise(3L)
+      val thF = terciles(q).select(col("t1").as("f1"), col("t2").as("f2"))
       val staged = graft.util.Persist(q
         .crossJoin(broadcast(thB)).crossJoin(broadcast(thF))
         .withColumn("ph_frozen", phaseOf(col("b1"), col("b2")))
@@ -1736,25 +1738,15 @@ object MixtureQueries extends QueryFamily {
     //      added sequences and tokens, and the growth fraction a
     //      shard-rebalance monitor watches ----
     "q223_shard_maintenance" -> ((s, d) => {
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
-      val seq0 = base.groupBy(col("source"))
-        .agg((max(col("seq_id")) + 1).as("s0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
-        .join(seq0, Seq("source"), "left")
-        .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
-        .drop("s0")
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id"))))))
+      val delta = packAfter(base,
+        packInput(docs.filter(isDeltaDoc(col("doc_id")))))
       def seqsOf(df: DataFrame) = df
         .groupBy(col("source"), col("seq_id"))
         .agg(sum(col("n_kept")).as("kept"))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(8L)))
+        .withColumn("shard_id", shardId)
       val rel = seqsOf(base).groupBy(col("shard_id"))
         .agg(count(lit(1)).as("n_seqs_released"),
           sum(col("kept")).as("kept_released"))
@@ -1840,13 +1832,10 @@ object MixtureQueries extends QueryFamily {
     //      Per-batch cost is the batch's own fold; the seq-counter
     //      read is source-cardinality ----
     "q225_stream_packing" -> ((s, d) => {
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val baseDir = CoreQueries.sharedInputDir(
         s"graft_q225_base_${CoreQueries.dirToken(d)}") { p =>
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id")))))
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id")))))
           .write.mode("overwrite").parquet(p)
       }
       val base = s.read.parquet(baseDir)
@@ -1872,14 +1861,8 @@ object MixtureQueries extends QueryFamily {
             .unionByName(s.read.parquet(mRoot)
               .filter(col("batch_id") < id)
               .select(col("source"), col("seq_id")))
-        val seq0 = prior.groupBy(col("source"))
-          .agg((max(col("seq_id")) + 1).as("s0"))
-        Streaming.writeBatch(
-          ffdPack(tok(batch))
-            .join(seq0, Seq("source"), "left")
-            .withColumn("seq_id",
-              col("seq_id") + coalesce(col("s0"), lit(0L)))
-            .drop("s0"), id, mRoot, append = true)
+        Streaming.writeBatch(packAfter(prior, packInput(batch)), id, mRoot,
+          append = true)
       }
       base.withColumn("origin", lit("base"))
         .unionByName(s.read.parquet(mRoot)
@@ -1901,20 +1884,12 @@ object MixtureQueries extends QueryFamily {
     //      bounded aggregates; every stage is an already-gated
     //      operator, composed ----
     "q226_release_assembly" -> ((s, d) => {
-      val cf = curriculumFrame(s, d)
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      ffdPack(cf)
+      ffdPack(phasedPackInput(s, d, lit(true)))
         .groupBy(col("source"), col("seq_id"))
         .agg(count(lit(1)).as("nd"), sum(col("n_kept")).as("kept"))
         .withColumn("phase", split(col("source"), ":").getItem(0)
           .cast("long"))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(8L)))
+        .withColumn("shard_id", shardId)
         .groupBy(col("phase"), col("shard_id"))
         .agg(count(lit(1)).as("n_seqs"), sum(col("nd")).as("n_docs"),
           sum(col("kept")).as("kept_tokens"))
@@ -1983,36 +1958,13 @@ object MixtureQueries extends QueryFamily {
     //      tokens — so the global rank must never be a total-order
     //      window; global_pos is the interleaveRank closed form
     //      (bounded span broadcast + scan arithmetic), shard_offset a
-    //      window partitioned by the GRAFT_ORDER_SHARDS-parameterized
-    //      shard id (sized at deploy time so a shard fits one task) ----
+    //      window partitioned by the shard id (q208's rule, 8 shards) ----
     "q230_training_order" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val wSrc = Window.partitionBy(col("source"))
-        .orderBy(col("draw"), col("seq_id"))
       // two consumers (the span frame + the ranked rows) — persist so
       // the packing fold runs once
-      val seqs = graft.util.Persist(ffdPack(docs)
-        .groupBy(col("source"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_kept")).as("kept_tokens"))
-        .withColumn("draw", substring(md5(concat_ws(":",
-          lit("graft-order-v1"), col("source"),
-          col("seq_id").cast("string"))), 1, 8))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(orderShards.toLong)))
-        .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1))
-      val spans = seqs.groupBy(col("source"))
-        .agg(lit(0L).as("lo"), count(lit(1)).as("n"))
-      val wShard = Window.partitionBy(col("shard_id"))
-        .orderBy(col("src_pos"), col("source"))
-      interleaveRank(seqs, spans)
-        .withColumn("shard_offset",
-          row_number().over(wShard).cast("long") - 1)
+      val seqs = graft.util.Persist(
+        orderSeqs(ffdPack(packInput(Tables.documents(s, d)))))
+      uniformOrder(seqs)
         .select(col("global_pos"), col("source"), col("seq_id"),
           col("shard_id"), col("shard_offset"), col("src_pos"),
           col("n_docs"), col("kept_tokens"), col("draw"))
@@ -2077,63 +2029,34 @@ object MixtureQueries extends QueryFamily {
     //      shard / total — all bounded), broadcast onto the delta
     //      fold ----
     "q233_order_append" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      def tok(df: DataFrame) = df.select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
-      val seq0 = base.groupBy(col("source"))
-        .agg((max(col("seq_id")) + 1).as("seq0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
-        .join(seq0, Seq("source"), "left")
-        .withColumn("seq_id", col("seq_id") + coalesce(col("seq0"), lit(0L)))
-        .drop("seq0")
-      def seqs(df: DataFrame) = df.groupBy(col("source"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_kept")).as("kept_tokens"))
-        .withColumn("draw", substring(md5(concat_ws(":",
-          lit("graft-order-v1"), col("source"),
-          col("seq_id").cast("string"))), 1, 8))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(orderShards.toLong)))
-      val wSrc = Window.partitionBy(col("source"))
-        .orderBy(col("draw"), col("seq_id"))
-      val wShard = Window.partitionBy(col("shard_id"))
-        .orderBy(col("src_pos"), col("source"))
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id"))))))
+      val delta = packAfter(base,
+        packInput(docs.filter(isDeltaDoc(col("doc_id")))))
       // multiple consumers of the released manifest (rows + span and
       // cursor-state count frames) — persist so the fold runs once.
       // global_pos is the interleaveRank closed form on BOTH blocks
       // (VERDICT r16 #1) — no total-order window anywhere
-      val relBase = graft.util.Persist(seqs(base)
-        .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1))
-      val relSpans = relBase.groupBy(col("source"))
-        .agg(lit(0L).as("lo"), count(lit(1)).as("n"))
-      val rel = interleaveRank(relBase, relSpans)
-        .withColumn("shard_offset",
-          row_number().over(wShard).cast("long") - 1)
+      val relBase = graft.util.Persist(orderSeqs(base))
+      val rel = uniformOrder(relBase)
       val srcCnt = relBase.groupBy(col("source")).agg(count(lit(1)).as("sc"))
       val shCnt = relBase.groupBy(col("shard_id")).agg(count(lit(1)).as("hc"))
       val tot = relBase.agg(count(lit(1)).as("tc"))
       // appended block: absolute src_pos = released count + local
       // rank, so its span frame reads straight off the offset rows
       // (lo = min absolute position = the released per-source count)
-      val appBase = graft.util.Persist(seqs(delta)
+      val appBase = graft.util.Persist(orderSeqs(delta)
         .join(broadcast(srcCnt), Seq("source"), "left")
-        .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1
-          + coalesce(col("sc"), lit(0L)))
+        .withColumn("src_pos", col("src_pos") + coalesce(col("sc"), lit(0L)))
         .drop("sc"))
-      val appSpans = appBase.groupBy(col("source"))
-        .agg(min(col("src_pos")).as("lo"), count(lit(1)).as("n"))
-      val app = interleaveRank(appBase, appSpans)
+      val app = uniformOrder(appBase)
         .crossJoin(broadcast(tot))
         .withColumn("global_pos", col("global_pos") + col("tc"))
         .drop("tc")
         .join(broadcast(shCnt), Seq("shard_id"), "left")
-        .withColumn("shard_offset", row_number().over(wShard).cast("long")
-          - 1 + coalesce(col("hc"), lit(0L)))
+        .withColumn("shard_offset",
+          col("shard_offset") + coalesce(col("hc"), lit(0L)))
         .drop("hc")
       rel.withColumn("origin", lit("released"))
         .unionByName(app.withColumn("origin", lit("appended")))
@@ -2164,70 +2087,10 @@ object MixtureQueries extends QueryFamily {
     //      (Wave28Spec pins the ≤ |sources| item bound). No
     //      total-order window anywhere — spans broadcast + scan
     //      arithmetic, phase offsets a 3-row frame ----
-    "q236_mixture_order" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val toks = Tables.documents(s, d)
-        .select(col("source"),
-          size(TA.wsTokens(col("text"))).cast("long").as("nt"))
-        .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val fill = waterFillAlloc(
-          toks.select(col("source").as("lang"), col("n_tokens")), Seq(2.0))
-        .select(col("lang").as("source"), col("final_epochs"))
-      val cf = curriculumFrame(s, d)
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0)
-      val seqs = ffdPack(cf)
-        .groupBy(col("source"), col("seq_id"))
-        .agg(sum(col("n_kept")).as("kept_tokens"))
-        .select(split(col("source"), ":").getItem(0).cast("long").as("phase"),
-          split(col("source"), ":").getItem(1).as("source"),
-          col("seq_id"), col("kept_tokens"))
-      val np = seqs.groupBy(col("phase"), col("source"))
-        .agg(count(lit(1)).as("n_ps"))
-      val ep = np.join(fill, Seq("source"))
-        .withColumn("fe", floor(col("final_epochs")))
-        .withColumn("n_part", floor(round(
-          (col("final_epochs") - floor(col("final_epochs")).cast("double"))
-            * col("n_ps").cast("double"), 6)))
-        .select(col("phase"), col("source"), col("fe"), col("n_part"))
-      val wEp = Window.partitionBy(col("phase"), col("source"), col("epoch"))
-        .orderBy(col("draw"), col("seq_id"))
-      val wSrc = Window.partitionBy(col("phase"), col("source"))
-        .orderBy(col("epoch"), col("draw"), col("seq_id"))
-      // spans + dn join + ranked rows all read this frame — one fold
-      val rows = graft.util.Persist(
-        seqs.join(broadcast(ep), Seq("phase", "source"))
-          .withColumn("epoch", explode(sequence(lit(0L), col("fe"))))
-          .withColumn("draw", substring(md5(concat_ws(":",
-            lit("graft-order-v2"), col("epoch").cast("string"),
-            col("phase").cast("string"), col("source"),
-            col("seq_id").cast("string"))), 1, 8))
-          .withColumn("er", row_number().over(wEp).cast("long"))
-          .filter(col("epoch") < col("fe") || col("er") <= col("n_part"))
-          .withColumn("src_pos", row_number().over(wSrc).cast("long") - 1)
-          .select(col("phase"), col("source"), col("seq_id"), col("epoch"),
-            col("kept_tokens"), col("draw"), col("src_pos")))
-      val spans = rows.groupBy(col("phase"), col("source"))
-        .agg(count(lit(1)).as("n"))
-      // phase offsets: phase-cardinality-bounded window (q209's shape)
-      val wPh = Window.orderBy(col("phase"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val phOff = spans.groupBy(col("phase")).agg(sum(col("n")).as("np"))
-        .withColumn("poff", coalesce(sum(col("np")).over(wPh), lit(0L)))
-        .select(col("phase"), col("poff"))
-      weightedInterleaveRank(
-          rows.join(broadcast(spans.withColumnRenamed("n", "dn")),
-            Seq("phase", "source")),
-          spans)
-        .join(broadcast(phOff), Seq("phase"))
-        .select((col("phase_pos") + col("poff")).as("global_pos"),
-          col("phase"), col("source"), col("seq_id"), col("epoch"),
-          col("src_pos"), col("kept_tokens"), col("draw"))
-        .orderBy(col("global_pos"))
-    }),
+    "q236_mixture_order" -> ((s, d) =>
+      chainedMixtureOrder(phasedPackInput(s, d, lit(true)),
+          committedFill(Tables.documents(s, d)), Seq(("all", lit(true))))
+        .drop("origin")),
 
     // ---- the MIXTURE-ORDER APPEND CONTRACT (VERDICT r17 #2): q233
     //      freezes released positions for the UNIFORM interleave;
@@ -2257,40 +2120,18 @@ object MixtureQueries extends QueryFamily {
     //      form; cursor state = bounded count frames, broadcast ----
     "q241_mixture_append" -> ((s, d) => {
       val isD = isDeltaDoc(col("doc_id"))
-      // FROZEN v1 artifacts: thresholds + the committed mixture
-      val q = docQuality(s, d)
-      val th = sourceQuantiles(q.filter(!isD),
-          Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
-          keys = Seq.empty, valueCol = "quality_score")
-        .select(col("t1"), col("t2"))
-      val fill = waterFillAlloc(
-          Tables.documents(s, d).filter(!isD)
-            .select(col("source"),
-              size(TA.wsTokens(col("text"))).cast("long").as("nt"))
-            .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
-            .filter(col("n_tokens") > 0)
-            .select(col("source").as("lang"), col("n_tokens")), Seq(2.0))
-        .select(col("lang").as("source"), col("final_epochs"))
-      // every doc phased under the FROZEN v1 thresholds
-      val nt = Tables.documents(s, d).select(col("doc_id"),
-        size(TA.wsTokens(col("text"))).cast("long").as("n_tokens"))
-      // persisted (round 18): the chained ffdPack folds each replay
-      // the quality-score + tokenize lineage otherwise (guide §5)
-      val ph = graft.util.Persist(
-        q.join(nt, Seq("doc_id")).crossJoin(broadcast(th))
-        .withColumn("phase",
-          when(col("quality_score") <= col("t1"), 1L)
-            .when(col("quality_score") <= col("t2"), 2L)
-            .otherwise(3L))
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0))
+      // FROZEN v1 artifacts: the tercile cuts and the committed
+      // mixture, both computed on the base slice; every doc is phased
+      // under the frozen cuts. Persisted (round 18): the chained
+      // ffdPack folds each replay the quality-score + tokenize
+      // lineage otherwise (guide §5)
+      val ph = graft.util.Persist(phasedPackInput(s, d, !isD))
       // FUSED chain (round 19): one pack under the origin-composite
       // key + closed-form cursors — row-identical to the released/
       // appended two-step fold by [[chainedMixtureOrder]]'s argument
       // (Wave32Spec pins it against the inlined old fold)
-      chainedMixtureOrder(ph, fill,
+      chainedMixtureOrder(ph,
+        committedFill(Tables.documents(s, d).filter(!isD)),
         Seq(("released", !isD), ("appended", isD)))
     }),
 
@@ -2316,44 +2157,21 @@ object MixtureQueries extends QueryFamily {
     //      0/1/2 delta rule so the two lifecycles compose ----
     "q244_order_tombstones" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0)
       val tomb = substring(md5(col("doc_id").cast("string")), 1, 1) === "f"
       // the q230 sequence frame + the per-sequence mask accounting in
       // ONE aggregate over the packing fold (offset_in_seq/n_kept are
       // exactly the span a tombstone masks)
-      val seqs = graft.util.Persist(ffdPack(docs)
-        .groupBy(col("source"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_kept")).as("kept_tokens"),
-          count(when(tomb, lit(1))).as("n_masked_docs"),
-          coalesce(sum(when(tomb, col("n_kept"))), lit(0L))
-            .as("masked_tokens"),
-          substring(md5(concat_ws(",", transform(
-            sort_array(collect_list(when(tomb,
-              struct(col("offset_in_seq").as("o"), col("n_kept").as("t"))))),
-            x => concat_ws(":", x.getField("o"), x.getField("t"))))), 1, 16)
-            .as("masked_spans_fp"))
-        .withColumn("draw", substring(md5(concat_ws(":",
-          lit("graft-order-v1"), col("source"),
-          col("seq_id").cast("string"))), 1, 8))
-        .withColumn("shard_id",
-          pmod(conv(substring(md5(concat_ws(":", col("source"),
-            col("seq_id").cast("string"))), 1, 1), 16, 10).cast("long"),
-            lit(orderShards.toLong)))
-        .withColumn("src_pos", row_number().over(
-          Window.partitionBy(col("source"))
-            .orderBy(col("draw"), col("seq_id"))).cast("long") - 1))
-      val spans = seqs.groupBy(col("source"))
-        .agg(lit(0L).as("lo"), count(lit(1)).as("n"))
-      val wShard = Window.partitionBy(col("shard_id"))
-        .orderBy(col("src_pos"), col("source"))
+      val seqs = graft.util.Persist(orderSeqs(
+        ffdPack(packInput(Tables.documents(s, d))),
+        count(when(tomb, lit(1))).as("n_masked_docs"),
+        coalesce(sum(when(tomb, col("n_kept"))), lit(0L)).as("masked_tokens"),
+        substring(md5(concat_ws(",", transform(
+          sort_array(collect_list(when(tomb,
+            struct(col("offset_in_seq").as("o"), col("n_kept").as("t"))))),
+          x => concat_ws(":", x.getField("o"), x.getField("t"))))), 1, 16)
+          .as("masked_spans_fp")))
       val wSh = Window.partitionBy(col("shard_id"))
-      interleaveRank(seqs, spans)
-        .withColumn("shard_offset",
-          row_number().over(wShard).cast("long") - 1)
+      uniformOrder(seqs)
         .withColumn("live_tokens", col("kept_tokens") - col("masked_tokens"))
         .withColumn("shard_masked_tokens",
           sum(col("masked_tokens")).over(wSh))
@@ -2384,25 +2202,12 @@ object MixtureQueries extends QueryFamily {
     //      needed, so the card is aggregates only, (phase×source)-
     //      bounded output ----
     "q247_takedown_stream_cost" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val tomb = substring(md5(col("doc_id").cast("string")), 1, 1) === "f"
-      val fill = waterFillAlloc(
-          Tables.documents(s, d)
-            .select(col("source"),
-              size(TA.wsTokens(col("text"))).cast("long").as("nt"))
-            .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
-            .filter(col("n_tokens") > 0)
-            .select(col("source").as("lang"), col("n_tokens")), Seq(2.0))
-        .select(col("lang").as("source"), col("final_epochs"))
-      val cf = curriculumFrame(s, d)
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0)
       // ONE fold: the seq frame and the mask accounting read the
       // same packed rows (tombstoned spans can never desynchronize
       // from the sequences they live in)
-      val packed = graft.util.Persist(ffdPack(cf))
+      val packed = graft.util.Persist(
+        ffdPack(phasedPackInput(s, d, lit(true))))
       val seqs = packed.groupBy(col("source"), col("seq_id"))
         .agg(sum(col("n_kept")).as("kept_tokens"),
           coalesce(sum(when(tomb, col("n_kept"))), lit(0L))
@@ -2410,26 +2215,10 @@ object MixtureQueries extends QueryFamily {
         .select(split(col("source"), ":").getItem(0).cast("long").as("phase"),
           split(col("source"), ":").getItem(1).as("source"),
           col("seq_id"), col("kept_tokens"), col("masked_tokens"))
-      val np = seqs.groupBy(col("phase"), col("source"))
-        .agg(count(lit(1)).as("n_ps"))
-      val ep = np.join(fill, Seq("source"))
-        .withColumn("fe", floor(col("final_epochs")))
-        .withColumn("n_part", floor(round(
-          (col("final_epochs") - floor(col("final_epochs")).cast("double"))
-            * col("n_ps").cast("double"), 6)))
-        .select(col("phase"), col("source"), col("fe"), col("n_part"))
-      val wEp = Window.partitionBy(col("phase"), col("source"), col("epoch"))
-        .orderBy(col("draw"), col("seq_id"))
       // the q236 occurrence rows (epoch explosion + partial-pass
       // membership), WITHOUT the rank — a pure cost card
-      seqs.join(broadcast(ep), Seq("phase", "source"))
-        .withColumn("epoch", explode(sequence(lit(0L), col("fe"))))
-        .withColumn("draw", substring(md5(concat_ws(":",
-          lit("graft-order-v2"), col("epoch").cast("string"),
-          col("phase").cast("string"), col("source"),
-          col("seq_id").cast("string"))), 1, 8))
-        .withColumn("er", row_number().over(wEp).cast("long"))
-        .filter(col("epoch") < col("fe") || col("er") <= col("n_part"))
+      epochOccurrences(seqs, committedFill(Tables.documents(s, d)),
+          Seq("phase", "source"))
         .groupBy(col("phase"), col("source"))
         .agg(count(lit(1)).as("n_rows"),
           count(when(col("masked_tokens") > 0, lit(1)))
@@ -2466,42 +2255,19 @@ object MixtureQueries extends QueryFamily {
     "q250_mixture_chain" -> ((s, d) => {
       def hex1(c: Column): Column = substring(md5(c.cast("string")), 1, 1)
       val isD = isDeltaDoc(col("doc_id"))
-      // FROZEN v1 artifacts (q241's)
-      val q = docQuality(s, d)
-      val th = sourceQuantiles(q.filter(!isD),
-          Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
-          keys = Seq.empty, valueCol = "quality_score")
-        .select(col("t1"), col("t2"))
-      val fill = waterFillAlloc(
-          Tables.documents(s, d).filter(!isD)
-            .select(col("source"),
-              size(TA.wsTokens(col("text"))).cast("long").as("nt"))
-            .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
-            .filter(col("n_tokens") > 0)
-            .select(col("source").as("lang"), col("n_tokens")), Seq(2.0))
-        .select(col("lang").as("source"), col("final_epochs"))
-      val nt = Tables.documents(s, d).select(col("doc_id"),
-        size(TA.wsTokens(col("text"))).cast("long").as("n_tokens"))
-      // persisted (round 18): the chained ffdPack folds each replay
-      // the quality-score + tokenize lineage otherwise (guide §5)
-      val ph = graft.util.Persist(
-        q.join(nt, Seq("doc_id")).crossJoin(broadcast(th))
-        .withColumn("phase",
-          when(col("quality_score") <= col("t1"), 1L)
-            .when(col("quality_score") <= col("t2"), 2L)
-            .otherwise(3L))
-        .select(col("doc_id"),
-          concat_ws(":", col("phase"), col("source")).as("source"),
-          col("n_tokens"))
-        .filter(col("n_tokens") > 0))
+      // FROZEN v1 artifacts (q241's); persisted (round 18): the
+      // chained ffdPack folds each replay the quality-score + tokenize
+      // lineage otherwise (guide §5)
+      val ph = graft.util.Persist(phasedPackInput(s, d, !isD))
       // FUSED chain (round 19): one pack under the origin-composite
       // key + closed-form cursors — row-identical to the three-step
       // greatest/full-join cursor fold by [[chainedMixtureOrder]]'s
       // argument (Wave32Spec pins it against the inlined old fold)
-      chainedMixtureOrder(ph, fill, Seq(
-        ("released", !isDeltaDoc(col("doc_id"))),
-        ("append1", hex1(col("doc_id")) === "0"),
-        ("append2", hex1(col("doc_id")).isin("1", "2"))))
+      chainedMixtureOrder(ph,
+        committedFill(Tables.documents(s, d).filter(!isD)), Seq(
+          ("released", !isD),
+          ("append1", hex1(col("doc_id")) === "0"),
+          ("append2", hex1(col("doc_id")).isin("1", "2"))))
     }))
 
   /** The exact temperature-weighted water-fill (q228; chained by

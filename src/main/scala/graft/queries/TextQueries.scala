@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Multimodal, Sessions, TextAnalysis => TA}
@@ -102,6 +102,28 @@ object TextQueries extends QueryFamily {
           .as("p95_err"))
       .orderBy(col("source"))
   }
+
+  /** Per doc, q108's frozen score and q100's rule-battery label —
+    * the (score, label) frame q116 (AUC) and q151 (calibration) read.
+    * Label thresholds apply to the ROUNDED features, q100's exact
+    * published battery, so the three queries stay in lockstep.
+    */
+  private def classifierScores(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("text"), TA.wsTokens(col("text")).as("toks"),
+        TA.wsTokens(lower(col("text"))).as("ltoks"))
+      .select(size(col("toks")).cast("double").as("n_words"),
+        size(col("toks")).cast("long").as("n_words_l"),
+        TA.meanWordLenFromTokens(col("toks")).as("mwl"),
+        TA.punctRatio(col("text")).as("punct"),
+        TA.stopwordRatioFromTokens(col("ltoks")).as("stop"),
+        round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
+          / size(col("ltoks")).cast("double"), 6).as("dup_frac"))
+      .select(qualityLogistic.as("score"),
+        (col("n_words_l") >= 50 && col("n_words_l") <= 100000 &&
+          round(col("mwl"), 6) >= 3.0 && round(col("mwl"), 6) <= 10.0 &&
+          round(col("stop"), 6) >= 0.02 &&
+          col("dup_frac") <= 0.9).cast("long").as("label"))
 
   val queries: Map[String, Q] = Map(
     // ---- BPE merge step: adjacent character-pair frequencies over
@@ -304,8 +326,7 @@ object TextQueries extends QueryFamily {
           TA.wsTokens(lower(col("text"))).as("ltoks"))
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("n_words"),
-          round(TA.meanWordLenFromTokens(col("text"), col("toks")), 6)
-            .as("mean_word_len"),
+          round(TA.meanWordLenFromTokens(col("toks")), 6).as("mean_word_len"),
           round(TA.stopwordRatioFromTokens(col("ltoks")), 6).as("stopword_ratio"),
           round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
             / size(col("ltoks")).cast("double"), 6).as("dup_frac"))
@@ -384,8 +405,7 @@ object TextQueries extends QueryFamily {
           TA.wsTokens(lower(col("text"))).as("ltoks"))
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("n_words"),
-          round(TA.meanWordLenFromTokens(col("text"), col("toks")), 6)
-            .as("mean_word_len"),
+          round(TA.meanWordLenFromTokens(col("toks")), 6).as("mean_word_len"),
           round(TA.punctRatio(col("text")), 6).as("punct_ratio"),
           round(TA.stopwordRatioFromTokens(col("ltoks")), 6).as("stopword_ratio"))
         .orderBy(col("doc_id"))
@@ -638,30 +658,7 @@ object TextQueries extends QueryFamily {
     //      resolution-bounded ----
     "q116_classifier_auc" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val f = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"),
-          TA.wsTokens(col("text")).as("toks"),
-          TA.wsTokens(lower(col("text"))).as("ltoks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("double").as("n_words"),
-          size(col("toks")).cast("long").as("n_words_l"),
-          TA.meanWordLenFromTokens(col("text"), col("toks")).as("mwl"),
-          TA.punctRatio(col("text")).as("punct"),
-          TA.stopwordRatioFromTokens(col("ltoks")).as("stop"),
-          round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
-            / size(col("ltoks")).cast("double"), 6).as("dup_frac"))
-      val z = lit(0.5) + lit(4.0) * col("stop") - lit(6.0) * col("punct") -
-        lit(0.4) * abs(col("mwl") - lit(5.0)) +
-        lit(0.15) * log(lit(1.0) + col("n_words"))
-      // label thresholds apply to the ROUNDED features — q100's exact
-      // published battery, so the two gated queries stay in lockstep
-      val scored = f.select(
-        round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("score"),
-        (col("n_words_l") >= 50 && col("n_words_l") <= 100000 &&
-          round(col("mwl"), 6) >= 3.0 && round(col("mwl"), 6) <= 10.0 &&
-          round(col("stop"), 6) >= 0.02 &&
-          col("dup_frac") <= 0.9).cast("long").as("label"))
-      val gs = scored.groupBy(col("score"))
+      val gs = classifierScores(s, d).groupBy(col("score"))
         .agg(count(lit(1)).as("n"), sum(col("label")).as("n_pos"))
       val w = Window.orderBy(col("score"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -721,28 +718,7 @@ object TextQueries extends QueryFamily {
     //      stay in lockstep. Pure scan-stage features + a 10-row
     //      aggregate — nothing here sees corpus cardinality ----
     "q151_classifier_calibration" -> ((s, d) => {
-      val f = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"),
-          TA.wsTokens(col("text")).as("toks"),
-          TA.wsTokens(lower(col("text"))).as("ltoks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("double").as("n_words"),
-          size(col("toks")).cast("long").as("n_words_l"),
-          TA.meanWordLenFromTokens(col("text"), col("toks")).as("mwl"),
-          TA.punctRatio(col("text")).as("punct"),
-          TA.stopwordRatioFromTokens(col("ltoks")).as("stop"),
-          round(lit(1.0) - size(array_distinct(col("ltoks"))).cast("double")
-            / size(col("ltoks")).cast("double"), 6).as("dup_frac"))
-      val z = lit(0.5) + lit(4.0) * col("stop") - lit(6.0) * col("punct") -
-        lit(0.4) * abs(col("mwl") - lit(5.0)) +
-        lit(0.15) * log(lit(1.0) + col("n_words"))
-      val scored = f.select(
-        round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("score"),
-        (col("n_words_l") >= 50 && col("n_words_l") <= 100000 &&
-          round(col("mwl"), 6) >= 3.0 && round(col("mwl"), 6) <= 10.0 &&
-          round(col("stop"), 6) >= 0.02 &&
-          col("dup_frac") <= 0.9).cast("long").as("label"))
-      scored
+      classifierScores(s, d)
         .withColumn("bin", least(floor(col("score") * 10), lit(9L)))
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"),
@@ -901,9 +877,7 @@ object TextQueries extends QueryFamily {
           round(least(lit(1.0), col("want") / col("tk")), 6)
             .as("sample_frac"),
           ceil(round(col("want") / col("tk"), 6)).cast("long").as("epochs"))
-      val u = round(conv(substring(md5(col("doc_id").cast("string")), 1, 6),
-        16, 10).cast("double") / lit(16777215.0), 6)
-      val kept = dl.select(col("lang"), col("n_tokens"), u.as("u"))
+      val kept = dl.select(col("lang"), col("n_tokens"), md5Uniform.as("u"))
         .join(broadcast(plan.select(col("lang"), col("sample_frac"))),
           Seq("lang"))
         .groupBy(col("lang"))

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a session-config change may be written (one streaming-drain
   * helper, one session config), that each shared query rule is
   * written once per engine, that the PQ operators keep one code
-  * path, and that every definition is reached from main code or the
-  * etlbench harness.
+  * path, that the mixture family writes its pack input, loader-shard
+  * rule and training-order draws once (with no environment override
+  * of the shard count), and that every definition is reached from
+  * main code or the etlbench harness.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -155,6 +157,16 @@ class SourceScanSpec extends AnyFunSuite {
     assert(twins.isEmpty) // a `perm: Option[Seq[Int]]` parameter instead
     assert(count("element_at(element_at(col(\"lut\")") == 1) // adcSum
     assert(count("pqLutOf(col(\"q_vec\")") == 1) // withLut
+  }
+
+  test("mixture pack input, shard rule and order draws are each written once") {
+    val packTokens =
+      "size(TA.normWords(col(\"text\"))).cast(\"long\").as(\"n_tokens\")"
+    assert(count(packTokens) == 1) // packInput
+    assert(count("1, 1), 16, 10)") == 1) // md5Hex1Mod: shard and batch rules
+    assert(count("lit(\"graft-order-v1\")") == 1) // orderSeqs
+    assert(count("lit(\"graft-order-v2\")") == 1) // epochOccurrences
+    assert(count("GRAFT_ORDER_SHARDS") == 0) // the shard count is a constant
   }
 
   test("unreached definitions: public and private[x] flagged, harness uses count") {

@@ -17,7 +17,8 @@ import graft.queries.MixtureQueries
   * absent from the middle step (full-join cursor keep), a source
   * first appearing in the last step (coalesce(seq0, 0)), fractional
   * final-epoch fills (partial-epoch cut), docs over the pack budget
-  * (n_dropped > 0), multi-seq groups, and an empty trailing step.
+  * (n_dropped > 0), multi-seq groups, and an empty trailing step. The
+  * one-step chain is q236's single ordered block.
   */
 class Wave32Spec extends SparkSpec {
 
@@ -158,38 +159,36 @@ class Wave32Spec extends SparkSpec {
     out.sortBy(_.head.asInstanceOf[Long])
   }
 
-  test("chainedMixtureOrder ≡ the per-step chained fold — 3-step " +
-      "chain (q250 shape), middle-gap + late sources, phase ≥ 10") {
+  /** The fused order and the old fold give the same rows on the fixture. */
+  private def assertSameAsOldFold(steps: Seq[(String, Column)]): Unit = {
     val (ph, fill) = fixture
-    val old = collectAll(oldChained(ph, fill, steps3))
-    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps3))
-    assert(neu.size == old.size)
+    val old = collectAll(oldChained(ph, fill, steps))
+    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps))
+    assert(neu.size == old.size && neu.nonEmpty)
     old.zip(neu).zipWithIndex.foreach { case ((o, n), i) =>
       assert(n == o, s"row $i differs: old=$o new=$n")
     }
+  }
+
+  test("chainedMixtureOrder ≡ the per-step chained fold — 3-step " +
+      "chain (q250 shape), middle-gap + late sources, phase ≥ 10") {
+    assertSameAsOldFold(steps3)
   }
 
   test("chainedMixtureOrder ≡ the per-step chained fold — 2-step " +
       "chain (q241 shape)") {
-    val (ph, fill) = fixture
-    val steps2 = Seq(
+    assertSameAsOldFold(Seq(
       ("released", pmod(col("doc_id"), lit(3)) =!= 2),
-      ("appended", pmod(col("doc_id"), lit(3)) === 2))
-    val old = collectAll(oldChained(ph, fill, steps2))
-    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps2))
-    assert(neu.size == old.size)
-    old.zip(neu).zipWithIndex.foreach { case ((o, n), i) =>
-      assert(n == o, s"row $i differs: old=$o new=$n")
-    }
+      ("appended", pmod(col("doc_id"), lit(3)) === 2)))
+  }
+
+  test("chainedMixtureOrder ≡ the per-step chained fold — 1-step " +
+      "chain (q236 shape)") {
+    assertSameAsOldFold(Seq(("all", lit(true))))
   }
 
   test("chainedMixtureOrder ≡ the per-step chained fold — empty " +
       "trailing step contributes nothing and breaks nothing") {
-    val (ph, fill) = fixture
-    val steps4 = steps3 :+ (("phantom", lit(false)))
-    val old = collectAll(oldChained(ph, fill, steps4))
-    val neu = collectAll(MixtureQueries.chainedMixtureOrder(ph, fill, steps4))
-    assert(neu.size == old.size && neu.nonEmpty)
-    old.zip(neu).foreach { case (o, n) => assert(n == o) }
+    assertSameAsOldFold(steps3 :+ (("phantom", lit(false))))
   }
 }
