@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -73,21 +74,45 @@ object AnnQueries extends QueryFamily {
   private[graft] def ivfPqTrained(s: SparkSession, d: String,
       baseOnly: Boolean): (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])]) =
     ivfTrainCache.computeIfAbsent(s"$d#${if (baseOnly) "base" else "all"}", { _ =>
-      // training population = the oracle's usableVec contract exactly
-      // (non-null, non-empty, norm > 0): the downstream null/empty
-      // filters alone would let a zero-norm vector desynchronize the
-      // trained artifacts between engines (ADVICE r16 #2)
-      val emb0 = Tables.embeddings(s, d).filter(
-        Similarity.dotFold(col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>")) > 0)
-      val emb = if (baseOnly)
-        emb0.filter(!isDeltaDoc(col("vec_id")))
-      else emb0
+      val emb = trainingEmb(s, d, baseOnly)
       val coarse = collectCentroids(Similarity.kmeansIteration(emb, "vec_id", "embedding"))
       val resid = collectCodebook(Similarity
         .pqTrainIteration(residualFrameOf(emb, coarse), "vec_id", "resid"))
       (coarse, resid)
     })
+
+  /** The population the real-embedding artifacts train on: the
+    * oracle's usableVec contract exactly (non-null, non-empty,
+    * norm > 0; the downstream null/empty filters alone would let a
+    * zero-norm vector desynchronize the trained artifacts between
+    * engines, ADVICE r16 #2), restricted to the md5 base slice with
+    * `baseOnly`.
+    */
+  private def trainingEmb(s: SparkSession, d: String, baseOnly: Boolean): DataFrame = {
+    val emb = nonZero(Tables.embeddings(s, d), col("embedding").cast("array<double>"))
+    if (baseOnly) emb.filter(!isDeltaDoc(col("vec_id"))) else emb
+  }
+
+  /** `df`'s rows whose vector `v` has a positive squared norm. */
+  private def nonZero(df: DataFrame, v: Column): DataFrame =
+    df.filter(Similarity.dotFold(v, v) > 0)
+
+  /** The per-dimension population variances of `frame`'s 64-dim
+    * column `c`, rounded at 6 in Spark SQL so the rank order comes from
+    * exactly the values the oracle's `var_pop` CTE rounds the same
+    * way, collected, with [[Similarity.balancedLayout]]'s snake deal
+    * over them.
+    */
+  private def varianceLayout(frame: DataFrame, c: String): (Seq[Double], Seq[Int]) = {
+    val aggs = (0 until 64).map(i =>
+      round(var_pop(element_at(col(c), i + 1)), 6).as(s"v$i"))
+    val r = frame.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val vars = (0 until 64).map(r.getDouble)
+    (vars, Similarity.balancedLayout(vars))
+  }
+
+  /** The identity PQ layout: dimension i in subspace i / 8. */
+  private val identityLayout: Seq[Int] = 0 until 64
 
   /** A k-means step's (cell, pos, value) rows, collected as one
     * pos-ordered centroid per cell, sorted by cell.
@@ -150,7 +175,7 @@ object AnnQueries extends QueryFamily {
     * the identical row set the oracle's `u` CTE derives.
     */
   private[graft] def anisoEmb(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
+    nonZero(Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
       .filter(col("v0").isNotNull && size(col("v0")) > 0)
       .select(col("vec_id"),
@@ -158,28 +183,18 @@ object AnnQueries extends QueryFamily {
         // (IndexWeight, round 19): pushdown inlined the interpreted
         // lambda up to 6× per Filter condition in the q237 family
         // (VERDICT r18 #1); the kernel is cheap per copy and CSE-able
-        Similarity.indexWeight(col("v0"), 8, 4.0).as("vec"))
-      .filter(Similarity.dotFold(col("vec"), col("vec")) > 0)
+        Similarity.indexWeight(col("v0"), 8, 4.0).as("vec")), col("vec"))
 
   /** q184's per-dimension variance artifact + the variance-balanced
     * layout derived from it — ONE corpus aggregate (64 rounded
-    * doubles) collected and memoized per input dir (the PQ-codebook
-    * collect discipline), then [[Similarity.balancedLayout]]'s snake
-    * deal on the driver. Rounding at 6 happens IN Spark SQL so the
-    * rank order is derived from exactly the values the oracle's
-    * `var_pop` CTE rounds the same way.
+    * doubles, [[varianceLayout]]) collected and memoized per input dir
+    * (the PQ-codebook collect discipline).
     */
   private val opqCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Seq[Int])]()
 
   private[graft] def opqVarLayout(s: SparkSession, d: String): (Seq[Double], Seq[Int]) =
-    opqCache.computeIfAbsent(d, { _ =>
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("vec"), i + 1)), 6).as(s"v$i"))
-      val r = anisoEmb(s, d).agg(aggs.head, aggs.tail: _*).collect()(0)
-      val vars = (0 until 64).map(r.getDouble)
-      (vars, Similarity.balancedLayout(vars))
-    })
+    opqCache.computeIfAbsent(d, _ => varianceLayout(anisoEmb(s, d), "vec"))
 
   /** Trained (one-Lloyd-step) codebook per (input dir, layout) — the
     * [[pqRefinedCodebook]] discipline generalized over the OPQ layout:
@@ -215,12 +230,7 @@ object AnnQueries extends QueryFamily {
     anisoResidCache.computeIfAbsent(d, { _ =>
       val emb = anisoEmb(s, d)
       val coarse = collectCentroids(Similarity.kmeansIteration(emb, "vec_id", "vec"))
-      val rf = residualFrameOf(emb, coarse, vecCol = "vec")
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val vars = (0 until 64).map(r.getDouble)
-      (coarse, Similarity.balancedLayout(vars))
+      (coarse, varianceLayout(residualFrameOf(emb, coarse, vecCol = "vec"), "resid")._2)
     })
 
   /** One-Lloyd residual codebook per (input dir, layout) over the
@@ -248,9 +258,7 @@ object AnnQueries extends QueryFamily {
     */
   private def driftSlices(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
-    val usable = Tables.embeddings(s, d).filter(
-      Similarity.dotFold(col("embedding").cast("array<double>"),
-        col("embedding").cast("array<double>")) > 0)
+    val usable = trainingEmb(s, d, baseOnly = false)
     val base = usable.filter(!isDeltaDoc(col("vec_id")))
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("embedding"))
@@ -283,13 +291,10 @@ object AnnQueries extends QueryFamily {
       val mixed = base.unionByName(shifted)
       val coarse = collectCentroids(Similarity.kmeansIteration(mixed, "vec_id", "embedding"))
       val rf = graft.util.Persist(residualFrameOf(mixed, coarse))
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
+      val (_, perm) = varianceLayout(rf, "resid")
       def cbOf(p: Seq[Int]) = collectCodebook(Similarity
         .pqTrainIteration(rf, "vec_id", "resid", perm = Some(p)))
-      val out = (coarse, perm, cbOf(0 until 64), cbOf(perm))
+      val out = (coarse, perm, cbOf(identityLayout), cbOf(perm))
       rf.unpersist()
       out
     })
@@ -314,23 +319,226 @@ object AnnQueries extends QueryFamily {
       (Seq[(Int, Seq[Double])], Seq[Int], Seq[(Int, Int, Seq[Double])]) =
     ivfOpqCache.computeIfAbsent(d, { _ =>
       val (coarse, _) = ivfPqTrained(s, d, baseOnly = true)
-      // the exact training population ivfPqTrained(base) saw: the
-      // oracle's usableVec contract + the md5 base rule
-      val baseEmb = Tables.embeddings(s, d)
-        .filter(Similarity.dotFold(col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>")) > 0)
-        .filter(!isDeltaDoc(col("vec_id")))
-      val rf = graft.util.Persist(residualFrameOf(baseEmb, coarse))
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
+      // the exact training population ivfPqTrained(base) saw
+      val rf = graft.util.Persist(
+        residualFrameOf(trainingEmb(s, d, baseOnly = true), coarse))
+      val (_, perm) = varianceLayout(rf, "resid")
       val cb = collectCodebook(
         Similarity.pqTrainIteration(rf, "vec_id", "resid", perm = Some(perm)))
       rf.unpersist()
       (coarse, perm, cb)
     })
 
+  /** A frozen IVF-PQ bundle over the real embeddings: trained coarse
+    * cells, the residual codebook, and the layout its codes are
+    * gathered under (None: identity).
+    */
+  private case class Frozen(coarse: Seq[(Int, Seq[Double])],
+      cb: Map[Int, Seq[Seq[Double]]], perm: Option[Seq[Int]] = None) {
+    /** `emb`'s (cell, id, code) residual index rows. */
+    def encode(emb: DataFrame): DataFrame = Similarity.ivfPqResidualIndex(
+      emb, "vec_id", "embedding", coarse, cb, perm = perm)
+
+    /** ADC top-k of `q` over the index rows `idx` (LUT gathered
+      * through the same layout).
+      */
+    def search(q: DataFrame, idx: DataFrame, k: Int): DataFrame =
+      Similarity.ivfPqAdcTopKIndex(q, idx, "vec_id", "embedding", k = k,
+        coarse, cb, perm = perm)
+  }
+
+  /** The identity bundle trained on the md5 base slice
+    * ([[ivfPqTrained]]): the artifacts q232 releases and freezes.
+    */
+  private def frozenIdentity(s: SparkSession, d: String): Frozen = {
+    val (coarse, rows) = ivfPqTrained(s, d, baseOnly = true)
+    Frozen(coarse, codebookMap(rows))
+  }
+
+  /** The base-trained OPQ bundle ([[ivfPqOpqTrained]]): the artifacts
+    * q242 releases and freezes.
+    */
+  private def frozenOpq(s: SparkSession, d: String): Frozen = {
+    val (coarse, perm, rows) = ivfPqOpqTrained(s, d)
+    Frozen(coarse, codebookMap(rows), Some(perm))
+  }
+
+  /** A released index: the md5 base slice of the embeddings through
+    * `encode`, written under `key` once per session and read back.
+    */
+  private def releasedIndex(s: SparkSession, key: String, d: String)(
+      encode: DataFrame => DataFrame): DataFrame = {
+    val dir = CoreQueries.sharedInputDir(key) { p =>
+      encode(Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))))
+        .write.mode("overwrite").parquet(p)
+    }
+    s.read.parquet(dir)
+  }
+
+  /** q232's released index under [[frozenIdentity]]: q232 appends to
+    * it, q239 chains on it, q246 serves it and q249 tombstones it.
+    */
+  private def q232Index(s: SparkSession, d: String): DataFrame =
+    releasedIndex(s, s"graft_q232_idx_${CoreQueries.dirToken(d)}", d)(
+      frozenIdentity(s, d).encode)
+
+  /** q242's released index under [[frozenOpq]]: q242 appends to it,
+    * q246 and q248 serve it.
+    */
+  private def q242Index(s: SparkSession, d: String): DataFrame =
+    releasedIndex(s, s"graft_q242_idx_${CoreQueries.dirToken(d)}", d)(
+      frozenOpq(s, d).encode)
+
+  /** An index maintained since release: the `released` rows ∪ the md5
+    * delta slice of `emb` encoded under the same bundle; with `tagged`
+    * each side carries the path that produced it as `src`.
+    */
+  private def maintained(released: DataFrame, emb: DataFrame, f: Frozen,
+      tagged: Boolean = false): DataFrame = {
+    def side(rows: DataFrame, src: String) =
+      if (tagged) rows.withColumn("src", lit(src)) else rows
+    side(released, "base").unionByName(
+      side(f.encode(emb.filter(isDeltaDoc(col("vec_id")))), "delta"))
+  }
+
+  /** The streaming index ingest of q137, q232 and q242: the md5 delta
+    * slice, written once per session as 4 files under `graft_<q>_in_`,
+    * drains as 4 micro-batches, each appending its `encode` rows
+    * through the idempotent batch_id-partitioned K2 sink into a
+    * `graft_<q>_<tmp>_` temp dir. The appended rows come back beside
+    * the released `base` rows, both projected to `cols` and tagged by
+    * the path that produced them (`src`).
+    */
+  private def streamIngest(s: SparkSession, d: String, q: String, tmp: String,
+      base: DataFrame, cols: String*)(encode: DataFrame => DataFrame): DataFrame = {
+    val delta = Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id")))
+      .select(col("vec_id"), col("embedding"))
+    val in = CoreQueries.sharedInputDir(
+      s"graft_${q}_in_${CoreQueries.dirToken(d)}") { p =>
+      delta.repartition(4).write.mode("overwrite").parquet(p)
+    }
+    val dir = CoreQueries.tempQueryDir(s"graft_${q}_${tmp}_")
+    val out = s"$dir/out"
+    Streaming.drain(Streaming.eventsStream(s, in, delta.schema), s"$dir/ck", 4) {
+      (batch, id) => Streaming.writeBatch(encode(batch), id, out, append = true)
+    }
+    val c = cols.map(col)
+    s.read.parquet(out).select(c: _*).withColumn("src", lit("delta"))
+      .unionByName(base.select(c: _*).withColumn("src", lit("base")))
+  }
+
+  /** Index rows as the oracles compare them: cell, vec_id, the code
+    * array rendered as CSV (a list column crashes the oracle check's pandas
+    * sort), `extra`, and `src`, ordered by vec_id.
+    */
+  private def indexRows(idx: DataFrame, extra: Column*): DataFrame =
+    idx.select(Seq(col("cell"), col("id").as("vec_id"),
+        array_join(transform(col("code"), _.cast("string")), ",").as("code")) ++
+        extra :+ col("src"): _*)
+      .orderBy(col("vec_id"))
+
+  /** The exact top-3 (q_id, n_id) truth an ANN recall card scores
+    * against: `q`'s neighbours in `corpus` by inner product, or by
+    * cosine with `cosine`.
+    */
+  private def exactTop3(q: DataFrame, corpus: DataFrame,
+      vec: String = "embedding", cosine: Boolean = false): DataFrame =
+    (if (cosine) Similarity.bruteForceTopK(q, corpus, "vec_id", vec, k = 3)
+     else Similarity.bruteForceDotTopK(q, corpus, "vec_id", vec, k = 3))
+      .select(col("q_id"), col("n_id"))
+
+  /** `truth` (q_id, n_id) left-joined to `approx`'s rows renamed
+    * (a_q, a_n): `a_n` is non-null where the approximate side found a
+    * truth neighbour. With `perProbe` both sides also carry `n_probe`
+    * (`a_p` on the approximate side) and rows match within a probe
+    * level.
+    */
+  private def recallJoin(truth: DataFrame, approx: DataFrame,
+      perProbe: Boolean = false): DataFrame = {
+    val hit = col("q_id") === col("a_q") && col("n_id") === col("a_n")
+    val probe = if (perProbe) Seq(col("n_probe").as("a_p")) else Nil
+    truth.join(
+      approx.select(probe ++ Seq(col("q_id").as("a_q"), col("n_id").as("a_n")): _*),
+      if (perProbe) col("n_probe") === col("a_p") && hit else hit, "left")
+  }
+
+  /** A [[recallJoin]]'s truth rows (named `total`) and found rows
+    * (`n_found`), per `by`.
+    */
+  private def recallCounts(joined: DataFrame, total: String = "n_truth",
+      by: Seq[Column] = Nil): DataFrame =
+    joined.groupBy(by: _*)
+      .agg(count(lit(1)).as(total), count(col("a_n")).as("n_found"))
+
+  /** recall@3 from [[recallCounts]], 0 when there is no truth. */
+  private def recallAt3: Column =
+    when(col("n_truth") === 0, 0.0)
+      .otherwise(round(col("n_found").cast("double") / col("n_truth"), 6))
+      .as("recall_at_3")
+
+  /** Per query, the truth neighbours `approx` found (`n_hits`) and
+    * recall@3, after the `label` columns.
+    */
+  private def hitsAt3(truth: DataFrame, approx: DataFrame,
+      label: Column*): DataFrame =
+    recallJoin(truth, approx).groupBy(col("q_id"))
+      .agg(count(col("a_n")).as("n_hits"))
+      .select(label ++ Seq(col("q_id"), col("n_hits"),
+        round(col("n_hits").cast("double") / lit(3.0), 6).as("recall_at_3")): _*)
+
+  /** One recall row per level of a knob sweep: `exact` against
+    * `approx(level)`'s ranking, the level as column `name`.
+    */
+  private def recallSweep(exact: DataFrame, name: String, levels: Seq[Int])(
+      approx: Int => DataFrame): DataFrame =
+    levels.map { l =>
+      recallCounts(recallJoin(exact, approx(l)), "n_exact")
+        .select(lit(l.toLong).as(name), col("n_exact"), col("n_found"),
+          round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
+    }.reduce(_.unionByName(_))
+      .orderBy(col(name))
+
+  /** The raw-vector gather of an ADC shortlist over the aniso corpus:
+    * `short`'s candidate rows joined to their corpus and query
+    * vectors and scored by the exact inner product rounded at 6
+    * (`ip`), keeping `cols`; persisted, since every level of a sweep
+    * filters it.
+    */
+  private def shortlistIp(aniso: DataFrame, q: DataFrame, short: DataFrame,
+      cols: String*): DataFrame =
+    graft.util.Persist(
+      aniso.select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
+        .join(broadcast(short), Seq("n_id"))
+        .join(broadcast(q.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))),
+          Seq("q_id"))
+        .withColumn("ip",
+          round(Similarity.dotFold(col("q_vec"), col("n_vec")), 6))
+        .select(cols.map(col): _*))
+
+  /** One level of an exact re-rank sweep: the [[shortlistIp]] rows
+    * `lv` re-ranked by `w` to a top-3, their [[recallCounts]] against
+    * `exact`, and the exact dots the level spent (`n_exact`).
+    */
+  private def rerankLevel(exact: DataFrame, lv: DataFrame,
+      w: WindowSpec): DataFrame =
+    recallCounts(recallJoin(exact,
+        lv.withColumn("rr", row_number().over(w)).filter(col("rr") <= 3)))
+      .crossJoin(broadcast(lv.agg(count(lit(1)).as("n_exact"))))
+
+  /** Per-subspace residual MSE under layout `perm` and codebook `rows`
+    * ([[Similarity.pqPermMse]] over the residual frame `rf`), pivoted
+    * into the ordered 8-term sum `name` rounded at 6 (pqTermPivot's
+    * fold), after the `carry` columns (max over subspaces).
+    */
+  private def mseSum8(rf: DataFrame, perm: Seq[Int],
+      rows: Seq[(Int, Int, Seq[Double])], name: String, carry: String*): DataFrame = {
+    val aggs = carry.map(c => max(col(c)).as(c)) ++
+      (0 until 8).map(i => max(when(col("sub") === i, col("mse"))).as(s"m$i"))
+    Similarity.pqPermMse(rf, "vec_id", "resid", perm, rows)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(carry.map(col) :+
+        round((0 until 8).map(i => col(s"m$i")).reduce(_ + _), 6).as(name): _*)
+  }
 
   val queries: Map[String, Q] = Map(
     // ---- random sign projection (Johnson–Lindenstrauss): 64-dim
@@ -443,12 +651,8 @@ object AnnQueries extends QueryFamily {
     "q97_quantized_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id"), col("n_id"))
-      val approx = Similarity.quantizedIvfTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
+      recallJoin(exactTop3(q, emb, cosine = true),
+          Similarity.quantizedIvfTopK(q, emb, "vec_id", "embedding", k = 3))
         .groupBy(col("q_id"))
         .agg(count(col("a_n")).as("n_hits"),
           round(count(col("a_n")) / lit(3.0), 6).as("recall_at_3"))
@@ -464,12 +668,8 @@ object AnnQueries extends QueryFamily {
     "q76_ann_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id"), col("n_id"))
-      val approx = Similarity.lshTopK(q, emb, "vec_id", "embedding", k = 3, nPlanes = 8)
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
+      recallJoin(exactTop3(q, emb, cosine = true),
+          Similarity.lshTopK(q, emb, "vec_id", "embedding", k = 3, nPlanes = 8))
         .groupBy(col("q_id"))
         .agg(count(col("a_n")).as("n_hits"),
           round(count(col("a_n")) / lit(3.0), 6).as("recall_at_3"))
@@ -492,20 +692,10 @@ object AnnQueries extends QueryFamily {
     "q121_ivf_probe_sweep" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      Seq(1, 2, 4, 8, 16).map { p =>
-        val approx = Similarity.ivfTopK(q, emb, "vec_id", "embedding",
-            k = 3, nProbe = p)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(approx,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_exact"), count(col("a_n")).as("n_found"))
-          .select(lit(p.toLong).as("n_probe"), col("n_exact"), col("n_found"),
-            round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
-      }.reduce(_.unionByName(_))
-        .orderBy(col("n_probe"))
+      recallSweep(graft.util.Persist(exactTop3(q, emb, cosine = true)),
+          "n_probe", Seq(1, 2, 4, 8, 16)) { p =>
+        Similarity.ivfTopK(q, emb, "vec_id", "embedding", k = 3, nProbe = p)
+      }
     }),
 
     // ---- IVF-PQ ANN with asymmetric-distance (ADC) scoring — the
@@ -530,16 +720,8 @@ object AnnQueries extends QueryFamily {
     "q128_pq_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id"), col("n_id"))
-      val approx = Similarity.pqAdcTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("a_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / lit(3.0), 6).as("recall_at_3"))
+      hitsAt3(exactTop3(q, emb),
+          Similarity.pqAdcTopK(q, emb, "vec_id", "embedding", k = 3))
         .orderBy(col("q_id"))
     }),
 
@@ -589,20 +771,10 @@ object AnnQueries extends QueryFamily {
     "q134_truncation_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      Seq(8, 16, 32, 64).map { td =>
-        val approx = Similarity.truncatedTopK(q, emb, "vec_id", "embedding",
-            k = 3, d = td)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(approx,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_exact"), count(col("a_n")).as("n_found"))
-          .select(lit(td.toLong).as("trunc_dim"), col("n_exact"), col("n_found"),
-            round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
-      }.reduce(_.unionByName(_))
-        .orderBy(col("trunc_dim"))
+      recallSweep(graft.util.Persist(exactTop3(q, emb, cosine = true)),
+          "trunc_dim", Seq(8, 16, 32, 64)) { td =>
+        Similarity.truncatedTopK(q, emb, "vec_id", "embedding", k = 3, d = td)
+      }
     }),
 
     // ---- STREAMING semantic near-dup ingest — the third detector
@@ -655,19 +827,9 @@ object AnnQueries extends QueryFamily {
     "q136_pq_trained_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val cb = pqRefinedCodebook(s, d).groupBy(_._1)
-        .map { case (sub, xs) => sub -> xs.sortBy(_._2).map(_._3) }
-      val exact = Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-        .select(col("q_id"), col("n_id"))
-      val approx = Similarity.pqAdcTopKWith(q, emb, "vec_id", "embedding",
-          k = 3, cb)
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("a_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / lit(3.0), 6).as("recall_at_3"))
+      val cb = codebookMap(pqRefinedCodebook(s, d))
+      hitsAt3(exactTop3(q, emb),
+          Similarity.pqAdcTopKWith(q, emb, "vec_id", "embedding", k = 3, cb))
         .orderBy(col("q_id"))
     }),
 
@@ -688,41 +850,12 @@ object AnnQueries extends QueryFamily {
     //      deployment never rebuild). `src` tags which path produced
     //      each row; the oracle derives it from the md5 split rule. ----
     "q137_stream_index_ingest" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q137_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.quantizedIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding").write.mode("overwrite").parquet(p)
-      }
-      val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDeltaDoc(col("vec_id")))
-        .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q137_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q137_sidx_")
-      val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
-      Streaming.drain(stream, ck, 4) { (batch, id) =>
-        Streaming.writeBatch(streamBatchQuantIndex(batch), id, out, append = true)
-      }
-      s.read.parquet(out)
-        .select(col("cell"), col("id"), col("code"), col("scale"), col("cnorm"))
-        .withColumn("src", lit("delta"))
-        .unionByName(baseIdx
-          .select(col("cell"), col("id"), col("code"), col("scale"),
-            col("cnorm"))
-          .withColumn("src", lit("base")))
-        .select(col("cell"), col("id").as("vec_id"),
-          // list-typed columns crash the driver's pandas sort_values
-          // (unhashable ndarray) — compare the codes as a CSV string
-          // (q81/q31 discipline)
-          array_join(transform(col("code"), _.cast("string")), ",")
-            .as("code"),
-          round(col("scale"), 6).as("scale"),
-          round(col("cnorm"), 6).as("cnorm"), col("src"))
-        .orderBy(col("vec_id"))
+      val base = releasedIndex(s, s"graft_q137_idx_${CoreQueries.dirToken(d)}", d)(
+        streamBatchQuantIndex)
+      indexRows(
+        streamIngest(s, d, "q137", "sidx", base,
+          "cell", "id", "code", "scale", "cnorm")(streamBatchQuantIndex),
+        round(col("scale"), 6).as("scale"), round(col("cnorm"), 6).as("cnorm"))
     }),
 
     // ---- index cell-SKEW report: the hotCells/SCALE_LADDER pre-flight
@@ -849,13 +982,12 @@ object AnnQueries extends QueryFamily {
     //      corpus size ----
     "q184_opq_gain" -> ((s, d) => {
       val (_, balanced) = opqVarLayout(s, d)
-      val identity: Seq[Int] = 0 until 64
       val aniso = anisoEmb(s, d)
       def side(name: String, perm: Seq[Int]) =
         Similarity.pqPermMse(aniso, "vec_id", "vec", perm,
             opqRefined(s, d, name, perm))
           .select(lit(name).as("layout"), col("sub"), col("n_vecs"), col("mse"))
-      side("identity", identity).unionByName(side("balanced", balanced))
+      side("identity", identityLayout).unionByName(side("balanced", balanced))
         .orderBy(col("layout"), col("sub"))
     }),
 
@@ -872,29 +1004,18 @@ object AnnQueries extends QueryFamily {
     //      ordering ----
     "q197_opq_recall" -> ((s, d) => {
       val (_, balanced) = opqVarLayout(s, d)
-      val identity: Seq[Int] = 0 until 64
       val aniso = anisoEmb(s, d)
       val q = aniso.filter(col("vec_id") < 50)
       // BOTH layout branches of the union join against the truth side —
       // persist it so the fenced 50×corpus exact-IP ranking (the row's
       // dominant scan) runs once, not once per branch
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, aniso, "vec_id", "vec", k = 3)
-          .select(col("q_id"), col("n_id")))
+      val exact = graft.util.Persist(exactTop3(q, aniso, "vec"))
       def side(name: String, perm: Seq[Int]) = {
-        val cb = opqRefined(s, d, name, perm).groupBy(_._1)
-          .map { case (sub, xs) => sub -> xs.sortBy(_._2).map(_._3) }
-        val approx = Similarity.pqAdcTopKWith(q, aniso, "vec_id", "vec",
-            k = 3, cb, perm = Some(perm))
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(approx,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("a_n")).as("n_hits"))
-          .select(lit(name).as("layout"), col("q_id"), col("n_hits"),
-            round(col("n_hits").cast("double") / lit(3.0), 6).as("recall_at_3"))
+        val cb = codebookMap(opqRefined(s, d, name, perm))
+        hitsAt3(exact, Similarity.pqAdcTopKWith(q, aniso, "vec_id", "vec",
+            k = 3, cb, perm = Some(perm)), lit(name).as("layout"))
       }
-      side("identity", identity).unionByName(side("balanced", balanced))
+      side("identity", identityLayout).unionByName(side("balanced", balanced))
         .orderBy(col("layout"), col("q_id"))
     }),
 
@@ -912,9 +1033,7 @@ object AnnQueries extends QueryFamily {
     "q213_index_staleness" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val truth = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 3)
-        .select(col("q_id"), col("n_id"))
+      val truth = exactTop3(q, emb, cosine = true)
       val stale = Similarity.ivfTopK(q, emb.filter(!isDeltaDoc(col("vec_id"))),
           "vec_id", "embedding", k = 3, nCells = 16, nProbe = 4)
         .select(col("q_id").as("s_q"), col("n_id").as("s_n"))
@@ -949,12 +1068,9 @@ object AnnQueries extends QueryFamily {
     //      candidate costs what a missed neighbor costs. 5 bounded
     //      sweep rows; the pick is a 5-row window ----
     "q216_ivf_operating_point" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
+      val exact = graft.util.Persist(exactTop3(q, emb, cosine = true))
       val usable = emb
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
         .select(col("vec_id"),
@@ -971,12 +1087,9 @@ object AnnQueries extends QueryFamily {
         val cand = pairs.agg(count(lit(1)).as("n_candidates"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(round(col("sim"), 6).desc, col("n_id").asc)
-        val approx = pairs.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        val rec = exact.join(approx,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_exact"), count(col("a_n")).as("n_found"))
+        val rec = recallCounts(recallJoin(exact,
+          pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)),
+          "n_exact")
         cand.crossJoin(rec).crossJoin(broadcast(sc))
           .select(lit(p.toLong).as("n_probe"), col("n_candidates"),
             round(col("n_candidates").cast("double") /
@@ -1052,22 +1165,13 @@ object AnnQueries extends QueryFamily {
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = false)
       val flatCb = codebookMap(pqRefinedCodebook(s, d))
       val resCb = codebookMap(residRows)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
+      val exact = graft.util.Persist(exactTop3(q, emb))
       def leg(name: String, residual: Boolean,
-          cb: Map[Int, Seq[Seq[Double]]]) = {
-        val ap = Similarity.ivfPqAdcTopKOn(q, emb, "vec_id", "embedding",
-            k = 3, coarse, cb, residual)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(ap,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
+          cb: Map[Int, Seq[Seq[Double]]]) =
+        recallCounts(recallJoin(exact, Similarity.ivfPqAdcTopKOn(q, emb,
+            "vec_id", "embedding", k = 3, coarse, cb, residual)))
           .select(lit(name).as("variant"), col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"))
-      }
+            recallAt3)
       val cand = Similarity.ivfCandidatePairsOn(q, emb, "vec_id",
           "embedding", coarse)
         .agg(count(lit(1)).as("n_candidates"))
@@ -1096,41 +1200,9 @@ object AnnQueries extends QueryFamily {
     //      invariant that lets the q229 layout serve a 100 TB corpus
     //      that never stops ingesting ----
     "q232_stream_pq_index" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
-      val cb = codebookMap(residRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb)
-          .write.mode("overwrite").parquet(p)
-      }
-      val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDeltaDoc(col("vec_id")))
-        .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q232_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q232_spq_")
-      val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
-      Streaming.drain(stream, ck, 4) { (batch, id) =>
-        Streaming.writeBatch(
-          Similarity.ivfPqResidualIndex(batch, "vec_id",
-            "embedding", coarse, cb), id, out, append = true)
-      }
-      s.read.parquet(out)
-        .select(col("cell"), col("id"), col("code"))
-        .withColumn("src", lit("delta"))
-        .unionByName(baseIdx.select(col("cell"), col("id"), col("code"))
-          .withColumn("src", lit("base")))
-        .select(col("cell"), col("id").as("vec_id"),
-          // list columns crash the driver's pandas sort (q137's
-          // discipline) — render the m-byte code as CSV
-          array_join(transform(col("code"), _.cast("string")), ",")
-            .as("code"), col("src"))
-        .orderBy(col("vec_id"))
+      val f = frozenIdentity(s, d)
+      indexRows(streamIngest(s, d, "q232", "spq", q232Index(s, d),
+        "cell", "id", "code")(f.encode))
     }),
 
     // ---- IVF-PQ index STALENESS: q213's question asked of the q232
@@ -1149,24 +1221,11 @@ object AnnQueries extends QueryFamily {
     "q234_pq_staleness" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
-      val cb = codebookMap(residRows)
+      val f = frozenIdentity(s, d)
       val stale = graft.util.Persist(
-        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb))
-      val maintained = stale.unionByName(
-        Similarity.ivfPqResidualIndex(emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb))
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      def joined(idx: DataFrame) = {
-        val ap = Similarity.ivfPqAdcTopKIndex(q, idx, "vec_id", "embedding",
-            k = 3, coarse, cb)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(ap,
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-      }
+        f.encode(emb.filter(!isDeltaDoc(col("vec_id")))))
+      val exact = graft.util.Persist(exactTop3(q, emb))
+      def joined(idx: DataFrame) = recallJoin(exact, f.search(q, idx, 3))
       val sh = joined(stale).groupBy(col("q_id"))
         .agg(count(col("a_n")).as("stale_hits"))
       // the DECOMPOSITION makes both staleness phenomena first-class
@@ -1177,7 +1236,7 @@ object AnnQueries extends QueryFamily {
       // below rank 3 by the new rows; a superset of candidates can
       // only push a base hit DOWN, so maint_hits − maint_delta_hits
       // ≤ stale_hits is a theorem, spec-pinned)
-      val mh = joined(maintained).groupBy(col("q_id"))
+      val mh = joined(maintained(stale, emb, f)).groupBy(col("q_id"))
         .agg(count(col("a_n")).as("maint_hits"),
           count(when(isDeltaDoc(col("a_n")), lit(1))).as("maint_delta_hits"),
           count(when(isDeltaDoc(col("n_id")), lit(1))).as("n_truth_delta"))
@@ -1214,26 +1273,17 @@ object AnnQueries extends QueryFamily {
       val probes = Seq(1, 2, 4, 8, 16)
       val swept = Similarity.ivfPqProbeSweep(q, idx, "vec_id", "embedding",
         k = 3, coarse, cb, probes)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      val ap = swept.select(col("n_probe").as("a_p"), col("q_id").as("a_q"),
-        col("n_id").as("a_n"))
+      val exact = graft.util.Persist(exactTop3(q, emb))
       val pr = probes.map(p => s.range(1).select(lit(p.toLong).as("n_probe")))
         .reduce(_ unionByName _)
-      val rec = pr.crossJoin(exact)
-        .join(ap, col("n_probe") === col("a_p") &&
-          col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-        .groupBy(col("n_probe"))
-        .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
+      val rec = recallCounts(
+        recallJoin(pr.crossJoin(exact), swept, perProbe = true),
+        by = Seq(col("n_probe")))
       val cost = Similarity.ivfPqProbeCosts(q, idx, "vec_id", "embedding",
         coarse, probes)
       rec.join(cost, Seq("n_probe"))
         .select(col("n_probe"), col("n_candidates"), col("n_truth"),
-          col("n_found"),
-          when(col("n_truth") === 0, 0.0)
-            .otherwise(round(col("n_found").cast("double") /
-              col("n_truth"), 6)).as("recall_at_3"))
+          col("n_found"), recallAt3)
         .orderBy(col("n_probe"))
     }),
 
@@ -1258,35 +1308,19 @@ object AnnQueries extends QueryFamily {
       val aniso = anisoEmb(s, d)
       val q = aniso.filter(col("vec_id") < 50)
       val (coarse, balanced) = anisoResidualBase(s, d)
-      val identity: Seq[Int] = 0 until 64
       val rf = graft.util.Persist(
         residualFrameOf(aniso, coarse, vecCol = "vec"))
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, aniso, "vec_id", "vec", k = 3)
-          .select(col("q_id"), col("n_id")))
+      val exact = graft.util.Persist(exactTop3(q, aniso, "vec"))
       def leg(name: String, perm: Seq[Int]) = {
         val rows = anisoResidualCb(s, d, name, perm)
-        val cb = codebookMap(rows)
-        val ap = Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
-            k = 3, coarse, cb, residual = true, perm = Some(perm))
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        val rec = exact.join(ap,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
-        val mse = Similarity.pqPermMse(rf, "vec_id", "resid", perm, rows)
-          .agg(max(when(col("sub") === 0, col("mse"))).as("m0"),
-            (1 until 8).map(i =>
-              max(when(col("sub") === i, col("mse"))).as(s"m$i")): _*)
-          .select(round((0 until 8).map(i => col(s"m$i"))
-            .reduce(_ + _), 6).as("resid_mse"))
-        rec.crossJoin(broadcast(mse))
+        val rec = recallCounts(recallJoin(exact, Similarity.ivfPqAdcTopKOn(
+          q, aniso, "vec_id", "vec", k = 3, coarse, codebookMap(rows),
+          residual = true, perm = Some(perm))))
+        rec.crossJoin(broadcast(mseSum8(rf, perm, rows, "resid_mse")))
           .select(lit(name).as("layout"), col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"),
-            col("resid_mse"))
+            recallAt3, col("resid_mse"))
       }
-      leg("identity", identity).unionByName(leg("balanced", balanced))
+      leg("identity", identityLayout).unionByName(leg("balanced", balanced))
         .orderBy(col("layout"))
     }),
 
@@ -1311,15 +1345,8 @@ object AnnQueries extends QueryFamily {
     "q238_pq_retrain" -> ((s, d) => {
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val (base, delta, shifted) = driftSlices(s, d)
-      val identity: Seq[Int] = 0 until 64
-      def mseOf(df: DataFrame) = Similarity
-        .pqPermMse(residualFrameOf(df, coarse), "vec_id", "resid",
-          identity, residRows)
-        .agg(max(col("n_vecs")).as("n_vecs"),
-          (0 until 8).map(i =>
-            max(when(col("sub") === i, col("mse"))).as(s"m$i")): _*)
-        .select(col("n_vecs"), round((0 until 8).map(i => col(s"m$i"))
-          .reduce(_ + _), 6).as("frozen_mse"))
+      def mseOf(df: DataFrame) = mseSum8(residualFrameOf(df, coarse),
+        identityLayout, residRows, "frozen_mse", "n_vecs")
       val b = graft.util.Persist(mseOf(base))
       def row(name: String, x: DataFrame) =
         x.select(lit(name).as("slice"), col("n_vecs"), col("frozen_mse"))
@@ -1352,29 +1379,16 @@ object AnnQueries extends QueryFamily {
       def firstHex(c: Column): Column =
         substring(md5(c.cast("string")), 1, 1)
       val emb = Tables.embeddings(s, d)
-      val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
-      val cb = codebookMap(residRows)
+      val f = frozenIdentity(s, d)
       // the SAME released artifact q232 maintains (shared dir)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(
-            emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb)
-          .write.mode("overwrite").parquet(p)
-      }
-      val v1 = s.read.parquet(idxDir).withColumn("src", lit("base"))
+      val v1 = q232Index(s, d).withColumn("src", lit("base"))
       def ingest(name: String, pred: Column) =
-        Similarity.ivfPqResidualIndex(emb.filter(pred), "vec_id",
-            "embedding", coarse, cb)
-          .withColumn("src", lit(name))
+        f.encode(emb.filter(pred)).withColumn("src", lit(name))
       val v2 = v1.unionByName(
         ingest("delta1", firstHex(col("vec_id")) === "0"))
       val v3 = v2.unionByName(
         ingest("delta2", firstHex(col("vec_id")).isin("1", "2")))
-      v3.select(col("cell"), col("id").as("vec_id"),
-          array_join(transform(col("code"), _.cast("string")), ",")
-            .as("code"), col("src"))
-        .orderBy(col("vec_id"))
+      indexRows(v3)
     }),
 
     // ---- the RETRAIN REMEDIATION LADDER (q238's trigger → its
@@ -1398,22 +1412,16 @@ object AnnQueries extends QueryFamily {
       val (fCoarse, fRows) = ivfPqTrained(s, d, baseOnly = true)
       val (base, _, shifted) = driftSlices(s, d)
       val (rCoarse, perm, cbId, cbOp) = driftRetrained(s, d)
-      val identity: Seq[Int] = 0 until 64
       def mse8(df: DataFrame, coarse: Seq[(Int, Seq[Double])],
-          p: Seq[Int], rows: Seq[(Int, Int, Seq[Double])]) = Similarity
-        .pqPermMse(residualFrameOf(df, coarse), "vec_id", "resid", p, rows)
-        .agg(max(col("n_vecs")).as("n_vecs"),
-          (0 until 8).map(i =>
-            max(when(col("sub") === i, col("mse"))).as(s"m$i")): _*)
-        .select(col("n_vecs"), round((0 until 8).map(i => col(s"m$i"))
-          .reduce(_ + _), 6).as("shifted_mse"))
-      val baseRef = mse8(base, fCoarse, identity, fRows)
+          p: Seq[Int], rows: Seq[(Int, Int, Seq[Double])]) =
+        mseSum8(residualFrameOf(df, coarse), p, rows, "shifted_mse", "n_vecs")
+      val baseRef = mse8(base, fCoarse, identityLayout, fRows)
         .select(col("shifted_mse").as("base_mse"))
       def row(regime: String, x: DataFrame) =
         x.select(lit(regime).as("regime"), col("n_vecs"),
           col("shifted_mse"))
-      row("frozen", mse8(shifted, fCoarse, identity, fRows))
-        .unionByName(row("retrained", mse8(shifted, rCoarse, identity, cbId)))
+      row("frozen", mse8(shifted, fCoarse, identityLayout, fRows))
+        .unionByName(row("retrained", mse8(shifted, rCoarse, identityLayout, cbId)))
         .unionByName(
           row("retrained_opq", mse8(shifted, rCoarse, perm, cbOp)))
         .crossJoin(broadcast(baseRef))
@@ -1440,40 +1448,9 @@ object AnnQueries extends QueryFamily {
     //      encode under the frozen bundle — maintenance ≡ rebuild
     //      with the permutation carried ----
     "q242_stream_opq_index" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
-      val cb = codebookMap(cbRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(
-            emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm = Some(perm))
-          .write.mode("overwrite").parquet(p)
-      }
-      val baseIdx = s.read.parquet(idxDir)
-      val delta = emb.filter(isDeltaDoc(col("vec_id")))
-        .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q242_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q242_sopq_")
-      val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
-      Streaming.drain(stream, ck, 4) { (batch, id) =>
-        Streaming.writeBatch(
-          Similarity.ivfPqResidualIndex(batch, "vec_id",
-            "embedding", coarse, cb, perm = Some(perm)), id, out, append = true)
-      }
-      s.read.parquet(out)
-        .select(col("cell"), col("id"), col("code"))
-        .withColumn("src", lit("delta"))
-        .unionByName(baseIdx.select(col("cell"), col("id"), col("code"))
-          .withColumn("src", lit("base")))
-        .select(col("cell"), col("id").as("vec_id"),
-          array_join(transform(col("code"), _.cast("string")), ",")
-            .as("code"), col("src"))
-        .orderBy(col("vec_id"))
+      val f = frozenOpq(s, d)
+      indexRows(streamIngest(s, d, "q242", "sopq", q242Index(s, d),
+        "cell", "id", "code")(f.encode))
     }),
 
     // ---- ADC+R exact re-rank (VERDICT r17 #4): IVF and LSH re-rank
@@ -1495,26 +1472,16 @@ object AnnQueries extends QueryFamily {
       val aniso = anisoEmb(s, d)
       val q = aniso.filter(col("vec_id") < 50)
       val (coarse, _) = anisoResidualBase(s, d)
-      val identity: Seq[Int] = 0 until 64
-      val cb = codebookMap(anisoResidualCb(s, d, "identity", identity))
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, aniso, "vec_id", "vec", k = 3)
-          .select(col("q_id"), col("n_id")))
-      def leg(name: String, kShort: Long, ap: DataFrame) = {
-        val a = ap.select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(a,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
+      val cb = codebookMap(anisoResidualCb(s, d, "identity", identityLayout))
+      val exact = graft.util.Persist(exactTop3(q, aniso, "vec"))
+      def leg(name: String, kShort: Long, ap: DataFrame) =
+        recallCounts(recallJoin(exact, ap))
           .select(lit(name).as("leg"), lit(kShort).as("k_short"),
-            col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"))
-      }
+            col("n_truth"), col("n_found"), recallAt3)
       val adc = Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
-        k = 3, coarse, cb, residual = true, perm = Some(identity))
+        k = 3, coarse, cb, residual = true, perm = Some(identityLayout))
       val rr = Similarity.ivfPqAdcRerankTopK(q, aniso, "vec_id", "vec",
-        k = 3, kShort = 10, coarse, cb, identity)
+        k = 3, kShort = 10, coarse, cb, identityLayout)
       leg("adc", 3L, adc).unionByName(leg("adc_rerank", 10L, rr))
         .orderBy(col("leg"))
     }),
@@ -1536,46 +1503,22 @@ object AnnQueries extends QueryFamily {
       val aniso = anisoEmb(s, d)
       val q = aniso.filter(col("vec_id") < 50)
       val (coarse, _) = anisoResidualBase(s, d)
-      val identity: Seq[Int] = 0 until 64
-      val cb = codebookMap(anisoResidualCb(s, d, "identity", identity))
+      val cb = codebookMap(anisoResidualCb(s, d, "identity", identityLayout))
       val levels = Seq(3, 5, 10, 20)
       val short = graft.util.Persist(
         Similarity.ivfPqAdcTopKOn(q, aniso, "vec_id", "vec",
-          k = levels.max, coarse, cb, residual = true, perm = Some(identity))
+          k = levels.max, coarse, cb, residual = true, perm = Some(identityLayout))
           .select(col("q_id"), col("rank"), col("n_id")))
-      val qv = q.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))
       // one gather of the max shortlist's raw vectors + exact dots;
       // every level re-ranks a filter of this frame
-      val scored = graft.util.Persist(
-        aniso.select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
-          .join(broadcast(short), Seq("n_id"))
-          .join(broadcast(qv), Seq("q_id"))
-          .withColumn("ip",
-            round(Similarity.dotFold(col("q_vec"), col("n_vec")), 6))
-          .select(col("q_id"), col("n_id"), col("rank"), col("ip")))
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, aniso, "vec_id", "vec", k = 3)
-          .select(col("q_id"), col("n_id")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id"))
+      val scored = shortlistIp(aniso, q, short, "q_id", "n_id", "rank", "ip")
+      val exact = graft.util.Persist(exactTop3(q, aniso, "vec"))
+      val w = Window.partitionBy(col("q_id"))
         .orderBy(col("ip").desc, col("n_id").asc)
       levels.map { l =>
-        val lv = scored.filter(col("rank") <= l)
-        val top = lv.withColumn("rr", row_number().over(w))
-          .filter(col("rr") <= 3)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        val cost = lv.agg(count(lit(1)).as("n_exact"))
-        exact.join(top,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"),
-            "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
-          .crossJoin(broadcast(cost))
+        rerankLevel(exact, scored.filter(col("rank") <= l), w)
           .select(lit(l.toLong).as("k_short"), col("n_truth"),
-            col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"),
-            col("n_exact"))
+            col("n_found"), recallAt3, col("n_exact"))
       }.reduce(_ unionByName _).orderBy(col("k_short"))
     }),
 
@@ -1599,55 +1542,21 @@ object AnnQueries extends QueryFamily {
     "q246_opq_index_serving" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      def rec(name: String, ap: DataFrame) = {
-        val a = ap.select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(a,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"),
-            "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
+      val exact = graft.util.Persist(exactTop3(q, emb))
+      def rec(name: String, ap: DataFrame) =
+        recallCounts(recallJoin(exact, ap))
           .select(lit(name).as("layout"), col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"))
-      }
+            recallAt3)
       // balanced: the q242 released artifact + delta encode under the
       // frozen perm bundle, served through the perm LUT path
-      val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
-      val cb = codebookMap(cbRows)
-      val opqDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(
-            emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm = Some(perm))
-          .write.mode("overwrite").parquet(p)
-      }
-      val opqIdx = s.read.parquet(opqDir)
-        .select(col("cell"), col("id"), col("code"))
-        .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb, perm = Some(perm)))
+      val opq = frozenOpq(s, d)
+      val opqIdx = maintained(q242Index(s, d), emb, opq)
       // identity: the q232 released artifact + delta encode, served
       // through the identity LUT path (q234's maintained side)
-      val (iCoarse, iRows) = ivfPqTrained(s, d, baseOnly = true)
-      val iCb = codebookMap(iRows)
-      val idDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", iCoarse, iCb)
-          .write.mode("overwrite").parquet(p)
-      }
-      val idIdx = s.read.parquet(idDir)
-        .select(col("cell"), col("id"), col("code"))
-        .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", iCoarse, iCb))
-      rec("balanced", Similarity.ivfPqAdcTopKIndex(q, opqIdx,
-          "vec_id", "embedding", k = 3, coarse, cb, perm = Some(perm)))
-        .unionByName(rec("identity", Similarity.ivfPqAdcTopKIndex(q, idIdx,
-          "vec_id", "embedding", k = 3, iCoarse, iCb)))
+      val id = frozenIdentity(s, d)
+      val idIdx = maintained(q232Index(s, d), emb, id)
+      rec("balanced", opq.search(q, opqIdx, 3))
+        .unionByName(rec("identity", id.search(q, idIdx, 3)))
         .orderBy(col("layout"))
     }),
 
@@ -1668,40 +1577,15 @@ object AnnQueries extends QueryFamily {
     "q248_serving_stack" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
-      val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
-      val cb = codebookMap(cbRows)
-      val opqDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(
-            emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb, perm = Some(perm))
-          .write.mode("overwrite").parquet(p)
-      }
-      val idx = s.read.parquet(opqDir)
-        .select(col("cell"), col("id"), col("code"))
-        .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb, perm = Some(perm)))
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, emb, "vec_id", "embedding", k = 3)
-          .select(col("q_id"), col("n_id")))
-      def rec(name: String, kShort: Long, ap: DataFrame) = {
-        val a = ap.select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        exact.join(a,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"),
-            "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
+      val f = frozenOpq(s, d)
+      val idx = maintained(q242Index(s, d), emb, f)
+      val exact = graft.util.Persist(exactTop3(q, emb))
+      def rec(name: String, kShort: Long, ap: DataFrame) =
+        recallCounts(recallJoin(exact, ap))
           .select(lit(name).as("leg"), lit(kShort).as("k_short"),
-            col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"))
-      }
-      val adc = Similarity.ivfPqAdcTopKIndex(q, idx,
-        "vec_id", "embedding", k = 3, coarse, cb, perm = Some(perm))
-      val short = Similarity.ivfPqAdcTopKIndex(q, idx,
-        "vec_id", "embedding", k = 10, coarse, cb, perm = Some(perm))
-      val rr = Similarity.exactRerank(short, q, emb,
+            col("n_truth"), col("n_found"), recallAt3)
+      val adc = f.search(q, idx, 3)
+      val rr = Similarity.exactRerank(f.search(q, idx, 10), q, emb,
         "vec_id", "embedding", k = 3)
       rec("adc_index", 3L, adc)
         .unionByName(rec("adc_index_rerank", 10L, rr))
@@ -1724,29 +1608,10 @@ object AnnQueries extends QueryFamily {
     //      (same md5-'f' rule as the q244 manifest masks, so the two
     //      deletion lifecycles compose across families) ----
     "q249_pq_index_tombstones" -> ((s, d) => {
-      def tomb(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1) === "f"
-      val emb = Tables.embeddings(s, d)
-      val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
-      val cb = codebookMap(residRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
-        Similarity.ivfPqResidualIndex(emb.filter(!isDeltaDoc(col("vec_id"))),
-            "vec_id", "embedding", coarse, cb)
-          .write.mode("overwrite").parquet(p)
-      }
-      val maintained = s.read.parquet(idxDir)
-        .select(col("cell"), col("id"), col("code"))
-        .withColumn("src", lit("base"))
-        .unionByName(Similarity.ivfPqResidualIndex(
-          emb.filter(isDeltaDoc(col("vec_id"))),
-          "vec_id", "embedding", coarse, cb)
-          .withColumn("src", lit("delta")))
-      maintained.filter(!tomb(col("id")))
-        .select(col("cell"), col("id").as("vec_id"),
-          array_join(transform(col("code"), _.cast("string")), ",")
-            .as("code"), col("src"))
-        .orderBy(col("vec_id"))
+      val f = frozenIdentity(s, d)
+      indexRows(maintained(q232Index(s, d), Tables.embeddings(s, d), f,
+          tagged = true)
+        .filter(!isTombstoned(col("id"))))
     }),
 
     // ---- the 2-D ANN OPERATING GRID (nProbe × rerank k′): q235
@@ -1770,8 +1635,7 @@ object AnnQueries extends QueryFamily {
       val aniso = anisoEmb(s, d)
       val q = aniso.filter(col("vec_id") < 50)
       val (coarse, _) = anisoResidualBase(s, d)
-      val identity: Seq[Int] = 0 until 64
-      val cb = codebookMap(anisoResidualCb(s, d, "identity", identity))
+      val cb = codebookMap(anisoResidualCb(s, d, "identity", identityLayout))
       val idx = Similarity.ivfPqResidualIndex(aniso, "vec_id", "vec",
         coarse, cb)
       val probes = Seq(1, 4, 16)
@@ -1779,43 +1643,21 @@ object AnnQueries extends QueryFamily {
       val swept = graft.util.Persist(
         Similarity.ivfPqProbeSweep(q, idx, "vec_id", "vec",
           k = kShorts.max, coarse, cb, probes))
-      val qv = q.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))
       // one raw gather + exact dots for the max shortlist of every
       // probe level; each grid cell filters this frame
-      val scored = graft.util.Persist(
-        aniso.select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
-          .join(broadcast(swept.select(col("n_probe"), col("q_id"),
-            col("rank"), col("n_id"))), Seq("n_id"))
-          .join(broadcast(qv), Seq("q_id"))
-          .withColumn("ip",
-            round(Similarity.dotFold(col("q_vec"), col("n_vec")), 6))
-          .select(col("n_probe"), col("q_id"), col("n_id"), col("rank"),
-            col("ip")))
+      val scored = shortlistIp(aniso, q,
+        swept.select(col("n_probe"), col("q_id"), col("rank"), col("n_id")),
+        "n_probe", "q_id", "n_id", "rank", "ip")
       val cost = Similarity.ivfPqProbeCosts(q, idx, "vec_id", "vec",
         coarse, probes)
-      val exact = graft.util.Persist(
-        Similarity.bruteForceDotTopK(q, aniso, "vec_id", "vec", k = 3)
-          .select(col("q_id"), col("n_id")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_probe"), col("q_id"))
+      val exact = graft.util.Persist(exactTop3(q, aniso, "vec"))
+      val w = Window.partitionBy(col("n_probe"), col("q_id"))
         .orderBy(col("ip").desc, col("n_id").asc)
-      val legs = for { p <- probes; ks <- kShorts } yield {
-        val lv = scored.filter(col("n_probe") === p && col("rank") <= ks)
-        val top = lv.withColumn("rr", row_number().over(w))
-          .filter(col("rr") <= 3)
-          .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-        val ne = lv.agg(count(lit(1)).as("n_exact"))
-        exact.join(top,
-            col("q_id") === col("a_q") && col("n_id") === col("a_n"),
-            "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_found"))
-          .crossJoin(broadcast(ne))
+      val legs = for { p <- probes; ks <- kShorts } yield
+        rerankLevel(exact,
+            scored.filter(col("n_probe") === p && col("rank") <= ks), w)
           .select(lit(p.toLong).as("n_probe"), lit(ks.toLong).as("k_short"),
-            col("n_exact"), col("n_truth"), col("n_found"),
-            when(col("n_truth") === 0, 0.0)
-              .otherwise(round(col("n_found").cast("double") /
-                col("n_truth"), 6)).as("recall_at_3"))
-      }
+            col("n_exact"), col("n_truth"), col("n_found"), recallAt3)
       legs.reduce(_ unionByName _)
         .join(broadcast(cost), Seq("n_probe"))
         .select(col("n_probe"), col("k_short"), col("n_candidates"),
@@ -1859,11 +1701,12 @@ object AnnQueries extends QueryFamily {
              list_extract(e.vec, k.sub * 8 + poss.pos + 1) AS vv
            FROM codes k JOIN e USING (vec_id) CROSS JOIN poss)"""
 
-  /** Shared q183/q184 oracle CTEs: the anisotropic rehearsal fixture
-    * (dims 0–7 scaled 4×, usable-vector contract) and its rounded
-    * per-dimension population variances — mirroring [[anisoEmb]] and
-    * the opqVarLayout aggregate exactly (same scale rule, same row
-    * set, same round-at-6).
+  /** Shared aniso-corpus oracle CTEs: the anisotropic rehearsal
+    * fixture `au` (dims 0–7 scaled 4×, usable-vector contract), its
+    * rounded per-dimension population variances `avr` and their snake
+    * layout `abmap` — mirroring [[anisoEmb]] and [[opqVarLayout]]
+    * exactly (same scale rule, same row set, same round-at-6) — and
+    * the identity layout `aimap`.
     */
   private lazy val anisoCtes: String = s"""
          adims AS (SELECT unnest(generate_series(0, 63)) AS dim),
@@ -1875,69 +1718,46 @@ object AnnQueries extends QueryFamily {
            FROM ae0 CROSS JOIN adims GROUP BY vec_id),
          au AS (SELECT vec_id, vec FROM aav
            WHERE list_inner_product(vec, vec) > 0),
-         avr AS (SELECT dim, round(var_pop(vec[dim + 1]), 6) AS v
-           FROM au CROSS JOIN adims GROUP BY dim)"""
+         ${snakeLayoutSql("a", "au", "vec", "adims")},
+         ${identityMapSql("aimap", "adims")}"""
 
-  /** Shared q184/q197 oracle CTEs: the static PQ init codebook and
-    * the two dim→(sub, pos) layout maps — identity (`aimap`, the
-    * contiguous slice) and variance-balanced (`abmap`, the snake deal
-    * over the variance ranks). Requires [[anisoCtes]]'s `avr`/`adims`
-    * in scope.
+  /** The variance-balanced layout in DuckDB: `$src`'s rounded
+    * per-dimension population variances of the 64-dim `$vec`
+    * (`${px}vr`), their ranks (`${px}rk`) and the snake deal of the
+    * ranks over the 8 subspaces (`${px}bmap(dim, sub, pos)`) —
+    * [[varianceLayout]] and [[Similarity.balancedLayout]] mirrored.
+    * Requires the `$dims` (0..63) CTE.
     */
-  private lazy val opqLayoutCtes: String = s"""
-         opqc(sub, c, pvec) AS (VALUES $pqCentroids),
-         ark AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1 AS r
-           FROM avr),
-         abmap AS (SELECT dim,
+  private def snakeLayoutSql(px: String, src: String, vec: String,
+      dims: String): String = s"""
+         ${px}vr AS (SELECT dim, round(var_pop($vec[dim + 1]), 6) AS v
+           FROM $src CROSS JOIN $dims GROUP BY dim),
+         ${px}rk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
+             AS r FROM ${px}vr),
+         ${px}bmap AS (SELECT dim,
              CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
                ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM ark),
-         aimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM adims),
-         aposs AS (SELECT unnest(generate_series(0, 7)) AS pos)"""
+             CAST(r // 8 AS BIGINT) AS pos FROM ${px}rk)"""
 
-  /** Shared q184/q197 per-layout oracle block: the subvector gather
-    * under layout map `mp`, the static-init encode, and the
-    * one-Lloyd-step refined codebook `${px}rc(sub, c, rvec)` —
-    * mirroring [[opqRefined]] exactly (rounded-argmin/low-c ties,
-    * round-at-6 means). Requires `au`, `opqc`, `aposs` in scope.
-    */
-  private def opqTrainSqlFor(px: String, mp: String): String = s"""
-         ${px}sv AS (SELECT u.vec_id, m.sub,
-             list(u.vec[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM au u CROSS JOIN $mp m GROUP BY u.vec_id, m.sub),
-         ${px}k0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM ${px}sv s JOIN opqc p ON p.sub = s.sub),
-         ${px}cd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM ${px}k0) t WHERE rn = 1),
-         ${px}ref AS (SELECT cd.sub, cd.c, aposs.pos,
-             round(avg(cd.sv[aposs.pos + 1]), 6) AS cv
-           FROM ${px}cd cd CROSS JOIN aposs GROUP BY 1, 2, 3),
-         ${px}rc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM ${px}ref GROUP BY 1, 2)"""
+  /** The identity layout map `$name(dim, sub, pos)` over `$dims`. */
+  private def identityMapSql(name: String, dims: String): String =
+    s"""$name AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
+             CAST(dim % 8 AS BIGINT) AS pos FROM $dims)"""
 
-  /** Per-layout RESIDUAL-rung OPQ oracle block (q237): gather the
-    * `w7rv` residuals under layout map `mp` (norm > 0, mirroring
-    * pqTrainIteration/pqPermMse's usable contract), one-Lloyd
-    * refine from the static `pqc` init into `${px}rc(sub, c, rvec)`,
-    * encode every residual against it (`${px}code`), gather the query
-    * vectors under the same map (`${px}qsv`), and emit the ADC top-3
-    * (`${px}ap` — coarse term added LAST, q229's fold) plus the
-    * per-subspace trained-codebook MSE pivoted into the ordered
-    * 8-term sum (`${px}m8` — pqPermMse's err = |sv|² + unrounded key
-    * at the rounded-argmin). Requires `w7rv`, `prs`, `qq`, `pqc`,
-    * `aposs` in scope.
+  /** One Lloyd step of the PQ codebook under layout map `mp`: the
+    * `$src` rows' (`$id`, `$vec`) vectors with norm > 0, gathered into
+    * per-subspace subvectors `${px}sv(vec_id, sub, sv)`, encoded
+    * against the static init `pqc` (rounded key, low c), and the
+    * member means rounded at 6 as `${px}rc(sub, c, rvec)` — the
+    * [[opqRefined]] trainer mirrored. Requires `pqc` and `poss`.
     */
-  private def residOpqSqlFor(px: String, mp: String): String = s"""
-         ${px}sv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM w7rv r CROSS JOIN $mp m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
+  private def opqRefineSql(px: String, src: String, id: String, vec: String,
+      mp: String): String = s"""
+         ${px}sv AS (SELECT r.$id AS vec_id, m.sub,
+             list(r.$vec[m.dim + 1] ORDER BY m.pos) AS sv
+           FROM $src r CROSS JOIN $mp m
+           WHERE list_inner_product(r.$vec, r.$vec) > 0
+           GROUP BY r.$id, m.sub),
          ${px}k0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
              list_inner_product(p.pvec, p.pvec)
                - 2 * list_inner_product(s.sv, p.pvec) AS key
@@ -1946,11 +1766,80 @@ object AnnQueries extends QueryFamily {
              SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
                PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
              FROM ${px}k0) t WHERE rn = 1),
-         ${px}ref AS (SELECT cd.sub, cd.c, aposs.pos,
-             round(avg(cd.sv[aposs.pos + 1]), 6) AS cv
-           FROM ${px}cd cd CROSS JOIN aposs GROUP BY 1, 2, 3),
+         ${px}ref AS (SELECT cd.sub, cd.c, poss.pos,
+             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
+           FROM ${px}cd cd CROSS JOIN poss GROUP BY 1, 2, 3),
          ${px}rc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM ${px}ref GROUP BY 1, 2),
+           FROM ${px}ref GROUP BY 1, 2)"""
+
+  /** The ordered 8-term per-subspace MSE sum over a `(sub, mse)` CTE,
+    * rounded at 6 (the [[mseSum8]] fold).
+    */
+  private val mseSum8Sql: String =
+    s"round(${(0 until 8).map(i => s"MAX(mse) FILTER (sub = $i)").mkString(" + ")}, 6)"
+
+  /** recall@3 over a [[recallSql]] row, 0 when there is no truth (the
+    * [[recallAt3]] guard).
+    */
+  private val recallAt3Sql: String =
+    "CASE WHEN n_truth = 0 THEN 0.0 ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END"
+
+  /** The recall counts of an approximate top-3 `$ap(q_id, n_id, …)`
+    * against the `$ex(q_id, n_id)` truth: `${name}(…, n_truth,
+    * n_found)`, one row per combination of the `levels` (each a
+    * `(cte, column)` pair that `$ap` also carries), or one row.
+    */
+  private def recallSql(name: String, ap: String, ex: String = "ex",
+      levels: Seq[(String, String)] = Nil): String = {
+    val keys = levels.map { case (t, c) => s"$t.$c" }
+    val on = levels.map { case (t, c) => s"a.$c = $t.$c" } ++
+      Seq("a.q_id = e.q_id", "a.n_id = e.n_id")
+    s"""$name AS (SELECT ${keys.map(_ + ", ").mkString}CAST(COUNT(*) AS BIGINT) AS n_truth,
+             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
+           FROM ${(levels.map(_._1) :+ s"$ex e").mkString(" CROSS JOIN ")}
+           LEFT JOIN $ap a ON ${on.mkString(" AND ")}
+           ${if (keys.isEmpty) "" else keys.mkString("GROUP BY ", ", ", "")})"""
+  }
+
+  /** The aniso residual-rung scaffold of q237/q243/q245/q251: one
+    * trained-coarse Lloyd step over the aniso corpus (`w7*`), the
+    * fenced queries `qq` with their 16 nearest trained cells ranked
+    * (`qa16`, exact coarse dot `cd`), the 4-probe candidates `prs`,
+    * the exact-IP truth `ex`, and the identity-layout residual block
+    * `ri*` ([[residOpqSqlFor]]).
+    */
+  private lazy val anisoResidCtes: String = s"""
+         $anisoCtes,
+         $pqInitCtes,
+         ${ivfPqTrainSqlFor("w7", "au")},
+         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM au
+           WHERE vec_id < 50),
+         qa16 AS (SELECT q_id, cell, cd, rn AS crank FROM (
+           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
+             ROW_NUMBER() OVER (PARTITION BY q_id
+               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
+               cell) AS rn
+           FROM qq, w7cent) t WHERE rn <= 16),
+         qa AS (SELECT q_id, cell, cd FROM qa16 WHERE crank <= 4),
+         prs AS (SELECT qa.q_id, qa.cd, ca.n_id
+           FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
+         ${exactTop3Sql("au")},
+         ${residOpqSqlFor("ri", "aimap")}"""
+
+  /** Per-layout RESIDUAL-rung OPQ oracle block (q237): gather the
+    * `w7rv` residuals under layout map `mp` (norm > 0, mirroring
+    * pqTrainIteration/pqPermMse's usable contract), one-Lloyd
+    * refine ([[opqRefineSql]]) into `${px}rc(sub, c, rvec)`,
+    * encode every residual against it (`${px}code`), gather the query
+    * vectors under the same map (`${px}qsv`), and emit the ADC top-3
+    * (`${px}ap` — coarse term added LAST, q229's fold) plus the
+    * per-subspace trained-codebook MSE pivoted into the ordered
+    * 8-term sum (`${px}m8` — pqPermMse's err = |sv|² + unrounded key
+    * at the rounded-argmin). Requires `w7rv`, `prs`, `qq`, `ex`, `pqc`
+    * and `poss` in scope.
+    */
+  private def residOpqSqlFor(px: String, mp: String): String = s"""
+         ${opqRefineSql(px, "w7rv", "n_id", "rvecd", mp)},
          ${px}esv AS (SELECT r.n_id AS vec_id, m.sub,
              list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
            FROM w7rv r CROSS JOIN $mp m GROUP BY r.n_id, m.sub),
@@ -1986,13 +1875,8 @@ object AnnQueries extends QueryFamily {
            WHERE rn = 1),
          ${px}me AS (SELECT sub, round(avg(err), 6) AS mse
            FROM ${px}mm GROUP BY sub),
-         ${px}m8 AS (SELECT round(${(0 until 8)
-             .map(i => s"MAX(mse) FILTER (sub = $i)").mkString(" + ")}, 6)
-             AS resid_mse FROM ${px}me),
-         ${px}rec AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN ${px}ap a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id)"""
+         ${px}m8 AS (SELECT $mseSum8Sql AS resid_mse FROM ${px}me),
+         ${recallSql(s"${px}rec", s"${px}ap")}"""
 
   /** The shared q232/q239 index-rebuild oracle CTEs: frozen
     * base-slice training (ivfPqTrainSqlFor), whole-corpus assignment
@@ -2013,24 +1897,112 @@ object AnnQueries extends QueryFamily {
                      list_slice(r.rvecd, b.sub * 8 + 1, b.sub * 8 + 8),
                      b.bvec), 6), b.c) AS rn
            FROM erv r, brcb b) t WHERE rn = 1),
+         ${codeCsvSql("brcb")}"""
+
+  /** Each `ecd` code as codebook positions (the rank of its centroid
+    * id within its subspace of `$cb`, the Spark side's ordered-list
+    * encode) rendered CSV: `ecsv(n_id, code)`.
+    */
+  private def codeCsvSql(cb: String): String = s"""
          epos AS (SELECT sub, c,
              ROW_NUMBER() OVER (PARTITION BY sub ORDER BY c) - 1 AS p
-           FROM brcb),
+           FROM $cb),
          ecsv AS (SELECT n_id,
              string_agg(CAST(p AS VARCHAR), ',' ORDER BY ecd.sub) AS code
            FROM ecd JOIN epos ON epos.sub = ecd.sub AND epos.c = ecd.c
            GROUP BY n_id)"""
 
-  /** Frozen-codebook encode-MSE oracle block (q238): assign `$src` to
-    * the FROZEN `bcent` cells, residuals against them, per-subspace
-    * argmin against the FROZEN `brcb` codebook (rounded key, low c),
-    * err = |sv|² + unrounded key (pqPermMse's identity-layout
-    * arithmetic exactly), ending in `${px}m8(n_vecs, frozen_mse)` —
-    * the ordered 8-term per-sub sum. Requires `bcent`, `brcb`, `poss`
-    * in scope.
+  /** The oracle twin of [[indexRows]]: each `ea` row with its `ecsv`
+    * code, labelled `src`, where `where` holds.
+    */
+  private def indexRowsSql(
+      src: String = s"CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END",
+      where: String = "TRUE"): String = s"""
+         SELECT ea.cell, ea.n_id AS vec_id, ecsv.code, $src AS src
+         FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id WHERE $where
+         ORDER BY vec_id"""
+
+  /** The frozen-OPQ rebuild replay (q242): base training, the
+    * [[opqFrozenCtes]] bundle, and every usable vector's residual
+    * (`erv`) encoded under its layout `qbmap` and codebook `qrc` as
+    * `ecd(n_id, sub, c)`. q246 and q248 serve these rows.
+    */
+  private lazy val opqIndexEncodeCtes: String = s"""
+         $pqInitCtes,
+         sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
+         $baseEmbCtes,
+         ${ivfPqTrainSqlFor("b", "eb")},
+         $opqFrozenCtes,
+         $residualCtes,
+         esv AS (SELECT r.n_id, m.sub,
+             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
+           FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
+         ecd AS (SELECT n_id, sub, c FROM (
+           SELECT s.n_id, b.sub, b.c,
+             ROW_NUMBER() OVER (PARTITION BY s.n_id, b.sub
+               ORDER BY round(list_inner_product(b.rvec, b.rvec)
+                 - 2 * list_inner_product(s.sv, b.rvec), 6), b.c) AS rn
+           FROM esv s JOIN qrc b ON b.sub = s.sub) t WHERE rn = 1)"""
+
+  /** Serving the [[opqIndexEncodeCtes]] rows (q246's balanced leg,
+    * q248): the fenced queries `qq`, their 4 nearest frozen cells with
+    * the exact coarse dot (`qac`), the candidates `prs`, the exact-IP
+    * truth `ex`, the perm-LUT ADC ranking `brkd` (coarse term added
+    * last, q229's fold), its top-3 `bap` and recall `brc`.
+    */
+  private lazy val opqServeCtes: String = s"""
+         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e
+           WHERE vec_id < 50),
+         qac AS (SELECT q_id, cell, cd FROM (
+           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
+             ROW_NUMBER() OVER (PARTITION BY q_id
+               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
+               cell) AS rn
+           FROM qq, bcent) t WHERE rn <= 4),
+         prs AS (SELECT qac.q_id, qac.cd, ea.n_id
+           FROM qac JOIN ea ON ea.cell = qac.cell
+           WHERE qac.q_id <> ea.n_id),
+         ${exactTop3Sql("e")},
+         bqsv AS (SELECT q.q_id, m.sub,
+             list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
+           FROM qq q CROSS JOIN qbmap m GROUP BY q.q_id, m.sub),
+         btm AS (SELECT pr.q_id, pr.n_id, pr.cd, k.sub,
+             list_inner_product(qs.sv, r.rvec) AS term
+           FROM prs pr
+           JOIN ecd k ON k.n_id = pr.n_id
+           JOIN qrc r ON r.sub = k.sub AND r.c = k.c
+           JOIN bqsv qs ON qs.q_id = pr.q_id AND qs.sub = k.sub),
+         brkd AS (SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY
+               q_id ORDER BY round(adc, 6) DESC, n_id) AS rank
+             FROM (SELECT q_id, n_id, MAX(cd) + ($pqTermPivot) AS adc
+               FROM btm GROUP BY q_id, n_id) a),
+         bap AS (SELECT q_id, n_id FROM brkd WHERE rank <= 3),
+         ${recallSql("brc", "bap")}"""
+
+  /** The exact inner-product re-rank of the top-10 of an ADC ranking
+    * `$rkd(q_id, n_id, rank)` over the raw `$corpus(vec_id, vec)`
+    * store, as `rr3(q_id, n_id)`. Requires `qq`.
+    */
+  private def rerank10Sql(rkd: String, corpus: String): String = s"""
+         rrx AS (SELECT s.q_id, s.n_id,
+             ROW_NUMBER() OVER (PARTITION BY s.q_id
+               ORDER BY round(list_inner_product(q.q_vec, c.vec), 6) DESC,
+               s.n_id) AS rank
+           FROM $rkd s JOIN qq q ON q.q_id = s.q_id
+           JOIN $corpus c ON c.vec_id = s.n_id WHERE s.rank <= 10),
+         rr3 AS (SELECT q_id, n_id FROM rrx WHERE rank <= 3)"""
+
+  /** Frozen-codebook encode-MSE oracle block (q238/q240): assign
+    * `$src` to the frozen `$cent` cells, residuals against them,
+    * subvectors gathered under layout map `$mp`, per-subspace argmin
+    * against the frozen `$cb` codebook (its centroids in `$cbVec`;
+    * rounded key, low c), err = |sv|² + unrounded key
+    * ([[Similarity.pqPermMse]]'s arithmetic exactly), ending in
+    * `${px}m8(n_vecs, frozen_mse)` — the ordered 8-term per-sub sum.
     */
   private def frozenMseSqlFor(px: String, src: String,
-      cent: String = "bcent", cb: String = "brcb"): String = s"""
+      cent: String = "bcent", cb: String = "brcb", mp: String = "imap",
+      cbVec: String = "bvec"): String = s"""
          ${px}as AS (SELECT n_id, n_vec, cvec FROM (
              SELECT e.vec_id AS n_id, e.vec AS n_vec, c.cvec,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -2039,13 +2011,14 @@ object AnnQueries extends QueryFamily {
              FROM $src e, $cent c) t WHERE rn = 1),
          ${px}rv AS (SELECT n_id, list_transform(generate_series(1, 64),
              i -> n_vec[i] - cvec[i]) AS rvecd FROM ${px}as),
-         ${px}sv AS (SELECT r.n_id, s.pos AS sub,
-             list_slice(r.rvecd, s.pos * 8 + 1, s.pos * 8 + 8) AS sv
-           FROM ${px}rv r CROSS JOIN poss s
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0),
+         ${px}sv AS (SELECT r.n_id, m.sub,
+             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
+           FROM ${px}rv r CROSS JOIN $mp m
+           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
+           GROUP BY r.n_id, m.sub),
          ${px}mk AS (SELECT s.n_id, s.sub, s.sv, b.c,
-             list_inner_product(b.bvec, b.bvec)
-               - 2 * list_inner_product(s.sv, b.bvec) AS key
+             list_inner_product(b.$cbVec, b.$cbVec)
+               - 2 * list_inner_product(s.sv, b.$cbVec) AS key
            FROM ${px}sv s JOIN $cb b ON b.sub = s.sub),
          ${px}mm AS (SELECT n_id, sub,
              list_inner_product(sv, sv) + key AS err FROM (
@@ -2055,9 +2028,7 @@ object AnnQueries extends QueryFamily {
          ${px}me AS (SELECT sub, round(avg(err), 6) AS mse,
              COUNT(*) AS nv FROM ${px}mm GROUP BY sub),
          ${px}m8 AS (SELECT CAST(MAX(nv) AS BIGINT) AS n_vecs,
-             round(${(0 until 8).map(i => s"MAX(mse) FILTER (sub = $i)")
-               .mkString(" + ")}, 6) AS frozen_mse
-           FROM ${px}me)"""
+             $mseSum8Sql AS frozen_mse FROM ${px}me)"""
 
   /** Each `e` vector's nearest trained coarse centroid from `bcent`
     * (`ea`) and its residual from that centroid (`erv.rvecd`): the
@@ -2173,32 +2144,8 @@ object AnnQueries extends QueryFamily {
     * trained under it (`qrc`). Requires `sdims`, `pqc` and `poss`.
     */
   private lazy val opqFrozenCtes: String =
-    """qvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM brv CROSS JOIN sdims GROUP BY dim),
-         qrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM qvr),
-         qbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM qrk),
-         qsv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM brv r CROSS JOIN qbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         qk0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM qsv s JOIN pqc p ON p.sub = s.sub),
-         qcd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM qk0) t WHERE rn = 1),
-         qref AS (SELECT cd.sub, cd.c, poss.pos,
-             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
-           FROM qcd cd CROSS JOIN poss GROUP BY 1, 2, 3),
-         qrc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM qref GROUP BY 1, 2)"""
+    s"""${snakeLayoutSql("q", "brv", "rvecd", "sdims")},
+         ${opqRefineSql("q", "brv", "n_id", "rvecd", "qbmap")}"""
 
   /** The usable vectors (`e`) and their md5 base slice (`eb`). */
   private lazy val baseEmbCtes: String =
@@ -2382,31 +2329,19 @@ object AnnQueries extends QueryFamily {
          WITH $quantizedCtes,
          e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
            WHERE $usableVec),
-         q AS (SELECT * FROM e WHERE vec_id < 50),
-         bf AS (SELECT q_id, n_id FROM (
-           SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-               round(list_inner_product(a.vec, b.vec) /
-                 (sqrt(list_inner_product(a.vec, a.vec)) * sqrt(list_inner_product(b.vec, b.vec))), 6) DESC,
-               b.vec_id) AS rank
-           FROM q a JOIN e b ON a.vec_id <> b.vec_id) t WHERE rank <= 3),
+         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 50),
+         ${exactTop3Sql("e", cosine = true)},
          ap AS (SELECT q_id, n_id FROM rk WHERE rank <= 3)
-         SELECT bf.q_id, COUNT(ap.n_id) AS n_hits,
+         SELECT ex.q_id, COUNT(ap.n_id) AS n_hits,
            round(COUNT(ap.n_id) / 3.0, 6) AS recall_at_3
-         FROM bf LEFT JOIN ap ON bf.q_id = ap.q_id AND bf.n_id = ap.n_id
-         GROUP BY bf.q_id ORDER BY bf.q_id""",
+         FROM ex LEFT JOIN ap ON ex.q_id = ap.q_id AND ex.n_id = ap.n_id
+         GROUP BY ex.q_id ORDER BY ex.q_id""",
     "q76_ann_recall" -> s"""
          WITH planes(bit, pvec) AS (VALUES $lshPlanes),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
            WHERE $usableVec),
-         q AS (SELECT * FROM e WHERE vec_id < 50),
-         bf AS (SELECT q_id, n_id FROM (
-           SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-               round(list_inner_product(a.vec, b.vec) /
-                 (sqrt(list_inner_product(a.vec, a.vec)) * sqrt(list_inner_product(b.vec, b.vec))), 6) DESC,
-               b.vec_id) AS rank
-           FROM q a JOIN e b ON a.vec_id <> b.vec_id) t WHERE rank <= 3),
+         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e WHERE vec_id < 50),
+         ${exactTop3Sql("e", cosine = true)},
          sg AS (SELECT vec_id, CAST(SUM(CASE WHEN
              list_inner_product(vec, pvec) >= 0 THEN bit ELSE 0 END) AS BIGINT) AS sig
            FROM e, planes GROUP BY vec_id),
@@ -2419,10 +2354,10 @@ object AnnQueries extends QueryFamily {
                c.vec_id) AS rank
            FROM b a JOIN b c ON a.sig = c.sig AND a.vec_id <> c.vec_id
            WHERE a.vec_id < 50) t WHERE rank <= 3)
-         SELECT bf.q_id, COUNT(ap.n_id) AS n_hits,
+         SELECT ex.q_id, COUNT(ap.n_id) AS n_hits,
            round(COUNT(ap.n_id) / 3.0, 6) AS recall_at_3
-         FROM bf LEFT JOIN ap ON bf.q_id = ap.q_id AND bf.n_id = ap.n_id
-         GROUP BY bf.q_id ORDER BY bf.q_id""",
+         FROM ex LEFT JOIN ap ON ex.q_id = ap.q_id AND ex.n_id = ap.n_id
+         GROUP BY ex.q_id ORDER BY ex.q_id""",
     "q36_embed_neardup" -> s"""
          WITH planes(bit, pvec) AS (VALUES $lshPlanes),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
@@ -2488,15 +2423,11 @@ object AnnQueries extends QueryFamily {
              ROW_NUMBER() OVER (PARTITION BY probes.p, sv.q_id
                ORDER BY round(sv.sim, 6) DESC, sv.n_id) AS rank
            FROM probes JOIN sv ON sv.crank <= probes.p),
-         ap AS (SELECT p, q_id, n_id FROM rp WHERE rank <= 3)
-         SELECT CAST(probes.p AS BIGINT) AS n_probe,
-           CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(COUNT(a.n_id) AS BIGINT) AS n_found,
-           round(CAST(COUNT(a.n_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-             AS recall
-         FROM probes CROSS JOIN ex e
-         LEFT JOIN ap a ON a.p = probes.p AND a.q_id = e.q_id AND a.n_id = e.n_id
-         GROUP BY probes.p ORDER BY n_probe""",
+         ap AS (SELECT p, q_id, n_id FROM rp WHERE rank <= 3),
+         ${recallSql("rc", "ap", levels = Seq("probes" -> "p"))}
+         SELECT CAST(p AS BIGINT) AS n_probe, n_truth AS n_exact, n_found,
+           round(CAST(n_found AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) AS recall
+         FROM rc ORDER BY n_probe""",
     "q127_pq_ann" -> s"""
          WITH $pqAdcCtes
          SELECT q_id, CAST(rank AS BIGINT) AS rank, n_id, round(adc, 6) AS adc
@@ -2583,15 +2514,11 @@ object AnnQueries extends QueryFamily {
            WHERE a.vec_id < 50),
          rp AS (SELECT td, q_id, n_id, ROW_NUMBER() OVER (PARTITION BY td, q_id
              ORDER BY round(sim, 6) DESC, n_id) AS rank FROM tv),
-         ap AS (SELECT td, q_id, n_id FROM rp WHERE rank <= 3)
-         SELECT CAST(dims.td AS BIGINT) AS trunc_dim,
-           CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(COUNT(a.n_id) AS BIGINT) AS n_found,
-           round(CAST(COUNT(a.n_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-             AS recall
-         FROM dims CROSS JOIN ex e
-         LEFT JOIN ap a ON a.td = dims.td AND a.q_id = e.q_id AND a.n_id = e.n_id
-         GROUP BY dims.td ORDER BY trunc_dim""",
+         ap AS (SELECT td, q_id, n_id FROM rp WHERE rank <= 3),
+         ${recallSql("rc", "ap", levels = Seq("dims" -> "td"))}
+         SELECT CAST(td AS BIGINT) AS trunc_dim, n_truth AS n_exact, n_found,
+           round(CAST(n_found AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) AS recall
+         FROM rc ORDER BY trunc_dim""",
     "q135_stream_semantic" -> s"""
          WITH cent(cell, cvec) AS (VALUES $ivfCentroids),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
@@ -2748,9 +2675,9 @@ object AnnQueries extends QueryFamily {
     // layouts over the shared scaled fixture
     "q184_opq_gain" -> s"""
          WITH $anisoCtes
-         , $opqLayoutCtes,
+         , $pqInitCtes,
          ${Seq(("ai", "aimap"), ("ab", "abmap")).map { case (px, mp) => s"""
-         ${opqTrainSqlFor(px, mp)},
+         ${opqRefineSql(px, "au", "vec_id", "vec", mp)},
          ${px}k1 AS (SELECT s.vec_id, s.sub, s.sv, r.c,
              list_inner_product(r.rvec, r.rvec)
                - 2 * list_inner_product(s.sv, r.rvec) AS key
@@ -2799,7 +2726,7 @@ object AnnQueries extends QueryFamily {
     // under each layout against one exact-IP truth side
     "q197_opq_recall" -> s"""
          WITH $anisoCtes
-         , $opqLayoutCtes,
+         , $pqInitCtes,
          cent(cell, cvec) AS (VALUES $ivfCentroids),
          oca AS (SELECT n_id, cell FROM (
            SELECT vec_id AS n_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2816,7 +2743,7 @@ object AnnQueries extends QueryFamily {
            WHERE oqa.q_id <> oca.n_id),
          ${exactTop3Sql("au", px = "o")},
          ${Seq(("ai", "aimap"), ("ab", "abmap")).map { case (px, mp) => s"""
-         ${opqTrainSqlFor(px, mp)},
+         ${opqRefineSql(px, "au", "vec_id", "vec", mp)},
          ${px}code AS (SELECT vec_id, sub, c FROM (
              SELECT s.vec_id, s.sub, r.c, ROW_NUMBER() OVER (
                PARTITION BY s.vec_id, s.sub
@@ -2855,14 +2782,7 @@ object AnnQueries extends QueryFamily {
            WHERE $usableVec),
          iqq AS (SELECT vec_id AS q_id, vec AS q_vec FROM iau
            WHERE vec_id < 50),
-         itr AS (SELECT q_id, n_id FROM (
-           SELECT q.q_id, c.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, c.vec) /
-                 (sqrt(list_inner_product(q.q_vec, q.q_vec)) *
-                  sqrt(list_inner_product(c.vec, c.vec))), 6) DESC,
-                 c.vec_id) AS rank
-           FROM iqq q, iau c WHERE q.q_id <> c.vec_id) t WHERE rank <= 3),
+         ${exactTop3Sql("iau", px = "i", cosine = true)},
          ica AS (SELECT n_id, n_vec, cell, is_delta FROM (
            SELECT a.vec_id AS n_id, a.vec AS n_vec, cell,
              ${duckDelta("a.vec_id")} AS is_delta,
@@ -2889,7 +2809,7 @@ object AnnQueries extends QueryFamily {
            SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
              ORDER BY round(sim, 6) DESC, n_id) AS rank
            FROM isv) t WHERE rank <= 3)
-         SELECT itr.q_id,
+         SELECT iex.q_id,
            CAST(COUNT(ist.n_id) AS BIGINT) AS stale_hits,
            CAST(COUNT(imt.n_id) AS BIGINT) AS maintained_hits,
            round(CAST(COUNT(ist.n_id) AS DOUBLE) / COUNT(*), 6)
@@ -2897,10 +2817,10 @@ object AnnQueries extends QueryFamily {
            round(CAST(COUNT(imt.n_id) AS DOUBLE) / COUNT(*), 6)
              AS maintained_recall,
            CAST(COUNT(imt.n_id) - COUNT(ist.n_id) AS BIGINT) AS gain
-         FROM itr
-         LEFT JOIN ist ON ist.q_id = itr.q_id AND ist.n_id = itr.n_id
-         LEFT JOIN imt ON imt.q_id = itr.q_id AND imt.n_id = itr.n_id
-         GROUP BY itr.q_id ORDER BY itr.q_id""",
+         FROM iex
+         LEFT JOIN ist ON ist.q_id = iex.q_id AND ist.n_id = iex.n_id
+         LEFT JOIN imt ON imt.q_id = iex.q_id AND imt.n_id = iex.n_id
+         GROUP BY iex.q_id ORDER BY iex.q_id""",
     // q44's assignment CTEs + the q25 exact-cosine truth side, one leg
     // per probe level (candidate count + recall), then the rounded-
     // column cost ordering and the argmin pick
@@ -2910,14 +2830,7 @@ object AnnQueries extends QueryFamily {
            WHERE $usableVec),
          oqq AS (SELECT vec_id AS q_id, vec AS q_vec FROM oau
            WHERE vec_id < 50),
-         oex AS (SELECT q_id, n_id FROM (
-           SELECT q.q_id, c.vec_id AS n_id,
-             ROW_NUMBER() OVER (PARTITION BY q.q_id
-               ORDER BY round(list_inner_product(q.q_vec, c.vec) /
-                 (sqrt(list_inner_product(q.q_vec, q.q_vec)) *
-                  sqrt(list_inner_product(c.vec, c.vec))), 6) DESC,
-                 c.vec_id) AS rank
-           FROM oqq q, oau c WHERE q.q_id <> c.vec_id) t WHERE rank <= 3),
+         ${exactTop3Sql("oau", px = "o", cosine = true)},
          oca AS (SELECT n_id, n_vec, cell FROM (
            SELECT a.vec_id AS n_id, a.vec AS n_vec, cell,
              ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -2945,14 +2858,11 @@ object AnnQueries extends QueryFamily {
            SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
              ORDER BY round(sim, 6) DESC, n_id) AS rank FROM op${p}pv) t
            WHERE rank <= 3),
-         op${p}rc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM oex e LEFT JOIN op${p}ap a
-             ON a.q_id = e.q_id AND a.n_id = e.n_id),
+         ${recallSql(s"op${p}rc", s"op${p}ap", "oex")},
          op${p}row AS (SELECT CAST($p AS BIGINT) AS n_probe, n_candidates,
              round(CAST(n_candidates AS DOUBLE) / (nq * (nc - 1)), 6)
                AS scan_frac,
-             round(CAST(n_found AS DOUBLE) / n_exact, 6) AS recall
+             round(CAST(n_found AS DOUBLE) / n_truth, 6) AS recall
            FROM op${p}cnt, op${p}rc, osc)""").mkString(",")},
          oall AS (${Seq(1, 2, 4, 8, 16)
            .map(p => s"SELECT * FROM op${p}row").mkString(" UNION ALL ")})
@@ -3048,22 +2958,14 @@ object AnnQueries extends QueryFamily {
              FROM rterms GROUP BY q_id, n_id) a) t WHERE rank <= 3),
          ${exactTop3Sql("e")},
          ncd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM prs),
-         fs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(f.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN fap f ON ex.q_id = f.q_id AND ex.n_id = f.n_id),
-         rs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(r.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN rap r ON ex.q_id = r.q_id AND ex.n_id = r.n_id)
+         ${recallSql("fs", "fap")},
+         ${recallSql("rs", "rap")}
          SELECT 'flat_pq' AS variant, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3, n_candidates
+           $recallAt3Sql AS recall_at_3, n_candidates
          FROM fs, ncd
          UNION ALL
          SELECT 'ivfpq_residual' AS variant, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3, n_candidates
+           $recallAt3Sql AS recall_at_3, n_candidates
          FROM rs, ncd
          ORDER BY variant""",
     // FULL rebuild replay under FROZEN base-trained artifacts: train
@@ -3074,27 +2976,13 @@ object AnnQueries extends QueryFamily {
     // Spark side's ordered-list encode) and rendered CSV
     "q232_stream_pq_index" -> s"""
          WITH $pqIndexEncodeCtes
-         SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
-         FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
-         ORDER BY vec_id""",
+         ${indexRowsSql()}""",
     // the q232 frozen-artifact replay (base training + whole-corpus
     // encode), then the q229 ADC query path run twice — once against
     // the base-only rows (stale), once against everything
     // (maintained) — against the full-corpus exact-IP truth
     "q234_pq_staleness" -> s"""
-         WITH $pqInitCtes,
-         $baseEmbCtes,
-         ${ivfPqTrainSqlFor("b", "eb")},
-         $residualCtes,
-         ecd AS (SELECT n_id, sub, c FROM (
-           SELECT r.n_id, b.sub, b.c,
-             ROW_NUMBER() OVER (PARTITION BY r.n_id, b.sub
-               ORDER BY round(list_inner_product(b.bvec, b.bvec)
-                 - 2 * list_inner_product(
-                     list_slice(r.rvecd, b.sub * 8 + 1, b.sub * 8 + 8),
-                     b.bvec), 6), b.c) AS rn
-           FROM erv r, brcb b) t WHERE rn = 1),
+         WITH $pqIndexEncodeCtes,
          qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e
            WHERE vec_id < 50),
          qa AS (SELECT q_id, q_vec, cell, cd FROM (
@@ -3188,59 +3076,25 @@ object AnnQueries extends QueryFamily {
          cost AS (SELECT probes.p,
              CAST(COUNT(pr.n_id) AS BIGINT) AS n_candidates
            FROM probes LEFT JOIN prs pr ON pr.crank <= probes.p
-           GROUP BY probes.p)
-         SELECT CAST(probes.p AS BIGINT) AS n_probe, cost.n_candidates,
-           CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(COUNT(a.n_id) AS BIGINT) AS n_found,
-           CASE WHEN COUNT(*) = 0 THEN 0.0
-             ELSE round(CAST(COUNT(a.n_id) AS DOUBLE) / COUNT(*), 6) END
-             AS recall_at_3
-         FROM probes CROSS JOIN ex e2
-         LEFT JOIN ap a ON a.p = probes.p AND a.q_id = e2.q_id
-           AND a.n_id = e2.n_id
-         JOIN cost ON cost.p = probes.p
-         GROUP BY probes.p, cost.n_candidates ORDER BY n_probe""",
+           GROUP BY probes.p),
+         ${recallSql("rc", "ap", levels = Seq("probes" -> "p"))}
+         SELECT CAST(rc.p AS BIGINT) AS n_probe, cost.n_candidates, n_truth,
+           n_found, $recallAt3Sql AS recall_at_3
+         FROM rc JOIN cost ON cost.p = rc.p ORDER BY n_probe""",
     // the aniso rehearsal corpus, one trained-coarse Lloyd step, the
     // RESIDUAL-variance snake layout, then the per-layout residual
     // train/encode/ADC/MSE blocks (residOpqSqlFor) against the shared
     // trained-cell routing and exact-IP truth
     "q237_residual_opq" -> s"""
-         WITH $anisoCtes,
-         $pqInitCtes,
-         aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         ${ivfPqTrainSqlFor("w7", "au")},
-         rvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM w7rv CROSS JOIN adims GROUP BY dim),
-         rrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM rvr),
-         rbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM rrk),
-         rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM adims),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM au
-           WHERE vec_id < 50),
-         qa AS (SELECT q_id, cell, cd FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, w7cent) t WHERE rn <= 4),
-         prs AS (SELECT qa.q_id, qa.cd, ca.n_id
-           FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         ${exactTop3Sql("au")},
-         ${residOpqSqlFor("ri", "rimap")},
+         WITH $anisoResidCtes,
+         ${snakeLayoutSql("r", "w7rv", "rvecd", "adims")},
          ${residOpqSqlFor("rb", "rbmap")}
          SELECT 'balanced' AS layout, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3, resid_mse
+           $recallAt3Sql AS recall_at_3, resid_mse
          FROM rbrec, rbm8
          UNION ALL
          SELECT 'identity', n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END,
+           $recallAt3Sql,
            resid_mse
          FROM rirec, rim8
          ORDER BY layout""",
@@ -3257,6 +3111,7 @@ object AnnQueries extends QueryFamily {
              list(vec[dim + 1] * CASE WHEN dim < 8 THEN 4.0 ELSE 1.0 END
                ORDER BY dim) AS vec
            FROM ed CROSS JOIN sdims GROUP BY vec_id),
+         ${identityMapSql("imap", "sdims")},
          ${ivfPqTrainSqlFor("b", "eb")},
          ${frozenMseSqlFor("fb", "eb")},
          ${frozenMseSqlFor("fd", "ed")},
@@ -3288,14 +3143,12 @@ object AnnQueries extends QueryFamily {
     // because the frozen-artifact encode is per-row deterministic
     "q239_pq_index_chain" -> s"""
          WITH $pqIndexEncodeCtes
-         SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1) = '0'
+         ${indexRowsSql(src = """CASE
+             WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1) = '0'
                THEN 'delta1'
              WHEN substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1)
                IN ('1', '2') THEN 'delta2'
-             ELSE 'base' END AS src
-         FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
-         ORDER BY vec_id""",
+             ELSE 'base' END""")}""",
     // q238's slices, frozen vs post-drift-retrained artifacts
     // (identity + residual-variance OPQ), all scoring the shifted
     // slice, ratio'd against the base-frozen reference
@@ -3310,57 +3163,15 @@ object AnnQueries extends QueryFamily {
                ORDER BY dim) AS vec
            FROM ed CROSS JOIN sdims GROUP BY vec_id),
          em AS (SELECT * FROM eb UNION ALL SELECT * FROM esh),
+         ${identityMapSql("imap", "sdims")},
          ${ivfPqTrainSqlFor("b", "eb")},
          ${ivfPqTrainSqlFor("r", "em")},
          ${frozenMseSqlFor("fb", "eb")},
          ${frozenMseSqlFor("fs", "esh")},
          ${frozenMseSqlFor("rt", "esh", "rcent", "rrcb")},
-         mvr AS (SELECT dim, round(var_pop(rvecd[dim + 1]), 6) AS v
-           FROM rrv CROSS JOIN sdims GROUP BY dim),
-         mrk AS (SELECT dim, ROW_NUMBER() OVER (ORDER BY v DESC, dim) - 1
-             AS r FROM mvr),
-         mbmap AS (SELECT dim,
-             CAST(CASE WHEN (r // 8) % 2 = 0 THEN r % 8
-               ELSE 7 - (r % 8) END AS BIGINT) AS sub,
-             CAST(r // 8 AS BIGINT) AS pos FROM mrk),
-         osv AS (SELECT r.n_id AS vec_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM rrv r CROSS JOIN mbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         ok0 AS (SELECT s.vec_id, s.sub, s.sv, p.c,
-             list_inner_product(p.pvec, p.pvec)
-               - 2 * list_inner_product(s.sv, p.pvec) AS key
-           FROM osv s JOIN pqc p ON p.sub = s.sub),
-         ocd AS (SELECT vec_id, sub, sv, c FROM (
-             SELECT vec_id, sub, sv, c, ROW_NUMBER() OVER (
-               PARTITION BY vec_id, sub ORDER BY round(key, 6), c) AS rn
-             FROM ok0) t WHERE rn = 1),
-         oref AS (SELECT cd.sub, cd.c, poss.pos,
-             round(avg(cd.sv[poss.pos + 1]), 6) AS cv
-           FROM ocd cd CROSS JOIN poss GROUP BY 1, 2, 3),
-         orc AS (SELECT sub, c, list(cv ORDER BY pos) AS rvec
-           FROM oref GROUP BY 1, 2),
-         ossv AS (SELECT r.n_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM rtrv r CROSS JOIN mbmap m
-           WHERE list_inner_product(r.rvecd, r.rvecd) > 0
-           GROUP BY r.n_id, m.sub),
-         omk AS (SELECT s.n_id, s.sub, s.sv, b.c,
-             list_inner_product(b.rvec, b.rvec)
-               - 2 * list_inner_product(s.sv, b.rvec) AS key
-           FROM ossv s JOIN orc b ON b.sub = s.sub),
-         omm AS (SELECT n_id, sub,
-             list_inner_product(sv, sv) + key AS err FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY n_id, sub
-               ORDER BY round(key, 6), c) AS rn FROM omk) t
-           WHERE rn = 1),
-         ome AS (SELECT sub, round(avg(err), 6) AS mse,
-             COUNT(*) AS nv FROM omm GROUP BY sub),
-         om8 AS (SELECT CAST(MAX(nv) AS BIGINT) AS n_vecs,
-             round(${(0 until 8).map(i => s"MAX(mse) FILTER (sub = $i)")
-               .mkString(" + ")}, 6) AS shifted_mse
-           FROM ome)
+         ${snakeLayoutSql("m", "rrv", "rvecd", "sdims")},
+         ${opqRefineSql("o", "rrv", "n_id", "rvecd", "mbmap")},
+         ${frozenMseSqlFor("om", "esh", "rcent", "orc", "mbmap", "rvec")}
          SELECT 'frozen' AS regime, n_vecs, frozen_mse AS shifted_mse,
            round(frozen_mse / (SELECT frozen_mse FROM fbm8), 6)
              AS mse_ratio
@@ -3370,9 +3181,9 @@ object AnnQueries extends QueryFamily {
            round(frozen_mse / (SELECT frozen_mse FROM fbm8), 6)
          FROM rtm8
          UNION ALL
-         SELECT 'retrained_opq', n_vecs, shifted_mse,
-           round(shifted_mse / (SELECT frozen_mse FROM fbm8), 6)
-         FROM om8
+         SELECT 'retrained_opq', n_vecs, frozen_mse,
+           round(frozen_mse / (SELECT frozen_mse FROM fbm8), 6)
+         FROM omm8
          ORDER BY regime""",
     // the q232 rebuild replay with the frozen OPQ bundle: base
     // training, the layout dealt from the BASE residual variances
@@ -3380,101 +3191,31 @@ object AnnQueries extends QueryFamily {
     // perm on the base residuals, then a whole-corpus perm-gathered
     // encode — maintenance == rebuild with the permutation carried
     "q242_stream_opq_index" -> s"""
-         WITH $pqInitCtes,
-         sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         $baseEmbCtes,
-         ${ivfPqTrainSqlFor("b", "eb")},
-         $opqFrozenCtes,
-         $residualCtes,
-         esv AS (SELECT r.n_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
-         ecd AS (SELECT n_id, sub, c FROM (
-           SELECT s.n_id, b.sub, b.c,
-             ROW_NUMBER() OVER (PARTITION BY s.n_id, b.sub
-               ORDER BY round(list_inner_product(b.rvec, b.rvec)
-                 - 2 * list_inner_product(s.sv, b.rvec), 6), b.c) AS rn
-           FROM esv s JOIN qrc b ON b.sub = s.sub) t WHERE rn = 1),
-         epos AS (SELECT sub, c,
-             ROW_NUMBER() OVER (PARTITION BY sub ORDER BY c) - 1 AS p
-           FROM qrc),
-         ecsv AS (SELECT n_id,
-             string_agg(CAST(p AS VARCHAR), ',' ORDER BY ecd.sub) AS code
-           FROM ecd JOIN epos ON epos.sub = ecd.sub AND epos.c = ecd.c
-           GROUP BY n_id)
-         SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
-         FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
-         ORDER BY vec_id""",
+         WITH $opqIndexEncodeCtes,
+         ${codeCsvSql("qrc")}
+         ${indexRowsSql()}""",
     // the q237 identity-leg scaffold (aniso corpus, trained coarse
     // routing, identity residual codebook, fenced exact-IP truth),
     // the ADC ranks kept to 10 for the shortlist, then the exact
     // inner-product re-rank over the shortlist's raw vectors
     "q243_adc_rerank" -> s"""
-         WITH $anisoCtes,
-         $pqInitCtes,
-         aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         ${ivfPqTrainSqlFor("w7", "au")},
-         rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM adims),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM au
-           WHERE vec_id < 50),
-         qa AS (SELECT q_id, cell, cd FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, w7cent) t WHERE rn <= 4),
-         prs AS (SELECT qa.q_id, qa.cd, ca.n_id
-           FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         ${exactTop3Sql("au")},
-         ${residOpqSqlFor("ri", "rimap")},
-         rsh AS (SELECT q_id, n_id FROM rirkd WHERE rank <= 10),
-         rrx AS (SELECT s.q_id, s.n_id,
-             ROW_NUMBER() OVER (PARTITION BY s.q_id
-               ORDER BY round(list_inner_product(q.q_vec, c.vec), 6) DESC,
-               s.n_id) AS rank
-           FROM rsh s JOIN qq q ON q.q_id = s.q_id
-           JOIN au c ON c.vec_id = s.n_id),
-         rr3 AS (SELECT q_id, n_id FROM rrx WHERE rank <= 3),
-         rrrec AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN rr3 a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id)
+         WITH $anisoResidCtes,
+         ${rerank10Sql("rirkd", "au")},
+         ${recallSql("rrrec", "rr3")}
          SELECT 'adc' AS leg, CAST(3 AS BIGINT) AS k_short, n_truth,
            n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3
+           $recallAt3Sql AS recall_at_3
          FROM rirec
          UNION ALL
          SELECT 'adc_rerank', 10, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
+           $recallAt3Sql
          FROM rrrec
          ORDER BY leg""",
     // the q243 scaffold with the ADC ranks kept to the max level;
     // one exact-dot frame over the max shortlist, each level a rank
     // filter + its own re-rank window + recall/cost aggregates
     "q245_rerank_operating_point" -> s"""
-         WITH $anisoCtes,
-         $pqInitCtes,
-         aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         ${ivfPqTrainSqlFor("w7", "au")},
-         rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM adims),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM au
-           WHERE vec_id < 50),
-         qa AS (SELECT q_id, cell, cd FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, w7cent) t WHERE rn <= 4),
-         prs AS (SELECT qa.q_id, qa.cd, ca.n_id
-           FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
-         ${exactTop3Sql("au")},
-         ${residOpqSqlFor("ri", "rimap")},
+         WITH $anisoResidCtes,
          rex AS (SELECT s.q_id, s.n_id, s.rank AS arank,
              round(list_inner_product(q.q_vec, c.vec), 6) AS ip
            FROM rirkd s JOIN qq q ON q.q_id = s.q_id
@@ -3488,39 +3229,18 @@ object AnnQueries extends QueryFamily {
          rt AS (SELECT k_short, q_id, n_id FROM rl WHERE rr <= 3),
          rne AS (SELECT l.k_short, CAST(COUNT(*) AS BIGINT) AS n_exact
            FROM lvl l JOIN rex r ON r.arank <= l.k_short GROUP BY 1),
-         rrc AS (SELECT l.k_short, CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(t.n_id) AS BIGINT) AS n_found
-           FROM lvl l CROSS JOIN ex e LEFT JOIN rt t
-             ON t.k_short = l.k_short AND t.q_id = e.q_id
-             AND t.n_id = e.n_id
-           GROUP BY 1)
+         ${recallSql("rrc", "rt", levels = Seq("lvl" -> "k_short"))}
          SELECT CAST(r.k_short AS BIGINT) AS k_short, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3, n_exact
+           $recallAt3Sql AS recall_at_3, n_exact
          FROM rrc r JOIN rne n USING (k_short) ORDER BY k_short""",
     // the q242 frozen-bundle replay (train + layout deal + codebook
     // + whole-corpus encode under BOTH layouts), then each layout's
     // LUT-style ADC over the SAME frozen-cell candidates against the
     // fenced full-corpus exact-IP truth
     "q246_opq_index_serving" -> s"""
-         WITH $pqInitCtes,
-         sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         $baseEmbCtes,
-         ${ivfPqTrainSqlFor("b", "eb")},
-         $opqFrozenCtes,
-         imap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM sdims),
-         $residualCtes,
-         besv AS (SELECT r.n_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
-         bcd AS (SELECT n_id, sub, c FROM (
-           SELECT s.n_id, b.sub, b.c,
-             ROW_NUMBER() OVER (PARTITION BY s.n_id, b.sub
-               ORDER BY round(list_inner_product(b.rvec, b.rvec)
-                 - 2 * list_inner_product(s.sv, b.rvec), 6), b.c) AS rn
-           FROM besv s JOIN qrc b ON b.sub = s.sub) t WHERE rn = 1),
+         WITH $opqIndexEncodeCtes,
+         $opqServeCtes,
+         ${identityMapSql("imap", "sdims")},
          iesv AS (SELECT r.n_id, m.sub,
              list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
            FROM erv r CROSS JOIN imap m GROUP BY r.n_id, m.sub),
@@ -3530,39 +3250,9 @@ object AnnQueries extends QueryFamily {
                ORDER BY round(list_inner_product(b.bvec, b.bvec)
                  - 2 * list_inner_product(s.sv, b.bvec), 6), b.c) AS rn
            FROM iesv s JOIN brcb b ON b.sub = s.sub) t WHERE rn = 1),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e
-           WHERE vec_id < 50),
-         qac AS (SELECT q_id, cell, cd FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, bcent) t WHERE rn <= 4),
-         prs AS (SELECT qac.q_id, qac.cd, ea.n_id
-           FROM qac JOIN ea ON ea.cell = qac.cell
-           WHERE qac.q_id <> ea.n_id),
-         ${exactTop3Sql("e")},
-         bqsv AS (SELECT q.q_id, m.sub,
-             list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM qq q CROSS JOIN qbmap m GROUP BY q.q_id, m.sub),
          iqsv AS (SELECT q.q_id, m.sub,
              list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
            FROM qq q CROSS JOIN imap m GROUP BY q.q_id, m.sub),
-         btm AS (SELECT pr.q_id, pr.n_id, pr.cd, k.sub,
-             list_inner_product(qs.sv, r.rvec) AS term
-           FROM prs pr
-           JOIN bcd k ON k.n_id = pr.n_id
-           JOIN qrc r ON r.sub = k.sub AND r.c = k.c
-           JOIN bqsv qs ON qs.q_id = pr.q_id AND qs.sub = k.sub),
-         bap AS (SELECT q_id, n_id FROM (
-             SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(adc, 6) DESC, n_id) AS rank
-             FROM (SELECT q_id, n_id, MAX(cd) + ($pqTermPivot) AS adc
-               FROM btm GROUP BY q_id, n_id) a) t WHERE rank <= 3),
-         brc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN bap a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id),
          itm AS (SELECT pr.q_id, pr.n_id, pr.cd, k.sub,
              list_inner_product(qs.sv, r.bvec) AS term
            FROM prs pr
@@ -3574,92 +3264,27 @@ object AnnQueries extends QueryFamily {
                ORDER BY round(adc, 6) DESC, n_id) AS rank
              FROM (SELECT q_id, n_id, MAX(cd) + ($pqTermPivot) AS adc
                FROM itm GROUP BY q_id, n_id) a) t WHERE rank <= 3),
-         irc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN iap a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id)
+         ${recallSql("irc", "iap")}
          SELECT 'balanced' AS layout, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3
+           $recallAt3Sql AS recall_at_3
          FROM brc
          UNION ALL
-         SELECT 'identity', n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
+         SELECT 'identity', n_truth, n_found, $recallAt3Sql
          FROM irc
          ORDER BY layout""",
     // the q246 balanced-leg replay with the ADC ranks kept to the
     // k'=10 shortlist, then the exact inner-product re-rank over the
     // raw-vector store (one id-keyed gather of the shortlist)
     "q248_serving_stack" -> s"""
-         WITH $pqInitCtes,
-         sdims AS (SELECT unnest(generate_series(0, 63)) AS dim),
-         $baseEmbCtes,
-         ${ivfPqTrainSqlFor("b", "eb")},
-         $opqFrozenCtes,
-         $residualCtes,
-         besv AS (SELECT r.n_id, m.sub,
-             list(r.rvecd[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM erv r CROSS JOIN qbmap m GROUP BY r.n_id, m.sub),
-         bcd AS (SELECT n_id, sub, c FROM (
-           SELECT s.n_id, b.sub, b.c,
-             ROW_NUMBER() OVER (PARTITION BY s.n_id, b.sub
-               ORDER BY round(list_inner_product(b.rvec, b.rvec)
-                 - 2 * list_inner_product(s.sv, b.rvec), 6), b.c) AS rn
-           FROM besv s JOIN qrc b ON b.sub = s.sub) t WHERE rn = 1),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM e
-           WHERE vec_id < 50),
-         qac AS (SELECT q_id, cell, cd FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, bcent) t WHERE rn <= 4),
-         prs AS (SELECT qac.q_id, qac.cd, ea.n_id
-           FROM qac JOIN ea ON ea.cell = qac.cell
-           WHERE qac.q_id <> ea.n_id),
-         ${exactTop3Sql("e")},
-         bqsv AS (SELECT q.q_id, m.sub,
-             list(q.q_vec[m.dim + 1] ORDER BY m.pos) AS sv
-           FROM qq q CROSS JOIN qbmap m GROUP BY q.q_id, m.sub),
-         btm AS (SELECT pr.q_id, pr.n_id, pr.cd, k.sub,
-             list_inner_product(qs.sv, r.rvec) AS term
-           FROM prs pr
-           JOIN bcd k ON k.n_id = pr.n_id
-           JOIN qrc r ON r.sub = k.sub AND r.c = k.c
-           JOIN bqsv qs ON qs.q_id = pr.q_id AND qs.sub = k.sub),
-         brkd AS (SELECT q_id, n_id, ROW_NUMBER() OVER (PARTITION BY
-               q_id ORDER BY round(adc, 6) DESC, n_id) AS rank
-             FROM (SELECT q_id, n_id, MAX(cd) + ($pqTermPivot) AS adc
-               FROM btm GROUP BY q_id, n_id) a),
-         bap AS (SELECT q_id, n_id FROM brkd WHERE rank <= 3),
-         brc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN bap a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id),
-         bsh AS (SELECT q_id, n_id FROM brkd WHERE rank <= 10),
-         rrx AS (SELECT s.q_id, s.n_id,
-             ROW_NUMBER() OVER (PARTITION BY s.q_id
-               ORDER BY round(list_inner_product(q.q_vec, c.vec), 6) DESC,
-               s.n_id) AS rank
-           FROM bsh s JOIN qq q ON q.q_id = s.q_id
-           JOIN e c ON c.vec_id = s.n_id),
-         rr3 AS (SELECT q_id, n_id FROM rrx WHERE rank <= 3),
-         rrc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(a.n_id) AS BIGINT) AS n_found
-           FROM ex LEFT JOIN rr3 a
-             ON ex.q_id = a.q_id AND ex.n_id = a.n_id)
+         WITH $opqIndexEncodeCtes,
+         $opqServeCtes,
+         ${rerank10Sql("brkd", "e")},
+         ${recallSql("rrc", "rr3")}
          SELECT 'adc_index' AS leg, CAST(3 AS BIGINT) AS k_short,
-           n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
-             AS recall_at_3
+           n_truth, n_found, $recallAt3Sql AS recall_at_3
          FROM brc
          UNION ALL
-         SELECT 'adc_index_rerank', 10, n_truth, n_found,
-           CASE WHEN n_truth = 0 THEN 0.0
-             ELSE round(CAST(n_found AS DOUBLE) / n_truth, 6) END
+         SELECT 'adc_index_rerank', 10, n_truth, n_found, $recallAt3Sql
          FROM rrc
          ORDER BY leg""",
     // the q232 rebuild replay restricted to the retained population:
@@ -3667,38 +3292,16 @@ object AnnQueries extends QueryFamily {
     // deterministic encode, so retained == rebuild row-for-row
     "q249_pq_index_tombstones" -> s"""
          WITH $pqIndexEncodeCtes
-         SELECT ea.cell, ea.n_id AS vec_id, ecsv.code,
-           CASE WHEN ${duckDelta("ea.n_id")} THEN 'delta' ELSE 'base' END AS src
-         FROM ea JOIN ecsv ON ecsv.n_id = ea.n_id
-         WHERE substr(md5(CAST(ea.n_id AS VARCHAR)), 1, 1) <> 'f'
-         ORDER BY vec_id""",
+         ${indexRowsSql(where = s"NOT ${duckTombstoned("ea.n_id")}")}""",
     // the q243 scaffold with crank-aware candidates (keep = 16), the
     // identity trained codebook from residOpqSqlFor, one ADC frame
     // over all candidates, then each (n_probe, k_short) grid cell is
     // a (crank, rank) filter + its own exact re-rank + recall/cost
     "q251_ann_operating_grid" -> s"""
-         WITH $anisoCtes,
-         $pqInitCtes,
-         aposs AS (SELECT unnest(generate_series(0, 7)) AS pos),
-         ${ivfPqTrainSqlFor("w7", "au")},
-         rimap AS (SELECT dim, CAST(dim // 8 AS BIGINT) AS sub,
-             CAST(dim % 8 AS BIGINT) AS pos FROM adims),
-         qq AS (SELECT vec_id AS q_id, vec AS q_vec FROM au
-           WHERE vec_id < 50),
-         qa16 AS (SELECT q_id, cell, cd, rn AS crank FROM (
-           SELECT q_id, cell, list_inner_product(q_vec, cvec) AS cd,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY round(list_inner_product(q_vec, cvec), 6) DESC,
-               cell) AS rn
-           FROM qq, w7cent) t WHERE rn <= 16),
-         qa AS (SELECT q_id, cell, cd FROM qa16 WHERE crank <= 4),
-         prs AS (SELECT qa.q_id, qa.cd, ca.n_id
-           FROM qa JOIN w7ca ca USING (cell) WHERE qa.q_id <> ca.n_id),
+         WITH $anisoResidCtes,
          prsw AS (SELECT qa16.q_id, qa16.cd, qa16.crank, ca.n_id
            FROM qa16 JOIN w7ca ca USING (cell)
            WHERE qa16.q_id <> ca.n_id),
-         ${exactTop3Sql("au")},
-         ${residOpqSqlFor("ri", "rimap")},
          swtm AS (SELECT pr.q_id, pr.n_id, pr.cd, pr.crank, k.sub,
              list_inner_product(qs.sv, r.rvec) AS term
            FROM prsw pr
@@ -3730,20 +3333,12 @@ object AnnQueries extends QueryFamily {
          swnc AS (SELECT g.n_probe,
              CAST(COUNT(*) AS BIGINT) AS n_candidates
            FROM pgrid g JOIN prsw p ON p.crank <= g.n_probe GROUP BY 1),
-         swrec AS (SELECT g.n_probe, k.k_short,
-             CAST(COUNT(*) AS BIGINT) AS n_truth,
-             CAST(COUNT(t.n_id) AS BIGINT) AS n_found
-           FROM pgrid g CROSS JOIN kgrid k CROSS JOIN ex e
-           LEFT JOIN swtop t ON t.n_probe = g.n_probe
-             AND t.k_short = k.k_short AND t.q_id = e.q_id
-             AND t.n_id = e.n_id
-           GROUP BY 1, 2)
+         ${recallSql("swrec", "swtop",
+           levels = Seq("pgrid" -> "n_probe", "kgrid" -> "k_short"))}
          SELECT CAST(r.n_probe AS BIGINT) AS n_probe,
            CAST(r.k_short AS BIGINT) AS k_short,
            c.n_candidates, ne.n_exact, r.n_truth, r.n_found,
-           CASE WHEN r.n_truth = 0 THEN 0.0
-             ELSE round(CAST(r.n_found AS DOUBLE) / r.n_truth, 6) END
-             AS recall_at_3
+           $recallAt3Sql AS recall_at_3
          FROM swrec r
          JOIN swnc c ON c.n_probe = r.n_probe
          JOIN swne ne ON ne.n_probe = r.n_probe

@@ -202,14 +202,12 @@ object CurationQueries extends QueryFamily {
     * persisted session artifact its standalone family reads (q95/q123/
     * q135/q148/q167 keys) — the `prior` input of q168's maintenance
     * step and the chain's starting release (q171). */
-  private def v1Artifacts(s: SparkSession, d: String): RelArtifacts = {
-    val tok = CoreQueries.dirToken(d)
+  private def v1Artifacts(s: SparkSession, d: String): RelArtifacts =
     RelArtifacts(
       sig = v1SigArtifact(s, d),
-      sigCnt = sigCountArtifact(s, s"graft_q95cnt_$tok", v1SigArtifact(s, d)),
+      sigCnt = v1SigCountArtifact(s, d),
       shSig = v1SimhashSigArtifact(s, d),
-      shCnt = sigCountArtifact(s, s"graft_q123cnt_$tok",
-        v1SimhashSigArtifact(s, d)),
+      shCnt = v1SimhashCountArtifact(s, d),
       cellIdx = v1CellIndexArtifact(s, d),
       cellCnt = v1CellCountArtifact(s, d),
       spanOwn = v1SpanOwnerArtifact(s, d),
@@ -217,7 +215,6 @@ object CurationQueries extends QueryFamily {
       drops = v1DropsArtifact(s, d),
       pairs = v1PairsArtifact(s, d),
       ledger = v1ReleaseLedger(s, d))
-  }
 
   /** ONE release-maintenance step: `(prior artifacts, delta) => next
     * artifacts` — q168's delta-proportional semantics factored into a

@@ -406,8 +406,7 @@ object DedupQueries extends QueryFamily {
       // persisted base SimHash signature table — at 100 TB this is the
       // last corpus build's fingerprint index
       val baseSig = v1SimhashSigArtifact(s, d)
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q123cnt_${CoreQueries.dirToken(d)}", baseSig)
+      val baseCnt = v1SimhashCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
@@ -673,8 +672,7 @@ object DedupQueries extends QueryFamily {
       val baseSig = v1SigArtifact(s, d)
       // persisted bucket-count artifact: the per-batch cap reads this
       // instead of re-aggregating the signature table 4 times
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)
+      val baseCnt = v1SigCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(
@@ -805,8 +803,7 @@ object DedupQueries extends QueryFamily {
         deltaSig.select(col("band"), col("minhash"), col("doc_id").as("delta_id")),
         baseSig.select(col("band"), col("minhash"), col("doc_id").as("base_id")),
         minBands = 2,
-        baseCounts = Some(sigCountArtifact(s,
-          s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)))
+        baseCounts = Some(v1SigCountArtifact(s, d)))
         .select(col("delta_id"), col("base_id"))
       val dd = Dedup.minhashCandidates(deltaSig)
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id"))
@@ -834,8 +831,7 @@ object DedupQueries extends QueryFamily {
       val d2 = docs.filter(isDeltaDoc(col("doc_id")) && !isFirstIngest(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val (sig1, lab1raw) = clusterIngestStep(sig0, lab0, d1,
-        baseCounts = Some(sigCountArtifact(s,
-          s"graft_q95cnt_${CoreQueries.dirToken(d)}", sig0)))
+        baseCounts = Some(v1SigCountArtifact(s, d)))
       // run-1 output is a PERSISTED artifact run 2 reads back
       val lab1Dir = CoreQueries.sharedInputDir(
         s"graft_q142_lab1_${CoreQueries.dirToken(d)}") { p =>
@@ -1226,8 +1222,7 @@ object DedupQueries extends QueryFamily {
       val docs = Tables.documents(s, d)
       val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
       val baseSig = v1SigArtifact(s, d)
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)
+      val baseCnt = v1SigCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val in = CoreQueries.sharedInputDir(

@@ -199,18 +199,29 @@ object Fragments {
 
   /** The persisted (band, minhash, bn) bucket-count artifact the
     * streaming cap consults instead of rescanning the base signature
-    * table per micro-batch — session-materialized once next to the
-    * signature table it counts. `name` keys the artifact to that
-    * table.
+    * table per micro-batch — session-materialized once under `name`,
+    * next to the signature table `sig` it counts.
     */
-  private[queries] def sigCountArtifact(s: SparkSession, name: String,
-      sig: DataFrame): DataFrame = {
+  private def sigCountArtifact(s: SparkSession, name: String,
+      sig: => DataFrame): DataFrame = {
     val dir = CoreQueries.sharedInputDir(name) { p =>
       sig.groupBy(col("band"), col("minhash"))
         .agg(count(lit(1)).as("bn")).write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
   }
+
+  /** The bucket counts of [[v1SigArtifact]] (q95's count key), read by
+    * the MinHash streaming and cluster-ingest loops and the v1 bundle.
+    */
+  private[queries] def v1SigCountArtifact(s: SparkSession, d: String): DataFrame =
+    sigCountArtifact(s, s"graft_q95cnt_${CoreQueries.dirToken(d)}",
+      v1SigArtifact(s, d))
+
+  /** The bucket counts of [[v1SimhashSigArtifact]] (q123's count key). */
+  private[queries] def v1SimhashCountArtifact(s: SparkSession, d: String): DataFrame =
+    sigCountArtifact(s, s"graft_q123cnt_${CoreQueries.dirToken(d)}",
+      v1SimhashSigArtifact(s, d))
 
   /** The 64-bit SimHash banding shared by q85's detector, the q113
     * drop sets, and q123's streaming twin: 4 pigeonhole bands of 16
@@ -345,6 +356,18 @@ object Fragments {
 
   private def duckSplit(id: String, op: String): String =
     s"substr(md5(CAST($id AS VARCHAR)), 1, 1) $op ('0', '1', '2')"
+
+  /** The md5 tombstone rule of the deletion lifecycles (q244/q247's
+    * manifest masks, q249's index drops): first hex nibble 'f' (~1/16
+    * of ids), orthogonal to the [[isDeltaDoc]] split so the two
+    * lifecycles compose.
+    */
+  private[queries] def isTombstoned(c: Column): Column =
+    substring(md5(c.cast("string")), 1, 1) === "f"
+
+  /** DuckDB mirror of [[isTombstoned]] over the id column `id`. */
+  private[queries] def duckTombstoned(id: String): String =
+    s"substr(md5(CAST($id AS VARCHAR)), 1, 1) = 'f'"
 
   /** Sub-split of the delta slice into two consecutive ingests (q142):
     * second md5 nibble 0–7 ⇒ first ingest.

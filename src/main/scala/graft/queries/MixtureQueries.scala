@@ -623,6 +623,23 @@ object MixtureQueries extends QueryFamily {
       .orderBy(col("global_pos"))
   }
 
+  /** The budget-bucket pack of q61 (whitespace tokens) and q125 (BPE
+    * tokens): within its source, in doc_id order, a doc's preceding
+    * token total picks its 512-token sequence; one row per
+    * (source, seq_id) with its doc and token counts.
+    */
+  private def budgetPack(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    docs
+      .withColumn("prev_tokens", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("seq_id", floor(col("prev_tokens") / lit(512)).cast("long"))
+      .groupBy(col("source"), col("seq_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"))
+      .orderBy(col("source"), col("seq_id"))
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- sequence packing on REAL tokenizer counts — q61's greedy
     //      per-source pack re-pointed from whitespace tokens to q122's
@@ -634,17 +651,7 @@ object MixtureQueries extends QueryFamily {
     //      baseline — the pair shows how the 512-token sequence budget
     //      shifts when whitespace counts (which UNDERCOUNT subword
     //      splits) are replaced by the trained vocabulary's counts ----
-    "q125_bpe_pack" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      bpeEncoded(s, d)
-        .withColumn("prev_tokens", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("seq_id", floor(col("prev_tokens") / lit(512)).cast("long"))
-        .groupBy(col("source"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"))
-        .orderBy(col("source"), col("seq_id"))
-    }),
+    "q125_bpe_pack" -> ((s, d) => budgetPack(bpeEncoded(s, d))),
 
     // ---- label-balanced resampling: integer upsampling epochs per
     //      label, ceil(n_max / n_label), so every class contributes
@@ -735,19 +742,10 @@ object MixtureQueries extends QueryFamily {
     //      sequences per source shard (running token total → budget
     //      bucket). One shuffle keyed by the shard; at 100 TB the shard
     //      key is (source × file split) so no global order is needed ----
-    "q61_pack_sequences" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Tables.documents(s, d)
+    "q61_pack_sequences" -> ((s, d) =>
+      budgetPack(Tables.documents(s, d)
         .select(col("source"), col("doc_id"),
-          TA.tokenCount(col("text")).as("n_tokens"))
-        .withColumn("prev_tokens", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("seq_id", floor(col("prev_tokens") / lit(512)).cast("long"))
-        .groupBy(col("source"), col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"))
-        .orderBy(col("source"), col("seq_id"))
-    }),
+          TA.tokenCount(col("text")).as("n_tokens")))),
 
     // ---- quality-score importance resampling (CCNet-style soft
     //      filter): keep a doc with probability equal to its q108
@@ -2157,7 +2155,7 @@ object MixtureQueries extends QueryFamily {
     //      0/1/2 delta rule so the two lifecycles compose ----
     "q244_order_tombstones" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val tomb = substring(md5(col("doc_id").cast("string")), 1, 1) === "f"
+      val tomb = isTombstoned(col("doc_id"))
       // the q230 sequence frame + the per-sequence mask accounting in
       // ONE aggregate over the packing fold (offset_in_seq/n_kept are
       // exactly the span a tombstone masks)
@@ -2202,7 +2200,7 @@ object MixtureQueries extends QueryFamily {
     //      needed, so the card is aggregates only, (phase×source)-
     //      bounded output ----
     "q247_takedown_stream_cost" -> ((s, d) => {
-      val tomb = substring(md5(col("doc_id").cast("string")), 1, 1) === "f"
+      val tomb = isTombstoned(col("doc_id"))
       // ONE fold: the seq frame and the mask accounting read the
       // same packed rows (tombstoned spans can never desynchronize
       // from the sequences they live in)
@@ -3493,15 +3491,15 @@ object MixtureQueries extends QueryFamily {
              CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(t) AS BIGINT) AS kept_tokens,
              CAST(COUNT(*) FILTER (
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f')
+               ${duckTombstoned("doc_id")})
                AS BIGINT) AS n_masked_docs,
              CAST(COALESCE(SUM(t) FILTER (
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'), 0)
+               ${duckTombstoned("doc_id")}), 0)
                AS BIGINT) AS masked_tokens,
              substr(md5(COALESCE(string_agg(
                CAST(off AS VARCHAR) || ':' || CAST(t AS VARCHAR), ','
                ORDER BY off, t) FILTER (
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'), '')),
+               ${duckTombstoned("doc_id")}), '')),
                1, 16) AS masked_spans_fp
            FROM tbfold WHERE doc_id IS NOT NULL GROUP BY 1, 2),
          ttd AS (SELECT *,
@@ -3550,7 +3548,7 @@ object MixtureQueries extends QueryFamily {
              str_split(source, ':')[2] AS source, seq_id,
              CAST(SUM(t) AS BIGINT) AS kept_tokens,
              CAST(COALESCE(SUM(t) FILTER (
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'), 0)
+               ${duckTombstoned("doc_id")}), 0)
                AS BIGINT) AS masked_tokens
            FROM mofold WHERE doc_id IS NOT NULL GROUP BY 1, 2, 3),
          mnp AS (SELECT phase, source, COUNT(*) AS n_ps FROM msq

@@ -12,8 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * written once per engine, that the PQ operators keep one code
   * path, that the mixture family writes its pack input, loader-shard
   * rule and training-order draws once (with no environment override
-  * of the shard count), and that every definition is reached from
-  * main code or the etlbench harness.
+  * of the shard count), that the ANN/PQ family writes each recall,
+  * released-index, streaming-ingest and layout rule once per engine,
+  * that each shared artifact directory key has one writer, and that
+  * every definition is reached from main code or the etlbench
+  * harness.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -71,11 +74,11 @@ class SourceScanSpec extends AnyFunSuite {
     sources.collect { case (f, src) if src.contains(token) => f }.toSet
 
   /** Occurrences of `token` in all of `src/main/scala`. */
-  private def count(token: String): Int =
-    sources.values.map { src =>
-      Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1))
-        .takeWhile(_ >= 0).size
-    }.sum
+  private def count(token: String): Int = sources.values.map(countIn(_, token)).sum
+
+  private def countIn(src: String, token: String): Int =
+    Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1))
+      .takeWhile(_ >= 0).size
 
   private val definition =
     ("(?<!\\w)((?:(?:private|protected)(?:\\[\\w+\\])?\\s+|override\\s+|final\\s+|" +
@@ -167,6 +170,50 @@ class SourceScanSpec extends AnyFunSuite {
     assert(count("lit(\"graft-order-v1\")") == 1) // orderSeqs
     assert(count("lit(\"graft-order-v2\")") == 1) // epochOccurrences
     assert(count("GRAFT_ORDER_SHARDS") == 0) // the shard count is a constant
+  }
+
+  test("ANN/PQ recall, released-index, ingest and layout rules are each written once") {
+    val ann = sources("graft/queries/AnnQueries.scala")
+    def inAnn(token: String) = countIn(ann, token)
+    // Spark
+    assert(inAnn("col(\"q_id\") === col(\"a_q\") && col(\"n_id\") === col(\"a_n\")") == 1)
+    assert(inAnn("when(col(\"n_truth\") === 0, 0.0)") == 1) // recallAt3
+    assert(inAnn("bruteForceDotTopK(") == 1) // exactTop3
+    assert(inAnn(".select(col(\"q_id\"), col(\"n_id\"))") == 1)
+    assert(count("s\"graft_q232_idx_") == 1) // q232Index
+    assert(count("s\"graft_q242_idx_") == 1) // q242Index
+    assert(inAnn("Streaming.drain(") == 2) // q135, streamIngest
+    assert(inAnn("var_pop(element_at") == 1) // varianceLayout
+    assert(inAnn("max(when(col(\"sub\") ===") == 1) // mseSum8
+    assert(inAnn("dotFold(v, v) > 0") == 1) // nonZero
+    assert(inAnn("col(\"embedding\").cast(\"array<double>\")) > 0") == 0)
+    assert(inAnn("Seq[Int] = 0 until 64") == 1) // identityLayout
+    assert(inAnn("groupBy(_._1)") == 1) // codebookMap
+    assert(inAnn("array_join(transform(col(\"code\")") == 1) // indexRows
+    assert(inAnn("Similarity.dotFold(col(\"q_vec\"), col(\"n_vec\"))") == 1) // shortlistIp
+    // DuckDB
+    assert(inAnn("ELSE 7 - (r % 8) END AS BIGINT) AS sub") == 1) // snakeLayoutSql
+    assert(inAnn("round(avg(cd.sv[") == 1) // opqRefineSql
+    assert(inAnn("CAST(COUNT(a.n_id) AS BIGINT) AS n_found") == 1) // recallSql
+    assert(inAnn("MAX(mse) FILTER") == 1) // mseSum8Sql
+  }
+
+  test("the md5 tombstone rule and the budget-bucket pack are each written once") {
+    assert(count("=== \"f\"") == 1) // isTombstoned
+    assert(count("1, 1) = 'f'") == 1) // duckTombstoned
+    assert(count("1, 1) <> 'f'") == 0)
+    assert(count("floor(col(\"prev_tokens\") / lit(512))") == 1) // budgetPack
+  }
+
+  test("each shared artifact directory key is spelled at one site") {
+    // a key spelled at two sites has two writers, and sharedInputDir
+    // keeps whichever ran first in the session
+    val keys = sources.values.toSeq
+      .flatMap("s\"graft_([A-Za-z0-9]+(?:_[A-Za-z0-9]+)*?)_\\$".r.findAllMatchIn(_))
+      .map(_.group(1))
+    assert(keys.size > 40)
+    val repeated = keys.groupMapReduce(identity)(_ => 1)(_ + _).filter(_._2 > 1)
+    assert(repeated.isEmpty, s"keys spelled at more than one site: $repeated")
   }
 
   test("unreached definitions: public and private[x] flagged, harness uses count") {
