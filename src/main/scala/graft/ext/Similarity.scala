@@ -399,7 +399,7 @@ object Similarity {
           col("scale0").as("scale"))
         .withColumn("cnorm", sqrt(dotInt(col("code"), col("code")).cast("double")))
 
-    def assign(df: DataFrame, id: String, keep: Int): DataFrame =
+    def assign(df: DataFrame, keep: Int): DataFrame =
       df.withColumn("bc",
           explode(bestCells(col("code").cast("array<double>"), cents, keep)))
         .withColumn("cell", col("bc").getField("cell"))
@@ -411,7 +411,7 @@ object Similarity {
     val c = quantizedIndex(corpus, idCol, vecCol, nCells)
       .select(col("cell"), col("id").as("n_id"), col("code").as("n_code"),
         col("scale").as("n_scale"), col("cnorm").as("n_norm"))
-    val q = assign(quantize(queries, "q_id"), "q_id", nProbe)
+    val q = assign(quantize(queries, "q_id"), nProbe)
       .select(col("cell"), col("q_id"), col("code").as("q_code"),
         col("scale").as("q_scale"), col("cnorm").as("q_norm"))
     val w = Window.partitionBy(col("q_id"))
@@ -993,7 +993,7 @@ object Similarity {
     * `cdot` retained (the IVF-PQ coarse score term). Shared by the
     * q229 candidate and rank paths so routing cannot desynchronize.
     */
-  private def assignCellsOn(df: DataFrame, id: String, vec: String,
+  private def assignCellsOn(df: DataFrame, vec: String,
       cents: Seq[(Int, Seq[Double])], keep: Int): DataFrame =
     df.filter(col(vec).isNotNull && size(col(vec)) > 0)
       .select(col("*"),
@@ -1014,13 +1014,13 @@ object Similarity {
       idCol: String, vecCol: String, coarse: Seq[(Int, Seq[Double])],
       nProbe: Int = 4): DataFrame = {
     val c = assignCellsOn(corpus.select(col(idCol).as("n_id"),
-        col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec",
+        col(vecCol).cast("array<double>").as("n_vec")), "n_vec",
         coarse, 1)
       .withColumn("n_norm", norm(col("n_vec")))
       .filter(col("n_norm") > 0)
       .select(col("cell"), col("n_id"))
     val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
+        col(vecCol).cast("array<double>").as("q_vec")), "q_vec",
         coarse, nProbe)
       .withColumn("q_norm", norm(col("q_vec")))
       .filter(col("q_norm") > 0)
@@ -1052,7 +1052,7 @@ object Similarity {
       m: Int = 8, subDim: Int = 8,
       perm: Option[Seq[Int]] = None): DataFrame =
     assignCellsOn(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec")), "id", "vec", coarse, 1)
+        col(vecCol).cast("array<double>").as("vec")), "vec", coarse, 1)
       .withColumn("nrm", norm(col("vec")))
       .filter(col("nrm") > 0)
       .withColumn("resid", vecSub(col("vec"), col("cvec")))
@@ -1084,7 +1084,7 @@ object Similarity {
     val c = index.select(col("cell"), col("id").as("n_id"),
       col("code").as("n_code"))
     val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
+        col(vecCol).cast("array<double>").as("q_vec")), "q_vec",
         coarse, nProbe), codebook, m, subDim, perm)
       .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
     adcTopK(q, c, k, col("coarse") + adcSum(m))
@@ -1106,7 +1106,7 @@ object Similarity {
     val c = index.select(col("cell"), col("id").as("n_id"),
       col("code").as("n_code"))
     val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
+        col(vecCol).cast("array<double>").as("q_vec")), "q_vec",
         coarse, probes.max), codebook, m, subDim, None)
       .select(col("cell"), col("q_id"), col("lut"),
         col("cdot").as("coarse"), col("rn").as("crank"))
@@ -1136,7 +1136,7 @@ object Similarity {
       coarse: Seq[(Int, Seq[Double])], probes: Seq[Int]): DataFrame = {
     val spark = index.sparkSession
     val q = assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
+        col(vecCol).cast("array<double>").as("q_vec")), "q_vec",
         coarse, probes.max)
       .withColumn("q_norm", norm(col("q_vec")))
       .filter(col("q_norm") > 0)
@@ -1245,7 +1245,7 @@ object Similarity {
       m: Int = 8, subDim: Int = 8, nProbe: Int = 4,
       perm: Option[Seq[Int]] = None): DataFrame = {
     val c = assignCellsOn(corpus.select(col(idCol).as("n_id"),
-        col(vecCol).cast("array<double>").as("n_vec")), "n_id", "n_vec",
+        col(vecCol).cast("array<double>").as("n_vec")), "n_vec",
         coarse, 1)
       .withColumn("n_norm", norm(col("n_vec")))
       .filter(col("n_norm") > 0)
@@ -1255,7 +1255,7 @@ object Similarity {
       .select(col("cell"), col("n_id"),
         pqCodesWith(codebook, m, subDim, perm)(col("enc")).as("n_code"))
     val q = withLut(assignCellsOn(queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_vec")), "q_id", "q_vec",
+        col(vecCol).cast("array<double>").as("q_vec")), "q_vec",
         coarse, nProbe), codebook, m, subDim, perm)
       .select(col("cell"), col("q_id"), col("lut"), col("cdot").as("coarse"))
     adcTopK(q, c, k, if (residual) col("coarse") + adcSum(m) else adcSum(m))

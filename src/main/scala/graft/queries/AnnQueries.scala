@@ -8,6 +8,7 @@ import graft.ext.Similarity
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts._
 import Fragments._
 
 /** ANN/PQ family: exact and approximate nearest-neighbour search (LSH,
@@ -363,31 +364,23 @@ object AnnQueries extends QueryFamily {
     Frozen(coarse, codebookMap(rows), Some(perm))
   }
 
-  /** A released index: the md5 base slice of the embeddings through
-    * `encode`, written under `key` once per session and read back.
+  /** The md5 base slice of the embeddings: what a released index
+    * encodes.
     */
-  private def releasedIndex(s: SparkSession, key: String, d: String)(
-      encode: DataFrame => DataFrame): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(key) { p =>
-      encode(Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def releasedSlice(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id")))
 
   /** q232's released index under [[frozenIdentity]]: q232 appends to
     * it, q239 chains on it, q246 serves it and q249 tombstones it.
     */
   private def q232Index(s: SparkSession, d: String): DataFrame =
-    releasedIndex(s, s"graft_q232_idx_${CoreQueries.dirToken(d)}", d)(
-      frozenIdentity(s, d).encode)
+    artifact(s, d, "q232_idx")(frozenIdentity(s, d).encode(releasedSlice(s, d)))
 
   /** q242's released index under [[frozenOpq]]: q242 appends to it,
     * q246 and q248 serve it.
     */
   private def q242Index(s: SparkSession, d: String): DataFrame =
-    releasedIndex(s, s"graft_q242_idx_${CoreQueries.dirToken(d)}", d)(
-      frozenOpq(s, d).encode)
+    artifact(s, d, "q242_idx")(frozenOpq(s, d).encode(releasedSlice(s, d)))
 
   /** An index maintained since release: the `released` rows ∪ the md5
     * delta slice of `emb` encoded under the same bundle; with `tagged`
@@ -413,13 +406,9 @@ object AnnQueries extends QueryFamily {
       base: DataFrame, cols: String*)(encode: DataFrame => DataFrame): DataFrame = {
     val delta = Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id")))
       .select(col("vec_id"), col("embedding"))
-    val in = CoreQueries.sharedInputDir(
-      s"graft_${q}_in_${CoreQueries.dirToken(d)}") { p =>
-      delta.repartition(4).write.mode("overwrite").parquet(p)
-    }
-    val dir = CoreQueries.tempQueryDir(s"graft_${q}_${tmp}_")
+    val dir = tempQueryDir(s"graft_${q}_${tmp}_")
     val out = s"$dir/out"
-    Streaming.drain(Streaming.eventsStream(s, in, delta.schema), s"$dir/ck", 4) {
+    Streaming.drain(stagedStream(s, d, s"${q}_in", delta, 4), s"$dir/ck", 4) {
       (batch, id) => Streaming.writeBatch(encode(batch), id, out, append = true)
     }
     val c = cols.map(col)
@@ -800,13 +789,9 @@ object AnnQueries extends QueryFamily {
       val baseCnt = v1CellCountArtifact(s, d)
       val delta = emb.filter(isDeltaDoc(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q135_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q135_ssem_")
+      val dir = tempQueryDir("graft_q135_ssem_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q135_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(streamBatchSemantic(batch, baseIdx,
           baseCellCounts = Some(baseCnt)), id, out, append = true)
@@ -850,8 +835,7 @@ object AnnQueries extends QueryFamily {
     //      deployment never rebuild). `src` tags which path produced
     //      each row; the oracle derives it from the md5 split rule. ----
     "q137_stream_index_ingest" -> ((s, d) => {
-      val base = releasedIndex(s, s"graft_q137_idx_${CoreQueries.dirToken(d)}", d)(
-        streamBatchQuantIndex)
+      val base = artifact(s, d, "q137_idx")(streamBatchQuantIndex(releasedSlice(s, d)))
       indexRows(
         streamIngest(s, d, "q137", "sidx", base,
           "cell", "id", "code", "scale", "cnorm")(streamBatchQuantIndex),

@@ -10,6 +10,8 @@ import graft.etl.{Consolidate, Normalize, Sinks, Functions => F}
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts.{stagedStream, tempQueryDir}
+
 /** Core relational operator queries (SURVEY.md §2), each paired with a
   * DuckDB oracle in [[CoreQueries.oracleSql]].
   *
@@ -53,70 +55,6 @@ object CoreQueries extends QueryFamily {
       col("event_id").as("ord"),
       nulls("artist_name"), nulls("venue_name"), nulls("city"))
     (sg, dc)
-  }
-
-  /** Fresh temp dir per invocation for the sink read-back queries
-    * (q70/q72/q75/q78/q79). ONE shared JVM shutdown hook covers every
-    * live dir, and the previous invocation's dir for the same prefix is
-    * deleted eagerly (safe: each invocation fully materializes its
-    * read-back before the query can run again) — a bench/verify session
-    * invoking 70+ queries x 3 runs previously registered hundreds of
-    * hooks and kept every data copy on disk until JVM exit.
-    */
-  private val tempDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private lazy val tempDirHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.values.forEach(p => rmTree(p.toFile))
-    }))
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
-  private[queries] def tempQueryDir(prefix: String): String = {
-    tempDirHook
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Option(tempDirs.put(prefix, dir)).foreach(prev => rmTree(prev.toFile))
-    dir.toFile.getAbsolutePath
-  }
-
-  /** Session-shared materialization dir: `write` runs on the FIRST use
-    * of `key` this session; later invocations reuse the files (the
-    * bench invokes each query several times, and q78's stream INPUT is
-    * a deterministic function of the sf dir — rewriting it per run
-    * benches the parquet writer, not the stream). The path is
-    * per-process, so concurrent JVMs (a `Dev time` session next to a
-    * bench) never clobber or shutdown-delete each other's input, and
-    * the key is registered only AFTER a successful write — a failed
-    * first write is retried on the next invocation instead of
-    * poisoning the whole session with partial files. Registered for
-    * the shared shutdown cleanup but exempt from eager per-run
-    * deletion.
-    */
-  /** Path-unique session-artifact key token for an input dir: basename
-    * (human-readable: `sf0.01`) plus a full-path digest. Basename alone
-    * is ambiguous — two corpora named `sf0.01` under different parents
-    * in one session would silently serve the first corpus' artifact to
-    * the second (ADVICE r10). The digest is the first 10 hex chars of
-    * md5(path), not String.hashCode (ADVICE r11): a 32-bit hash
-    * collision between two live paths would reintroduce exactly the
-    * silent wrong-artifact aliasing this token exists to prevent.
-    */
-  private[queries] def dirToken(d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(5).map("%02x".format(_)).mkString
-    s"${new java.io.File(d).getName}_$md"
-  }
-
-  private[queries] def sharedInputDir(key: String)(write: String => Unit): String = {
-    tempDirHook
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"${key}_p${ProcessHandle.current().pid()}")
-    if (!tempDirs.containsKey(key)) {
-      write(p.toString)
-      tempDirs.put(key, p): Unit
-    }
-    p.toString
   }
 
   /** One simulated E1 daily run: the q69 raw generators (DICE
@@ -911,17 +849,9 @@ object CoreQueries extends QueryFamily {
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      // 4 input files -> 4 microbatches (maxFilesPerTrigger=1): the
-      // aggregation state is genuinely carried across batches. The
-      // input is written once per session (deterministic per sf dir);
-      // checkpoint + output stay fresh per invocation so every run
-      // re-processes the whole stream.
-      val in = sharedInputDir(
-        s"graft_q78_in_${dirToken(d)}") { p =>
-        ev.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val agg = Streaming.dailyAggregation(
-        Streaming.eventsStream(s, in, ev.schema))
+      // 4 micro-batches: the aggregation state is genuinely carried
+      // across batches
+      val agg = Streaming.dailyAggregation(stagedStream(s, d, "q78_in", ev, 4))
       Streaming.drain(agg, ck, 4, OutputMode.Complete)(
         Streaming.writeBatch(_, _, out, append = false))
       s.read.parquet(out)
@@ -949,11 +879,7 @@ object CoreQueries extends QueryFamily {
       val ev = Tables.events(s, d)
         .filter(col("user_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val in = sharedInputDir(
-        s"graft_q83_in_${dirToken(d)}") { p =>
-        ev.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val stream = Streaming.eventsStream(s, in, ev.schema)
+      val stream = stagedStream(s, d, "q83_in", ev, 4)
       val joined = Streaming.intervalJoinStream(
         stream.filter(col("event_type") === "signup"),
         stream.filter(col("event_type") === "purchase"),
@@ -986,12 +912,7 @@ object CoreQueries extends QueryFamily {
           lower(substring(col("text"), 1, 40)).as("norm_key"),
           expr("timestampadd(SECOND, doc_id, timestamp'2024-01-01 00:00:00')")
             .as("ts"))
-      val in = sharedInputDir(
-        s"graft_q106_in_${dirToken(d)}") { p =>
-        docs.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val deduped = Streaming.dedupStream(
-        Streaming.eventsStream(s, in, docs.schema),
+      val deduped = Streaming.dedupStream(stagedStream(s, d, "q106_in", docs, 4),
         "norm_key", "ts", watermark = "3650 days")
       Streaming.drain(deduped, ck, 4)(
         Streaming.writeBatch(_, _, out, append = true))

@@ -7,6 +7,7 @@ import graft.ext.{Dedup, Similarity, TextAnalysis => TA}
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts._
 import Fragments._
 
 /** Curation family: decontamination, the per-doc release ledger and
@@ -14,15 +15,25 @@ import Fragments._
   */
 object CurationQueries extends QueryFamily {
   /** The q59/q84 decontamination gram projection: per-doc distinct
-    * word-8-gram md5 prefixes plus the md5-head-byte split bucket.
+    * word-8-gram md5 prefixes plus the [[isHeldOut]] split flag.
     * Shared so the twin paths (exact broadcast join vs Bloom prefilter)
     * cannot silently desynchronize on the split rule or gram width.
     */
   private def splitGrams(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+        isHeldOut(col("doc_id")).as("held"),
         explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
+
+  /** The decontamination held-out split: docs whose md5 head nibble is
+    * '0'. The train split is its complement.
+    */
+  private def isHeldOut(id: Column): Column =
+    substring(md5(id.cast("string")), 1, 1) === "0"
+
+  /** [[isHeldOut]] in DuckDB, for the doc id expression `id`. */
+  private def duckHeldOut(id: String): String =
+    s"(substr(md5(CAST($id AS VARCHAR)), 1, 1) = '0')"
 
   /** q162's per-doc release ledger over EXPLICIT inputs: every doc of
     * `docs` with a drop_reason composing held-out split → quality
@@ -39,10 +50,10 @@ object CurationQueries extends QueryFamily {
   private def curatedLedger(docs: DataFrame, dropSets: DataFrame,
       contPairs: DataFrame): DataFrame = {
     val qual = docs.select(col("doc_id"), col("source"), col("lang"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+        isHeldOut(col("doc_id")).as("held"),
         TA.wsTokens(col("text")).as("toks"),
         TA.wsTokens(lower(col("text"))).as("ltoks"))
-      .select(col("doc_id"), col("source"), col("lang"), col("hb"),
+      .select(col("doc_id"), col("source"), col("lang"), col("held"),
         size(col("toks")).cast("long").as("n_words"),
         round(TA.meanWordLenFromTokens(col("toks")), 6).as("mwl"),
         round(TA.stopwordRatioFromTokens(col("ltoks")), 6).as("sr"),
@@ -56,10 +67,10 @@ object CurationQueries extends QueryFamily {
     // held-out split (q59's broadcast-held-set shape)
     val grams = docs
       .select(col("doc_id"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+        isHeldOut(col("doc_id")).as("held"),
         explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
-    val held = grams.filter(col("hb") === "0").select(col("gh")).distinct()
-    val contam = grams.filter(col("hb") =!= "0")
+    val held = grams.filter(col("held")).select(col("gh")).distinct()
+    val contam = grams.filter(!col("held"))
       .join(broadcast(held), Seq("gh"), "left_semi")
       .select(col("doc_id")).distinct().withColumn("c_hit", lit(1L))
     // four persisted detector families pivoted to per-doc flags
@@ -79,7 +90,7 @@ object CurationQueries extends QueryFamily {
       .join(dr, Seq("doc_id"), "left")
       .join(cdrop, Seq("doc_id"), "left")
       .withColumn("drop_reason",
-        when(col("hb") === "0", "heldout")
+        when(col("held"), "heldout")
           .when(!col("q_keep"), "quality")
           .when(col("c_hit") === 1L, "decontaminated")
           .when(col("d_mh") === 1L, "minhash")
@@ -94,22 +105,15 @@ object CurationQueries extends QueryFamily {
   }
 
   /** The v1 release's four-family drop sets, persisted (q167/q168). */
-  private def v1DropsArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_dropsv1_${CoreQueries.dirToken(d)}") { p =>
-      dropSetsRecomputeFrom(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
-        v1SigArtifact(s, d),
-        Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))))
-        .repartition(1).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def v1DropsArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "dropsv1", Some(1))(dropSetsRecomputeFrom(
+      Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+      v1SigArtifact(s, d),
+      Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id")))))
 
   /** The v1 release's containment pairs, persisted (q167/q168). */
   private def v1PairsArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_contpv1_${CoreQueries.dirToken(d)}") { p =>
+    val dir = sharedInputDir(d, "contpv1") { p =>
       val baseDocs = Tables.documents(s, d)
         .filter(!isDeltaDoc(col("doc_id")))
       var cached: Option[DataFrame] = None
@@ -121,21 +125,15 @@ object CurationQueries extends QueryFamily {
         .repartition(1).write.mode("overwrite").parquet(p)
       cached.foreach(_.unpersist())
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** The v1 release LEDGER as a persisted artifact — what a real v1
     * build ships; q167 diffs against it, q168 maintains FROM it. */
-  private def v1ReleaseLedger(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_ledgv1_${CoreQueries.dirToken(d)}") { p =>
-      curatedLedger(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
-        v1DropsArtifact(s, d), v1PairsArtifact(s, d))
-        .repartition(1).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def v1ReleaseLedger(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "ledgv1", Some(1))(curatedLedger(
+      Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+      v1DropsArtifact(s, d), v1PairsArtifact(s, d)))
 
   /** The CURRENT (v2) release ledger as a persisted artifact —
     * [[v1ReleaseLedger]]'s full-corpus twin (ADVICE r11): the ledger a
@@ -146,43 +144,23 @@ object CurationQueries extends QueryFamily {
     * recompute is inherent (write + read-back) and q162's unchanged
     * DuckDB oracle gates it.
     */
-  private def v2ReleaseLedger(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_ledgv2_${CoreQueries.dirToken(d)}") { p =>
-      curatedLedger(Tables.documents(s, d), dedupDropSets(s, d),
-          containmentPairs(s, d))
-        .repartition(1).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def v2ReleaseLedger(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "ledgv2", Some(1))(curatedLedger(Tables.documents(s, d),
+      dedupDropSets(s, d), containmentPairs(s, d)))
 
   /** The v1 release's span-owner table — (k, doc_id, span_idx), the
     * min-(doc_id, span_idx) owner of every base span key (q148's rule;
     * q168/q171's maintenance input). */
-  private def v1SpanOwnerArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_spownv1_${CoreQueries.dirToken(d)}") { p =>
-      spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
-        .groupBy(col("k"))
-        .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-        .select(col("k"), col("o.doc_id").as("doc_id"),
-          col("o.span_idx").as("span_idx"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def v1SpanOwnerArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "spownv1")(minOwners(
+      spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))))
 
   /** The v1 release's per-doc span counts — (doc_id, n_spans), the
     * denominator of the span verdict (q168/q171). */
-  private def v1SpanCountArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_spcntv1_${CoreQueries.dirToken(d)}") { p =>
+  private def v1SpanCountArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "spcntv1")(
       spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
-        .groupBy(col("doc_id")).agg(max(col("n_spans")).as("n_spans"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+        .groupBy(col("doc_id")).agg(max(col("n_spans")).as("n_spans")))
 
   /** Everything a release SHIPS and the next release's maintenance
     * step consumes — the closure of [[ledgerMaintainStep]]: the five
@@ -307,15 +285,8 @@ object CurationQueries extends QueryFamily {
     // spanown artifact write AND the span verdict (itself consumed by
     // both the drops artifact and the ledger) — a corpus-keyed
     // group-by replayed 3× otherwise
-    val spanOwn2 = graft.util.Persist(prior.spanOwn
-      .unionByName(deltaSpan.groupBy(col("k"))
-        .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-        .select(col("k"), col("o.doc_id").as("doc_id"),
-          col("o.span_idx").as("span_idx")))
-      .groupBy(col("k"))
-      .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-      .select(col("k"), col("o.doc_id").as("doc_id"),
-        col("o.span_idx").as("span_idx")))
+    val spanOwn2 = graft.util.Persist(
+      minOwners(prior.spanOwn.unionByName(minOwners(deltaSpan))))
     onPersist(spanOwn2)
     val spanCnt2 = prior.spanCnt
       .unionByName(deltaSpan.groupBy(col("doc_id"))
@@ -390,13 +361,13 @@ object CurationQueries extends QueryFamily {
         col("lang"), col("n_words"),
         (col("drop_reason") =!= "quality").as("q_keep"))
       .unionByName(deltaMeta)
-      .withColumn("hb", substring(md5(col("doc_id").cast("string")), 1, 1))
+      .withColumn("held", isHeldOut(col("doc_id")))
     // ---- decontamination: the one corpus-wide pass (new held set) ----
     val grams = corpus.select(col("doc_id"),
-      substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+      isHeldOut(col("doc_id")).as("held"),
       explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
-    val held = grams.filter(col("hb") === "0").select(col("gh")).distinct()
-    val train = grams.filter(col("hb") =!= "0")
+    val held = grams.filter(col("held")).select(col("gh")).distinct()
+    val train = grams.filter(!col("held"))
     // bloomDecon = the held-set-scale degrade path promised by q59's
     // docstring and implemented standalone in q84, now a switch INSIDE
     // the composed maintenance step: a fixed-size Bloom sketch of the
@@ -437,7 +408,7 @@ object CurationQueries extends QueryFamily {
     val ledger2 = allMeta.join(contam, Seq("doc_id"), "left")
       .join(dr, Seq("doc_id"), "left")
       .withColumn("drop_reason",
-        when(col("hb") === "0", "heldout")
+        when(col("held"), "heldout")
           .when(!col("q_keep"), "quality")
           .when(col("c_hit") === 1L, "decontaminated")
           .when(col("d_mh") === 1L, "minhash")
@@ -481,30 +452,38 @@ object CurationQueries extends QueryFamily {
     * dir that the next call retries with mode=overwrite — the session
     * key is registered only after all eleven writes succeed.
     */
-  private def maintainedArtifacts(s: SparkSession, key: String,
+  private def maintainedArtifacts(s: SparkSession, d: String, name: String,
       prior: => RelArtifacts, delta: DataFrame, deltaEmb: DataFrame,
-      corpus: DataFrame, priorDocs: DataFrame): RelArtifacts = {
-    val names = Seq("sig", "sigcnt", "shsig", "shcnt", "cellidx",
-      "cellcnt", "spanown", "spancnt", "drops", "pairs", "ledger")
-    val dir = CoreQueries.sharedInputDir(key) { p =>
+      corpus: DataFrame, priorDocs: DataFrame): RelArtifacts =
+    readBundle(s, sharedInputDir(d, name) { p =>
       var cached = List.empty[DataFrame]
-      val a = ledgerMaintainStep(prior, delta, deltaEmb, corpus,
-        priorDocs, onPersist = f => cached ::= f)
-      // the eleven artifact writes are independent jobs to distinct
-      // directories — submit them concurrently (guide §2.6; round 19).
-      // The step's persisted delta frames are shared: the first job
-      // touching one materializes it, later jobs read the cache.
-      graft.util.ParallelWrite.run(
-        names.zip(Seq(a.sig, a.sigCnt, a.shSig, a.shCnt, a.cellIdx,
-            a.cellCnt, a.spanOwn, a.spanCnt, a.drops, a.pairs, a.ledger))
-          .map { case (n, df) => () =>
-            df.write.mode("overwrite").parquet(s"$p/$n") })
+      writeBundle(ledgerMaintainStep(prior, delta, deltaEmb, corpus,
+        priorDocs, onPersist = f => cached ::= f), p)
       cached.foreach(_.unpersist())
-    }
-    def rd(n: String) = s.read.parquet(s"$dir/$n")
-    RelArtifacts(rd("sig"), rd("sigcnt"), rd("shsig"), rd("shcnt"),
-      rd("cellidx"), rd("cellcnt"), rd("spanown"), rd("spancnt"),
-      rd("drops"), rd("pairs"), rd("ledger"))
+    })
+
+  /** The bundle's member directory names, in [[RelArtifacts]] order. */
+  private val bundleNames = Seq("sig", "sigcnt", "shsig", "shcnt", "cellidx",
+    "cellcnt", "spanown", "spancnt", "drops", "pairs", "ledger")
+
+  /** Writes `a` under `root`, one directory per member. The eleven
+    * writes are independent jobs to distinct directories, so they are
+    * submitted concurrently (guide §2.6; round 19): a step's persisted
+    * delta frames are shared, the first job touching one materializes
+    * it and later jobs read the cache.
+    */
+  private def writeBundle(a: RelArtifacts, root: String): Unit =
+    graft.util.ParallelWrite.run(bundleNames.zip(Seq(a.sig, a.sigCnt,
+        a.shSig, a.shCnt, a.cellIdx, a.cellCnt, a.spanOwn, a.spanCnt,
+        a.drops, a.pairs, a.ledger))
+      .map { case (n, df) => () =>
+        df.write.mode("overwrite").parquet(s"$root/$n") })
+
+  /** The bundle written under `root`. */
+  private def readBundle(s: SparkSession, root: String): RelArtifacts = {
+    val m = bundleNames.map(n => Tables.parquet(s, s"$root/$n"))
+    RelArtifacts(m(0), m(1), m(2), m(3), m(4), m(5), m(6), m(7), m(8),
+      m(9), m(10))
   }
 
   /** The APPEND-ONLY materialization of one maintenance step — the
@@ -527,10 +506,10 @@ object CurationQueries extends QueryFamily {
     *     removed_docs = 0), so append IS the maintenance.
     * Gated end-to-end by q177 against q162's full-rebuild oracle.
     */
-  private def appendMaintainedArtifacts(s: SparkSession, key: String,
+  private def appendMaintainedArtifacts(s: SparkSession, d: String, name: String,
       prior: => RelArtifacts, delta: DataFrame, deltaEmb: DataFrame,
       corpus: DataFrame, priorDocs: DataFrame): RelArtifacts = {
-    val dir = CoreQueries.sharedInputDir(key) { p =>
+    val dir = sharedInputDir(d, name) { p =>
       var cached = List.empty[DataFrame]
       val next = ledgerMaintainStep(prior, delta, deltaEmb, corpus,
         priorDocs, onPersist = f => cached ::= f)
@@ -557,15 +536,9 @@ object CurationQueries extends QueryFamily {
             df.write.mode("overwrite").parquet(s"$p/$n") })
       cached.foreach(_.unpersist())
     }
-    def rd(n: String) = s.read.parquet(s"$dir/$n")
-    RelArtifacts(rd("sig"), rd("sigcnt"), rd("shsig"), rd("shcnt"),
-      rd("cellidx"), rd("cellcnt"),
-      // compact-on-read: min-merge the appended owner claims
-      rd("spanown").groupBy(col("k"))
-        .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-        .select(col("k"), col("o.doc_id").as("doc_id"),
-          col("o.span_idx").as("span_idx")),
-      rd("spancnt"), rd("drops"), rd("pairs"), rd("ledger"))
+    val b = readBundle(s, dir)
+    // compact-on-read: min-merge the appended owner claims
+    b.copy(spanOwn = minOwners(b.spanOwn))
   }
 
   /** The v2 release built by MAINTENANCE over the full delta,
@@ -576,8 +549,7 @@ object CurationQueries extends QueryFamily {
     */
   private def maintainedRelease(s: SparkSession, d: String): RelArtifacts = {
     val docs = Tables.documents(s, d)
-    maintainedArtifacts(s, s"graft_mntv2_${CoreQueries.dirToken(d)}",
-      v1Artifacts(s, d), docs.filter(isDeltaDoc(col("doc_id"))),
+    maintainedArtifacts(s, d, "mntv2", v1Artifacts(s, d), docs.filter(isDeltaDoc(col("doc_id"))),
       Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
       corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
   }
@@ -622,14 +594,14 @@ object CurationQueries extends QueryFamily {
     val emptyFp = substring(md5(lit("")), 1, 16)
     val docs = Tables.documents(s, d)
     val words = docs.select(col("doc_id"),
-      substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+      isHeldOut(col("doc_id")).as("held"),
       TA.normWords(col("text")).as("w"))
-    val held = splitGrams(s, d).filter(col("hb") === "0")
+    val held = splitGrams(s, d).filter(col("held"))
       .select(col("gh")).distinct()
     // three consumers (leaked, kept, out); registered with the step
     // cache so the next maintenance-class build drains it (the
     // query's own action must still see the cached frame)
-    val train = graft.util.Persist(words.filter(col("hb") =!= "0"))
+    val train = graft.util.Persist(words.filter(!col("held")))
     stepOnPersist(train)
     // leaked window start positions (1-based): per-position gram
     // hashes (the composed form of WordGramHashes — positions matter
@@ -673,13 +645,12 @@ object CurationQueries extends QueryFamily {
     * full scale notes.
     */
   private def fuzzyContamination(s: SparkSession, d: String): DataFrame = {
-    def held(c: Column) = substring(md5(c.cast("string")), 1, 1) === "0"
     val cand = Dedup.minhashCandidates(corpusSignatures(s, d))
       .select(col("a_id"), col("b_id"))
-      .filter(held(col("a_id")) =!= held(col("b_id")))
+      .filter(isHeldOut(col("a_id")) =!= isHeldOut(col("b_id")))
       .select(
-        when(held(col("a_id")), col("b_id")).otherwise(col("a_id")).as("doc_id"),
-        when(held(col("a_id")), col("a_id")).otherwise(col("b_id")).as("held_id"))
+        when(isHeldOut(col("a_id")), col("b_id")).otherwise(col("a_id")).as("doc_id"),
+        when(isHeldOut(col("a_id")), col("a_id")).otherwise(col("b_id")).as("held_id"))
     val pre = Tables.documents(s, d)
       .select(col("doc_id"), substring(col("text"), 1, 120).as("pre"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
@@ -705,9 +676,9 @@ object CurationQueries extends QueryFamily {
     //      keeps uncontaminated docs in the denominator ----
     "q101_contamination_frac" -> ((s, d) => {
       val grams = splitGrams(s, d)
-      val held = grams.filter(col("hb") === "0").select(col("gh")).distinct()
+      val held = grams.filter(col("held")).select(col("gh")).distinct()
         .withColumn("hit", lit(true))
-      grams.filter(col("hb") =!= "0")
+      grams.filter(!col("held"))
         .join(broadcast(held), Seq("gh"), "left")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"),
@@ -734,8 +705,8 @@ object CurationQueries extends QueryFamily {
       // No persist: the held/train split filters push to the scan, and
       // the two branches together cost one full pass
       val grams = splitGrams(s, d)
-      val heldOut = grams.filter(col("hb") === "0").select(col("gh")).distinct()
-      grams.filter(col("hb") =!= "0")
+      val heldOut = grams.filter(col("held")).select(col("gh")).distinct()
+      grams.filter(!col("held"))
         .join(broadcast(heldOut), Seq("gh"))
         .groupBy(col("doc_id"))
         // per-doc grams are array_distinct'd and heldOut is distinct, so
@@ -759,7 +730,7 @@ object CurationQueries extends QueryFamily {
       // consumed twice (sketch + confirm join): level is the deploy
       // -time util.Persist switch, as everywhere in the dedup family
       val heldOut = graft.util.Persist(
-        grams.filter(col("hb") === "0").select(col("gh")).distinct())
+        grams.filter(col("held")).select(col("gh")).distinct())
       // might_contain requires a CONSTANT sketch (Spark's own runtime
       // filters inject it as a subquery result); one bounded driver
       // action fetches the single ~numBits/8-byte row and inlines it
@@ -767,7 +738,7 @@ object CurationQueries extends QueryFamily {
       val bf = heldOut
         .agg(graft.ext.Bloom.sketchAgg(col("gh"), 100000L, 800000L).as("bf"))
         .collect()(0).getAs[Array[Byte]](0)
-      grams.filter(col("hb") =!= "0")
+      grams.filter(!col("held"))
         .filter(graft.ext.Bloom.mightContain(lit(bf), col("gh")))
         .join(heldOut, Seq("gh"), "left_semi")
         .groupBy(col("doc_id"))
@@ -792,7 +763,7 @@ object CurationQueries extends QueryFamily {
       // only consumed once
       val docs = graft.util.Persist(Tables.documents(s, d))
       val meta = docs.select(col("doc_id"), col("source"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+        isHeldOut(col("doc_id")).as("held"),
         TA.tokenCount(col("text")).as("n_tokens"))
       val cand = graft.util.Persist(Dedup.minhashCandidates(corpusSignatures(s, d))
         .filter(col("n_bands") >= 2)
@@ -800,14 +771,14 @@ object CurationQueries extends QueryFamily {
       val nonCanonical = Dedup.connectedComponents(cand, "a_id", "b_id")
         .filter(col("id") =!= col("comp")).select(col("id").as("doc_id"))
       val grams = docs.select(col("doc_id"),
-          substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+          isHeldOut(col("doc_id")).as("held"),
           explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
-      val held = grams.filter(col("hb") === "0").select(col("gh")).distinct()
-      val contaminated = grams.filter(col("hb") =!= "0")
+      val held = grams.filter(col("held")).select(col("gh")).distinct()
+      val contaminated = grams.filter(!col("held"))
         .join(broadcast(held), Seq("gh"))
         .select(col("doc_id")).distinct()
       val survivors = meta
-        .filter(col("n_tokens") >= 25 && col("hb") =!= "0")
+        .filter(col("n_tokens") >= 25 && !col("held"))
         .join(nonCanonical, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
       val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
@@ -1046,13 +1017,11 @@ object CurationQueries extends QueryFamily {
     //      final held set in the last step regardless of chain depth ----
     "q171_ledger_chain" -> ((s, d) => {
       drainStepCache()
-      val tok = CoreQueries.dirToken(d)
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
       def d1(c: Column) = isDeltaDoc(c) && isFirstIngest(c)
       def d2(c: Column) = isDeltaDoc(c) && !isFirstIngest(c)
-      val v2 = maintainedArtifacts(s, s"graft_chainv2_$tok",
-        v1Artifacts(s, d),
+      val v2 = maintainedArtifacts(s, d, "chainv2", v1Artifacts(s, d),
         docs.filter(d1(col("doc_id"))), emb.filter(d1(col("vec_id"))),
         corpus = docs.filter(!d2(col("doc_id"))),
         priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
@@ -1198,25 +1167,10 @@ object CurationQueries extends QueryFamily {
       val emb = Tables.embeddings(s, d)
       val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q179_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(2).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q179_sledg_")
+      val dir = tempQueryDir("graft_q179_sledg_")
       val docsRoot = s"$dir/docs"; val bndRoot = s"$dir/bnd"
       val ck = s"$dir/ck"
-      val names = Seq("sig", "sigcnt", "shsig", "shcnt", "cellidx",
-        "cellcnt", "spanown", "spancnt", "drops", "pairs", "ledger")
-      def frames(a: RelArtifacts) = Seq(a.sig, a.sigCnt, a.shSig,
-        a.shCnt, a.cellIdx, a.cellCnt, a.spanOwn, a.spanCnt, a.drops,
-        a.pairs, a.ledger)
-      def readBundle(root: String): RelArtifacts = {
-        def rd(n: String) = s.read.parquet(s"$root/$n")
-        RelArtifacts(rd("sig"), rd("sigcnt"), rd("shsig"), rd("shcnt"),
-          rd("cellidx"), rd("cellcnt"), rd("spanown"), rd("spancnt"),
-          rd("drops"), rd("pairs"), rd("ledger"))
-      }
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q179_in", delta, 2)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(batch.select(col("doc_id")), id, docsRoot,
           append = true)
@@ -1228,19 +1182,14 @@ object CurationQueries extends QueryFamily {
           ingested.filter(col("batch_id") <= id).select(col("doc_id")),
           Seq("doc_id"), "left_semi"))
         val prior = if (id == 0L) v1Artifacts(s, d)
-          else readBundle(s"$bndRoot/batch_id=${id - 1}")
+          else readBundle(s, s"$bndRoot/batch_id=${id - 1}")
         var cached = List.empty[DataFrame]
         val next = ledgerMaintainStep(prior, batch,
           emb.join(batch.select(col("doc_id").as("vec_id")),
             Seq("vec_id"), "left_semi"),
           corpus = corpusB, priorDocs = priorDocsB,
           onPersist = f => cached ::= f)
-        // eleven independent per-batch artifact writes — submit
-        // concurrently (guide §2.6; VERDICT r18 #1, round 19)
-        graft.util.ParallelWrite.run(
-          names.zip(frames(next)).map { case (n, df) => () =>
-            df.write.mode("overwrite")
-              .parquet(s"$bndRoot/batch_id=$id/$n") })
+        writeBundle(next, s"$bndRoot/batch_id=$id")
         cached.foreach(_.unpersist())
       }
       // An empty delta slice produces zero batches: listFiles() on a
@@ -1270,9 +1219,7 @@ object CurationQueries extends QueryFamily {
     //      cadence actually runs ----
     "q177_ledger_append" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      appendMaintainedArtifacts(s,
-        s"graft_appv2_${CoreQueries.dirToken(d)}",
-        v1Artifacts(s, d),
+      appendMaintainedArtifacts(s, d, "appv2", v1Artifacts(s, d),
         docs.filter(isDeltaDoc(col("doc_id"))),
         Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
         corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
@@ -1299,14 +1246,9 @@ object CurationQueries extends QueryFamily {
     "q165_artifact_versioning" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val v1 = v1SigArtifact(s, d)
-      val v2Dir = CoreQueries.sharedInputDir(
-        s"graft_q165_sigv2_${CoreQueries.dirToken(d)}") { p =>
-        v1SigArtifact(s, d).unionByName(
-          Dedup.bandedSignatures(docs.filter(isDeltaDoc(col("doc_id"))),
-            "text", "doc_id", k = 8))
-          .write.mode("overwrite").parquet(p)
-      }
-      val v2 = s.read.parquet(v2Dir)
+      val v2 = artifact(s, d, "q165_sigv2")(v1SigArtifact(s, d).unionByName(
+        Dedup.bandedSignatures(docs.filter(isDeltaDoc(col("doc_id"))),
+          "text", "doc_id", k = 8)))
       def summ(df: DataFrame, pre: String) = df.groupBy(col("band"))
         .agg(count(lit(1)).as(s"${pre}_rows"),
           countDistinct(col("doc_id")).as(s"${pre}_docs"))
@@ -1372,7 +1314,7 @@ object CurationQueries extends QueryFamily {
     "q182_semantic_decon" -> ((s, d) =>
       Similarity.semanticContamination(Tables.embeddings(s, d),
           "vec_id", "embedding",
-          idc => substring(md5(idc.cast("string")), 1, 1) === "0", tau = 0.4)
+          isHeldOut, tau = 0.4)
         .orderBy(col("vec_id"))),
 
     // ---- decontamination REMEDY-COST report: the decision table the
@@ -1390,7 +1332,7 @@ object CurationQueries extends QueryFamily {
       // so this query's own registered frames survive its drain
       val span = spanExcision(s, d)
       val trainToks = Tables.documents(s, d)
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 1) =!= "0")
+        .filter(!isHeldOut(col("doc_id")))
         .select(col("doc_id"), size(TA.normWords(col("text")))
           .cast("long").as("n_tokens"))
       val total = graft.util.Persist(
@@ -1409,9 +1351,9 @@ object CurationQueries extends QueryFamily {
       // q59's verdict chain inlined (shared splitGrams, same split):
       // flagged = train docs sharing ANY distinct 8-gram with held
       val grams59 = splitGrams(s, d)
-      val held59 = grams59.filter(col("hb") === "0")
+      val held59 = grams59.filter(col("held"))
         .select(col("gh")).distinct()
-      val exactFlag = grams59.filter(col("hb") =!= "0")
+      val exactFlag = grams59.filter(!col("held"))
         .join(broadcast(held59), Seq("gh"))
         .select(col("doc_id")).distinct()
         .join(trainToks, Seq("doc_id"))
@@ -1442,17 +1384,15 @@ object CurationQueries extends QueryFamily {
     //      every one of its held vectors unscreened. Deployment rule:
     //      held_unscreened must be 0 before trusting q182's output ----
     "q199_decon_safety" -> ((s, d) => {
-      def isHeld(idc: Column): Column =
-        substring(md5(idc.cast("string")), 1, 1) === "0"
       // ONE cap constant feeds both the contamination run and the
       // over-cap/unscreened report columns (ADVICE r14: four
       // independent copies of the literal could silently diverge from
       // the cap the run actually used)
       val rehearsalCap = 100
       val emb = skewedEmb(s, d)
-      val stats = Similarity.cellSafetyStats(emb, "vec_id", "embedding", isHeld)
+      val stats = Similarity.cellSafetyStats(emb, "vec_id", "embedding", isHeldOut)
       val flags = Similarity.semanticContamination(emb, "vec_id", "embedding",
-          isHeld, tau = 0.4, cellCap = rehearsalCap)
+          isHeldOut, tau = 0.4, cellCap = rehearsalCap)
         .groupBy(col("cell")).agg(count(lit(1)).as("nf"))
       stats.join(flags, Seq("cell"), "left")
         .select(col("cell"), col("cell_size"), col("n_held"), col("n_train"),
@@ -1474,16 +1414,16 @@ object CurationQueries extends QueryFamily {
     //      batch-cardinality-bounded aggregate on top ----
     "q207_contamination_velocity" -> ((s, d) => {
       val grams = splitGrams(s, d)
-      val heldOut = grams.filter(col("hb") === "0").select(col("gh")).distinct()
-      val perDoc = grams.filter(col("hb") =!= "0")
+      val heldOut = grams.filter(col("held")).select(col("gh")).distinct()
+      val perDoc = grams.filter(!col("held"))
         .join(broadcast(heldOut), Seq("gh"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("shared_grams"))
       val batches = Tables.documents(s, d)
         .select(col("doc_id"),
-          substring(md5(col("doc_id").cast("string")), 1, 1).as("hb"),
+          isHeldOut(col("doc_id")).as("held"),
           pmod(conv(substring(md5(col("doc_id").cast("string")), 2, 1), 16, 10)
             .cast("long"), lit(4L)).as("batch_id"))
-        .filter(col("hb") =!= "0")
+        .filter(!col("held"))
       batches.join(perDoc, Seq("doc_id"), "left")
         .groupBy(col("batch_id"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1508,23 +1448,14 @@ object CurationQueries extends QueryFamily {
     //      stream ≡ batch card ----
     "q227_stream_decon" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val heldDir = CoreQueries.sharedInputDir(
-        s"graft_q227_held_${CoreQueries.dirToken(d)}") { p =>
-        splitGrams(s, d).filter(col("hb") === "0")
-          .select(col("gh")).distinct()
-          .repartition(1).write.mode("overwrite").parquet(p)
-      }
-      val held = s.read.parquet(heldDir)
+      val held = artifact(s, d, "q227_held", Some(1))(
+        splitGrams(s, d).filter(col("held")).select(col("gh")).distinct())
       val train = docs
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 1) =!= "0")
+        .filter(!isHeldOut(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q227_in_${CoreQueries.dirToken(d)}") { p =>
-        train.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q227_sdecon_")
+      val dir = tempQueryDir("graft_q227_sdecon_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, train.schema)
+      val stream = stagedStream(s, d, "q227_in", train, 4)
       Streaming.drain(stream, ck, 4) { (b, id) =>
         val perDoc = b.select(col("doc_id"),
             explode(TA.wordGramHashes(col("text"), 8)).as("gh"))
@@ -1630,12 +1561,12 @@ object CurationQueries extends QueryFamily {
              $duckGramHash AS gh
            FROM ${px}dgp),
          ${px}dheld AS (SELECT DISTINCT gh FROM ${px}dg
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
+           WHERE ${duckHeldOut("doc_id")}),
          ${px}dcon AS (SELECT DISTINCT doc_id FROM ${px}dg
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0'
+           WHERE NOT ${duckHeldOut("doc_id")}
              AND gh IN (SELECT gh FROM ${px}dheld)),
          ${px}led AS (SELECT d.doc_id, d.source, d.lang, ${px}qm.n_words,
-             CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1) = '0'
+             CASE WHEN ${duckHeldOut("d.doc_id")}
                  THEN 'heldout'
                WHEN NOT (${px}qm.n_words >= 50 AND ${px}qm.n_words <= 100000
                  AND ${px}qm.mwl >= 3.0 AND ${px}qm.mwl <= 10.0
@@ -1667,9 +1598,9 @@ object CurationQueries extends QueryFamily {
              $duckGramHash AS gh
            FROM gp),
          held AS (SELECT DISTINCT gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
+           WHERE ${duckHeldOut("doc_id")}),
          train AS (SELECT doc_id, gh FROM g
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')"""
+           WHERE NOT ${duckHeldOut("doc_id")})"""
 
   val oracleSql: Map[String, String] = Map(
     "q101_contamination_frac" -> s"""
@@ -1704,15 +1635,15 @@ object CurationQueries extends QueryFamily {
              $duckGramHash AS gh
            FROM ngp),
          held AS (SELECT DISTINCT gh FROM ng
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
+           WHERE ${duckHeldOut("doc_id")}),
          contam AS (SELECT DISTINCT doc_id FROM ng JOIN held USING (gh)
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0'),
+           WHERE NOT ${duckHeldOut("doc_id")}),
          dmeta AS (SELECT doc_id, source,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS hb,
+             ${duckHeldOut("doc_id")} AS held,
              CAST(len(${duckToks("text")}) AS BIGINT) AS n_tokens
            FROM documents),
          surv AS (SELECT doc_id, source, n_tokens FROM dmeta
-           WHERE n_tokens >= 25 AND hb <> '0'
+           WHERE n_tokens >= 25 AND NOT held
              AND doc_id NOT IN (SELECT doc_id FROM noncanon)
              AND doc_id NOT IN (SELECT doc_id FROM contam)),
          c AS (SELECT source, doc_id, n_tokens,
@@ -1821,12 +1752,12 @@ object CurationQueries extends QueryFamily {
     // covered positions -> anti-joined token rebuild, fingerprinted
     "q180_decontaminate_spans" -> s"""
          WITH dw0 AS (SELECT doc_id, $duckNormWords AS words,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS hb
+             ${duckHeldOut("doc_id")} AS held
            FROM documents),
          dheld AS (SELECT DISTINCT
              $duckGramHash AS gh
-           FROM (${gramPosSql("dw0")} AND hb = '0')),
-         dtr AS (SELECT doc_id, words FROM dw0 WHERE hb <> '0'),
+           FROM (${gramPosSql("dw0")} AND held)),
+         dtr AS (SELECT doc_id, words FROM dw0 WHERE NOT held),
          dlw AS (SELECT doc_id, i AS s
            FROM (${gramPosSql("dtr")}) t
            WHERE $duckGramHash
@@ -1860,13 +1791,13 @@ object CurationQueries extends QueryFamily {
          WITH $bandedSigSql,
          fcand AS (${lshPairsSql()}),
          fo AS (SELECT
-             CASE WHEN substr(md5(a_id::VARCHAR), 1, 1) = '0'
+             CASE WHEN ${duckHeldOut("a_id")}
                THEN b_id ELSE a_id END AS doc_id,
-             CASE WHEN substr(md5(a_id::VARCHAR), 1, 1) = '0'
+             CASE WHEN ${duckHeldOut("a_id")}
                THEN a_id ELSE b_id END AS held_id
            FROM fcand
-           WHERE (substr(md5(a_id::VARCHAR), 1, 1) = '0')
-             <> (substr(md5(b_id::VARCHAR), 1, 1) = '0')),""" + """
+           WHERE ${duckHeldOut("a_id")}
+             <> ${duckHeldOut("b_id")}),""" + """
          fgpos AS (SELECT doc_id, substr(text, 1, 120) AS pre,
            unnest(generate_series(1, greatest(len(substr(text, 1, 120)) - 2, 1))) AS i
            FROM documents),
@@ -1888,9 +1819,9 @@ object CurationQueries extends QueryFamily {
     "q182_semantic_decon" -> s"""
          WITH ${semanticPairCtesFor("", "TRUE")},
          sdt AS (SELECT id, vec, cell, nrm FROM c
-           WHERE substr(md5(id::VARCHAR), 1, 1) <> '0'),
+           WHERE NOT ${duckHeldOut("id")}),
          sdh AS (SELECT id, vec, cell, nrm FROM c
-           WHERE substr(md5(id::VARCHAR), 1, 1) = '0'),
+           WHERE ${duckHeldOut("id")}),
          sdp AS (SELECT t.cell, t.id AS vec_id, h.id AS held_id,
              list_inner_product(t.vec, h.vec) / (t.nrm * h.nrm) AS sim
            FROM sdt t JOIN sdh h ON t.cell = h.cell),
@@ -1904,16 +1835,16 @@ object CurationQueries extends QueryFamily {
     "q188_decon_cost" -> (s"""
          WITH dcw AS (SELECT doc_id, $duckNormWords AS words FROM documents),
          dct AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS n_tokens
-           FROM dcw WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0'),
+           FROM dcw WHERE NOT ${duckHeldOut("doc_id")}),
          dctot AS (SELECT SUM(n_tokens) AS t FROM dct),
          dcgp AS (${gramPosSql("dcw")}),
          dcg AS (SELECT doc_id, i,
              $duckGramHash AS gh
            FROM dcgp),
          dcheld AS (SELECT DISTINCT gh FROM dcg
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'),
+           WHERE ${duckHeldOut("doc_id")}),
          dclk AS (SELECT g.doc_id, g.i AS s FROM dcg g JOIN dcheld USING (gh)
-           WHERE substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 1) <> '0'),
+           WHERE NOT ${duckHeldOut("g.doc_id")}),
          dcex AS (SELECT DISTINCT doc_id FROM dclk),
          dcrm AS (SELECT DISTINCT doc_id, pos FROM
            (SELECT doc_id, unnest(generate_series(s, s + 7)) AS pos
@@ -1928,13 +1859,13 @@ object CurationQueries extends QueryFamily {
          $bandedSigSql,
          dcfc AS (${lshPairsSql()}),
          dcfo AS (SELECT
-             CASE WHEN substr(md5(CAST(a_id AS VARCHAR)), 1, 1) = '0'
+             CASE WHEN ${duckHeldOut("a_id")}
                THEN b_id ELSE a_id END AS doc_id,
-             CASE WHEN substr(md5(CAST(a_id AS VARCHAR)), 1, 1) = '0'
+             CASE WHEN ${duckHeldOut("a_id")}
                THEN a_id ELSE b_id END AS held_id
            FROM dcfc
-           WHERE (substr(md5(CAST(a_id AS VARCHAR)), 1, 1) = '0')
-             <> (substr(md5(CAST(b_id AS VARCHAR)), 1, 1) = '0')),
+           WHERE ${duckHeldOut("a_id")}
+             <> ${duckHeldOut("b_id")}),
          dcfz AS (SELECT DISTINCT o.doc_id
            FROM dcfo o JOIN dcfg gt ON o.doc_id = gt.doc_id
              JOIN dcfg gh2 ON o.held_id = gh2.doc_id
@@ -2090,9 +2021,9 @@ object CurationQueries extends QueryFamily {
            FROM ska0, skcents),
          skcl AS (SELECT id, vec, cell FROM skasg WHERE rn = 1),
          sksz AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_size,
-             CAST(SUM(CASE WHEN substr(md5(id::VARCHAR), 1, 1) = '0'
+             CAST(SUM(CASE WHEN ${duckHeldOut("id")}
                THEN 1 ELSE 0 END) AS BIGINT) AS n_held,
-             CAST(SUM(CASE WHEN substr(md5(id::VARCHAR), 1, 1) <> '0'
+             CAST(SUM(CASE WHEN NOT ${duckHeldOut("id")}
                THEN 1 ELSE 0 END) AS BIGINT) AS n_train
            FROM skcl GROUP BY 1),
          skc AS (SELECT skcl.id, skcl.vec, skcl.cell,
@@ -2101,9 +2032,9 @@ object CurationQueries extends QueryFamily {
            WHERE sksz.cell_size <= 100
              AND list_inner_product(skcl.vec, skcl.vec) > 0),
          skt AS (SELECT id, vec, cell, nrm FROM skc
-           WHERE substr(md5(id::VARCHAR), 1, 1) <> '0'),
+           WHERE NOT ${duckHeldOut("id")}),
          skh AS (SELECT id, vec, cell, nrm FROM skc
-           WHERE substr(md5(id::VARCHAR), 1, 1) = '0'),
+           WHERE ${duckHeldOut("id")}),
          skp AS (SELECT t.cell, t.id AS vec_id, h.id AS held_id,
              list_inner_product(t.vec, h.vec) / (t.nrm * h.nrm) AS sim
            FROM skt t JOIN skh h ON t.cell = h.cell),
@@ -2141,7 +2072,7 @@ object CurationQueries extends QueryFamily {
                substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) % 4)
                AS BIGINT) AS batch_id
            FROM documents
-           WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <> '0')
+           WHERE NOT ${duckHeldOut("doc_id")})
          SELECT bt.batch_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(pd.shared_grams) AS BIGINT) AS n_flagged,
            round(CAST(COUNT(pd.shared_grams) AS DOUBLE) / COUNT(*), 6)

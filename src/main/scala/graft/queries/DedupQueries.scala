@@ -7,6 +7,7 @@ import graft.ext.{Dedup, Similarity, TextAnalysis => TA}
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts._
 import Fragments._
 
 /** Dedup family: exact, MinHash/LSH, SimHash, span, containment and
@@ -25,16 +26,12 @@ object DedupQueries extends QueryFamily {
     * is byte-identical to the table production consumers read.
     */
   private def bandSweepCandidates(s: SparkSession, d: String,
-      r: Int): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_bandcand${r}_${CoreQueries.dirToken(d)}") { p =>
+      r: Int): DataFrame =
+    artifact(s, d, s"bandcand$r") {
       val sig = if (r == 2) corpusSignatures(s, d)
         else Dedup.bandedSignaturesFromMinima(corpusMinima(s, d), r)
       Dedup.minhashCandidates(sig).select(col("a_id"), col("b_id"))
-        .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(dir)
-  }
 
   /** The q114/q201 fenced exact truth side — (q_id, n_id) pairs whose
     * 120-char-prefix 3-gram Jaccard is >= 0.5, q_id restricted to the
@@ -43,9 +40,8 @@ object DedupQueries extends QueryFamily {
     * and is consumed by two registered evals (recall + sweep), three
     * bench runs each.
     */
-  private def lshRecallTruth(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_lshtruth_${CoreQueries.dirToken(d)}") { p =>
+  private def lshRecallTruth(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "lshtruth") {
       val pre = Tables.documents(s, d)
         .select(col("doc_id"), substring(col("text"), 1, 120).as("pre"))
       val sample = pre.filter(col("doc_id") % 29 === 0)
@@ -54,10 +50,7 @@ object DedupQueries extends QueryFamily {
         .filter(col("doc_id") =!= col("q_id"))
         .filter(Dedup.ngramJaccard(col("q_pre"), col("pre"), 3) >= 0.5)
         .select(col("q_id"), col("doc_id").as("n_id"))
-        .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(dir)
-  }
 
   /** The two persisted base-corpus artifacts the cluster-maintenance
     * queries read instead of recomputing: the q95 banded-signature
@@ -68,8 +61,7 @@ object DedupQueries extends QueryFamily {
   private def baseClusterArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d)
     val baseSig = v1SigArtifact(s, d)
-    val compDir = CoreQueries.sharedInputDir(
-      s"graft_q141_comp_${CoreQueries.dirToken(d)}") { p =>
+    val comp = artifact(s, d, "q141_comp") {
       val baseCand = graft.util.Persist(Dedup.minhashCandidates(baseSig)
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id")))
       val comp = Dedup.connectedComponents(baseCand, "a_id", "b_id")
@@ -77,9 +69,8 @@ object DedupQueries extends QueryFamily {
         .join(comp.select(col("id").as("doc_id"), col("comp")),
           Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("lab"))
-        .write.mode("overwrite").parquet(p)
     }
-    (baseSig, s.read.parquet(compDir))
+    (baseSig, comp)
   }
 
   /** One cluster-ingest step (q141/q142's loop body): candidates that
@@ -109,15 +100,10 @@ object DedupQueries extends QueryFamily {
     * corpus) q148/q149 anti-join — the span family's q95-style
     * artifact.
     */
-  private def baseSpanOwners(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q148_own_${CoreQueries.dirToken(d)}") { p =>
+  private def baseSpanOwners(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "q148_own")(
       spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
-        .select(col("k")).distinct()
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+        .select(col("k")).distinct())
 
   /** q149's per-micro-batch owner-merge body: the batch's span claims
     * (base-owned keys excluded, min-(doc_id, span_idx) owner within
@@ -128,18 +114,8 @@ object DedupQueries extends QueryFamily {
     */
   private[graft] def streamBatchSpanOwners(batch: DataFrame,
       baseOwn: DataFrame, prevOwners: Option[DataFrame]): DataFrame = {
-    val cand = spanFrame(batch)
-      .join(baseOwn, Seq("k"), "left_anti")
-      .groupBy(col("k"))
-      .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-      .select(col("k"), col("o.doc_id").as("doc_id"),
-        col("o.span_idx").as("span_idx"))
-    prevOwners.fold(cand)(prev =>
-      prev.unionByName(cand)
-        .groupBy(col("k"))
-        .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
-        .select(col("k"), col("o.doc_id").as("doc_id"),
-          col("o.span_idx").as("span_idx")))
+    val cand = minOwners(spanFrame(batch).join(baseOwn, Seq("k"), "left_anti"))
+    prevOwners.fold(cand)(prev => minOwners(prev.unionByName(cand)))
   }
 
   /** q144's per-micro-batch merge body: the batch's signatures against
@@ -322,7 +298,7 @@ object DedupQueries extends QueryFamily {
     // ---- incremental dedup against PERSISTED signatures — q91's
     //      100 TB promise made real. The base corpus' banded signatures
     //      are materialized once as a parquet table ("the last run's
-    //      output", CoreQueries.sharedInputDir session-store) and the
+    //      output", an Artifacts session-store) and the
     //      incremental pass READS THEM BACK: the minhash pipeline runs
     //      only over the new batch, the base side is a scan of
     //      (doc_id, band, minhash) ~1% the corpus width. Candidate join
@@ -409,13 +385,9 @@ object DedupQueries extends QueryFamily {
       val baseCnt = v1SimhashCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q123_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q123_ssimhash_")
+      val dir = tempQueryDir("graft_q123_ssimhash_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q123_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(streamBatchSimhash(batch, baseSig,
           baseCounts = Some(baseCnt)), id, out, append = true)
@@ -675,13 +647,9 @@ object DedupQueries extends QueryFamily {
       val baseCnt = v1SigCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q115_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q115_sdedup_")
+      val dir = tempQueryDir("graft_q115_sdedup_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q115_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(streamBatchCandidates(batch, baseSig,
           baseCounts = Some(baseCnt)), id, out, append = true)
@@ -833,11 +801,8 @@ object DedupQueries extends QueryFamily {
       val (sig1, lab1raw) = clusterIngestStep(sig0, lab0, d1,
         baseCounts = Some(v1SigCountArtifact(s, d)))
       // run-1 output is a PERSISTED artifact run 2 reads back
-      val lab1Dir = CoreQueries.sharedInputDir(
-        s"graft_q142_lab1_${CoreQueries.dirToken(d)}") { p =>
-        lab1raw.write.mode("overwrite").parquet(p)
-      }
-      val (_, lab2) = clusterIngestStep(sig1, s.read.parquet(lab1Dir), d2)
+      val (_, lab2) = clusterIngestStep(sig1,
+        artifact(s, d, "q142_lab1")(lab1raw), d2)
       lab2.select(col("doc_id"), col("lab").as("cluster_id"),
           when(isDeltaDoc(col("doc_id")) && isFirstIngest(col("doc_id")),
             lit("delta1"))
@@ -910,13 +875,9 @@ object DedupQueries extends QueryFamily {
       val (baseSig, baseLab) = baseClusterArtifacts(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q144_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q144_sclus_")
+      val dir = tempQueryDir("graft_q144_sclus_")
       val sigRoot = s"$dir/sig"; val labRoot = s"$dir/lab"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q144_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         Streaming.writeBatch(
           Dedup.bandedSignatures(batch, "text", "doc_id", k = 8),
@@ -996,13 +957,9 @@ object DedupQueries extends QueryFamily {
       val baseOwn = baseSpanOwners(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q149_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q149_sspan_")
+      val dir = tempQueryDir("graft_q149_sspan_")
       val ownRoot = s"$dir/own"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q149_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         val prev =
           if (id == 0L) None
@@ -1174,21 +1131,16 @@ object DedupQueries extends QueryFamily {
       drainStepCache()
       val mg = graft.etl.Aggregators.MisraGries(128)
       val docs = stampedDocs(s, d)
-      val baseDir = CoreQueries.sharedInputDir(
-        s"graft_q190_base_${CoreQueries.dirToken(d)}") { p =>
+      val base = artifact(s, d, "q190_base") {
         val m = gramStream(docs.filter(!isDeltaDoc(col("doc_id"))))
           .select(col("gh")).as[String].select(mg.toColumn).collect()(0)
-        m.toSeq.toDF("gh", "est").write.mode("overwrite").parquet(p)
+        m.toSeq.toDF("gh", "est")
       }
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q190_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(2).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q190_hh_")
+      val dir = tempQueryDir("graft_q190_hh_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q190_in", delta, 2)
       Streaming.drain(stream, ck, 2) { (batch, id) =>
         val bs = batch.sparkSession
         import bs.implicits._
@@ -1204,7 +1156,7 @@ object DedupQueries extends QueryFamily {
           .map { case (id, rows) =>
             id -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap }
           .toSeq.sortBy(_._1).map(_._2) :+
-        s.read.parquet(baseDir).collect()
+        base.collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
       val cands = sketches.reduce(mg.merge).keys.toSeq.sorted
       val grams = graft.util.Persist(gramStream(docs))
@@ -1225,13 +1177,9 @@ object DedupQueries extends QueryFamily {
       val baseCnt = v1SigCountArtifact(s, d)
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q160_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(4).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q160_scont_")
+      val dir = tempQueryDir("graft_q160_scont_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q160_in", delta, 4)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         // capture the batch's cached candidate frame and drop it
         // once the append action completes (ADVICE r10: without
@@ -1411,14 +1359,8 @@ object DedupQueries extends QueryFamily {
     * First use pays the verify; after that q202 is an artifact scan
     * + 3-row argmin.
     */
-  private def bandSweepRows(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_bandsweep_${CoreQueries.dirToken(d)}") { p =>
-      bandSweepRowsCompute(s, d).repartition(1)
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def bandSweepRows(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "bandsweep", Some(1))(bandSweepRowsCompute(s, d))
 
   /** The verify pass behind [[bandSweepRows]] — runs once per session
     * per corpus; everything downstream reads the persisted card.

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity, TextAnalysis => TA}
 import graft.util.Tables
 
+import Artifacts.{artifact, sharedInputDir}
+
 /** A query family: its registry queries and their DuckDB oracles. */
 trait QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame]
@@ -85,27 +87,19 @@ object Fragments {
     * shingle+minhash pass over raw text (q95 already proved the
     * read-back path incrementally; this is the same discipline for the
     * full-corpus consumers). Session-materialized on first use via
-    * [[CoreQueries.sharedInputDir]] (per-process, cleaned at JVM exit);
+    * [[Artifacts.artifact]] (per-process, cleaned at JVM exit);
     * k=8 / r=2 / b=8 fixed because every consumer and every oracle is
     * calibrated to that banding. Value-identity with the recompute path
     * is inherent — bandedSignatures is per-row, so write+read-back
     * cannot change rows — and the unchanged DuckDB oracles gate it.
     */
-  private[queries] def corpusSignatures(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_sig8_${CoreQueries.dirToken(d)}") { p =>
-      // overwrite: a failed partial first write leaves the directory
-      // behind, and ErrorIfExists would then fail every retry for the
-      // rest of the session instead of clobbering the partial output.
-      // Derived from the shared minima artifact (NOT raw text): the
-      // banding step is pure array arithmetic, so the session pays the
-      // full-text shingle+minhash scan exactly once across this table
-      // AND the q201 sweep's r=1/r=4 bandings.
-      Dedup.bandedSignaturesFromMinima(corpusMinima(s, d), r = 2)
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def corpusSignatures(s: SparkSession, d: String): DataFrame =
+    // Derived from the shared minima artifact (NOT raw text): the
+    // banding step is pure array arithmetic, so the session pays the
+    // full-text shingle+minhash scan exactly once across this table
+    // AND the q201 sweep's r=1/r=4 bandings.
+    artifact(s, d, "sig8")(
+      Dedup.bandedSignaturesFromMinima(corpusMinima(s, d), r = 2))
 
   /** The 16 per-nibble minhash minima per doc — the one full-text
     * shingle+hash scan the whole LSH family derives from, persisted
@@ -114,15 +108,9 @@ object Fragments {
     * version alongside the signature table: |docs| rows x 16 short
     * strings.
     */
-  private[queries] def corpusMinima(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_minima16_${CoreQueries.dirToken(d)}") { p =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), Dedup.minhashBands(col("text"), 8).as("mh"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def corpusMinima(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "minima16")(Tables.documents(s, d)
+      .select(col("doc_id"), Dedup.minhashBands(col("text"), 8).as("mh")))
 
   /** The streaming ingest loop's generic per-batch candidate core,
     * shared by the MinHash (q115) and SimHash (q123) incremental
@@ -197,31 +185,22 @@ object Fragments {
       minBands = 2, maxBucket = maxBucket, baseCounts = baseCounts)
       .select(col("delta_id"), col("base_id"), col("n_bands"))
 
-  /** The persisted (band, minhash, bn) bucket-count artifact the
-    * streaming cap consults instead of rescanning the base signature
-    * table per micro-batch — session-materialized once under `name`,
-    * next to the signature table `sig` it counts.
+  /** The (band, minhash, bn) bucket counts of a signature table: the
+    * persisted artifact the streaming cap consults instead of
+    * rescanning the base signature table per micro-batch.
     */
-  private def sigCountArtifact(s: SparkSession, name: String,
-      sig: => DataFrame): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(name) { p =>
-      sig.groupBy(col("band"), col("minhash"))
-        .agg(count(lit(1)).as("bn")).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private def bucketCounts(sig: DataFrame): DataFrame =
+    sig.groupBy(col("band"), col("minhash")).agg(count(lit(1)).as("bn"))
 
   /** The bucket counts of [[v1SigArtifact]] (q95's count key), read by
     * the MinHash streaming and cluster-ingest loops and the v1 bundle.
     */
   private[queries] def v1SigCountArtifact(s: SparkSession, d: String): DataFrame =
-    sigCountArtifact(s, s"graft_q95cnt_${CoreQueries.dirToken(d)}",
-      v1SigArtifact(s, d))
+    artifact(s, d, "q95cnt")(bucketCounts(v1SigArtifact(s, d)))
 
   /** The bucket counts of [[v1SimhashSigArtifact]] (q123's count key). */
   private[queries] def v1SimhashCountArtifact(s: SparkSession, d: String): DataFrame =
-    sigCountArtifact(s, s"graft_q123cnt_${CoreQueries.dirToken(d)}",
-      v1SimhashSigArtifact(s, d))
+    artifact(s, d, "q123cnt")(bucketCounts(v1SimhashSigArtifact(s, d)))
 
   /** The 64-bit SimHash banding shared by q85's detector, the q113
     * drop sets, and q123's streaming twin: 4 pigeonhole bands of 16
@@ -389,6 +368,16 @@ object Fragments {
           slice(col("toks"), (i * 8 + 1).cast("int"), lit(8)), " ")), 1, 16)))
         .as(Seq("span_idx", "k")))
 
+  /** The min-(doc_id, span_idx) owner of each span key `k` among
+    * `claims` (q148's rule). min is associative and commutative, so
+    * owner tables merge and compact in any order.
+    */
+  private[queries] def minOwners(claims: DataFrame): DataFrame =
+    claims.groupBy(col("k"))
+      .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
+      .select(col("k"), col("o.doc_id").as("doc_id"),
+        col("o.span_idx").as("span_idx"))
+
   /** Exact per-source quantiles of `n_chars` via the distributed
     * value-count shape shared by q153 (distribution report) and q159
     * (robust trim): group to (source, n_chars) counts, one per-source
@@ -447,7 +436,7 @@ object Fragments {
     * (planted-truth eval) and q138 (token impact).
     *
     * PERSISTED as a parquet artifact (session-materialized once via
-    * [[CoreQueries.sharedInputDir]]) rather than memory-Persist'd:
+    * [[Artifacts.artifact]]) rather than memory-Persist'd:
     * at 100 TB the drop sets are an OUTPUT of the corpus build — every
     * curation report reads the drop-set table of the release, it does
     * not re-run four detector pipelines per report — the same
@@ -456,13 +445,8 @@ object Fragments {
     * read-back cannot change rows) and the four consumers' unchanged
     * DuckDB oracles gate it.
     */
-  private[queries] def dedupDropSets(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_dropsets_${CoreQueries.dirToken(d)}") { p =>
-      dropSetsRecompute(s, d).repartition(1).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def dedupDropSets(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "dropsets", Some(1))(dropSetsRecompute(s, d))
 
   /** The batch containment detector's rescored pairs (q156's frame) as
     * a session-persisted parquet artifact — the [[dedupDropSets]]
@@ -474,8 +458,7 @@ object Fragments {
     * unchanged DuckDB oracle gates it.
     */
   private[queries] def containmentPairs(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_contpairs_${CoreQueries.dirToken(d)}") { p =>
+    val dir = sharedInputDir(d, "contpairs") { p =>
       val docs = Tables.documents(s, d)
       val cand = Dedup.minhashCandidates(corpusSignatures(s, d))
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id"))
@@ -488,58 +471,36 @@ object Fragments {
         .repartition(1).write.mode("overwrite").parquet(p)
       cached.foreach(_.unpersist())
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** The v1 release's banded signature table (the SAME persisted
     * artifact the incremental family reads — q95's key). */
-  private[queries] def v1SigArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q95_sig_${CoreQueries.dirToken(d)}") { p =>
-      Dedup.bandedSignatures(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
-        "text", "doc_id", k = 8).write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def v1SigArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "q95_sig")(Dedup.bandedSignatures(
+      Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+      "text", "doc_id", k = 8))
 
   /** The v1 release's SimHash signature table (q123's key):
     * (doc_id, sh, band, nib), ~4 narrow rows per doc. */
-  private[queries] def v1SimhashSigArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q123_sig_${CoreQueries.dirToken(d)}") { p =>
-      simhashBaseSig(Tables.documents(s, d)
-          .filter(!isDeltaDoc(col("doc_id"))))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def v1SimhashSigArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "q123_sig")(
+      simhashBaseSig(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id")))))
 
   /** The v1 release's semantic cell index (q135's key):
     * (cell, id, vec, nrm) — the corpus build's embedding-index
     * output at 100 TB. */
-  private[queries] def v1CellIndexArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q135_idx_${CoreQueries.dirToken(d)}") { p =>
-      Similarity.cellIndex(
-        Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))),
-        "vec_id", "embedding").write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def v1CellIndexArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "q135_idx")(Similarity.cellIndex(
+      Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))),
+      "vec_id", "embedding"))
 
   /** The (cell, cn) count artifact next to [[v1CellIndexArtifact]] —
     * per-batch cell caps read this instead of re-aggregating the
     * index (q135's key). */
-  private[queries] def v1CellCountArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q135cnt_${CoreQueries.dirToken(d)}") { p =>
-      v1CellIndexArtifact(s, d).groupBy(col("cell"))
-        .agg(count(lit(1)).as("cn"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(dir)
-  }
+  private[queries] def v1CellCountArtifact(s: SparkSession, d: String): DataFrame =
+    artifact(s, d, "q135cnt")(
+      v1CellIndexArtifact(s, d).groupBy(col("cell")).agg(count(lit(1)).as("cn")))
 
   /** Frames `Persist()`ed by NON-materialized [[ledgerMaintainStep]]
     * invocations (q168's body, q171's second step, q174): the query

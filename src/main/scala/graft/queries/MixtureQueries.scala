@@ -7,6 +7,7 @@ import graft.ext.{Dedup, TextAnalysis => TA}
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts._
 import Fragments._
 
 /** Mixture family: splits, sampling, mixing weights, DSIR selection,
@@ -1523,21 +1524,18 @@ object MixtureQueries extends QueryFamily {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
       val batchOf = md5Hex1Mod(col("doc_id"), 3)
-      val priorDir = CoreQueries.sharedInputDir(
-        s"graft_q214_prior_${CoreQueries.dirToken(d)}") { p =>
+      val prior0 = artifact(s, d, "q214_prior", Some(1)) {
         val cnt = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
         val tot = cnt.agg(sum(col("n_docs")).as("tot"))
         cnt.crossJoin(broadcast(tot))
           .select(col("source"), col("n_docs"),
             (col("n_docs").cast("double") / col("tot")).as("w"))
-          .repartition(1).write.mode("overwrite").parquet(p)
       }
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q214_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = sharedInputDir(d, "q214_in") { p =>
         writeOrderedBatches(p, Seq(0L, 1L, 2L).map(k =>
           docs.filter(batchOf === k)))
       }
-      val dir = CoreQueries.tempQueryDir("graft_q214_smix_")
+      val dir = tempQueryDir("graft_q214_smix_")
       val wRoot = s"$dir/w"; val mRoot = s"$dir/m"; val ck = s"$dir/ck"
       val stream = Streaming.eventsStream(s, in, docs.schema)
       Streaming.drain(stream, ck, 2) { (batch, id) =>
@@ -1545,8 +1543,7 @@ object MixtureQueries extends QueryFamily {
           .agg(round(avg(col("quality_score")), 6).as("m"))
         Streaming.writeBatch(means, id, mRoot, append = true)
         val prior = if (id == 0L)
-            s.read.parquet(priorDir)
-              .select(col("source"), col("n_docs"), col("w"))
+            prior0.select(col("source"), col("n_docs"), col("w"))
           else s.read.parquet(s"$wRoot/batch_id=${id - 1}")
         val mx = means.agg(max(col("m")).as("x"))
         val stepped = prior.join(means, Seq("source"), "left")
@@ -1560,8 +1557,7 @@ object MixtureQueries extends QueryFamily {
             (col("g") / col("z")).as("w"))
           .write.mode("overwrite").parquet(s"$wRoot/batch_id=$id")
       }
-      val w0 = s.read.parquet(priorDir)
-        .select(col("source"), col("n_docs"), col("w").as("wv0"))
+      val w0 = prior0.select(col("source"), col("n_docs"), col("w").as("wv0"))
       val ms = s.read.parquet(mRoot).groupBy(col("source"))
         .agg(max(when(col("batch_id") === 0, col("m"))).as("m0"),
           max(when(col("batch_id") === 1, col("m"))).as("m1"),
@@ -1776,13 +1772,9 @@ object MixtureQueries extends QueryFamily {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q224_in_${CoreQueries.dirToken(d)}") { p =>
-        docs.repartition(3).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q224_squota_")
+      val dir = tempQueryDir("graft_q224_squota_")
       val skRoot = s"$dir/sk"; val cntRoot = s"$dir/cnt"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, docs.schema)
+      val stream = stagedStream(s, d, "q224_in", docs, 3)
       Streaming.drain(stream, ck, 4) { (batch, id) =>
         val b = batch
           .select(col("doc_id"), col("lang"), col("source"),
@@ -1831,14 +1823,9 @@ object MixtureQueries extends QueryFamily {
     //      read is source-cardinality ----
     "q225_stream_packing" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val baseDir = CoreQueries.sharedInputDir(
-        s"graft_q225_base_${CoreQueries.dirToken(d)}") { p =>
-        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id")))))
-          .write.mode("overwrite").parquet(p)
-      }
-      val base = s.read.parquet(baseDir)
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q225_in_${CoreQueries.dirToken(d)}") { p =>
+      val base = artifact(s, d, "q225_base")(
+        ffdPack(packInput(docs.filter(!isDeltaDoc(col("doc_id"))))))
+      val in = sharedInputDir(d, "q225_in") { p =>
         writeOrderedBatches(p, Seq(
           docs.filter(isDeltaDoc(col("doc_id")) &&
               isFirstIngest(col("doc_id")))
@@ -1847,7 +1834,7 @@ object MixtureQueries extends QueryFamily {
               !isFirstIngest(col("doc_id")))
             .select(col("doc_id"), col("source"), col("text"))))
       }
-      val dir = CoreQueries.tempQueryDir("graft_q225_spack_")
+      val dir = tempQueryDir("graft_q225_spack_")
       val mRoot = s"$dir/m"; val ck = s"$dir/ck"
       val inSchema = docs.select(col("doc_id"), col("source"), col("text"))
         .schema

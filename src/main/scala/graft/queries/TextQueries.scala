@@ -7,6 +7,7 @@ import graft.ext.{Multimodal, Sessions, TextAnalysis => TA}
 import graft.streaming.Streaming
 import graft.util.Tables
 
+import Artifacts._
 import Fragments._
 
 /** Text family: language id, quality and LM scores, tokenization and
@@ -932,32 +933,20 @@ object TextQueries extends QueryFamily {
     "q189_stream_histogram" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
-      val boundsDir = CoreQueries.sharedInputDir(
-        s"graft_q189_bounds_${CoreQueries.dirToken(d)}") { p =>
-        baseDocs.groupBy(col("source"))
-          .agg(min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val bounds = s.read.parquet(boundsDir)
-      val baseSketchDir = CoreQueries.sharedInputDir(
-        s"graft_q189_base_${CoreQueries.dirToken(d)}") { p =>
-        histBinCounts(baseDocs, bounds).write.mode("overwrite").parquet(p)
-      }
+      val bounds = artifact(s, d, "q189_bounds")(baseDocs.groupBy(col("source"))
+        .agg(min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi")))
+      val baseSketch = artifact(s, d, "q189_base")(histBinCounts(baseDocs, bounds))
       val delta = docs.filter(isDeltaDoc(col("doc_id")))
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q189_in_${CoreQueries.dirToken(d)}") { p =>
-        delta.repartition(2).write.mode("overwrite").parquet(p)
-      }
-      val dir = CoreQueries.tempQueryDir("graft_q189_hist_")
+      val dir = tempQueryDir("graft_q189_hist_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
-      val stream = Streaming.eventsStream(s, in, delta.schema)
+      val stream = stagedStream(s, d, "q189_in", delta, 2)
       Streaming.drain(stream, ck, 2) { (batch, id) =>
         Streaming.writeBatch(histBinCounts(batch, bounds), id, out, append = true)
       }
       val merged = s.read.parquet(out)
         .select(col("source"), col("lo"), col("hi"), col("bin"), col("cnt"))
-        .unionByName(s.read.parquet(baseSketchDir))
+        .unionByName(baseSketch)
         .groupBy(col("source"), col("lo"), col("hi"), col("bin"))
         .agg(sum(col("cnt")).as("cnt"))
       histReport(docs, merged)

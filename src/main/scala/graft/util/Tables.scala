@@ -72,8 +72,14 @@ object Tables {
     }
   }
 
+  /** `path` read through the schema memo: the one parquet reader for
+    * the sf tables and the session artifacts (`queries.Artifacts`).
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    resolve(s, path, _ => false).get
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    resolve(spark, s"$sfDir/$name.parquet", _ => false).get
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

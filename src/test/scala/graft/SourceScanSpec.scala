@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rule and training-order draws once (with no environment override
   * of the shard count), that the ANN/PQ family writes each recall,
   * released-index, streaming-ingest and layout rule once per engine,
-  * that each shared artifact directory key has one writer, and that
+  * that the decontamination held-out split is written once per
+  * engine, that session artifacts are keyed, written and streamed in
+  * one module and each artifact key has one writer, and that
   * every definition is reached from main code or the etlbench
   * harness.
   */
@@ -180,8 +182,8 @@ class SourceScanSpec extends AnyFunSuite {
     assert(inAnn("when(col(\"n_truth\") === 0, 0.0)") == 1) // recallAt3
     assert(inAnn("bruteForceDotTopK(") == 1) // exactTop3
     assert(inAnn(".select(col(\"q_id\"), col(\"n_id\"))") == 1)
-    assert(count("s\"graft_q232_idx_") == 1) // q232Index
-    assert(count("s\"graft_q242_idx_") == 1) // q242Index
+    assert(count("artifact(s, d, \"q232_idx\")") == 1) // q232Index
+    assert(count("artifact(s, d, \"q242_idx\")") == 1) // q242Index
     assert(inAnn("Streaming.drain(") == 2) // q135, streamIngest
     assert(inAnn("var_pop(element_at") == 1) // varianceLayout
     assert(inAnn("max(when(col(\"sub\") ===") == 1) // mseSum8
@@ -198,6 +200,15 @@ class SourceScanSpec extends AnyFunSuite {
     assert(inAnn("MAX(mse) FILTER") == 1) // mseSum8Sql
   }
 
+  test("the decontamination held-out split is written once per engine") {
+    val curation = sources("graft/queries/CurationQueries.scala")
+    assert(count("1, 1) === \"0\"") == 1) // isHeldOut
+    assert(count("1, 1) =!= \"0\"") == 0)
+    assert(countIn(curation, "1, 1) = '0'") == 1) // duckHeldOut
+    assert(countIn(curation, "1, 1) <> '0'") == 0)
+    assert(countIn(curation, "1, 1) AS hb") == 0)
+  }
+
   test("the md5 tombstone rule and the budget-bucket pack are each written once") {
     assert(count("=== \"f\"") == 1) // isTombstoned
     assert(count("1, 1) = 'f'") == 1) // duckTombstoned
@@ -206,14 +217,43 @@ class SourceScanSpec extends AnyFunSuite {
   }
 
   test("each shared artifact directory key is spelled at one site") {
-    // a key spelled at two sites has two writers, and sharedInputDir
-    // keeps whichever ran first in the session
-    val keys = sources.values.toSeq
-      .flatMap("s\"graft_([A-Za-z0-9]+(?:_[A-Za-z0-9]+)*?)_\\$".r.findAllMatchIn(_))
-      .map(_.group(1))
-    assert(keys.size > 40)
+    // a key spelled at two sites has two writers, and the artifact
+    // module keeps whichever ran first in the session. A key is the
+    // `name` literal at a keyed call; the two bundle writers pass
+    // theirs through to sharedInputDir.
+    val keyed = ("\\b(?:artifact|stagedStream|sharedInputDir|maintainedArtifacts|" +
+      "appendMaintainedArtifacts)\\((?:s, )?d, s?\"([^\"]+)\"").r
+    val keys = sources.values.toSeq.flatMap(keyed.findAllMatchIn(_)).map(_.group(1))
+    // 50 literal keys, plus q201's `bandcand$r` and the `${q}_in` of
+    // the q137/q232/q242 ingest
+    assert(keys.size == 52, keys.sorted)
     val repeated = keys.groupMapReduce(identity)(_ => 1)(_ + _).filter(_._2 > 1)
     assert(repeated.isEmpty, s"keys spelled at more than one site: $repeated")
+  }
+
+  test("session artifacts are keyed, written and streamed only in the artifact module") {
+    val artifacts = "graft/queries/Artifacts.scala"
+    assert(filesWith("dirToken(") == Set(artifacts))
+    // q214 and q225 stream their ordered batches
+    val mixture = "graft/queries/MixtureQueries.scala"
+    assert(filesWith("Streaming.eventsStream(") == Set(artifacts, mixture))
+    assert(countIn(sources(mixture), "Streaming.eventsStream(") == 2)
+    // the raw writers: the two bundle writers (Curation), q214/q225's
+    // ordered batches (Mixture), and the two rescore writers that
+    // unpersist their cached frame after the write
+    val raw = sources.collect { case (f, src) if f != artifacts &&
+      src.contains("sharedInputDir(") => f -> countIn(src, "sharedInputDir(") }
+    assert(raw == Map("graft/queries/CurationQueries.scala" -> 3, mixture -> 2,
+      "graft/queries/Fragments.scala" -> 1))
+    val writes = sources.collect { case (f, src)
+      if src.contains(".write.mode(\"overwrite\").parquet(p)") =>
+        f -> countIn(src, ".write.mode(\"overwrite\").parquet(p)") }
+    assert(writes == Map(artifacts -> 1, "graft/queries/CurationQueries.scala" -> 1,
+      "graft/queries/Fragments.scala" -> 1))
+    val core = sources("graft/queries/CoreQueries.scala")
+    for (n <- Seq("tempDirs", "tempDirHook", "rmTree", "tempQueryDir", "dirToken",
+        "sharedInputDir"))
+      assert(s"(def|val)\\s+$n\\b".r.findFirstIn(core).isEmpty, n)
   }
 
   test("unreached definitions: public and private[x] flagged, harness uses count") {

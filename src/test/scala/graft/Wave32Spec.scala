@@ -130,7 +130,7 @@ class Wave32Spec extends SparkSpec {
     var id = 0L
     val rows = groups.flatMap { case (phase, src, inSteps, k) =>
       inSteps.flatMap { st =>
-        (0 until k).map { i =>
+        (0 until k).map { _ =>
           id += 3
           val docId = id + st // doc_id % 3 == st
           // sizes straddle the 512 pack budget; deterministic variety
